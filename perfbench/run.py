@@ -28,7 +28,7 @@ HERE = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.path.dirname(HERE)
 BUILD = os.path.join(ROOT, ".bench_build")
 PROGRAM = os.path.join(ROOT, "src", "main", "scala")
-HEAP = "3g"
+HEAP = "1536m"
 RUN_TIMEOUT_S = 170
 # -XX:-UsePerfData: no hsperfdata file in the system temp directory
 SBT_OPTS = ("-Dsbt.override.build.repos=true -Dsbt.offline=true -Dsbt.server.autostart=false "
@@ -83,7 +83,11 @@ def build():
 
 def java_cmd(cp, cores, tmp, main_args):
     opens = [x for p in JDK17_OPENS for x in ("--add-opens", f"{p}=ALL-UNNAMED")]
-    return (["java", f"-Xms{HEAP}", f"-Xmx{HEAP}", f"-XX:ActiveProcessorCount={cores}", "-XX:-UsePerfData"] +
+    # -XX:+AlwaysPreTouch: the whole heap is touched at start-up, so pages the
+    # VM's host must first back (freed memory a host may have reclaimed) cost
+    # set-up time once, not measured time in whichever run grows into them
+    return (["java", f"-Xms{HEAP}", f"-Xmx{HEAP}", "-XX:+AlwaysPreTouch",
+             f"-XX:ActiveProcessorCount={cores}", "-XX:-UsePerfData"] +
             opens +
             [f"-Djava.io.tmpdir={tmp}", f"-Dspark.local.dir={tmp}",
              f"-Dlog4j2.configurationFile={os.path.join(HERE, 'log4j2.properties')}",

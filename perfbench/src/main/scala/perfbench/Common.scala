@@ -25,9 +25,55 @@ final class Samples {
   def size: Int = q.size
 }
 
-/** In-memory spans plus per-layer call timers. Disabled (the untraced
-  * run) every method is a pass-through, so end-to-end numbers carry no
-  * tracing cost.
+/** Delivery latencies, each kept with its event's submission time. */
+final class Latencies {
+  private val q = new ConcurrentLinkedQueue[(Long, Double)]()
+  /** An event received at `recvNs` after `ms` milliseconds. */
+  def add(recvNs: Long, ms: Double): Unit = { q.add((recvNs - math.round(ms * 1e6), ms)); () }
+  /** Latencies in order of receipt. */
+  def values: Seq[Double] = q.asScala.map(_._2).toSeq
+
+  /** The run's tail as the median of its windows' p99s. Events of one
+    * micro-batch or one emitted batch share most of their latency, so a
+    * whole-run p99 is set by the one or two slowest batches of the run;
+    * the median over windows by a typical window's slowest events. */
+  def windowedP99: Double = Stats.median(windowP99s)
+
+  /** The samples in order of submission, cut into consecutive windows of
+    * at least [[Latencies.MinWindow]] samples (so each p99 has 10 samples
+    * beyond it) that never split events submitted together, as one
+    * `emitAll` batch is; a short remainder joins the last window. */
+  def windowP99s: Seq[Double] = {
+    val windows = mutable.ArrayBuffer(mutable.ArrayBuffer.empty[Double])
+    var last = Long.MinValue
+    q.asScala.toSeq.sortBy(_._1).foreach { case (submit, ms) =>
+      if (windows.last.size >= Latencies.MinWindow && submit != last) windows += mutable.ArrayBuffer.empty
+      windows.last += ms
+      last = submit
+    }
+    if (windows.size > 1 && windows.last.size < Latencies.MinWindow) {
+      val rest = windows.remove(windows.size - 1)
+      windows.last ++= rest
+    }
+    windows.toSeq.map(Stats.pct(_, 99))
+  }
+
+  /** A note for the run's log: the whole-run p99 and each window's. */
+  def note: String = {
+    val w = windowP99s
+    f"deliver p99 ${Stats.pct(values, 99)}%.0f ms over the run, ${w.size} windows: " +
+      w.map(p => f"$p%.0f").mkString("/") + " ms"
+  }
+}
+
+object Latencies {
+  val MinWindow = 1000
+}
+
+/** In-memory spans. Disabled (the untraced run) every method is a
+  * pass-through, so end-to-end numbers carry no tracing cost. Call
+  * timings the metrics report are kept in [[Samples]] by the workloads,
+  * over their timed phase only.
   *
   * A span is (id, parent, layer, name, start, end) in nanoseconds on the
   * `System.nanoTime` clock; the parent of a call span is the span open
@@ -39,12 +85,11 @@ final class Tracer(val enabled: Boolean) {
   private val ids = new AtomicLong(0L)
   private val spans = new ConcurrentLinkedQueue[Span]()
   private val open = new ThreadLocal[List[Long]] { override def initialValue(): List[Long] = Nil }
-  private val timers = new java.util.concurrent.ConcurrentHashMap[String, Samples]()
 
   def nextId(): Long = ids.incrementAndGet()
   def current: Long = open.get.headOption.getOrElse(0L)
 
-  /** Times `f` as one call into `layer` (`layer.name` keys the timer). */
+  /** Records `f` as one span of a call into `layer`. */
   def call[T](layer: String, name: String, link: Long = -1L)(f: => T): T =
     if (!enabled) f
     else {
@@ -57,9 +102,13 @@ final class Tracer(val enabled: Boolean) {
         val t1 = System.nanoTime()
         open.set(open.get.tail)
         spans.add(Span(id, parent, layer, name, t0, t1, link))
-        timer(s"$layer.$name").add((t1 - t0) / 1e6)
       }
     }
+
+  /** Records a call into `layer` that ran over [t0, t1] on this thread,
+    * for calls worth a span only once their result is known. */
+  def record(layer: String, name: String, t0: Long, t1: Long, link: Long = -1L): Unit =
+    add(Span(nextId(), current, layer, name, t0, t1, link))
 
   def add(s: Span): Unit = if (enabled) { spans.add(s); () }
 
@@ -75,9 +124,6 @@ final class Tracer(val enabled: Boolean) {
     else all.filter(s => ids(s.id) && s.start <= atNs && atNs <= s.end)
       .sortBy(-_.start).headOption.map(_.id).getOrElse(0L)
   }
-  def timer(key: String): Samples = timers.computeIfAbsent(key, _ => new Samples)
-  /** Call durations in ms recorded under `layer.name`. */
-  def millis(key: String): Seq[Double] = Option(timers.get(key)).map(_.values).getOrElse(Nil)
   def all: Seq[Span] = spans.asScala.toSeq
 
   /** Per-layer self time over [from, to]: each span's duration minus the

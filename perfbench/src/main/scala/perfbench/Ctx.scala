@@ -3,6 +3,7 @@ package perfbench
 import java.nio.file.Path
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.streaming.Trigger
 
 /** What one benchmark process shares with its workload. */
 final class Ctx(val spark: SparkSession, val tracer: Tracer, val seed: Long, val seconds: Int,
@@ -33,6 +34,18 @@ trait Prepared {
 
 trait Workload {
   def setup(ctx: Ctx): Prepared
+}
+
+object Workload {
+  /** Every workload's engine runs its micro-batches at a zero interval:
+    * each starts when the previous one ends, so cycle time and latency
+    * follow the processing time smoothly. At the 250 ms default a batch
+    * starts on the next multiple of 250 ms, so a batch that takes a little
+    * more than 250 ms waits for the one after: `live_grpc`'s trigger took
+    * about 246 ms, and its median latency jumped between about 520 and
+    * 750 ms from run to run, and a closed loop's iteration count in a run
+    * between two values (`many_groups` made 10 or 12). */
+  val trigger: Trigger = Trigger.ProcessingTime(0L)
 }
 
 /** Emission sequence → submission time on the nanoTime clock. */

@@ -5,21 +5,29 @@ import scala.collection.mutable
 
 import graft.core.{Event, EventType, Hierarchy, ResourceType, Subjects}
 
-/** Shape of the generated resource hierarchy and event mix.
+/** Shape of the generated resource hierarchy: what a workload varies to
+  * lay out its groups. Everything else about the traffic is in [[Shape$]]
+  * and shared by every workload.
   *
-  * @param projects              projects in the hierarchy
-  * @param collections           collections per project
-  * @param objects               shared objects per collection
-  * @param objectGroups          object groups per collection
-  * @param zipf                  skew exponent over projects, collections
-  *                              and objects (0 = uniform)
-  * @param collectionShare       share of COLLECTION events
-  * @param projectShare          share of PROJECT events
-  * @param objectGroupShare      share of OBJECTGROUP events; the rest are
-  *                              OBJECT events in 0–2 object groups */
-final case class Shape(projects: Int, collections: Int, objects: Int, objectGroups: Int,
-                       zipf: Double, collectionShare: Double, projectShare: Double,
-                       objectGroupShare: Double)
+  * @param projects    projects in the hierarchy
+  * @param collections collections per project
+  * @param zipf        skew exponent over projects, collections and
+  *                    objects (0 = uniform) */
+final case class Shape(projects: Int, collections: Int = 20, zipf: Double = 1.0)
+
+/** The traffic every workload shares. The event mix is assumed, not
+  * measured: neither the paper nor the reference server documents one.
+  * It is weighted towards objects, as in a storage system where objects
+  * outnumber the containers that hold them and most changes are uploads. */
+object Shape {
+  val ObjectsPerCollection = 32
+  val ObjectGroupsPerCollection = 4
+  /** Shares of PROJECT, COLLECTION and OBJECTGROUP events; the rest are
+    * OBJECT events in 0–2 object groups. */
+  val ProjectShare = 0.01
+  val CollectionShare = 0.05
+  val ObjectGroupShare = 0.20
+}
 
 /** One generated event: its emission sequence and the subjects the
   * engine's fan-out publishes it under. */
@@ -43,7 +51,7 @@ final class EventGen(seed: Long, val shape: Shape) {
   }
   private val projCdf = cdf(shape.projects)
   private val collCdf = cdf(shape.collections)
-  private val objCdf = cdf(shape.objects)
+  private val objCdf = cdf(Shape.ObjectsPerCollection)
   /** Random rank permutation per project, so the hot collections
     * differ between projects. */
   private val collRank = Array.fill(shape.projects)(shuffled(shape.collections))
@@ -67,17 +75,17 @@ final class EventGen(seed: Long, val shape: Shape) {
     val (proj, coll) = (EventGen.project(p), EventGen.collection(p, c))
     val id = s"e$seq"
     val u = rnd.nextDouble()
-    val s = shape
+    import Shape._
     val ev =
-      if (u < s.projectShare)
+      if (u < ProjectShare)
         Event(ResourceType.Project.name, EventType.Updated, proj, proj, "", "", Nil, null)
-      else if (u < s.projectShare + s.collectionShare)
+      else if (u < ProjectShare + CollectionShare)
         Event(ResourceType.Collection.name, EventType.Updated, coll, proj, "", "", Nil, null)
-      else if (u < s.projectShare + s.collectionShare + s.objectGroupShare)
+      else if (u < ProjectShare + CollectionShare + ObjectGroupShare)
         Event(ResourceType.ObjectGroup.name, EventType.Created, id, proj, coll, "",
-          Seq(EventGen.objectGroup(p, c, rnd.nextInt(s.objectGroups))), null)
+          Seq(EventGen.objectGroup(p, c, rnd.nextInt(ObjectGroupsPerCollection))), null)
       else {
-        val groups = (0 until rnd.nextInt(3)).map(_ => rnd.nextInt(s.objectGroups)).distinct
+        val groups = (0 until rnd.nextInt(3)).map(_ => rnd.nextInt(ObjectGroupsPerCollection)).distinct
         Event(ResourceType.Object.name, EventType.Created, id, proj, coll,
           EventGen.sharedObject(p, c, draw(objCdf)), groups.map(EventGen.objectGroup(p, c, _)), null)
       }

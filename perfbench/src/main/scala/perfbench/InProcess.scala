@@ -3,8 +3,6 @@ package perfbench
 import java.util.concurrent.ConcurrentHashMap
 import java.util.concurrent.atomic.{AtomicBoolean, AtomicLong}
 
-import org.apache.spark.sql.streaming.Trigger
-
 import graft.streaming.MultiplexedDelivery
 
 /** Consumer threads that pull and ack in-process, each over its own
@@ -17,10 +15,11 @@ import graft.streaming.MultiplexedDelivery
   * delivered twice: once its ack wait expired, the chunk went to a
   * competing session too, and the later of the two acks is refused. */
 final class Consumers(mux: MultiplexedDelivery, checker: Checker, tr: Tracer,
-                      shards: Seq[Seq[(String, Long)]], latency: Samples,
+                      shards: Seq[Seq[(String, Long)]], latency: Latencies,
                       skipAckOnce: String => Boolean = _ => false) {
   val pulls, hits, acks, rejectedAcks, duplicateAcks = new AtomicLong
-  val pullMs = new Samples
+  /** pull and ack call times in the timed phase, ms */
+  val pullMs, ackMs = new Samples
   @volatile var timing = false
   private val stop = new AtomicBoolean(false)
   private val skipped = ConcurrentHashMap.newKeySet[String]()
@@ -53,14 +52,17 @@ final class Consumers(mux: MultiplexedDelivery, checker: Checker, tr: Tracer,
           if (chunks.nonEmpty) { hits.incrementAndGet(); busy = true }
           chunks.foreach { c =>
             val lat = checker.receive(g, c.chunkId, c.resourceIds, c.subjects, now)
-            if (timing) lat.foreach(latency.add)
+            if (timing) lat.foreach(latency.add(now, _))
           }
           if (chunks.nonEmpty && closing.remove(pair)) {
             mux.closeSession(g, s); closed.add(pair)
           } else chunks.foreach { c =>
             if (!(skipAckOnce(c.chunkId) && skipped.add(c.chunkId))) {
               acks.incrementAndGet()
-              if (!tr.call("MultiplexedDelivery", "ack")(mux.ack(g, c.chunkId))) {
+              val a0 = System.nanoTime()
+              val accepted = tr.call("MultiplexedDelivery", "ack")(mux.ack(g, c.chunkId))
+              if (timing) ackMs.add((System.nanoTime() - a0) / 1e6)
+              if (!accepted) {
                 if (checker.wasRedelivered(c.chunkId)) duplicateAcks.incrementAndGet()
                 else {
                   rejectedAcks.incrementAndGet()
@@ -84,11 +86,12 @@ final class Consumers(mux: MultiplexedDelivery, checker: Checker, tr: Tracer,
   def close(): Unit = { stop.set(true); threads.foreach(_.join()) }
 
   def metrics: Map[String, Double] = Map(
-    "MultiplexedDelivery.pull_s" -> tr.millis("MultiplexedDelivery.pull").sum / 1e3,
+    "MultiplexedDelivery.pull_s" -> pullMs.values.sum / 1e3,
     "MultiplexedDelivery.pull_calls" -> pulls.get.toDouble,
-    "MultiplexedDelivery.pull_p99_ms" -> Stats.pct(pullMs.values, 99),
+    // 60–900 pulls in a run: too few for a p99 with 10 samples beyond it
+    "MultiplexedDelivery.pull_ms_max" -> pullMs.values.maxOption.getOrElse(0.0),
     "MultiplexedDelivery.pull_hit_ratio" -> hits.get.toDouble / math.max(1L, pulls.get),
-    "MultiplexedDelivery.ack_s" -> tr.millis("MultiplexedDelivery.ack").sum / 1e3,
+    "MultiplexedDelivery.ack_s" -> ackMs.values.sum / 1e3,
     "MultiplexedDelivery.ack_calls" -> acks.get.toDouble,
     "MultiplexedDelivery.ack_rejected" -> (rejectedAcks.get + duplicateAcks.get).toDouble)
 }
@@ -103,9 +106,10 @@ abstract class InProcess extends Workload {
   def consumerThreads: Int
   def durable: Boolean
   def ackWaitMillis: Long = 30000L
-  def trigger: Trigger = Trigger.ProcessingTime("250 milliseconds")
-  /** Events in the one warm-up batch each set-up emits and drains. */
+  /** Events in each warm-up batch, and the batches each set-up emits and
+    * drains before the run. */
   def warmupEvents: Int
+  def warmupBatches: Int = 1
   /** Wait for the consumers to drain each batch before emitting the
     * next, instead of letting them run behind the emitter. */
   def drainEachBatch: Boolean = false
@@ -126,7 +130,7 @@ abstract class InProcess extends Workload {
     val submit = new SubmitTimes
     val checker = new Checker(submit(_))
     val ledgerDir: Option[String] = if (durable) Some(ctx.dir("ledger")) else None
-    val mux = new MultiplexedDelivery(ctx.spark, trigger,
+    val mux = new MultiplexedDelivery(ctx.spark, Workload.trigger,
       ledgerDir = ledgerDir, sourcePartitions = ctx.cores, ackWaitMillis = ackWaitMillis)
     val specs: Seq[(GroupSpec, Int)] = groups(gen)
     val addGroupMs = new Samples
@@ -146,7 +150,7 @@ abstract class InProcess extends Workload {
     specs.foreach { case (g, _) => add(g) }
     mux.start()
     val pairs: Seq[(String, Long)] = specs.flatMap { case (g, n) => Seq.fill(n)(g.id -> mux.openSession(g.id)) }
-    val deliver = new Samples
+    val deliver = new Latencies
     val consumers = new Consumers(mux, checker, tr,
       pairs.zipWithIndex.groupBy(_._2 % consumerThreads).toSeq.sortBy(_._1).map(_._2.map(_._1)),
       deliver, skipAckOnce)
@@ -182,7 +186,7 @@ abstract class InProcess extends Workload {
       while (!done && System.currentTimeMillis() < deadline) Thread.sleep(5)
     }
 
-    iterate(warmupEvents)
+    (1 to warmupBatches).foreach(_ => iterate(warmupEvents))
     drain(60000)
 
     def run(): Outcome = {
@@ -219,8 +223,7 @@ abstract class InProcess extends Workload {
       val attempted = n + expectedRun + consumers.acks.get
       Outcome(attempted, failed,
         e2e = Map(
-          "deliver_p50_ms" -> Stats.median(d), "deliver_p99_ms" -> Stats.pct(d, 99),
-          "emit_p50_ms" -> Stats.median(ingestRun.values), "emit_p99_ms" -> Stats.pct(ingestRun.values, 99),
+          "deliver_p50_ms" -> Stats.median(d), "deliver_p99_ms" -> deliver.windowedP99,
           "delivered_eps" -> eps,
           "cpu_us_per_event" -> cpu * 1e6 / n,
           "queries_per_s" -> consumers.hits.get / ((t1 - t0) / 1e9)),
@@ -235,8 +238,8 @@ abstract class InProcess extends Workload {
         notes = Seq("batch cycle by quarter of the run: " +
           ingestRun.values.zip(drainRun.values).map(x => x._1 + x._2)
             .grouped(math.max(1, ingestRun.size / 4)).map(q => f"${Stats.median(q)}%.0f").mkString("/") + " ms",
-          s"events=$n batches=${ingestRun.size} deliver samples=${d.size} " +
-          s"duplicate chunks=${checker.duplicateChunks.get} missing=$missing pending groups=$pendingLeft"))
+          s"events=$n batches=${ingestRun.size} deliver samples=${d.size} pull samples=${consumers.pullMs.size} " +
+          s"duplicate chunks=${checker.duplicateChunks.get} missing=$missing pending groups=$pendingLeft", deliver.note))
     }
 
     def close(): Unit = { consumers.close(); mux.stop() }
@@ -266,16 +269,16 @@ abstract class InProcess extends Workload {
 /** `bulk_backfill`: large seeded batches into 5 project-subtree groups,
   * drained by 3 consumer threads; the per-row Spark dataflow dominates. */
 object BulkBackfill extends InProcess {
-  val shape = Shape(projects = 5, collections = 20, objects = 64, objectGroups = 8, zipf = 0.8,
-    collectionShare = 0.05, projectShare = 0.01, objectGroupShare = 0.2)
+  /** One project per group. */
+  val shape = Shape(projects = 5)
   val batchEvents = 20000
-  val warmupEvents = 5000
+  /** The JIT compiles for about the first dozen 20,000-event batches (the
+    * compiler's time per batch falls from about 2 s to 0.4 s), so the
+    * three set-ups drain twelve between them before the run. */
+  val warmupEvents = 20000
+  override val warmupBatches = 4
   val consumerThreads = 3
   val durable = false
-  /** Zero interval: each batch starts when the previous one ends, so the
-    * cycle time is the processing time rather than the next multiple of
-    * a 250 ms trigger interval (which makes throughput jump in steps). */
-  override val trigger: Trigger = Trigger.ProcessingTime(0L)
   override val drainEachBatch = true
   def groups(gen: EventGen): Seq[(GroupSpec, Int)] = (0 until 5).map(p => GroupSpec.projectTree(p) -> 1)
 }
@@ -288,14 +291,12 @@ object BulkBackfill extends InProcess {
 object ManyGroups extends InProcess {
   val Projects = 8
   val CollectionsPerProject = 250
-  val shape = Shape(projects = Projects, collections = CollectionsPerProject, objects = 32,
-    objectGroups = 4, zipf = 1.5, collectionShare = 0.05, projectShare = 0.01, objectGroupShare = 0.2)
+  /** One group per collection. Skew 1.5 instead of the shared 1.0 puts
+    * most events in a few collections, so most groups are selective (they
+    * match a small share of the events) and many see none in a batch. */
+  val shape = Shape(projects = Projects, collections = CollectionsPerProject, zipf = 1.5)
   val batchEvents = 300
   val warmupEvents = 100
-  /** Zero interval, as in `bulk_backfill`: at the 250 ms default the
-    * iteration count in a run jumped between two values (10 or 12), and
-    * throughput with it. */
-  override val trigger: Trigger = Trigger.ProcessingTime(0L)
   val consumerThreads = 3
   val durable = true
   override val ackWaitMillis = 1000L

@@ -16,18 +16,21 @@ import graft.streaming.WireProtocol._
   * timed from its scheduled send time, so a stall also delays the
   * events scheduled behind it. */
 object LiveGrpc extends Workload {
-  /** Offered rate, events/s: a hundredth of what `bulk_backfill` drains
-    * on 4 cores, so rows never queue; the trigger loop is busy anyway,
-    * because one trigger costs more than its 250 ms interval. */
-  val Rate = 200.0
-  /** p99 delivery latency limit, ms (about twice the p99 measured on 4
-    * cores); a run above it is invalid. */
+  /** Offered rate, events/s: about a sixtieth of what `bulk_backfill`
+    * drains on 4 cores, so rows never queue; the trigger loop is busy
+    * anyway, because one trigger's fixed cost (about 200 ms on 4 cores)
+    * dominates. So 400/s costs no more CPU than 200/s did, and gives
+    * twice the latency samples. */
+  val Rate = 400.0
+  /** p99 delivery latency limit, ms (about three times the whole-run p99
+    * measured on 4 cores); a run above it is invalid. */
   val P99LimitMs = 2500.0
   /** Traffic each set-up sends and drains before the run: the JIT keeps
     * compiling well into the first seconds of load. */
   val WarmupEvents = 800
-  val shape = Shape(projects = 4, collections = 8, objects = 16, objectGroups = 4, zipf = 1.0,
-    collectionShare = 0.10, projectShare = 0.05, objectGroupShare = 0.15)
+  /** One project-subtree group per project, plus an exact-match group on
+    * each project's hottest collection: 8 groups. */
+  val shape = Shape(projects = 4)
 
   def setup(ctx: Ctx): Prepared = new Live(ctx)
 
@@ -39,20 +42,21 @@ object LiveGrpc extends Workload {
     private val submit = new SubmitTimes
     private val checker = new Checker(submit(_))
     groups.foreach(checker.track(_))
-    private val mux = new MultiplexedDelivery(ctx.spark)
+    private val mux = new MultiplexedDelivery(ctx.spark, Workload.trigger)
     private val server = GrpcServer(mux)
     private val producer = new GrpcClient("127.0.0.1", server.boundPort)
     private val consumer = new GrpcClient("127.0.0.1", server.boundPort)
 
     // counters, always on: they cost an increment
     private val emitCalls, rejected, wireErrors, acksSent, pushMsgs, bytesOut, bytesIn = new AtomicLong
-    private val deliver, emitLat, emitWindow, late, pushGap, enc, dec = new Samples
+    private val deliver = new Latencies
+    private val emitLat, emitWindow, late, pushGap, enc, dec = new Samples
     @volatile private var timing = false
 
     private def encode(r: WireRequest): Array[Byte] = {
       val t0 = System.nanoTime()
       val b = tr.call("WireProtocol", "encode")(encodeRequest(r))
-      if (tr.enabled) enc.add((System.nanoTime() - t0) / 1e3)
+      if (timing) enc.add((System.nanoTime() - t0) / 1e3)
       bytesOut.addAndGet(b.length + 5L)
       b
     }
@@ -73,24 +77,30 @@ object LiveGrpc extends Workload {
     private val receiver = new Thread(() => {
       while (!stop.get) {
         streams.foreach { case (gid, b) =>
+          val r0 = System.nanoTime()
           val msgs = b.messages(64, timeoutMillis = 1)
           if (msgs.nonEmpty) {
             val now = System.nanoTime()
-            val acks = msgs.flatMap { m =>
+            val decoded = msgs.map { m =>
               bytesIn.addAndGet(m.length + 5L)
               pushMsgs.incrementAndGet()
               val t0 = System.nanoTime()
               val resp = tr.call("WireProtocol", "decode")(decodeResponse(m))
-              if (tr.enabled) dec.add((System.nanoTime() - t0) / 1e3)
-              resp match {
-                case n: Notification =>
-                  tr.call("H2c", "push", link = n.batchId) {
-                    val lat = checker.receive(gid, n.chunkId, n.resourceIds, n.subjects, now)
-                    if (timing) lat.foreach(deliver.add)
-                  }
-                  Some(n.chunkId)
-                case _ => wireErrors.incrementAndGet(); None
-              }
+              if (timing) dec.add((System.nanoTime() - t0) / 1e3)
+              resp
+            }
+            // the receive call that returned a push; empty polls are idle
+            // waiting and get no span
+            tr.record("H2c", "push", r0, now, link = decoded.collectFirst { case n: Notification => n.batchId }
+              .getOrElse(-1L))
+            val acks = decoded.flatMap {
+              case n: Notification =>
+                tr.call("gen", "check") {
+                  val lat = checker.receive(gid, n.chunkId, n.resourceIds, n.subjects, now)
+                  if (timing) lat.foreach(deliver.add(now, _))
+                }
+                Some(n.chunkId)
+              case _ => wireErrors.incrementAndGet(); None
             }
             Option(lastPush.put(gid, now)).foreach(p => if (timing) pushGap.add((now - p) / 1e6))
             if (acks.nonEmpty) tr.call("H2c", "ack") {
@@ -176,7 +186,7 @@ object LiveGrpc extends Workload {
       val attempted = emitCalls.get + expectedRun + acksSent.get
       Outcome(attempted, failed,
         e2e = Map(
-          "deliver_p50_ms" -> Stats.median(d), "deliver_p99_ms" -> Stats.pct(d, 99),
+          "deliver_p50_ms" -> Stats.median(d), "deliver_p99_ms" -> deliver.windowedP99,
           "emit_p50_ms" -> Stats.median(emitLat.values), "emit_p99_ms" -> Stats.pct(emitLat.values, 99),
           "delivered_eps" -> eps,
           "cpu_us_per_event" -> cpu * 1e6 / n,
@@ -194,7 +204,7 @@ object LiveGrpc extends Workload {
         notes = Seq(s"deliver samples=${d.size} emit samples=${emitLat.size} rate=$Rate/s " +
           s"p99 limit=${P99LimitMs}ms invalid=$invalid",
           "deliver p50 by quarter of the run: " +
-            d.grouped(math.max(1, d.size / 4)).map(q => f"${Stats.median(q)}%.0f").mkString("/") + " ms"))
+            d.grouped(math.max(1, d.size / 4)).map(q => f"${Stats.median(q)}%.0f").mkString("/") + " ms", deliver.note))
     }
 
     def close(): Unit = {

@@ -27,11 +27,11 @@ object Main {
     Seq("H2c.emit_calls", "H2c.emit_window_ms_p50", "H2c.push_msgs", "H2c.push_gap_ms_p50",
       "H2c.bytes_out", "H2c.bytes_in", "WireProtocol.encode_us", "WireProtocol.decode_us",
       "MultiplexedDelivery.emit_s", "MultiplexedDelivery.emit_calls", "MultiplexedDelivery.pull_s",
-      "MultiplexedDelivery.pull_calls", "MultiplexedDelivery.pull_p99_ms",
+      "MultiplexedDelivery.pull_calls", "MultiplexedDelivery.pull_ms_max",
       "MultiplexedDelivery.pull_hit_ratio", "MultiplexedDelivery.ack_s", "MultiplexedDelivery.ack_calls",
       "MultiplexedDelivery.ack_rejected", "MultiplexedDelivery.drain_wait_s",
       "MultiplexedDelivery.add_group_s", "MultiplexedDelivery.remove_group_s",
-      "microbatch.count", "microbatch.rows_p50", "microbatch.trigger_ms_p50", "microbatch.trigger_ms_p99",
+      "microbatch.count", "microbatch.rows_p50", "microbatch.trigger_ms_p50", "microbatch.trigger_ms_max",
       "microbatch.add_batch_ms_p50", "microbatch.planning_ms_sum", "microbatch.wal_commit_ms_sum",
       "microbatch.busy_ratio", "microbatch.empty_ratio",
       "spark.jobs", "spark.stages", "spark.tasks", "spark.task_run_s", "spark.task_cpu_s",
@@ -42,7 +42,7 @@ object Main {
       "ChunkDispatcher.redelivery_ratio", "ChunkLedger.pending_peak", "ChunkLedger.acked_resident_peak",
       "LedgerStore.wal_bytes", "LedgerStore.wal_records", "LedgerStore.bytes_per_event",
       "jvm.gc_s", "jvm.gc_count", "jvm.cpu_s", "jvm.heap_peak_mb",
-      "gen.late_p99_ms", "gen.sent", "failed_ratio") ++
+      "gen.late_p99_ms", "gen.sent", "emit_p50_ms", "emit_p99_ms", "failed_ratio") ++
       TraceLayers.map(l => s"trace.$l.self_s") :+ "trace.uncovered_ratio"
   /** Layers whose self time the traced run reports. */
   val TraceLayers = Seq("gen", "H2c", "WireProtocol", "MultiplexedDelivery", "microbatch",
@@ -116,15 +116,16 @@ object Main {
         TraceLayers.map(l => s"trace.$l.self_s" -> self.getOrElse(l, 0.0)).toMap +
           ("trace.uncovered_ratio" -> uncovered)
       }
-    val measured = out.e2e ++ out.layers ++ sparkM ++ traceM ++
-      (if (traced) batches.metrics(out.fromNs, out.toNs) else Map.empty) ++ Map(
+    val batchM = if (traced) batches.metrics(out.fromNs, out.toNs) else Map.empty[String, Double]
+    val measured = out.e2e ++ out.layers ++ sparkM ++ traceM ++ batchM ++ Map(
       "setup_s" -> setupS,
       "retained_heap_mb" -> retained,
       "failed_ratio" -> out.failed.toDouble / math.max(1L, out.attempted),
       "jvm.gc_s" -> (gc1 - gc0), "jvm.gc_count" -> (gcn1 - gcn0).toDouble, "jvm.cpu_s" -> cpu,
       "jvm.heap_peak_mb" -> heap.map { h => h.close(); h.peakMb }.getOrElse(0.0))
     val all = perLayerNames.map(n => n -> 0.0).toMap ++ measured
-    (out.notes :+ f"setup: process ${processSetupS}%.3f s, set-ups ${setups.map(_._2).map(s => f"$s%.3f").mkString("/")} s")
+    (out.notes ++ batchM.get("microbatch.count").map(c => f"microbatch samples=$c%.0f") :+
+      f"setup: process ${processSetupS}%.3f s, set-ups ${setups.map(_._2).map(s => f"$s%.3f").mkString("/")} s")
       .foreach(n => System.err.println(s"[perfbench] $n"))
     println(Json.render(Map("correct" -> (out.failed == 0), "attempted" -> out.attempted,
       "failed" -> out.failed, "metrics" -> all)))
