@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.Trigger
 import graft.sources.Tables
 import graft.core.EngineSecurity
-import graft.streaming.{DurableEventLog, EventEngine, EventSession, MultiplexedDelivery, WireServer}
+import graft.streaming.{ConsumerHost, DurableEventLog, EventEngine, EventSession, MultiplexedDelivery, WireServer}
 
 /** User-facing entry point — what a user of the reference switches to.
   *
@@ -13,10 +13,15 @@ import graft.streaming.{DurableEventLog, EventEngine, EventSession, MultiplexedD
   * val tables = Graft.analytics(spark, dataDir)  // registered views + DataFrames
   * spark.sql("SELECT graft_dot(a.embedding, b.embedding) ...")
   *
-  * val engine = Graft.eventEngine(spark)         // emit/subscribe/ack (per-group)
+  * val engine = Graft.eventEngine(spark)         // one query per group
   * val mux    = Graft.multiplexed(spark)         // one query, many groups
   * val log    = Graft.durableLog(spark, dir, ck) // parquet log + checkpoints
   * }}}
+  *
+  * All three engines are one [[graft.streaming.ConsumerHost]] delivery
+  * core — the same emit / addGroup / removeGroup / pull / ack surface,
+  * session protocol and wire servers — differing only in their query
+  * wiring.
   */
 object Graft {
   /** A session configured the way the engine expects: partition counts
@@ -51,15 +56,15 @@ object Graft {
                   security: EngineSecurity = EngineSecurity.Permissive): EventEngine =
     new EventEngine(spark, trigger, security)
 
-  /** An R13 bidi session (Init/Ack/Close protocol) over an engine. */
-  def session(engine: EventEngine): EventSession = new EventSession(engine)
+  /** An R13 bidi session (Init/Ack/Close protocol) over any engine. */
+  def session(engine: ConsumerHost): EventSession = new EventSession(engine)
 
   /** The network boundary: a TCP server speaking the proto3-encoded
     * [[graft.streaming.WireProtocol]] message layer (the reference's
     * gRPC service surface over length-prefixed frames) — one
-    * [[EventSession]] per connection against this engine. Port 0 binds
+    * [[EventSession]] per connection against any engine. Port 0 binds
     * an ephemeral port; read it from `boundPort`. */
-  def wireServer(engine: EventEngine, port: Int = 0): WireServer =
+  def wireServer(engine: ConsumerHost, port: Int = 0): WireServer =
     WireServer(engine, port)
 
   /** The many-groups scale path: one streaming query for all groups.

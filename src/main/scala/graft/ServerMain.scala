@@ -4,7 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.Trigger
 import graft.core.{AuthzProvider, EngineSecurity}
 import graft.sources.Tables
-import graft.streaming.{DurableEventLog, EventEngine, MultiplexedDelivery, WireServer}
+import graft.streaming.{ConsumerHost, DurableEventLog, EventEngine, MultiplexedDelivery, WireServer}
 
 /** ENV-VAR BOOT — the reference's process entry point re-expressed for
   * the Spark engine (`main.rs:33-41` reads the env, `server.rs:25-93`
@@ -73,27 +73,25 @@ object ServerMain {
       s"${env.getOrElse("GRAFT_TRIGGER_MILLIS", "250")} milliseconds")
     val port = env.getOrElse("GRAFT_WIRE_PORT", "0").toInt
     val maxBatch = env.get("GRAFT_MAX_BATCH").map(_.toInt).getOrElse(Int.MaxValue)
-    env.getOrElse("GRAFT_ENGINE", "engine") match {
+    val host: ConsumerHost = env.getOrElse("GRAFT_ENGINE", "engine") match {
       case "engine" =>
-        val e = new EventEngine(spark, trigger, security,
-          ledgerDir = env.get("GRAFT_LEDGER_DIR"))
-        (WireServer(e, port, maxBatch), () => e.stop())
+        new EventEngine(spark, trigger, security, ledgerDir = env.get("GRAFT_LEDGER_DIR"))
       case "multiplexed" =>
         val m = new MultiplexedDelivery(spark, trigger,
           ledgerDir = env.get("GRAFT_LEDGER_DIR"), sourcePartitions = 1, security)
         m.start()
-        (WireServer(m, port, maxBatch), () => m.stop())
+        m
       case "durable" =>
-        val d = new DurableEventLog(spark,
+        new DurableEventLog(spark,
           env.getOrElse("GRAFT_LOG_DIR",
             sys.error("GRAFT_ENGINE=durable requires GRAFT_LOG_DIR")),
           env.getOrElse("GRAFT_CHECKPOINT_DIR",
             sys.error("GRAFT_ENGINE=durable requires GRAFT_CHECKPOINT_DIR")),
           trigger, security)
-        (WireServer(d, port, maxBatch), () => d.stop())
       case other => sys.error(s"unknown GRAFT_ENGINE '$other' " +
         "(expected engine | multiplexed | durable)")
     }
+    (WireServer(host, port, maxBatch), () => host.stop())
   }
 
   def main(args: Array[String]): Unit = {

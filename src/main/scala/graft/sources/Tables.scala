@@ -29,10 +29,12 @@ object Tables {
     * METADATA only (a StructType — what a catalog would hold), never
     * rows or results: every query still lists files and scans parquet
     * from disk on every execution. JVM-lifetime only, keyed by full
-    * path so distinct fixture dirs never alias. The fixture tables are
-    * immutable by contract (TESTDATA.md); a path rewritten with a
-    * DIFFERENT schema mid-JVM would fail loudly at scan time, not read
-    * wrong data. */
+    * path so distinct fixture dirs never alias, and shared by every
+    * session in the JVM. The fixture tables are immutable by contract
+    * (TESTDATA.md); a path rewritten with a different schema mid-JVM is
+    * read with the stale one: a column type change fails at scan time,
+    * but an added column is silently dropped and a removed one reads as
+    * nulls. */
   private val schemaCache =
     new java.util.concurrent.ConcurrentHashMap[String, org.apache.spark.sql.types.StructType]()
 

@@ -9,8 +9,7 @@ import org.apache.spark.sql.functions._
   *
   *  - **per-group** (`groupId=…/chunkId=…/`): one partition dir per
   *    chunk. Right when few groups match a batch — consumer pulls read
-  *    exactly their own dirs, counts come from footers, drop is an
-  *    `rm -r`. Wrong at thousands of matching groups: each micro-batch
+  *    exactly their own dirs, drop is an `rm -r`. Wrong at thousands of matching groups: each micro-batch
   *    pays one file + one commit rename PER GROUP (~3 ms each — the
   *    round-12 floor: 4.8 s/batch at G=2000 against the 250 ms
   *    trigger), and on an object store those renames are sequential
@@ -79,15 +78,6 @@ final class DeliveryTable(spark: SparkSession, val dir: String) {
     while (it.hasNext) { val e = it.next(); b += e.getKey -> e.getValue.get / 1e9 }
     b.result()
   }
-
-  /** Payload of one chunk for one group (per-group delivery queries).
-    * One group ⇒ full write parallelism (splits = shuffle partitions). */
-  def write(groupId: String, chunkId: String, rows: DataFrame): Unit =
-    writeMulti(rows
-      .withColumn("groupId", lit(groupId))
-      .withColumn("chunkId", lit(chunkId)),
-      splitsPerChunk =
-        spark.conf.get("spark.sql.shuffle.partitions", "32").toInt)
 
   /** One chunk's payload write that RETURNS its row count — ONE JOB
     * (round-14, completing the round-13 verdict-task-1 treatment for
@@ -199,10 +189,7 @@ final class DeliveryTable(spark: SparkSession, val dir: String) {
     * no second count job (the round-13 fixed two-job cost, VERDICT
     * task 1; the observed node sits post-shuffle in the write's result
     * stage, where accumulator updates are exactly-once — see
-    * CountByKey scaladoc). [[chunkCounts]] (the footer alternative)
-    * costs one filesystem existence probe PER REGISTERED GROUP per
-    * micro-batch — O(G) stat calls whether or not a group matched —
-    * and remains for the single-group engines' shape. */
+    * CountByKey scaladoc). */
   def writeMultiWithCounts(rows: DataFrame, splitsPerChunk: Int = 1,
                            partitions: Int = 0): Map[String, Long] = {
     val obs = org.apache.spark.sql.Observation()
@@ -452,33 +439,6 @@ final class DeliveryTable(spark: SparkSession, val dir: String) {
       }
   }
 
-  /** Row counts of one batch's just-written chunks from parquet
-    * METADATA only: a filesystem existence probe per candidate group
-    * (groups whose join matched nothing wrote no partition), then one
-    * footer-count job over exactly those chunk directories. This is the
-    * second half of the write-first delivery pattern — the batch is
-    * traversed ONCE (by the payload write); counts come from file
-    * metadata, never from a second pass over the data. PER-GROUP
-    * layout only (the bucketed writer returns counts directly). */
-  def chunkCounts(groupIds: Seq[String], chunkIdFor: String => String): Map[String, Long] = timed("count") {
-    val (filesystem, path) = fs
-    val present = groupIds.filter { g =>
-      filesystem.exists(new org.apache.hadoop.fs.Path(path,
-        s"groupId=${esc(g)}/chunkId=${esc(chunkIdFor(g))}"))
-    }
-    if (present.isEmpty) Map.empty
-    else {
-      val paths = present.map(g =>
-        s"$dir/groupId=${esc(g)}/chunkId=${esc(chunkIdFor(g))}")
-      spark.read.option("basePath", dir).schema(readSchema)
-        .option("ignoreMissingFiles", true).parquet(paths: _*)
-        .groupBy("groupId").count()
-        .collect()
-        .map(r => r.getString(0) -> r.getLong(1))
-        .toMap
-    }
-  }
-
   /** Chunk ids with durable payload rows for a group — the FULL
     * delivery history (acked included) across both layouts. This is
     * the post-eviction history surface: the driver ledger keeps only
@@ -581,7 +541,7 @@ object DeliveryTable {
 
   /** Hive-style partition-value escaping, the SAME function the
     * parquet writer applies when materializing `groupId=…/chunkId=…`
-    * directories — hand-built paths (read/chunkCounts/listChunks/drop)
+    * directories — hand-built paths (read/listChunks/drop)
     * must escape identically or a group id containing ' ', ':', '%',
     * '=' … resolves to a directory that never exists and the pull
     * silently returns empty. */

@@ -1,8 +1,6 @@
 package graft.streaming
 
-import java.sql.Timestamp
 import java.util.concurrent.ConcurrentHashMap
-import java.util.concurrent.atomic.AtomicLong
 import scala.collection.concurrent
 import scala.jdk.CollectionConverters._
 
@@ -17,7 +15,10 @@ import graft.core._
   * JetStream stream (`STORAGE_UPDATES`, natsio.rs:24) becomes at 100 TB:
   * a parquet event log PARTITIONED BY PROJECT, written by one ingest
   * query and read by per-group delivery queries that each own a
-  * checkpoint (≙ a JetStream consumer's position).
+  * checkpoint (≙ a JetStream consumer's position), or by one shared
+  * query for all groups ([[startMultiplexed]]). Ingest, registry,
+  * ledger/WAL, dispatch, pull and ack are the shared [[ConsumerHost]]
+  * core; this class is the log, its delivery queries and compaction.
   *
   * Why partition by project: the subject grammar scopes every query to
   * one project subtree (SURVEY.md §4 "hierarchical key space =
@@ -43,49 +44,20 @@ import graft.core._
   * re-read old batches, so compaction does not disturb them.
   * Strategy (c) is implemented: [[compactTo]] + [[archiveScan]].
   */
-final class DurableEventLog(val spark: SparkSession, logDir: String, ckptRoot: String,
+final class DurableEventLog(session: SparkSession, logDir: String, ckptRoot: String,
                             trigger: Trigger = Trigger.ProcessingTime("250 milliseconds"),
                             security: EngineSecurity = EngineSecurity.Permissive,
                             ackWaitMillis: Long = 30000L,
                             clock: () => Long = () => System.currentTimeMillis())
-    extends ConsumerHost {
-  import spark.implicits._
+    extends ConsumerHost(session, security, ackWaitMillis, clock,
+      Some(s"$ckptRoot/ledger"), s"$ckptRoot/deliveries") {
 
-  /** Consumer dispatch (ack-wait redelivery, competing consumers,
-    * bounded pull batches) — the same [[ChunkDispatcher]] the other two
-    * engines use; flights journal to this engine's always-on WAL. */
-  val dispatcher = new ChunkDispatcher(ackWaitMillis, clock)
-
-  private val source =
-    org.apache.spark.sql.execution.streaming.runtime.MemoryStream[Event](spark, numPartitions = 1)
-  private val sequence = new AtomicLong(0L)
   @volatile private var ingestQuery: Option[StreamingQuery] = None
+  /** Running delivery queries: per-group ones by group id, the shared
+    * one under [[MuxQuery]]. */
   private val deliveries: concurrent.Map[String, StreamingQuery] =
     new ConcurrentHashMap[String, StreamingQuery]().asScala
-  /** Bounded metadata ledger (pending per group; acked history evicted
-    * behind a per-group watermark — see [[ChunkLedger]]). */
-  private val ledger = new ChunkLedger
-  /** Metrics hook: the engine's chunk ledger, for
-    * [[EngineMetrics.watchLedger]] stuck-watermark monitoring. */
-  def chunkLedger: ChunkLedger = ledger
-  /** WAL-backed chunk/ack METADATA — replayed on construction so pending
-    * (unacked) chunks survive a process restart (see LedgerStore).
-    * Payloads are durable in [[DeliveryTable]] parquet under ckptRoot,
-    * written by executors — the driver holds ids+counts only. */
-  private val store = new LedgerStore(s"$ckptRoot/ledger")
-  locally {
-    ledger.beginLoad()
-    val (metas, wms) = store.loadState()
-    wms.foreach { case (g, w) => ledger.restoreWatermark(g, w) }
-    metas.values.foreach { m =>
-      if (m.acked) ledger.restoreAcked(m) else { ledger.record(m); () }
-    }
-    ledger.settleLoad()
-    store.loadFlights().foreach { case ((g, c), (s, at, d)) =>
-      dispatcher.restore(g, c, s, at, d)
-    }
-  }
-  private val table = new DeliveryTable(spark, s"$ckptRoot/deliveries")
+  private val MuxQuery = "__mux__"
 
   /** Log row schema; `project` is the physical partition column.
     * `eventId`/`spos` are the content-derived message identity
@@ -100,20 +72,6 @@ final class DurableEventLog(val spark: SparkSession, logDir: String, ckptRoot: S
     StructField("resourceId", StringType), StructField("ts", TimestampType),
     StructField("eventId", LongType), StructField("spos", IntegerType),
     StructField("project", StringType)))
-
-  def emit(resource: ResourceType, eventType: String, resourceId: String,
-           relation: RelationCtx, token: Option[String] = None): Unit = {
-    security.requireInternal(token)
-    Subjects.requireValidId(resourceId, "resourceId")
-    // Serialize the row-encode (see MultiplexedDelivery.emit): the
-    // memory source's serializer reuses one UnsafeRow buffer and
-    // concurrent wire-connection emitters would tear rows otherwise.
-    source.synchronized {
-      val n = sequence.incrementAndGet()
-      source.addData(Event(resource, eventType, resourceId, relation,
-        new Timestamp(n * 1000L)).copy(eventId = n))
-    }
-  }
 
   /** Ingest: fan out and append to the partitioned log. The project
     * token (#3) exists in every publish subject, so it is derivable in
@@ -209,31 +167,10 @@ final class DurableEventLog(val spark: SparkSession, logDir: String, ckptRoot: S
       .option("checkpointLocation", s"$ckptRoot/delivery-$groupId")
       .trigger(deliveryTrigger)
       .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        // Idempotent on foreachBatch replay: if the (groupId, chunkId)
-        // key is already in the ledger (this batch was delivered before a
-        // restart — possibly already acked), keep the existing entry;
-        // re-appending the WAL record would resurrect acked chunks. The
-        // payload write is dynamic-partition-overwrite, so a replayed
-        // write rewrites identical content rather than duplicating it.
-        // Write-first: one pass (the write — an empty batch writes no
-        // partitions), then the count from the written parquet footers.
-        val chunkId = s"$groupId-$batchId"
-        if (!ledger.isKnown(groupId, chunkId, batchId)) {
-          // writeCounted sizes the file split to the batch (one file for
-          // a steady-state micro-batch, full width for a replay burst)
-          // and returns the row count from the same cached pass — no
-          // footer job, no fixed parts-many files per chunk (round-12
-          // ADVICE).
-          val n = table.writeCounted(groupId, chunkId,
-            batch.select(col("subject"), col("resourceId"), FanOut.seqCol.as("seq")))
-          if (n > 0L) {
-            val meta = ChunkMeta(groupId, chunkId, batchId, n,
-              new Timestamp(System.currentTimeMillis()), acked = false)
-            if (ledger.record(meta)) store.appendChunk(meta) // WAL after payload
-            ()
-          }
-        }
-        ()
+        // Checkpointed batch ids are stable across restarts, so the
+        // chunk seq IS the batch id; a replayed batch whose chunk is
+        // already known (possibly acked) is skipped before the write.
+        deliverGroupBatch(groupId, batchId, batch)
       }
       .start()
     deliveries.put(groupId, q)
@@ -242,60 +179,23 @@ final class DurableEventLog(val spark: SparkSession, logDir: String, ckptRoot: S
   def stopDelivery(groupId: String): Unit =
     deliveries.remove(groupId).foreach(_.stop())
 
-  // ---- multiplexed mode: ONE checkpointed query for all groups ------
+  /** A per-group durable delivery runs while the group has a live
+    * consumer: a session's attach starts it (a group added ahead of any
+    * session, e.g. for [[startMultiplexed]], waits), and its per-group
+    * checkpoint makes every stop/start resume exactly. Groups served by
+    * the multiplexed query need no query of their own. */
+  override protected def onGroupActive(g: StreamGroup): Unit =
+    if (dispatcher.liveSessionCount(g.id) > 0 && !deliveries.contains(g.id)
+        && !deliveries.contains(MuxQuery))
+      startDeliveryMulti(g.id, g.filterSubjects, eventType = g.eventType)
 
-  private val groups: concurrent.Map[String, StreamGroup] =
-    new ConcurrentHashMap[String, StreamGroup]().asScala
-
-  def addGroup(groupId: String, resourceType: ResourceType, resourceId: String,
-               hierarchy: Hierarchy, includeSubresources: Boolean,
-               eventType: String = EventType.All,
-               token: Option[String] = None): StreamGroup =
-    addGroupMulti(groupId, resourceType, resourceId, Seq(hierarchy),
-      includeSubresources, eventType, token)
-
-  /** Multi-hierarchy registration — union-of-matchers semantics, see
-    * [[MultiplexedDelivery.addGroupMulti]]. */
-  def addGroupMulti(groupId: String, resourceType: ResourceType, resourceId: String,
-                    hierarchies: Seq[Hierarchy], includeSubresources: Boolean,
-                    eventType: String = EventType.All,
-                    token: Option[String] = None): StreamGroup = {
-    require(hierarchies.nonEmpty,
-      s"stream group $groupId needs at least one hierarchy (public_event_server.rs:145-152)")
-    security.requireRead(token, resourceType, resourceId)
-    val filters = hierarchies
-      .map(Subjects.queryFor(resourceType, resourceId, _, includeSubresources))
-      .distinct
-    val g = StreamGroup(groupId, resourceType.name, resourceId, eventType,
-      includeSubresources, filters.head, filters.tail)
-    require(groups.putIfAbsent(groupId, g).isEmpty,
-      s"stream group $groupId already exists")
-    g
-  }
-
-  def removeGroup(groupId: String): Unit = groups.remove(groupId)
-
-  /** R9 attach for the session protocol: the group must be registered
-    * and the caller authorized; ensures its per-group delivery query is
-    * running (restarting from the same checkpoint resumes, never
-    * reprocesses). Groups served by [[startMultiplexed]] are covered by
-    * the shared query already. */
-  override def attachConsumer(groupId: String, token: Option[String]): Unit = {
-    val g = groups.getOrElse(groupId,
-      throw new NoSuchElementException(s"unknown stream group $groupId"))
-    security.requireRead(token, ResourceType.fromName(g.resourceType), g.resourceId)
-    if (!deliveries.contains(groupId) && !deliveries.contains("__mux__"))
-      startDeliveryMulti(groupId, g.filterSubjects, eventType = g.eventType)
-  }
-
-  /** The durable engine keeps per-group checkpoints; stopping the query
-    * on last-session close releases the cluster resources while the
-    * checkpoint guarantees a later attach resumes exactly. */
-  override def onLastSessionClosed(groupId: String): Unit = stopDelivery(groupId)
+  /** Removed or last session closed: stop the group's own delivery. */
+  override protected def onGroupIdle(groupId: String): Unit = stopDelivery(groupId)
 
   /** One delivery query for ALL registered groups, reading the log from
-    * a single shared checkpoint. Join = pure equi-join on candidate
-    * match keys ([[Subjects.matchKeysCol]]), as in MultiplexedDelivery.
+    * a single shared checkpoint ([[ConsumerHost.deliverSharedBatch]],
+    * as in MultiplexedDelivery; a log batch's size is not known before
+    * it is read, so its write is sized for the widest batch).
     *
     * Semantics difference vs per-group mode, by design:
     *  - per-group [[startDelivery]] owns a fresh checkpoint → a new
@@ -304,10 +204,8 @@ final class DurableEventLog(val spark: SparkSession, logDir: String, ckptRoot: S
     *    later sees only batches committed AFTER it registered
     *    (from-now-on semantics). Pick per need; both are exposed.
     */
-  def startMultiplexed(retentionEvery: Int =
-                         MultiplexedDelivery.PayloadRetentionEvery): Unit = synchronized {
-    require(!deliveries.contains("__mux__"), "multiplexed delivery already running")
-    val muxBatches = new AtomicLong(0L)
+  def startMultiplexed(): Unit = synchronized {
+    require(!deliveries.contains(MuxQuery), "multiplexed delivery already running")
     val q = spark.readStream
       .schema(logSchema)
       .parquet(logDir)
@@ -317,85 +215,12 @@ final class DurableEventLog(val spark: SparkSession, logDir: String, ckptRoot: S
       .option("checkpointLocation", s"$ckptRoot/mux")
       .trigger(trigger)
       .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        val snapshot = groups.values.toSeq
-        // No batch.isEmpty pre-check: that is a full extra pass on the
-        // common (non-empty) path; the per-group counts below cost the
-        // same on an empty batch and gate the write anyway.
-        if (snapshot.nonEmpty) {
-          // One row per (group, filter subject); multi-hierarchy groups
-          // get union-of-matchers with once-per-message dedup — same
-          // rule as MultiplexedDelivery's batch join.
-          val anyMulti = snapshot.exists(_.extraFilterSubjects.nonEmpty)
-          val subs = snapshot
-            .flatMap(g => g.filterSubjects.map(fs => (g.id, fs, g.eventType)))
-            .toDF("id", "joinKey", "subEventType")
-          val subtreeDepths = snapshot.flatMap(_.filterSubjects)
-            .flatMap(Subjects.subtreeDepth).distinct.sorted
-          // Write-first: ONE distributed pass (join → partitioned payload
-          // write) serves every group; per-group counts then come from
-          // parquet FOOTERS of the just-written chunk dirs, never from a
-          // second pass over the batch. A replayed batch rewrites its own
-          // partitions (dynamic overwrite) — idempotent — and the ledger
-          // guard below keeps an existing (possibly acked) meta intact.
-          // Multi-matcher dedup on CONTENT-derived message identity
-          // (never monotonically_increasing_id — round-13 ADVICE; see
-          // MultiplexedDelivery). eventId restarts per incarnation and
-          // a backfill batch can span incarnations, so the key also
-          // carries resourceId/eventType/ts (logSchema scaladoc).
-          // Pure equi-join on candidate match keys — same O(G)-free
-          // form as MultiplexedDelivery (Subjects.matchKeysCol scaladoc);
-          // the project-token equi + matchesCol residual it replaces
-          // left every same-project subscription a per-row candidate.
-          val joined = batch
-            .select(col("subject"), col("resourceId"), col("eventType"),
-              col("eventId"), col("spos"), col("ts"))
-            .withColumn("joinKey",
-              explode(Subjects.matchKeysCol(col("subject"), subtreeDepths)))
-            .join(broadcast(subs), "joinKey")
-            .filter(Subjects.eventTypeMatches(col("eventType"), col("subEventType")))
-          val matched =
-            (if (anyMulti)
-               joined.dropDuplicates("id", "eventId", "spos", "resourceId", "eventType", "ts")
-             else joined)
-              .select(col("id").as("groupId"), col("subject"),
-                col("resourceId"), FanOut.seqCol.as("seq"))
-          val withChunk = matched
-            .withColumn("chunkId", concat(col("groupId"), lit(s"-$batchId")))
-          // Layout + count regimes — see MultiplexedDelivery (bucketed
-          // past BucketedMinGroups registered groups: O(parts) files per
-          // batch instead of one per matching group);
-          // write-parallelism hint — see DeliveryTable.prepare.
-          val parts = spark.conf.get("spark.sql.shuffle.partitions", "32").toInt
-          val counts =
-            if (snapshot.size >= MultiplexedDelivery.BucketedMinGroups)
-              table.writeBucketed(withChunk, batchId, parts)
-            else if (snapshot.size > MultiplexedDelivery.FooterCountMaxGroups)
-              table.writeMultiWithCounts(withChunk,
-                math.max(1, parts / math.max(1, snapshot.size)))
-            else {
-              table.writeMulti(withChunk,
-                math.max(1, parts / math.max(1, snapshot.size)))
-              table.chunkCounts(snapshot.map(_.id), g => s"$g-$batchId")
-            }
-          counts.foreach { case (gid, n) =>
-            val chunkId = s"$gid-$batchId"
-            val meta = ChunkMeta(gid, chunkId, batchId, n,
-              new Timestamp(System.currentTimeMillis()), acked = false)
-            if (ledger.record(meta)) store.appendChunk(meta)
-          }
-          // automated bucketed retention — same cadence + restart-safety
-          // story as MultiplexedDelivery (round-13 verdict task 4)
-          if (retentionEvery > 0
-              && snapshot.size >= MultiplexedDelivery.BucketedMinGroups
-              && muxBatches.get % retentionEvery == (retentionEvery - 1L)) {
-            compactPayloads(); ()
-          }
-        }
-        muxBatches.incrementAndGet()
-        ()
+        // eventIds repeat across incarnations (logSchema scaladoc)
+        deliverSharedBatch(batch, batchId, Long.MaxValue,
+          Seq("resourceId", "eventType", "ts"))
       }
       .start()
-    deliveries.put("__mux__", q)
+    deliveries.put(MuxQuery, q)
   }
 
   // ---- compaction (strategy (c) of the class doc) -------------------
@@ -469,87 +294,12 @@ final class DurableEventLog(val spark: SparkSession, logDir: String, ckptRoot: S
       // Idempotent per (groupId, chunkId): a re-run backfill re-serves
       // nothing already in the ledger (WAL rules — acked stays acked,
       // including acked history compacted into the watermark).
-      val meta = ChunkMeta(groupId, chunkId, batchId = -(k + 1L),
-        math.min(chunkRows.toLong, n - k.toLong * chunkRows),
-        new Timestamp(System.currentTimeMillis()), acked = false)
-      if (ledger.record(meta)) {
-        store.appendChunk(meta)
+      if (recordChunk(groupId, chunkId, -(k + 1L),
+          math.min(chunkRows.toLong, n - k.toLong * chunkRows)))
         created += 1
-      }
     }
     created
   }
-
-  /** WAL hygiene: rewrite the chunk/ack ledger to minimal equivalent
-    * state (see LedgerStore.compact) — pairs with [[compactTo]] for the
-    * event log itself. */
-  def compactLedger(): Unit = store.compact()
-
-  /** Bucketed-payload retention for the multiplexed mode — see
-    * [[MultiplexedDelivery.compactPayloads]] (same floor: every
-    * group's lowest pending chunk, bounded by the highest minted seq
-    * so an in-flight batch's payload is never reclaimed pre-record). */
-  def compactPayloads(): Int = {
-    // floor over the LEDGER, not the registration map: a WAL restart
-    // restores pending metas before their groups are re-registered, and
-    // those chunks' batches must survive retention (ChunkLedger scaladoc).
-    // maxBatchId FIRST, pending floor second — the reverse order is a
-    // TOCTOU against a micro-batch recording its meta between the two
-    // reads (see MultiplexedDelivery.compactPayloads).
-    val maxMinted = ledger.maxBatchId
-    val floor = ledger.minPendingBatchId
-    val bound =
-      if (maxMinted == Long.MinValue) Long.MinValue else maxMinted + 1
-    table.dropBatchesBefore(math.min(floor, bound))
-  }
-
-  /** Hydrate metas into client-facing chunks: ONE pruned read of the
-    * deliveries table covering all requested chunks (consumer pull);
-    * readChunks resolves each meta in whichever layout wrote it. */
-  private def hydrate(groupId: String, metas: Seq[ChunkMeta]): Seq[DeliveryChunk] = {
-    if (metas.isEmpty) return Seq.empty
-    val payload = table.readChunks(groupId, metas.map(m => (m.chunkId, m.batchId)))
-    metas.map { m =>
-      val (subjects, ids) = payload.getOrElse(m.chunkId, (Seq.empty, Seq.empty))
-      DeliveryChunk(m.groupId, m.chunkId, m.batchId, subjects, ids, m.deliveredAt, m.acked)
-    }
-  }
-
-  def pendingChunks(groupId: String): Seq[DeliveryChunk] =
-    hydrate(groupId, ledger.pending(groupId))
-
-  /** Consumer pull with JetStream semantics (see [[EventEngine.pull]]):
-    * disjoint claims across competing sessions, ack-wait redelivery
-    * with the same chunkId, bounded batches; every claim journals its
-    * flight so the redelivery timer survives restart. */
-  def pull(groupId: String, sessionId: Long,
-           max: Int = Int.MaxValue): Seq[DeliveryChunk] = {
-    val metas = ledger.pending(groupId)
-    val claimed =
-      dispatcher.offer(groupId, sessionId, metas.map(_.chunkId), max).toSet
-    for (c <- claimed; f <- dispatcher.flight(groupId, c))
-      store.appendOffer(groupId, c, f.sessionId, f.offeredAt, f.deliveries)
-    hydrate(groupId, metas.filter(m => claimed.contains(m.chunkId)))
-  }
-
-  /** Pending row count from driver metadata alone (no payload read). */
-  def pendingRowCount(groupId: String): Long = ledger.pendingRows(groupId)
-
-  /** All chunks ever delivered (acked history re-listed from the
-    * durable payload table — see [[EventEngine.historyMetas]]). */
-  def deliveredChunks(groupId: String): Seq[DeliveryChunk] =
-    hydrate(groupId, EventEngine.historyMetas(
-      groupId, ledger.pending(groupId), ledger.ackedResident(groupId),
-      table.listChunks(groupId)))
-
-  def ack(groupId: String, chunkId: String): Boolean =
-    ledger.ack(groupId, chunkId) match {
-      case Some(_) =>
-        store.appendAck(groupId, chunkId)
-        dispatcher.settle(groupId, chunkId)
-        true
-      case None => false // unknown id or duplicate ack
-    }
 
   def processAllAvailable(): Unit = {
     ingestQuery.foreach(_.processAllAvailable())

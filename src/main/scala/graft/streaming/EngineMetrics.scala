@@ -16,7 +16,7 @@ import org.apache.spark.sql.streaming.StreamingQueryListener
   *    rows/second and batch duration per query (the backpressure /
   *    throughput signals an operator watches at scale);
   *  - terminations: queries that died keep their exception string, so
-  *    a supervisor can re-attach ([[EventEngine.attach]] restarts a
+  *    a supervisor can re-attach ([[ConsumerHost.attach]] restarts a
   *    closed group) or alert.
   *
   * Listener callbacks arrive on Spark's listener bus (asynchronous);

@@ -4,22 +4,21 @@ import graft.core._
 
 /** R13 — the bidi session protocol of
   * `read_stream_group_messages` (public_event_server.rs:192-446),
-  * re-expressed as a synchronous protocol object over any
-  * [[ConsumerHost]] — the per-group [[EventEngine]], the multiplexed
-  * scale path ([[MultiplexedDelivery]]), or the durable log
-  * ([[DurableEventLog]]) all serve the same protocol:
+  * re-expressed as a synchronous protocol object over the one delivery
+  * core ([[ConsumerHost]]), so every engine serves the same protocol:
   *
   *  - the FIRST inbound message must be `Init{stream_group_id}`; an Ack
   *    before Init is rejected ("an init message needs to be send before
   *    any ack message", :234-240), as is a missing group (:249-270) or
   *    a caller without a Read grant on the group's resource (the authz
-  *    re-check of :273-301 — [[EventEngine.attach]] performs it);
+  *    re-check of :273-301 — [[ConsumerHost.attach]] performs it);
   *  - later `Ack{ack_chunk_id[]}` messages settle delivered chunks and
   *    the session answers with whatever is pending (the pull analog of
   *    the reference's push loop — micro-batch delivery fills the
   *    ledger, the session drains it);
-  *  - `close` stops the group's delivery query but keeps its state, so
-  *    a new session can re-attach and resume (:321-345);
+  *  - `close` releases the session; when it was the group's last one
+  *    the engine may stop that group's own delivery, keeping its state
+  *    so a new session can re-attach and resume (:321-345);
   *  - failures inside an established session surface as
   *    [[EventSession.SessionError]] values on the outbound stream — the
   *    reference's error CHANNEL feeding the output loop (:325,395-401)
@@ -57,7 +56,7 @@ final class EventSession(engine: ConsumerHost,
         try {
           // pre-session failures throw — the reference returns a status
           // before any output stream exists (:249-270, :273-301)
-          engine.attachConsumer(id, token)
+          engine.attach(id, token)
         } catch {
           case e: Throwable =>
             if (engine.dispatcher.closeSession(id, sessionId) == 0)
@@ -94,8 +93,8 @@ final class EventSession(engine: ConsumerHost,
         // the survivors (each reference bidi stream is one client of a
         // shared JetStream consumer); the remaining-count decision is
         // made inside the dispatcher's lock so concurrent closes elect
-        // exactly one releaser; what "release" means is the host's call
-        // (per-group engine stops its query, shared-query engines no-op)
+        // exactly one releaser; what "release" means is the engine's call
+        // (per-group deliveries stop, the shared query keeps running)
         if (engine.dispatcher.closeSession(id, sessionId) == 0)
           engine.onLastSessionClosed(id)
         groupId = None

@@ -171,7 +171,7 @@ object H2c {
   * handled, so the framing a tonic client emits for these four methods
   * round-trips. gRPC failures map to `grpc-status` trailers (0 OK,
   * 2 UNKNOWN), the reference's status channel. */
-final class GrpcServer(host: ConsumerHost, admin: WireAdmin, port: Int = 0,
+final class GrpcServer(host: ConsumerHost, port: Int = 0,
                        maxBatch: Int = Int.MaxValue,
                        pumpMillis: Long = 250L) {
   import H2c._
@@ -410,7 +410,7 @@ final class GrpcServer(host: ConsumerHost, admin: WireAdmin, port: Int = 0,
       case GrpcServer.CreatePath =>
         decodeRequest(wrapArm(4, body)) match {
           case cg @ CreateGroup(id, rt, rid, _, sub, et, tk, _) =>
-            admin.createGroup(id, graft.core.ResourceType.fromName(rt), rid,
+            host.addGroupMulti(id, graft.core.ResourceType.fromName(rt), rid,
               cg.hierarchies, sub,
               if (et.isEmpty) graft.core.EventType.All else et, token(st).orElse(tk))
             respondGrpc(st, Seq(Array.emptyByteArray), 0)
@@ -419,14 +419,14 @@ final class GrpcServer(host: ConsumerHost, admin: WireAdmin, port: Int = 0,
       case GrpcServer.DeletePath =>
         decodeRequest(wrapArm(5, body)) match {
           case DeleteGroup(id) =>
-            admin.deleteGroup(id)
+            host.removeGroup(id)
             respondGrpc(st, Seq(Array.emptyByteArray), 0)
           case _ => respondGrpc(st, Seq.empty, 2, Some("malformed DeleteEventStreamingGroup"))
         }
       case GrpcServer.EmitPath =>
         decodeRequest(wrapArm(6, body)) match {
           case Emit(rt, et, rid, rel, tk) =>
-            admin.emit(graft.core.ResourceType.fromName(rt), et, rid, rel,
+            host.emit(graft.core.ResourceType.fromName(rt), et, rid, rel,
               token(st).orElse(tk))
             respondGrpc(st, Seq(Array.emptyByteArray), 0)
           case _ => respondGrpc(st, Seq.empty, 2, Some("malformed EmitEvent"))
@@ -582,9 +582,7 @@ object GrpcServer {
   val ReadMessagesPath = s"$ServicePrefix/ReadStreamGroupMessages"
   val EmitPath = "/aruna.api.internal.v1.InternalEventEmitterService/EmitEvent"
 
-  def apply(e: EventEngine): GrpcServer = new GrpcServer(e, WireAdmin(e))
-  def apply(m: MultiplexedDelivery): GrpcServer = new GrpcServer(m, WireAdmin(m))
-  def apply(d: DurableEventLog): GrpcServer = new GrpcServer(d, WireAdmin(d))
+  def apply(host: ConsumerHost): GrpcServer = new GrpcServer(host)
 }
 
 /** Minimal blocking h2c gRPC client — the hand-rolled analog of a tonic

@@ -4,52 +4,8 @@ import java.io.{DataInputStream, DataOutputStream}
 import java.net.{ServerSocket, Socket, SocketException}
 import java.util.concurrent.ConcurrentHashMap
 import scala.util.control.NonFatal
-import graft.core.{Hierarchy, RelationCtx, ResourceType}
+import graft.core.ResourceType
 import WireProtocol._
-
-/** The unary-RPC surface of the wire boundary (create/delete/emit) —
-  * [[ConsumerHost]] carries the session protocol, this carries the
-  * rest, so ONE server implementation fronts all three engines exactly
-  * the way one session protocol already serves them (the reference
-  * splits these across its public and internal tonic services;
-  * public_event_server.rs:52,177, internal_event_server.rs:18). */
-trait WireAdmin {
-  /** `hierarchies` carries the request's full repeated field (≥1;
-    * multi-hierarchy creates register the union of matchers). */
-  def createGroup(groupId: String, rt: ResourceType, resourceId: String,
-                  hierarchies: Seq[Hierarchy], includeSub: Boolean,
-                  eventType: String, token: Option[String]): Unit
-  def deleteGroup(groupId: String): Unit
-  def emit(rt: ResourceType, eventType: String, resourceId: String,
-           relation: RelationCtx, token: Option[String]): Unit
-}
-
-object WireAdmin {
-  def apply(e: EventEngine): WireAdmin = new WireAdmin {
-    def createGroup(id: String, rt: ResourceType, rid: String, hs: Seq[Hierarchy],
-                    sub: Boolean, et: String, token: Option[String]): Unit =
-      e.createStreamGroupMulti(id, rt, rid, hs, sub, et, token)
-    def deleteGroup(id: String): Unit = e.deleteStreamGroup(id)
-    def emit(rt: ResourceType, et: String, rid: String, rel: RelationCtx,
-             token: Option[String]): Unit = e.emit(rt, et, rid, rel, token)
-  }
-  def apply(m: MultiplexedDelivery): WireAdmin = new WireAdmin {
-    def createGroup(id: String, rt: ResourceType, rid: String, hs: Seq[Hierarchy],
-                    sub: Boolean, et: String, token: Option[String]): Unit =
-      m.addGroupMulti(id, rt, rid, hs, sub, et, token)
-    def deleteGroup(id: String): Unit = m.removeGroup(id)
-    def emit(rt: ResourceType, et: String, rid: String, rel: RelationCtx,
-             token: Option[String]): Unit = m.emit(rt, et, rid, rel, token = token)
-  }
-  def apply(d: DurableEventLog): WireAdmin = new WireAdmin {
-    def createGroup(id: String, rt: ResourceType, rid: String, hs: Seq[Hierarchy],
-                    sub: Boolean, et: String, token: Option[String]): Unit =
-      d.addGroupMulti(id, rt, rid, hs, sub, et, token)
-    def deleteGroup(id: String): Unit = d.removeGroup(id)
-    def emit(rt: ResourceType, et: String, rid: String, rel: RelationCtx,
-             token: Option[String]): Unit = d.emit(rt, et, rid, rel, token)
-  }
-}
 
 /** The WIRE-FACING server boundary — the repo's stand-in for the
   * reference's tonic gRPC servers (public_event_server.rs:52 unary
@@ -77,8 +33,7 @@ object WireAdmin {
   * connections against the driver exactly like the reference's server
   * fronts NATS, and the per-connection thread model is sized for that
   * control-plane load, not for bulk data. */
-final class WireServer(host: ConsumerHost, admin: WireAdmin,
-                       port: Int = 0, maxBatch: Int = Int.MaxValue) {
+final class WireServer(host: ConsumerHost, port: Int = 0, maxBatch: Int = Int.MaxValue) {
 
   private val server = new ServerSocket(port)
   private val conns = ConcurrentHashMap.newKeySet[Socket]()
@@ -141,14 +96,14 @@ final class WireServer(host: ConsumerHost, admin: WireAdmin,
                 case Close =>
                   outbound(session.handle(EventSession.Close))
                 case cg @ CreateGroup(id, rt, rid, _, sub, et, token, _) =>
-                  admin.createGroup(id, ResourceType.fromName(rt), rid,
+                  host.addGroupMulti(id, ResourceType.fromName(rt), rid,
                     cg.hierarchies, sub,
                     if (et.isEmpty) graft.core.EventType.All else et, token)
                   Seq.empty
                 case DeleteGroup(id) =>
-                  admin.deleteGroup(id); Seq.empty
+                  host.removeGroup(id); Seq.empty
                 case Emit(rt, et, rid, rel, token) =>
-                  admin.emit(ResourceType.fromName(rt), et, rid, rel, token)
+                  host.emit(ResourceType.fromName(rt), et, rid, rel, token)
                   Seq.empty
               }
             } catch {
@@ -177,14 +132,8 @@ final class WireServer(host: ConsumerHost, admin: WireAdmin,
 }
 
 object WireServer {
-  def apply(e: EventEngine, port: Int = 0, maxBatch: Int = Int.MaxValue): WireServer =
-    new WireServer(e, WireAdmin(e), port, maxBatch)
-  def apply(m: MultiplexedDelivery, port: Int, maxBatch: Int): WireServer =
-    new WireServer(m, WireAdmin(m), port, maxBatch)
-  def apply(m: MultiplexedDelivery): WireServer = apply(m, 0, Int.MaxValue)
-  def apply(d: DurableEventLog, port: Int, maxBatch: Int): WireServer =
-    new WireServer(d, WireAdmin(d), port, maxBatch)
-  def apply(d: DurableEventLog): WireServer = apply(d, 0, Int.MaxValue)
+  def apply(host: ConsumerHost, port: Int = 0, maxBatch: Int = Int.MaxValue): WireServer =
+    new WireServer(host, port, maxBatch)
 }
 
 /** Minimal blocking client for [[WireServer]] — one socket, one

@@ -26,11 +26,7 @@ import graft.streaming.MultiplexedDelivery
   * Reported per group count: per-batch cost (median + max), total wall,
   * driver ledger footprint ([[MultiplexedDelivery.ledgerStats]]), used
   * heap, and the delivered-row accounting. Per-batch cost staying flat
-  * (or sublinear) as G grows 10× is the scale claim; the footer-vs-
-  * aggregation count regime crossover
-  * ([[MultiplexedDelivery.FooterCountMaxGroups]]) is measured by
-  * running both regimes at the same G (SPARK_GRAFT_MUX_FOOTER=1 forces
-  * the footer path).
+  * (or sublinear) as G grows 10× is the scale claim.
   *
   * Usage: runMain graft.tools.GroupScaleProbe [sfDir] [G1,G2,...]
   */
@@ -47,17 +43,11 @@ object GroupScaleProbe {
     * Returns the metrics row (shared with the `mux_groups` bench row). */
   def run(spark: SparkSession, rows: Array[(Long, Long, String)], g: Int,
           nBatches: Int = 8, churn: Boolean = true,
-          forceFooterCounts: Boolean = false,
-          forceAggCounts: Boolean = false,
           bucketedMinGroups: Int =
-            graft.streaming.MultiplexedDelivery.BucketedMinGroups): Result = {
+            graft.streaming.ConsumerHost.BucketedMinGroups): Result = {
     val mux = new MultiplexedDelivery(spark,
       org.apache.spark.sql.streaming.Trigger.ProcessingTime("250 milliseconds"),
       sourcePartitions = 8,
-      footerCountMaxGroups =
-        if (forceFooterCounts) Int.MaxValue
-        else if (forceAggCounts) 0
-        else graft.streaming.MultiplexedDelivery.FooterCountMaxGroups,
       bucketedMinGroups = bucketedMinGroups)
     // 5 hot project-subtree groups (the replay-bench shape) + (g-5)
     // selective collection-subtree groups, most idle by construction.
@@ -158,21 +148,15 @@ object GroupScaleProbe {
     println(f"${"G"}%7s ${"batches"}%7s ${"total_s"}%8s ${"batch_med"}%9s " +
       f"${"batch_max"}%9s ${"acked"}%8s ${"pending"}%9s ${"ack_res"}%7s ${"heap_mb"}%7s")
     gs.foreach { g =>
-      // SPARK_GRAFT_MUX_FOOTER=1 forces the footer-count regime at any
-      // G; =0 forces the aggregation regime — the two sides of the
-      // FooterCountMaxGroups crossover measurement (verdict task 4).
       // SPARK_GRAFT_MUX_BUCKETED=1 forces the BUCKETED layout at any G;
       // =0 forces the per-group layout — the two sides of the
       // BucketedMinGroups layout crossover (round-13 task 1).
-      val footer = sys.env.get("SPARK_GRAFT_MUX_FOOTER")
       val bucketed = sys.env.get("SPARK_GRAFT_MUX_BUCKETED")
       val r = run(spark, rows, g,
-        forceFooterCounts = footer.contains("1"),
-        forceAggCounts = footer.contains("0"),
         bucketedMinGroups =
           if (bucketed.contains("1")) 0
           else if (bucketed.contains("0")) Int.MaxValue
-          else graft.streaming.MultiplexedDelivery.BucketedMinGroups)
+          else graft.streaming.ConsumerHost.BucketedMinGroups)
       println(f"${r.groups}%7d ${r.batches}%7d ${r.totalSec}%8.1f ${r.batchMedianSec}%9.2f " +
         f"${r.batchMaxSec}%9.2f ${r.ackedChunks}%8d ${r.pendingMetas}%9d " +
         f"${r.ackedResident}%7d ${r.usedHeapMb}%7d")

@@ -72,7 +72,7 @@ object IngestProbe {
       var i = 0
       while (i < rows.length) { val e = event(i)
         mux.emit(ResourceType.fromName(e.resource), e.eventType, e.resourceId,
-          RelationCtx(e.project, e.collection, e.sharedObject, e.objectGroups), e.ts)
+          RelationCtx(e.project, e.collection, e.sharedObject, e.objectGroups))
         i += 1 }
     }
     run("per-event x8 threads") { mux =>
@@ -82,7 +82,7 @@ object IngestProbe {
           var i = t
           while (i < rows.length) { val e = event(i)
             mux.emit(ResourceType.fromName(e.resource), e.eventType, e.resourceId,
-              RelationCtx(e.project, e.collection, e.sharedObject, e.objectGroups), e.ts)
+              RelationCtx(e.project, e.collection, e.sharedObject, e.objectGroups))
             i += n }
         }, s"ingest-probe-$t")
         th.start(); th

@@ -28,11 +28,7 @@ object MuxWriteProbe {
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
-    sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(',').foreach { kv =>
-      val Array(k, v) = kv.split("=", 2)
-      b.config(k, v)
-    })
-    val spark = b.getOrCreate()
+    val spark = ToolConf.withEnvConf(b).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
 

@@ -20,11 +20,7 @@ object ReplayProbe {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
     // experiment confs, same contract as TimeQ (bench-only, never Verify)
-    sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(',').foreach { kv =>
-      val Array(k, v) = kv.split("=", 2)
-      b.config(k, v)
-    })
-    val spark = b.getOrCreate()
+    val spark = ToolConf.withEnvConf(b).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val wire = args.length > 2 && args(2) == "wire"
     val phases = args.length > 2 && args(2) == "phases"

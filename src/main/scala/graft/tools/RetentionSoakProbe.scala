@@ -10,7 +10,7 @@ import graft.streaming.MultiplexedDelivery
 /** Bucketed-payload retention soak (round-13 verdict task 4): a
   * long-running many-groups deployment must hold its batch-dir count at
   * a STEADY STATE — the automated cadence
-  * ([[MultiplexedDelivery.PayloadRetentionEvery]]) reaping fully-acked
+  * ([[graft.streaming.ConsumerHost.PayloadRetentionEvery]]) reaping fully-acked
   * batch dirs as consumers drain, with churn running (group removes do
   * NOT physically delete from bucketed files, so retention is the only
   * storage-reclaim path — DeliveryTable.drop scaladoc).

@@ -15,7 +15,7 @@ object StreamDemo {
       .config("spark.sql.session.timeZone", "UTC").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val engine = new EventEngine(spark)
-    val g = engine.createStreamGroup("demo", ResourceType.Project, "proj-42",
+    val g = engine.addGroup("demo", ResourceType.Project, "proj-42",
       Hierarchy(projectId = "proj-42"), includeSubresources = true)
     println(s"group ${g.id} filter=${g.filterSubject}")
     engine.emit(ResourceType.Project, EventType.All, "proj-42", RelationCtx())

@@ -22,11 +22,7 @@ object TimeQ {
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
-    sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(',').foreach { kv =>
-      val Array(k, v) = kv.split("=", 2)
-      b.config(k, v)
-    })
-    val spark = b.getOrCreate()
+    val spark = ToolConf.withEnvConf(b).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     names.foreach { name =>
       val fn = graft.SparkEntry.queries(name)

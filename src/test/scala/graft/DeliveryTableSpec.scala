@@ -29,9 +29,9 @@ class DeliveryTableSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("write/read round-trips payloads per chunk, in delivery order") {
     val t = new DeliveryTable(spark, DeliveryTable.tempDir())
-    t.write("g1", "g1-0", payload(Seq(("s1", "r1"), ("s2", "r2"))))
-    t.write("g1", "g1-1", payload(Seq(("s3", "r3"))))
-    t.write("g2", "g2-0", payload(Seq(("sX", "rX"))))
+    t.writeCounted("g1", "g1-0", payload(Seq(("s1", "r1"), ("s2", "r2"))))
+    t.writeCounted("g1", "g1-1", payload(Seq(("s3", "r3"))))
+    t.writeCounted("g2", "g2-0", payload(Seq(("sX", "rX"))))
     val got = t.read("g1", Seq("g1-0", "g1-1"))
     assert(got.keySet == Set("g1-0", "g1-1"))
     assert(got("g1-0") == (Seq("s1", "s2"), Seq("r1", "r2")))
@@ -42,10 +42,10 @@ class DeliveryTableSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("replayed write overwrites its own partitions — no duplication, others untouched") {
     val t = new DeliveryTable(spark, DeliveryTable.tempDir())
-    t.write("g", "g-0", payload(Seq(("s1", "r1"), ("s2", "r2"))))
-    t.write("g", "g-1", payload(Seq(("s3", "r3"))))
+    t.writeCounted("g", "g-0", payload(Seq(("s1", "r1"), ("s2", "r2"))))
+    t.writeCounted("g", "g-1", payload(Seq(("s3", "r3"))))
     // foreachBatch replay after a crash re-runs batch 0 with identical rows
-    t.write("g", "g-0", payload(Seq(("s1", "r1"), ("s2", "r2"))))
+    t.writeCounted("g", "g-0", payload(Seq(("s1", "r1"), ("s2", "r2"))))
     val got = t.read("g", Seq("g-0", "g-1"))
     assert(got("g-0") == (Seq("s1", "s2"), Seq("r1", "r2")),
       "replay must rewrite, not append duplicates")
@@ -55,8 +55,8 @@ class DeliveryTableSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("read touches only the requested group's chunk dirs: a concurrently-dropped sibling group never fails a pull") {
     val t = new DeliveryTable(spark, DeliveryTable.tempDir())
-    t.write("keep", "keep-0", payload(Seq(("s1", "r1"))))
-    t.write("gone", "gone-0", payload(Seq(("s2", "r2"))))
+    t.writeCounted("keep", "keep-0", payload(Seq(("s1", "r1"))))
+    t.writeCounted("gone", "gone-0", payload(Seq(("s2", "r2"))))
     // churn: the sibling group is removed between this consumer's pull
     // planning and execution — its dir vanishing must be invisible here
     t.drop("gone")
@@ -66,7 +66,7 @@ class DeliveryTableSpec extends AnyFunSuite with BeforeAndAfterAll {
     // a failed job (the churn-tolerance contract of the direct-path read)
     assert(t.read("gone", Seq("gone-0")).isEmpty)
     // mixed list: present chunk hydrates, dropped chunk is skipped
-    t.write("keep", "keep-1", payload(Seq(("s3", "r3"))))
+    t.writeCounted("keep", "keep-1", payload(Seq(("s3", "r3"))))
     t.drop("gone")
     assert(t.read("keep", Seq("keep-0", "gone-0", "keep-1")).keySet ==
       Set("keep-0", "keep-1"))
@@ -75,8 +75,8 @@ class DeliveryTableSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("read of an empty table / unknown chunks is empty; drop removes a group only") {
     val t = new DeliveryTable(spark, DeliveryTable.tempDir())
     assert(t.read("g", Seq("g-0")).isEmpty, "missing dir reads empty")
-    t.write("g", "g-0", payload(Seq(("s1", "r1"))))
-    t.write("h", "h-0", payload(Seq(("s2", "r2"))))
+    t.writeCounted("g", "g-0", payload(Seq(("s1", "r1"))))
+    t.writeCounted("h", "h-0", payload(Seq(("s2", "r2"))))
     assert(t.read("g", Seq("nope")).isEmpty)
     t.drop("g")
     assert(t.read("g", Seq("g-0")).isEmpty, "dropped group reads empty")
@@ -92,12 +92,15 @@ class DeliveryTableSpec extends AnyFunSuite with BeforeAndAfterAll {
     val t = new DeliveryTable(spark, DeliveryTable.tempDir())
     val g = "team a:b%c=d#e"
     val c = "chunk 0:1%2=3"
-    t.write(g, c, payload(Seq(("s1", "r1"), ("s2", "r2"))))
+    assert(t.writeCounted(g, c, payload(Seq(("s1", "r1"), ("s2", "r2")))) == 2L)
     assert(t.read(g, Seq(c)) == Map(c -> ((Seq("s1", "s2"), Seq("r1", "r2")))),
       "escaped partition dirs must hydrate under the raw ids")
     assert(t.listChunks(g) == Seq(c), "listChunks must UNescape dir names")
-    assert(t.chunkCounts(Seq(g), _ => c) == Map(g -> 2L),
-      "chunkCounts must probe the escaped path AND group back by raw id")
+    // the multi-group write's observed counts key on the RAW group id
+    assert(t.writeMultiWithCounts(payload(Seq(("s3", "r3")))
+        .withColumn("groupId", lit(g)).withColumn("chunkId", lit(s"$c-1"))) == Map(g -> 1L),
+      "writeMultiWithCounts must count under the raw id")
+    assert(t.listChunks(g).toSet == Set(c, s"$c-1"))
     t.drop(g)
     assert(t.read(g, Seq(c)).isEmpty, "drop must resolve the escaped dir")
   }
@@ -109,7 +112,7 @@ class DeliveryTableSpec extends AnyFunSuite with BeforeAndAfterAll {
     val dir = DeliveryTable.tempDir()
     val t = new DeliveryTable(spark, dir)
     val rows = (0 until 200).map(i => (f"s$i%03d", f"r$i%03d"))
-    t.writeMulti(payload(rows)
+    val counts = t.writeMultiWithCounts(payload(rows)
       .withColumn("groupId", lit("g"))
       .withColumn("chunkId", lit("g-0")),
       splitsPerChunk = 4)
@@ -119,8 +122,8 @@ class DeliveryTableSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(t.read("g", Seq("g-0")) ==
       Map("g-0" -> ((rows.map(_._1), rows.map(_._2)))),
       "delivery order must survive the multi-file split")
-    assert(t.chunkCounts(Seq("g"), _ => "g-0") == Map("g" -> 200L),
-      "footer counts must sum across a chunk's files")
+    assert(counts == Map("g" -> 200L),
+      "observed counts must sum across a chunk's files")
   }
 
   test("multi-group batch write serves every group in one pass") {
@@ -225,7 +228,7 @@ class DeliveryTableSpec extends AnyFunSuite with BeforeAndAfterAll {
     // The engines switch layouts on registered-group count; a group can
     // hold chunks in both (e.g. registered before the fleet grew).
     val t = new DeliveryTable(spark, DeliveryTable.tempDir())
-    t.write("g3", "g3-0", payload(Seq(("sA", "rA"))))            // per-group
+    t.writeCounted("g3", "g3-0", payload(Seq(("sA", "rA"))))            // per-group
     t.writeBucketed(groupBatch(groups = 8, rowsPerGroup = 2, seq = 1), 1L, 4) // bucketed
     val got = t.readChunks("g3", Seq(("g3-0", 0L), ("g3-1", 1L)))
     assert(got.keySet == Set("g3-0", "g3-1"))

@@ -126,6 +126,31 @@ class DurableEventLogSpec extends AnyFunSuite with BeforeAndAfterAll {
     } finally log.stop()
   }
 
+  test("removeGroup stops the group's delivery and drops its state; a same-id re-create starts empty") {
+    val (logDir, ckpt) = (tmp(), tmp())
+    val log = new DurableEventLog(spark, logDir, ckpt)
+    def deliveryActive = spark.streams.active.exists(_.name == "durable-delivery-g")
+    try {
+      log.startIngest()
+      log.addGroup("g", ResourceType.Project, "p1", Hierarchy(projectId = "p1"), true)
+      // a session's attach starts the group's checkpointed delivery
+      val session = new graft.streaming.EventSession(log)
+      session.handle(graft.streaming.EventSession.Init("g"))
+      log.emit(ResourceType.Project, EventType.All, "p1", RelationCtx())
+      log.processAllAvailable()
+      assert(deliveryActive)
+      assert(log.pendingChunks("g").flatMap(_.resourceIds) == Seq("p1"))
+
+      log.removeGroup("g")
+      log.emit(ResourceType.Collection, EventType.All, "c1", RelationCtx(project = "p1"))
+      log.processAllAvailable()
+      assert(!deliveryActive, "a removed group's delivery query must stop")
+      log.addGroup("g", ResourceType.Project, "p1", Hierarchy(projectId = "p1"), true)
+      assert(log.pendingChunks("g").isEmpty && log.deliveredChunks("g").isEmpty,
+        "a re-created group must not re-serve the removed group's chunks")
+    } finally log.stop()
+  }
+
   test("WAL ledger: pending chunks and acks survive an engine restart") {
     val (logDir, ckpt) = (tmp(), tmp())
     val log1 = new DurableEventLog(spark, logDir, ckpt)

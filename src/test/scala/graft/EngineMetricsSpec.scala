@@ -30,7 +30,7 @@ class EngineMetricsSpec extends AnyFunSuite with BeforeAndAfterAll with Eventual
     val metrics = EngineMetrics.attach(spark)
     val engine = new EventEngine(spark, Trigger.ProcessingTime("250 milliseconds"))
     try {
-      engine.createStreamGroup("mg", ResourceType.Project, "p",
+      engine.addGroup("mg", ResourceType.Project, "p",
         Hierarchy(projectId = "p"), includeSubresources = true)
       engine.emit(ResourceType.Project, EventType.All, "p", RelationCtx())
       engine.processAllAvailable()

@@ -5,7 +5,7 @@ import org.scalatest.BeforeAndAfterAll
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.Trigger
 import graft.core._
-import graft.streaming.EventEngine
+import graft.streaming.{ConsumerHost, DurableEventLog, EventEngine, MultiplexedDelivery}
 
 /** End-to-end streaming flow, mirroring the reference's own integration
   * test (`/root/reference/src/e2e/tests.rs:108-277`): emit → subscribe →
@@ -31,7 +31,7 @@ class EventEngineSpec extends AnyFunSuite with BeforeAndAfterAll {
     val engine = newEngine()
     try {
       // tests.rs:179-184 — group at project scope, include_subresource=true
-      val g = engine.createStreamGroup("group-1", ResourceType.Project, "project_id",
+      val g = engine.addGroup("group-1", ResourceType.Project, "project_id",
         Hierarchy(projectId = "project_id"), includeSubresources = true)
       assert(g.filterSubject == "UPDATES.STORAGE._.project_id.>")
 
@@ -53,11 +53,11 @@ class EventEngineSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("subject filtering isolates projects; exact groups ignore descendants") {
     val engine = newEngine()
     try {
-      engine.createStreamGroup("sub-p1", ResourceType.Project, "p1",
+      engine.addGroup("sub-p1", ResourceType.Project, "p1",
         Hierarchy(projectId = "p1"), includeSubresources = true)
-      engine.createStreamGroup("exact-p1", ResourceType.Project, "p1",
+      engine.addGroup("exact-p1", ResourceType.Project, "p1",
         Hierarchy(projectId = "p1"), includeSubresources = false)
-      engine.createStreamGroup("sub-p2", ResourceType.Project, "p2",
+      engine.addGroup("sub-p2", ResourceType.Project, "p2",
         Hierarchy(projectId = "p2"), includeSubresources = true)
 
       engine.emit(ResourceType.Project, EventType.All, "p1", RelationCtx())
@@ -77,11 +77,11 @@ class EventEngineSpec extends AnyFunSuite with BeforeAndAfterAll {
     val engine = newEngine()
     try {
       // group-scope subscription over object-group og1
-      engine.createStreamGroup("og-watchers", ResourceType.ObjectGroup, "og1",
+      engine.addGroup("og-watchers", ResourceType.ObjectGroup, "og1",
         Hierarchy(projectId = "p", collectionId = "c", sharedObjectGroupId = "sg1"),
         includeSubresources = true)
       // object-scope subscription over the object itself
-      engine.createStreamGroup("obj-watcher", ResourceType.Object, "o1",
+      engine.addGroup("obj-watcher", ResourceType.Object, "o1",
         Hierarchy(projectId = "p", collectionId = "c", sharedObjectId = "so1"),
         includeSubresources = false)
 
@@ -102,10 +102,10 @@ class EventEngineSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("event-type gate: CREATED-only group ignores UPDATED events; ALL sees both") {
     val engine = newEngine()
     try {
-      engine.createStreamGroup("created-only", ResourceType.Project, "p",
+      engine.addGroup("created-only", ResourceType.Project, "p",
         Hierarchy(projectId = "p"), includeSubresources = true,
         eventType = EventType.Created)
-      engine.createStreamGroup("all-events", ResourceType.Project, "p",
+      engine.addGroup("all-events", ResourceType.Project, "p",
         Hierarchy(projectId = "p"), includeSubresources = true)
 
       engine.emit(ResourceType.Project, EventType.Created, "p", RelationCtx())
@@ -156,21 +156,21 @@ class EventEngineSpec extends AnyFunSuite with BeforeAndAfterAll {
     try {
       // no token at all → unauthenticated, before any authz lookup
       intercept[UnauthenticatedException] {
-        engine.createStreamGroup("g0", ResourceType.Project, "p1",
+        engine.addGroup("g0", ResourceType.Project, "p1",
           Hierarchy(projectId = "p1"), includeSubresources = true)
       }
       // bob: authenticated but no grant → permission denied
       intercept[PermissionDeniedException] {
-        engine.createStreamGroup("g0", ResourceType.Project, "p1",
+        engine.addGroup("g0", ResourceType.Project, "p1",
           Hierarchy(projectId = "p1"), includeSubresources = true,
           token = Some("bob-token"))
       }
       assert(engine.listGroups.isEmpty, "denied subscribe must not register a group")
       // alice: direct grant; admin: wildcard grant on another project
-      engine.createStreamGroup("g1", ResourceType.Project, "p1",
+      engine.addGroup("g1", ResourceType.Project, "p1",
         Hierarchy(projectId = "p1"), includeSubresources = true,
         token = Some("alice-token"))
-      engine.createStreamGroup("g2", ResourceType.Project, "p2",
+      engine.addGroup("g2", ResourceType.Project, "p2",
         Hierarchy(projectId = "p2"), includeSubresources = true,
         token = Some("admin-token"))
       // attach re-authorizes (public_event_server.rs:249-301): alice has
@@ -189,7 +189,7 @@ class EventEngineSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("at-least-once: unacked chunks stay pending; unknown acks are graceful") {
     val engine = newEngine()
     try {
-      engine.createStreamGroup("g", ResourceType.Project, "p",
+      engine.addGroup("g", ResourceType.Project, "p",
         Hierarchy(projectId = "p"), includeSubresources = true)
       engine.emit(ResourceType.Project, EventType.All, "p", RelationCtx())
       engine.processAllAvailable()
@@ -208,7 +208,7 @@ class EventEngineSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("close stops delivery; attach resumes from the shared stream") {
     val engine = newEngine()
     try {
-      engine.createStreamGroup("g", ResourceType.Project, "p",
+      engine.addGroup("g", ResourceType.Project, "p",
         Hierarchy(projectId = "p"), includeSubresources = true)
       engine.emit(ResourceType.Project, EventType.All, "p", RelationCtx())
       engine.processAllAvailable()
@@ -226,11 +226,11 @@ class EventEngineSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("delete removes group, query and ledger (R14 — reference left it todo!())") {
     val engine = newEngine()
     try {
-      engine.createStreamGroup("g", ResourceType.Project, "p",
+      engine.addGroup("g", ResourceType.Project, "p",
         Hierarchy(projectId = "p"), includeSubresources = false)
       engine.emit(ResourceType.Project, EventType.All, "p", RelationCtx())
       engine.processAllAvailable()
-      engine.deleteStreamGroup("g")
+      engine.removeGroup("g")
       assert(engine.listGroups.isEmpty)
       assert(engine.deliveredChunks("g").isEmpty)
       intercept[NoSuchElementException](engine.attach("g"))
@@ -246,9 +246,9 @@ class EventEngineSpec extends AnyFunSuite with BeforeAndAfterAll {
     val engine = newEngine()
     try {
       intercept[IllegalArgumentException](
-        engine.createStreamGroupMulti("empty", ResourceType.Collection, "cX",
+        engine.addGroupMulti("empty", ResourceType.Collection, "cX",
           Seq.empty, includeSubresources = true))
-      val g = engine.createStreamGroupMulti("multi", ResourceType.Collection, "c1",
+      val g = engine.addGroupMulti("multi", ResourceType.Collection, "c1",
         Seq(Hierarchy(projectId = "p1", collectionId = "c1"),
             Hierarchy(projectId = "p2", collectionId = "c1")),
         includeSubresources = true)
@@ -268,10 +268,10 @@ class EventEngineSpec extends AnyFunSuite with BeforeAndAfterAll {
 
       // overlapping matchers: project subtree ⊇ collection subtree —
       // a message matching BOTH still delivers once (the OR filter)
-      val o = engine.createStreamGroupMulti("overlap", ResourceType.Project, "p1",
+      val o = engine.addGroupMulti("overlap", ResourceType.Project, "p1",
         Seq(Hierarchy(projectId = "p1")), includeSubresources = true)
       engine.attach("overlap")
-      val g2 = engine.createStreamGroupMulti("overlap2", ResourceType.Collection, "c2",
+      val g2 = engine.addGroupMulti("overlap2", ResourceType.Collection, "c2",
         Seq(Hierarchy(projectId = "p1", collectionId = "c2"),
             Hierarchy(projectId = "p1", collectionId = "c2")), // duplicate chain
         includeSubresources = true)
@@ -285,14 +285,30 @@ class EventEngineSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("emit validation: empty ids and unpublishable resource types are rejected") {
-    val engine = newEngine()
-    try {
-      intercept[IllegalArgumentException](
-        engine.emit(ResourceType.Project, EventType.All, "", RelationCtx()))
-      intercept[IllegalArgumentException](
-        engine.emit(ResourceType.All, EventType.All, "x", RelationCtx()))
-      intercept[IllegalArgumentException](
-        engine.emit(ResourceType.Unspecified, EventType.All, "x", RelationCtx()))
-    } finally engine.stop()
+    // one shared validation in the core: every engine rejects the same
+    // events (ALL/UNSPECIFIED publish nothing; a relation id carrying a
+    // subject metacharacter would mint a subject foreign filters match)
+    val tmp = java.nio.file.Files.createTempDirectory("graft-emit-validation")
+    val engines: Seq[(String, ConsumerHost)] = Seq(
+      "per-group" -> newEngine(),
+      "multiplexed" -> new MultiplexedDelivery(spark),
+      "durable" -> new DurableEventLog(spark, s"$tmp/log", s"$tmp/ckpt"))
+    val rejected: Seq[(ResourceType, String, RelationCtx)] = Seq(
+      (ResourceType.Project, "", RelationCtx()),
+      (ResourceType.All, "x", RelationCtx()),
+      (ResourceType.Unspecified, "x", RelationCtx()),
+      (ResourceType.Collection, "c1", RelationCtx(project = "p2.x")),
+      (ResourceType.Collection, "c1", RelationCtx(project = "p*")),
+      (ResourceType.Object, "o1", RelationCtx(project = "p", collection = "c>")),
+      (ResourceType.Object, "o1", RelationCtx(project = "p", collection = "c",
+        objectGroups = Seq("g.1"))))
+    try engines.foreach { case (name, engine) =>
+      rejected.foreach { case (rt, id, rel) =>
+        withClue(s"$name engine, $rt '$id' $rel: ") {
+          intercept[IllegalArgumentException](engine.emit(rt, EventType.All, id, rel))
+        }
+      }
+      engine.emit(ResourceType.Collection, EventType.All, "c1", RelationCtx(project = "p2"))
+    } finally engines.foreach(_._2.stop())
   }
 }

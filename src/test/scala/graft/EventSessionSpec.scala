@@ -30,7 +30,7 @@ class EventSessionSpec extends AnyFunSuite with BeforeAndAfterAll {
     val engine = newEngine()
     val session = new EventSession(engine)
     try {
-      engine.createStreamGroup("g", ResourceType.Project, "p",
+      engine.addGroup("g", ResourceType.Project, "p",
         Hierarchy(projectId = "p"), includeSubresources = true)
       engine.emit(ResourceType.Project, EventType.All, "p", RelationCtx())
       engine.processAllAvailable()
@@ -69,7 +69,7 @@ class EventSessionSpec extends AnyFunSuite with BeforeAndAfterAll {
       EngineSecurity.Permissive, ackWaitMillis = 1000L, clock = () => now)
     val session = new EventSession(engine)
     try {
-      engine.createStreamGroup("g", ResourceType.Project, "p",
+      engine.addGroup("g", ResourceType.Project, "p",
         Hierarchy(projectId = "p"), includeSubresources = true)
       engine.emit(ResourceType.Project, EventType.All, "p", RelationCtx())
       engine.processAllAvailable()
@@ -104,7 +104,7 @@ class EventSessionSpec extends AnyFunSuite with BeforeAndAfterAll {
     val s1 = new EventSession(engine)
     val s2 = new EventSession(engine)
     try {
-      engine.createStreamGroup("g", ResourceType.Project, "p",
+      engine.addGroup("g", ResourceType.Project, "p",
         Hierarchy(projectId = "p"), includeSubresources = true)
       engine.emit(ResourceType.Project, EventType.All, "p", RelationCtx())
       engine.processAllAvailable()
@@ -138,7 +138,7 @@ class EventSessionSpec extends AnyFunSuite with BeforeAndAfterAll {
     val engine = newEngine()
     val session = new EventSession(engine, maxBatch = 1)
     try {
-      engine.createStreamGroup("g", ResourceType.Project, "p",
+      engine.addGroup("g", ResourceType.Project, "p",
         Hierarchy(projectId = "p"), includeSubresources = true)
       (1 to 2).foreach { _ =>
         engine.emit(ResourceType.Project, EventType.All, "p", RelationCtx())
@@ -159,7 +159,7 @@ class EventSessionSpec extends AnyFunSuite with BeforeAndAfterAll {
       EngineSecurity.Permissive, ackWaitMillis = 1000L, clock = () => now,
       ledgerDir = Some(dir))
     try {
-      e1.createStreamGroup("g", ResourceType.Project, "p",
+      e1.addGroup("g", ResourceType.Project, "p",
         Hierarchy(projectId = "p"), includeSubresources = true)
       e1.emit(ResourceType.Project, EventType.All, "p", RelationCtx())
       e1.processAllAvailable()
@@ -193,7 +193,7 @@ class EventSessionSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("pull batch bound: max chunks per pull, remainder left for competing sessions") {
     val engine = newEngine()
     try {
-      engine.createStreamGroup("g", ResourceType.Project, "p",
+      engine.addGroup("g", ResourceType.Project, "p",
         Hierarchy(projectId = "p"), includeSubresources = true)
       (1 to 3).foreach { _ =>
         engine.emit(ResourceType.Project, EventType.All, "p", RelationCtx())
@@ -215,7 +215,7 @@ class EventSessionSpec extends AnyFunSuite with BeforeAndAfterAll {
     val s1 = new EventSession(engine)
     val s2 = new EventSession(engine)
     try {
-      engine.createStreamGroup("g", ResourceType.Project, "p",
+      engine.addGroup("g", ResourceType.Project, "p",
         Hierarchy(projectId = "p"), includeSubresources = true)
       engine.emit(ResourceType.Project, EventType.All, "p", RelationCtx())
       engine.processAllAvailable()
@@ -245,7 +245,7 @@ class EventSessionSpec extends AnyFunSuite with BeforeAndAfterAll {
     val engine = newEngine(EngineSecurity(authz = Some(AuthzProvider.fromGrants(grants))))
     val session = new EventSession(engine)
     try {
-      engine.createStreamGroup("g", ResourceType.Project, "p",
+      engine.addGroup("g", ResourceType.Project, "p",
         Hierarchy(projectId = "p"), includeSubresources = true,
         token = Some("alice"))
       intercept[PermissionDeniedException] {

@@ -7,7 +7,7 @@ import org.apache.spark.sql.streaming.Trigger
 import java.io.{ByteArrayOutputStream, DataInputStream, DataOutputStream}
 import java.util.concurrent.{ConcurrentHashMap, LinkedBlockingQueue, TimeUnit}
 import graft.core._
-import graft.streaming.{EventEngine, GrpcServer, H2c, Hpack, WireAdmin}
+import graft.streaming.{EventEngine, GrpcServer, H2c, Hpack}
 import graft.streaming.WireProtocol
 import graft.streaming.WireProtocol._
 
@@ -302,11 +302,11 @@ class H2cFuzzSpec extends AnyFunSuite with BeforeAndAfterAll {
       val engine = new EventEngine(spark,
         Trigger.ProcessingTime("250 milliseconds"), EngineSecurity.Permissive,
         ackWaitMillis = ACK_WAIT, clock = () => now)
-      engine.createStreamGroup("g", ResourceType.Project, "p",
+      engine.addGroup("g", ResourceType.Project, "p",
         Hierarchy(projectId = "p"), includeSubresources = true)
       // pump disabled: every push is the inline response to a client
       // message, so serve-time == drain-time for the model (see scaladoc)
-      val server = new GrpcServer(engine, WireAdmin(engine),
+      val server = new GrpcServer(engine,
         pumpMillis = 3600000L)
 
       var uidNext = 0

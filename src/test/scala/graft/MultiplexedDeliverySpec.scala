@@ -206,8 +206,8 @@ class MultiplexedDeliverySpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("many-groups churn: create/delete between batches with competing consumers stays correct") {
-    // 71 groups (> FooterCountMaxGroups) so this also exercises the
-    // aggregation count regime end-to-end, not just its unit test.
+    // 71 groups: past the bucketed-layout threshold, so this also
+    // exercises the bucketed write end-to-end, not just its unit test.
     val mux = new MultiplexedDelivery(spark)
     try {
       mux.addGroup("hot", ResourceType.Project, "p0", Hierarchy(projectId = "p0"), true)
@@ -260,32 +260,22 @@ class MultiplexedDeliverySpec extends AnyFunSuite with BeforeAndAfterAll {
     } finally mux.stop()
   }
 
-  test("footer and aggregation count regimes deliver identical chunks") {
-    def runWith(threshold: Int): Map[String, Seq[(String, Long)]] = {
-      val mux = new MultiplexedDelivery(spark, footerCountMaxGroups = threshold)
-      try {
-        mux.addGroup("t1", ResourceType.Project, "p1", Hierarchy(projectId = "p1"), true)
-        mux.addGroup("t2", ResourceType.Collection, "c1",
-          Hierarchy(projectId = "p1", collectionId = "c1"), true)
-        mux.addGroup("t3", ResourceType.Project, "p2", Hierarchy(projectId = "p2"), false)
-        mux.start()
-        mux.emit(ResourceType.Project, EventType.All, "p1", RelationCtx())
-        mux.emit(ResourceType.Collection, EventType.All, "c1", RelationCtx(project = "p1"))
-        mux.processAllAvailable()
-        mux.emit(ResourceType.Project, EventType.All, "p2", RelationCtx())
-        mux.emit(ResourceType.Object, EventType.All, "o1",
-          RelationCtx(project = "p1", collection = "c1", sharedObject = "s1",
-            objectGroups = Seq("g1")))
-        mux.processAllAvailable()
-        Seq("t1", "t2", "t3").map { g =>
-          g -> mux.pendingChunks(g).map(c => (c.resourceIds.sorted.mkString(","),
-            c.resourceIds.size.toLong))
-        }.toMap
-      } finally mux.stop()
-    }
-    val footer = runWith(Int.MaxValue) // always parquet footers
-    val agg = runWith(0)               // always cached-batch aggregation
-    assert(footer == agg, s"count regimes diverged:\n$footer\nvs\n$agg")
+  test("writeWidth: per-group write splits and exchange width track the batch estimate") {
+    import graft.streaming.ConsumerHost.writeWidth
+    // empty or unknown-small estimate: one file per group, never the cap
+    assert(writeWidth(0L, 4, 32) == ((1, 8)))
+    assert(writeWidth(-5L, 4, 32) == ((1, 8)))
+    // small delta: one split; exchange = 2 × groups × splits
+    assert(writeWidth(1000L, 4, 32) == ((1, 8)))
+    // large delta: ~32k rows per file per group, under the cap
+    assert(writeWidth(4L * 3 * 32768L, 4, 32) == ((4, 32)))
+    assert(writeWidth(2L * 32768L, 2, 64) == ((2, 8)))
+    // capped: splits never exceed parts / groups, width never parts
+    assert(writeWidth(Long.MaxValue, 4, 32) == ((8, 32)))
+    assert(writeWidth(Long.MaxValue, 5, 4) == ((1, 4)))
+    // no groups counts as one; more groups than partitions → 1 split
+    assert(writeWidth(Long.MaxValue, 0, 4) == ((4, 4)))
+    assert(writeWidth(10000000L, 100, 8) == ((1, 8)))
   }
 
   test("multi-hierarchy group through the mux join: union of matchers, once-per-message dedup path") {

@@ -52,7 +52,7 @@ class SessionFuzzSpec extends AnyFunSuite with BeforeAndAfterAll {
         ackWaitMillis = ACK_WAIT, clock = () => now, ledgerDir = Some(dir))
 
       var engine = mkEngine()
-      engine.createStreamGroup("g", ResourceType.Project, "p",
+      engine.addGroup("g", ResourceType.Project, "p",
         Hierarchy(projectId = "p"), includeSubresources = true)
 
       // model state
@@ -151,7 +151,7 @@ class SessionFuzzSpec extends AnyFunSuite with BeforeAndAfterAll {
               engine.stop()
               open = Map.empty // every session died with the process
               engine = mkEngine()
-              engine.createStreamGroup("g", ResourceType.Project, "p",
+              engine.addGroup("g", ResourceType.Project, "p",
                 Hierarchy(projectId = "p"), includeSubresources = true)
             }
         }
@@ -196,7 +196,7 @@ class SessionFuzzSpec extends AnyFunSuite with BeforeAndAfterAll {
           Trigger.ProcessingTime("250 milliseconds"), EngineSecurity.Permissive,
           ackWaitMillis = ACK_WAIT, clock = () => now, ledgerDir = Some(dir))
         GROUPS.foreach { case (g, p) =>
-          e.createStreamGroup(g, ResourceType.Project, p,
+          e.addGroup(g, ResourceType.Project, p,
             Hierarchy(projectId = p), includeSubresources = true)
         }
         e

@@ -280,7 +280,7 @@ class WireBoundarySpec extends AnyFunSuite with BeforeAndAfterAll {
           Hierarchy(projectId = "p1"), includeSub = true, "ALL"))
         assert(c.call(Emit("PROJECT", "ALL", "p1", RelationCtx())).isEmpty)
         log.processAllAvailable()
-        // init starts the checkpointed delivery (attachConsumer)
+        // init starts the checkpointed delivery (attach)
         val onInit = c.notifications(c.call(Init("dg")))
         var got = onInit; var n = 0
         while (got.isEmpty && n < 40) {

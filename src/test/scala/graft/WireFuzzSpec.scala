@@ -124,7 +124,7 @@ class WireFuzzSpec extends AnyFunSuite with BeforeAndAfterAll {
       val engine = new EventEngine(spark,
         Trigger.ProcessingTime("250 milliseconds"), EngineSecurity.Permissive,
         ackWaitMillis = ACK_WAIT, clock = () => now)
-      engine.createStreamGroup("g", ResourceType.Project, "p",
+      engine.addGroup("g", ResourceType.Project, "p",
         Hierarchy(projectId = "p"), includeSubresources = true)
       val server = WireServer(engine)
 
