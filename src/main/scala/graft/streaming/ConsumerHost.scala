@@ -437,9 +437,11 @@ abstract class ConsumerHost(val spark: SparkSession,
 
   // ---- read side: pull / ack ------------------------------------------
 
-  /** Hydrate metas into client-facing chunks: ONE pruned read of the
-    * deliveries table covering all requested chunks, each resolved in
-    * whichever layout wrote it. */
+  /** Hydrate metas into client-facing chunks: ONE driver-side read of
+    * the deliveries table covering all requested chunks, each resolved
+    * in whichever layout wrote it — it lists and reads only those
+    * chunks' own dirs and files, and starts no Spark job
+    * ([[DeliveryTable.readChunks]]). */
   private def hydrate(groupId: String, metas: Seq[ChunkMeta]): Seq[DeliveryChunk] = {
     if (metas.isEmpty) return Seq.empty
     val payload = table.readChunks(groupId, metas.map(m => (m.chunkId, m.batchId)))

@@ -7,8 +7,9 @@ import org.apache.spark.sql.functions._
 import graft.streaming.DeliveryTable
 
 /** Contracts of the distributed chunk-payload store that the delivery
-  * ledger's scale story rests on: partition-pruned hydration, replay
-  * idempotence via dynamic partition overwrite, and group-scoped drop. */
+  * ledger's scale story rests on: dir-scoped driver-side hydration that
+  * tolerates files vanishing under it, replay idempotence via dynamic
+  * partition overwrite, and group-scoped drop. */
 class DeliveryTableSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private lazy val spark = SparkSession.builder()
@@ -21,6 +22,11 @@ class DeliveryTableSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   override def afterAll(): Unit = spark.stop()
 
+  /** Per-group-layout chunk refs: the batch seq only resolves bucketed
+    * chunks, so any value reads these from their `groupId=…/chunkId=…`
+    * dirs. */
+  private def perGroup(chunkIds: String*): Seq[(String, Long)] = chunkIds.map(_ -> 0L)
+
   private def payload(rows: Seq[(String, String)]) = {
     val s = spark
     import s.implicits._
@@ -32,12 +38,12 @@ class DeliveryTableSpec extends AnyFunSuite with BeforeAndAfterAll {
     t.writeCounted("g1", "g1-0", payload(Seq(("s1", "r1"), ("s2", "r2"))))
     t.writeCounted("g1", "g1-1", payload(Seq(("s3", "r3"))))
     t.writeCounted("g2", "g2-0", payload(Seq(("sX", "rX"))))
-    val got = t.read("g1", Seq("g1-0", "g1-1"))
+    val got = t.readChunks("g1", perGroup("g1-0", "g1-1"))
     assert(got.keySet == Set("g1-0", "g1-1"))
     assert(got("g1-0") == (Seq("s1", "s2"), Seq("r1", "r2")))
     assert(got("g1-1") == (Seq("s3"), Seq("r3")))
     // group isolation: g2's chunk is invisible to a g1 read
-    assert(t.read("g1", Seq("g2-0")).isEmpty)
+    assert(t.readChunks("g1", perGroup("g2-0")).isEmpty)
   }
 
   test("replayed write overwrites its own partitions — no duplication, others untouched") {
@@ -46,7 +52,7 @@ class DeliveryTableSpec extends AnyFunSuite with BeforeAndAfterAll {
     t.writeCounted("g", "g-1", payload(Seq(("s3", "r3"))))
     // foreachBatch replay after a crash re-runs batch 0 with identical rows
     t.writeCounted("g", "g-0", payload(Seq(("s1", "r1"), ("s2", "r2"))))
-    val got = t.read("g", Seq("g-0", "g-1"))
+    val got = t.readChunks("g", perGroup("g-0", "g-1"))
     assert(got("g-0") == (Seq("s1", "s2"), Seq("r1", "r2")),
       "replay must rewrite, not append duplicates")
     assert(got("g-1") == (Seq("s3"), Seq("r3")),
@@ -60,27 +66,27 @@ class DeliveryTableSpec extends AnyFunSuite with BeforeAndAfterAll {
     // churn: the sibling group is removed between this consumer's pull
     // planning and execution — its dir vanishing must be invisible here
     t.drop("gone")
-    assert(t.read("keep", Seq("keep-0")) ==
+    assert(t.readChunks("keep", perGroup("keep-0")) ==
       Map("keep-0" -> ((Seq("s1"), Seq("r1")))))
     // and a chunk id whose OWN dir was dropped reads as absent, not as
     // a failed job (the churn-tolerance contract of the direct-path read)
-    assert(t.read("gone", Seq("gone-0")).isEmpty)
+    assert(t.readChunks("gone", perGroup("gone-0")).isEmpty)
     // mixed list: present chunk hydrates, dropped chunk is skipped
     t.writeCounted("keep", "keep-1", payload(Seq(("s3", "r3"))))
     t.drop("gone")
-    assert(t.read("keep", Seq("keep-0", "gone-0", "keep-1")).keySet ==
+    assert(t.readChunks("keep", perGroup("keep-0", "gone-0", "keep-1")).keySet ==
       Set("keep-0", "keep-1"))
   }
 
   test("read of an empty table / unknown chunks is empty; drop removes a group only") {
     val t = new DeliveryTable(spark, DeliveryTable.tempDir())
-    assert(t.read("g", Seq("g-0")).isEmpty, "missing dir reads empty")
+    assert(t.readChunks("g", perGroup("g-0")).isEmpty, "missing dir reads empty")
     t.writeCounted("g", "g-0", payload(Seq(("s1", "r1"))))
     t.writeCounted("h", "h-0", payload(Seq(("s2", "r2"))))
-    assert(t.read("g", Seq("nope")).isEmpty)
+    assert(t.readChunks("g", perGroup("nope")).isEmpty)
     t.drop("g")
-    assert(t.read("g", Seq("g-0")).isEmpty, "dropped group reads empty")
-    assert(t.read("h", Seq("h-0")) == Map("h-0" -> (Seq("s2"), Seq("r2"))),
+    assert(t.readChunks("g", perGroup("g-0")).isEmpty, "dropped group reads empty")
+    assert(t.readChunks("h", perGroup("h-0")) == Map("h-0" -> (Seq("s2"), Seq("r2"))),
       "drop must be group-scoped")
   }
 
@@ -93,7 +99,7 @@ class DeliveryTableSpec extends AnyFunSuite with BeforeAndAfterAll {
     val g = "team a:b%c=d#e"
     val c = "chunk 0:1%2=3"
     assert(t.writeCounted(g, c, payload(Seq(("s1", "r1"), ("s2", "r2")))) == 2L)
-    assert(t.read(g, Seq(c)) == Map(c -> ((Seq("s1", "s2"), Seq("r1", "r2")))),
+    assert(t.readChunks(g, perGroup(c)) == Map(c -> ((Seq("s1", "s2"), Seq("r1", "r2")))),
       "escaped partition dirs must hydrate under the raw ids")
     assert(t.listChunks(g) == Seq(c), "listChunks must UNescape dir names")
     // the multi-group write's observed counts key on the RAW group id
@@ -102,7 +108,7 @@ class DeliveryTableSpec extends AnyFunSuite with BeforeAndAfterAll {
       "writeMultiWithCounts must count under the raw id")
     assert(t.listChunks(g).toSet == Set(c, s"$c-1"))
     t.drop(g)
-    assert(t.read(g, Seq(c)).isEmpty, "drop must resolve the escaped dir")
+    assert(t.readChunks(g, perGroup(c)).isEmpty, "drop must resolve the escaped dir")
   }
 
   test("a chunk split across several files reads back in delivery order") {
@@ -119,7 +125,7 @@ class DeliveryTableSpec extends AnyFunSuite with BeforeAndAfterAll {
     val files = new java.io.File(s"$dir/groupId=g/chunkId=g-0")
       .listFiles().count(_.getName.endsWith(".parquet"))
     assert(files > 1, s"test wiring: expected a multi-file chunk, got $files")
-    assert(t.read("g", Seq("g-0")) ==
+    assert(t.readChunks("g", perGroup("g-0")) ==
       Map("g-0" -> ((rows.map(_._1), rows.map(_._2)))),
       "delivery order must survive the multi-file split")
     assert(counts == Map("g" -> 200L),
@@ -133,8 +139,8 @@ class DeliveryTableSpec extends AnyFunSuite with BeforeAndAfterAll {
         when(col("subject") === "sA", "gA").otherwise("gB"))
       .withColumn("chunkId", concat(col("groupId"), lit("-7")))
     t.writeMulti(batch)
-    assert(t.read("gA", Seq("gA-7")) == Map("gA-7" -> (Seq("sA"), Seq("rA"))))
-    val gB = t.read("gB", Seq("gB-7"))("gB-7")
+    assert(t.readChunks("gA", perGroup("gA-7")) == Map("gA-7" -> (Seq("sA"), Seq("rA"))))
+    val gB = t.readChunks("gB", perGroup("gB-7"))("gB-7")
     assert(gB._1.toSet == Set("sB", "sC") && gB._2.toSet == Set("rB", "rC"))
   }
 
@@ -271,9 +277,128 @@ class DeliveryTableSpec extends AnyFunSuite with BeforeAndAfterAll {
     val files = new java.io.File(s"$dir/groupId=g/chunkId=g-0")
       .listFiles().count(_.getName.endsWith(".parquet"))
     assert(files == 1, s"a 2-row micro-batch must write one file, got $files")
-    assert(t.read("g", Seq("g-0")) == Map("g-0" -> ((Seq("s1", "s2"), Seq("r1", "r2")))))
+    assert(t.readChunks("g", perGroup("g-0")) == Map("g-0" -> ((Seq("s1", "s2"), Seq("r1", "r2")))))
     // empty batch: no write, no partition dir, count 0
     assert(t.writeCounted("g", "g-1", payload(Seq.empty)) == 0L)
     assert(!new java.io.File(s"$dir/groupId=g/chunkId=g-1").exists)
   }
+
+  // ---- driver-side reader: hidden, missing and pruned files --------
+
+  /** A read of `dir` through [[RacyLocalFs]]: the raw local FS (it
+    * lists `.crc` files, which the checksummed `file:` FS hides) with a
+    * hook that runs right after every listing. */
+  private def racy(dir: String): DeliveryTable = {
+    spark.conf.set("fs.racy.impl", classOf[RacyLocalFs].getName)
+    new DeliveryTable(spark, s"racy://$dir")
+  }
+
+  private def withAfterList[T](hook: (org.apache.hadoop.fs.Path,
+      Array[org.apache.hadoop.fs.FileStatus]) => Unit)(body: => T): T = {
+    RacyLocalFs.afterList = hook
+    try body finally RacyLocalFs.afterList = (_, _) => ()
+  }
+
+  private def touch(f: java.io.File, bytes: String): Unit = {
+    f.getParentFile.mkdirs()
+    java.nio.file.Files.write(f.toPath, bytes.getBytes("UTF-8")); ()
+  }
+
+  test("a chunk or bucket dir holding only _SUCCESS and .crc files reads as absent") {
+    val dir = DeliveryTable.tempDir()
+    val t = new DeliveryTable(spark, dir)
+    // pins the table's bucket count (B=4) so bucketed chunk refs resolve
+    t.writeBucketed(groupBatch(groups = 2, rowsPerGroup = 1, seq = 0), 0L, 4)
+    val chunkDir = new java.io.File(s"$dir/groupId=g/chunkId=g-0")
+    val bucketDir = new java.io.File(
+      s"$dir/batches/batch=9/bucket=${DeliveryTable.bucketOf("g", 4)}")
+    for (d <- Seq(chunkDir, bucketDir)) {
+      touch(new java.io.File(d, "_SUCCESS"), "")
+      // not parquet: reading it as a data file would throw
+      touch(new java.io.File(d, ".part-00000.snappy.parquet.crc"), "not parquet")
+    }
+    for (table <- Seq(t, racy(dir))) {
+      assert(table.readChunks("g", Seq(("g-0", 0L), ("g-9", 9L))).isEmpty)
+      assert(!table.listChunks("g").contains("g-9"), "no bucketed history from hidden files")
+    }
+    assert(t.readChunks("g1", Seq(("g1-0", 0L))).keySet == Set("g1-0"),
+      "a real bucketed chunk next to the hidden-only dirs still hydrates")
+  }
+
+  test("a data file deleted between listing and open reads as absent, not as an error") {
+    val dir = DeliveryTable.tempDir()
+    val t = new DeliveryTable(spark, dir)
+    t.writeCounted("g", "g-0", payload(Seq(("s1", "r1"))))
+    t.writeCounted("g", "g-1", payload(Seq(("s2", "r2"))))
+    val got = withAfterList { (listed, entries) =>
+      if (listed.getName == "chunkId=g-0")
+        entries.filter(_.getPath.getName.endsWith(".parquet"))
+          .foreach(e => new java.io.File(e.getPath.toUri.getPath).delete())
+    } {
+      racy(dir).readChunks("g", perGroup("g-0", "g-1"))
+    }
+    assert(!new java.io.File(s"$dir/groupId=g/chunkId=g-0").listFiles()
+      .exists(_.getName.endsWith(".parquet")), "test wiring: the hook must delete g-0's file")
+    assert(got == Map("g-1" -> ((Seq("s2"), Seq("r2")))))
+  }
+
+  test("a batch reaped by dropBatchesBefore while a pull is running reads as absent") {
+    val dir = DeliveryTable.tempDir()
+    val t = new DeliveryTable(spark, dir)
+    (0L to 1L).foreach(s => t.writeBucketed(groupBatch(4, 2, s), s, 4))
+    var reaped = 0
+    // retention fires after the pull listed batch 0's bucket dir and
+    // before it opens the file in it
+    val got = withAfterList { (listed, _) =>
+      if (listed.getParent.getName == "batch=0") reaped += t.dropBatchesBefore(1L)
+    } {
+      racy(dir).readChunks("g1", Seq(("g1-0", 0L), ("g1-1", 1L)))
+    }
+    assert(reaped == 1, "test wiring: retention must run mid-pull")
+    assert(got == Map("g1-1" -> ((Seq("s1-000", "s1-001"), Seq("r1-000", "r1-001")))))
+  }
+
+  test("bucketed read pushes the group filter into a multi-row-group file and returns exactly that group") {
+    // One bucket (B=1) holding six neighbouring groups, written with a
+    // tiny row-group size so the file spans several row groups and
+    // groups share row groups at their boundaries.
+    val dir = DeliveryTable.tempDir()
+    val t = new DeliveryTable(spark, dir)
+    spark.conf.set("parquet.block.size", "2048")
+    try t.writeBucketed(groupBatch(groups = 6, rowsPerGroup = 150, seq = 0), 0L, 1)
+    finally spark.conf.unset("parquet.block.size")
+    val conf = spark.sessionState.newHadoopConf()
+    val files = new java.io.File(s"$dir/batches/batch=0/bucket=0").listFiles()
+      .filter(_.getName.endsWith(".parquet")).toSeq
+    assert(files.size == 1, s"test wiring: expected one bucket file, got ${files.size}")
+    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+        new org.apache.hadoop.fs.Path(files.head.toURI), conf))
+    val rowGroups = try reader.getRowGroups.size finally reader.close()
+    assert(rowGroups > 3, s"test wiring: expected several row groups, got $rowGroups")
+    for (g <- 0 until 6) {
+      val got = t.readChunks(s"g$g", Seq((s"g$g-0", 0L)))
+      assert(got == Map(s"g$g-0" ->
+        (((0 until 150).map(i => f"s$g-$i%03d"), (0 until 150).map(i => f"r$g-$i%03d")))),
+        s"group g$g must read exactly its own rows, in seq order")
+    }
+    assert(t.listChunks("g3") == Seq("g3-0"))
+  }
+}
+
+/** The raw local filesystem under the `racy:` scheme, with a hook run
+  * after every `listStatus` — lets a spec remove files between a
+  * reader's listing and its open. */
+class RacyLocalFs extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def getUri: java.net.URI = java.net.URI.create("racy:///")
+  override def listStatus(f: org.apache.hadoop.fs.Path): Array[org.apache.hadoop.fs.FileStatus] = {
+    val listed = super.listStatus(f)
+    RacyLocalFs.afterList(f, listed)
+    listed
+  }
+}
+
+object RacyLocalFs {
+  @volatile var afterList: (org.apache.hadoop.fs.Path,
+    Array[org.apache.hadoop.fs.FileStatus]) => Unit = (_, _) => ()
 }

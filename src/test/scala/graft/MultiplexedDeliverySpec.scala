@@ -514,4 +514,58 @@ class MultiplexedDeliverySpec extends AnyFunSuite with BeforeAndAfterAll {
         s"chunks across the layout switch must all hydrate: $got")
     } finally mux.stop()
   }
+
+  /** Runs `body` in a fresh job group on this thread and counts the
+    * Spark jobs it started. Listener events arrive in posting order, so
+    * once a fence job submitted AFTER the body shows up, every job the
+    * body started has been counted. */
+  private def jobsStartedBy[T](body: => T): (T, Int) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val group = s"pull-probe-${System.nanoTime()}"
+    val started = new java.util.concurrent.atomic.AtomicInteger
+    val fenced = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
+          case Some(`group`) => started.incrementAndGet(); ()
+          case Some(g) if g == s"$group-fence" => fenced.countDown()
+          case _ =>
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "pull")
+      val out = try body finally sc.clearJobGroup()
+      sc.setJobGroup(s"$group-fence", "fence")
+      try spark.range(1).count() finally sc.clearJobGroup()
+      assert(fenced.await(60, java.util.concurrent.TimeUnit.SECONDS), "fence job never reported")
+      (out, started.get)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("a pull hydrates on the driver: no Spark job, in the per-group and the bucketed layout") {
+    // threshold MaxValue keeps the per-group layout; 2 groups >= 2 puts
+    // every batch in the bucketed layout
+    for ((threshold, bucketed) <- Seq((Int.MaxValue, false), (2, true))) {
+      val dir = java.nio.file.Files.createTempDirectory("graft-mux-nojob").toString
+      val mux = new MultiplexedDelivery(spark, ledgerDir = Some(dir),
+        bucketedMinGroups = threshold)
+      try {
+        mux.addGroup("a", ResourceType.Project, "p1", Hierarchy(projectId = "p1"), true)
+        mux.addGroup("b", ResourceType.Project, "p1", Hierarchy(projectId = "p1"), true)
+        mux.start()
+        mux.emit(ResourceType.Project, EventType.All, "p1", RelationCtx())
+        mux.emit(ResourceType.Collection, EventType.All, "c1", RelationCtx(project = "p1"))
+        mux.processAllAvailable()
+        assert(new java.io.File(s"$dir/deliveries/batches").isDirectory == bucketed,
+          s"test wiring: bucketed layout expected = $bucketed")
+        val session = mux.openSession("a")
+        val (pulled, jobs) = jobsStartedBy(mux.pull("a", session))
+        assert(pulled.flatMap(_.resourceIds).toSet == Set("p1", "c1"),
+          s"the pull must hydrate its payloads: $pulled")
+        assert(jobs == 0, s"a pull must not run a Spark job (bucketed = $bucketed), ran $jobs")
+      } finally mux.stop()
+    }
+  }
 }
