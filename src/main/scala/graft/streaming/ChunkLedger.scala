@@ -146,6 +146,10 @@ final class ChunkLedger {
     st.synchronized { st.wm = math.max(st.wm, w) }
   }
 
+  /** WAL replay of a removed group's history floor: it only keeps the
+    * epoch ([[maxBatchId]]) from dropping below what was minted. */
+  def restoreEpoch(batchId: Long): Unit = bump(batchId)
+
   /** Begin WAL replay (defers watermark advancement). */
   def beginLoad(): Unit = { loading = true }
 

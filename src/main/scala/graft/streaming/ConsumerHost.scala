@@ -48,7 +48,6 @@ abstract class ConsumerHost(val spark: SparkSession,
                             ledgerDir: Option[String],
                             deliveriesDir: String,
                             sourcePartitions: Int = 1,
-                            bucketedMinGroups: Int = ConsumerHost.BucketedMinGroups,
                             payloadRetentionEvery: Int = ConsumerHost.PayloadRetentionEvery) {
   import spark.implicits._
 
@@ -74,15 +73,27 @@ abstract class ConsumerHost(val spark: SparkSession,
     * counts. The restored flights' owning sessions died with the old
     * process, so every restored chunk is immediately offerable. */
   private val store: Option[LedgerStore] = ledgerDir.map(new LedgerStore(_))
+  /** Per removed group: the highest batch seq whose shared-layout
+    * payload may still hold the removed incarnation's rows. A same-id
+    * re-create lists bucketed history only above it
+    * ([[deliveredChunks]]). */
+  private val historyFloors: concurrent.Map[String, Long] =
+    new ConcurrentHashMap[String, Long]().asScala
   store.foreach { st =>
+    val wal = st.replay()
     ledger.beginLoad()
-    val (metas, wms) = st.loadState()
-    wms.foreach { case (g, w) => ledger.restoreWatermark(g, w) }
-    metas.values.foreach { m =>
+    wal.wms.foreach { case (g, w) => ledger.restoreWatermark(g, w) }
+    wal.metas.values.foreach { m =>
       if (m.acked) ledger.restoreAcked(m) else { ledger.record(m); () }
     }
+    // a removed group's lines are forgotten, but its floor still
+    // carries the epoch: the re-created id never re-mints an old chunk id
+    wal.floors.foreach { case (g, f) =>
+      ledger.restoreEpoch(f)
+      historyFloors.put(g, f)
+    }
     ledger.settleLoad()
-    st.loadFlights().foreach { case ((g, c), (s, at, d)) =>
+    wal.flightsByChunk.foreach { case ((g, c), (s, at, d)) =>
       dispatcher.restore(g, c, s, at, d)
     }
   }
@@ -113,9 +124,6 @@ abstract class ConsumerHost(val spark: SparkSession,
     * derived identity that delivery order and the multi-matcher dedup
     * key hang off. */
   private val eventSeq = new AtomicLong(0L)
-
-  /** Events emitted so far — the source of batch-size estimates. */
-  protected def emittedEvents: Long = eventSeq.get
 
   /** R1 `emit_event`: token gate, validate, then append to the stream.
     * The gate mirrors internal_event_server.rs:23-45 (missing header →
@@ -165,20 +173,18 @@ abstract class ConsumerHost(val spark: SparkSession,
     * mutation version — missed forever; this way a stale cache is
     * invalidated by the very next read). */
   private val groupsVersion = new AtomicLong(0L)
-  /** (version, size, anyMulti, subs frame, subtree depths) — rebuilt
-    * only when the registration map changed: at G=10k the O(G) driver
-    * work (map copy + flatMap + local-relation conversion) otherwise
-    * runs every trigger for an almost always identical snapshot. The
-    * depths are the driver-side half of [[Subjects.matchKeysCol]]. */
-  @volatile private var subsSnapshot: (Long, Int, Boolean, DataFrame, Seq[Int]) = null
+  /** (version, snapshot) — rebuilt only when the registration map
+    * changed: at G=10k the O(G) driver work (map copy + flatMap +
+    * local-relation conversion) otherwise runs every trigger for an
+    * almost always identical snapshot. */
+  @volatile private var subsSnapshot: (Long, ConsumerHost.Subs) = null
 
-  private def currentSubs(): (Int, Boolean, DataFrame, Seq[Int]) = {
+  private def currentSubs(): ConsumerHost.Subs = {
     val v = groupsVersion.get
     val c = subsSnapshot
-    if (c != null && c._1 == v) (c._2, c._3, c._4, c._5)
+    if (c != null && c._1 == v) c._2
     else {
       val snapshot = groups.values.toSeq
-      val anyMulti = snapshot.exists(_.extraFilterSubjects.nonEmpty)
       // ONE ROW PER (group, filter subject); only the join-relevant
       // columns, the group's event type aliased off the event's
       val df =
@@ -186,10 +192,11 @@ abstract class ConsumerHost(val spark: SparkSession,
         else snapshot
           .flatMap(g => g.filterSubjects.map(fs => (g.id, fs, g.eventType)))
           .toDF("id", "joinKey", "subEventType")
-      val depths = snapshot.flatMap(_.filterSubjects)
-        .flatMap(Subjects.subtreeDepth).distinct.sorted
-      subsSnapshot = (v, snapshot.size, anyMulti, df, depths)
-      (snapshot.size, anyMulti, df, depths)
+      val subs = ConsumerHost.Subs(snapshot.map(g => g.id -> g).toMap,
+        snapshot.exists(_.extraFilterSubjects.nonEmpty), df,
+        snapshot.flatMap(_.filterSubjects).flatMap(Subjects.subtreeDepth).distinct.sorted)
+      subsSnapshot = (v, subs)
+      subs
     }
   }
 
@@ -231,17 +238,36 @@ abstract class ConsumerHost(val spark: SparkSession,
 
   /** R14 delete (a `todo!()` in the reference): unregister, stop the
     * group's own delivery, and drop its ledger, flights and payloads —
-    * a same-id re-create starts empty. Registration never touches the
-    * payload table (a crash-restart re-registers groups over their
-    * durable dirs and WAL). Known benign race: a shared-query batch in
-    * flight at delete time can re-create a dropped dir; the orphan is
-    * invisible to the ledger and dispatcher and is never re-served. */
+    * a same-id re-create starts empty. The drop is journaled (a WAL
+    * `drop` record), so a restart neither re-serves the removed group's
+    * pending chunks nor lets them pin payload retention.
+    *
+    * Payloads: a per-group-layout dir is deleted here; shared-query
+    * payloads sit in bucket files shared with other groups, so their
+    * delete is metadata — the group's history floor (the highest batch
+    * that may hold its rows, journaled with the drop) hides them from a
+    * same-id re-create, and [[compactPayloads]] retention reclaims the
+    * storage. A shared batch in flight at delete time records no chunk
+    * for the removed group (see [[deliverSharedBatch]]).
+    *
+    * A [[DurableEventLog]] per-group delivery keeps its
+    * `delivery-<id>` checkpoint: a same-id re-create resumes after the
+    * removed group's last batch, so it receives the events emitted
+    * since, and its chunk ids continue past the removed group's — an id
+    * a client already acked is never minted again. Registration never
+    * touches the payload table (a crash-restart re-registers groups
+    * over their durable dirs and WAL). */
   def removeGroup(groupId: String): Unit = {
     groups.remove(groupId)
     groupsVersion.incrementAndGet()
     onGroupIdle(groupId)
-    ledger.dropGroup(groupId)
-    dispatcher.dropGroup(groupId)
+    recordLock.synchronized {
+      val floor = math.max(ledger.maxBatchId, sharedBatchSeq)
+      ledger.dropGroup(groupId)
+      dispatcher.dropGroup(groupId)
+      store.foreach(_.appendDrop(groupId, floor))
+      historyFloors.put(groupId, floor)
+    }
     table.drop(groupId)
   }
 
@@ -330,6 +356,15 @@ abstract class ConsumerHost(val spark: SparkSession,
   /** Batch dirs reclaimed by the automated retention cadence. */
   val reapedBatchDirs = new AtomicLong
 
+  /** Seq of the last shared batch that took a registration snapshot —
+    * a group removed after that snapshot may have rows in that batch,
+    * so its history floor covers it (volatile: written before the
+    * snapshot is read, read after the group left the map). */
+  @volatile private var sharedBatchSeq: Long = Long.MinValue
+  /** Serializes a shared batch's ledger records against
+    * [[removeGroup]]'s drop. */
+  private val recordLock = new Object
+
   /** Per-phase cumulative seconds of the shared-query batches so far:
     * batch total, payload write, count, ledger record, plus pull
     * hydration ("read"). */
@@ -341,7 +376,6 @@ abstract class ConsumerHost(val spark: SparkSession,
 
   /** One shared-query micro-batch for EVERY registered group, as chunks
     * `group-<seq>`. `batch` carries the fanned-out event columns;
-    * `estBatchEvents` sizes the per-group write ([[writeWidth]]);
     * `dedupCols` extend the message identity (eventId, spos) for
     * sources whose eventIds can repeat within a batch.
     *
@@ -359,47 +393,49 @@ abstract class ConsumerHost(val spark: SparkSession,
     * distinct eventIds and deliver twice. The dedup shuffle is skipped
     * in the common all-single case.
     *
-    * Write-first: ONE distributed pass (join → partitioned payload
-    * write, counts observed on the write) serves every group; a
-    * replayed batch rewrites its own partitions, and [[recordChunk]]
-    * keeps an existing (possibly acked) meta intact. Layout regime:
-    * from `bucketedMinGroups` registered groups the BUCKETED layout
-    * writes O(shuffle-partitions) files per batch however many groups
-    * matched (the per-group layout's one file + commit per matching
-    * group was 4.8 s/batch at G=2000, BASELINE.md round-12). No
-    * batch.isEmpty pre-check: it is a full extra pass on the common
-    * path, and the observed counts gate the ledger anyway. */
-  protected def deliverSharedBatch(batch: DataFrame, seq: Long, estBatchEvents: Long,
+    * Write-first: ONE distributed pass (join → payload write in the
+    * BUCKETED layout, counts observed on the write) serves every group
+    * — O(shuffle-partitions) files per batch however many groups
+    * matched ([[DeliveryTable.writeBucketed]]; the reference's one
+    * shared stream, natsio.rs:24). A replayed batch rewrites its own
+    * batch dir, and [[recordChunk]] keeps an existing (possibly acked)
+    * meta intact. A group removed or re-created since this batch's
+    * snapshot gets no chunk: its rows were matched for the old
+    * registration. No batch.isEmpty pre-check: it is a full extra pass
+    * on the common path, and the observed counts gate the ledger
+    * anyway. */
+  protected def deliverSharedBatch(batch: DataFrame, seq: Long,
                                    dedupCols: Seq[String] = Nil): Unit = {
     val bodyT0 = System.nanoTime()
-    val (nGroups, anyMulti, subs, subtreeDepths) = currentSubs()
-    if (nGroups > 0) {
+    sharedBatchSeq = seq
+    val subs = currentSubs()
+    if (subs.members.nonEmpty) {
       val identity = ("eventId" +: "spos" +: dedupCols).distinct
       val joined = batch
         .select(("subject" +: "resourceId" +: "eventType" +: identity).distinct.map(col): _*)
         .withColumn("joinKey",
-          explode(Subjects.matchKeysCol(col("subject"), subtreeDepths)))
-        .join(broadcast(subs), "joinKey")
+          explode(Subjects.matchKeysCol(col("subject"), subs.depths)))
+        .join(broadcast(subs.frame), "joinKey")
         .filter(Subjects.eventTypeMatches(col("eventType"), col("subEventType")))
-      val matched = (if (anyMulti) joined.dropDuplicates("id" +: identity) else joined)
+      val matched = (if (subs.anyMulti) joined.dropDuplicates("id" +: identity) else joined)
         .select(col("id").as("groupId"), col("subject"),
           col("resourceId"), FanOut.seqCol.as("seq"))
         .withColumn("chunkId", concat(col("groupId"), lit(s"-$seq")))
-      val parts = spark.conf.get("spark.sql.shuffle.partitions", "32").toInt
-      val counts =
-        if (nGroups >= bucketedMinGroups) table.writeBucketed(matched, seq, parts)
-        else {
-          val (splits, width) = ConsumerHost.writeWidth(estBatchEvents, nGroups, parts)
-          table.writeMultiWithCounts(matched, splits, width)
-        }
+      val counts = table.writeBucketed(matched, seq,
+        spark.conf.get("spark.sql.shuffle.partitions", "32").toInt)
       val ledgerT0 = System.nanoTime()
-      counts.foreach { case (gid, n) => recordChunk(gid, s"$gid-$seq", seq, n) }
+      recordLock.synchronized {
+        counts.foreach { case (gid, n) =>
+          if (groups.get(gid).exists(_ eq subs.members(gid)))
+            recordChunk(gid, s"$gid-$seq", seq, n)
+        }
+      }
       ledgerNs.addAndGet(System.nanoTime() - ledgerT0)
-      // Automated bucketed retention: a long-running many-groups
-      // deployment otherwise accumulates batch dirs without bound.
-      // Runs after this batch's metas are recorded (so its own dir is
-      // never a candidate), every `payloadRetentionEvery` batches.
-      if (payloadRetentionEvery > 0 && nGroups >= bucketedMinGroups
+      // Automated retention: a long-running deployment otherwise
+      // accumulates batch dirs without bound. Runs after this batch's
+      // metas are recorded (so its own dir is never a candidate), every
+      // `payloadRetentionEvery` batches.
+      if (payloadRetentionEvery > 0
           && sharedBatches.get % payloadRetentionEvery == (payloadRetentionEvery - 1L)) {
         reapedBatchDirs.addAndGet(compactPayloads().toLong)
         ()
@@ -414,7 +450,7 @@ abstract class ConsumerHost(val spark: SparkSession,
     * state (no-op without a ledgerDir; see LedgerStore.compact). */
   def compactLedger(): Unit = store.foreach(_.compact())
 
-  /** Bucketed-payload retention (the storage-reclaim half of the
+  /** Shared-payload retention (the storage-reclaim half of the
     * bucketed layout's shared-file trade — see [[DeliveryTable.drop]]):
     * deletes batch dirs below every group's lowest PENDING chunk,
     * bounded by the ledger's highest minted seq so a batch whose
@@ -495,53 +531,29 @@ abstract class ConsumerHost(val spark: SparkSession,
 
   /** All chunks ever delivered to a group (acked + pending); acked
     * chunks evicted behind the watermark are re-listed from the durable
-    * payload table (see [[ConsumerHost.historyMetas]]). */
+    * payload table (see [[ConsumerHost.historyMetas]]) — for a re-created
+    * id, only from shared batches above its history floor. */
   def deliveredChunks(groupId: String): Seq[DeliveryChunk] =
     hydrate(groupId, ConsumerHost.historyMetas(
       groupId, ledger.pending(groupId), ledger.ackedResident(groupId),
-      table.listChunks(groupId)))
+      table.listChunks(groupId, historyFloors.getOrElse(groupId, Long.MinValue))))
 }
 
 object ConsumerHost {
-  /** Layout-regime threshold: at this many registered groups and above,
-    * shared-query payloads are written in the BUCKETED layout (see
-    * [[DeliveryTable.writeBucketed]]). Measured (round-13
-    * GroupScaleProbe, both layouts forced at each G, sf0.1 batch
-    * medians): G=16 1.05 vs 1.00 s, G=64 0.92 vs 0.92 s — a tie below
-    * the write-parallelism width — then bucketed wins 1.53 vs 0.81 s at
-    * G=256 and 3.4–3.9× at G=1k–10k (BASELINE.md round-13). The
-    * threshold sits at the top of the tie band: below it the per-group
-    * layout keeps its exact-own-dirs pulls and physical group deletes. */
-  val BucketedMinGroups: Int = 64
+  /** One registration snapshot for the shared query: the registered
+    * groups by id, whether any is multi-subject, the subscription frame
+    * and the subtree depths (the driver-side half of
+    * [[Subjects.matchKeysCol]]). */
+  private final case class Subs(members: Map[String, StreamGroup], anyMulti: Boolean,
+                                frame: DataFrame, depths: Seq[Int])
 
-  /** Automated bucketed-retention cadence: every this-many shared-query
+  /** Automated payload-retention cadence: every this-many shared-query
     * micro-batches the batch body runs compactPayloads (0 disables).
     * 64 batches = ~16 s at the 250 ms trigger: the batch-dir count
     * stays within one retention window of the acked floor
     * (soak-measured, BASELINE.md round-14), and the listStatus + floor
     * scan is amortized noise. */
   val PayloadRetentionEvery: Int = 64
-
-  /** Per-group-layout write sizing: (splits per chunk, exchange width)
-    * for a batch of about `estBatchEvents` events over `nGroups`
-    * registered groups and `parts` shuffle partitions. Splits grow with
-    * the batch (~32k rows per file) up to `parts / nGroups`, so big
-    * replays keep their write parallelism while steady small batches —
-    * and an empty or unknown-small estimate (≤ 0) — write one file per
-    * group: near-empty files cost ~0.2 s/batch in open+commit
-    * (tools.MuxWriteProbe). `Long.MaxValue` sizes for the widest
-    * batch. The exchange follows the key space (2× hash-collision
-    * slack, capped at `parts`): nGroups×splits write keys cannot fill
-    * more partitions. Only file COUNTS depend on it, never rows, so a
-    * replay that re-estimates differently rewrites the same chunks. */
-  def writeWidth(estBatchEvents: Long, nGroups: Int, parts: Int): (Int, Int) = {
-    val g = math.max(1, nGroups)
-    val splitCap = math.max(1, parts / g)
-    val splits =
-      if (estBatchEvents <= 0) 1
-      else math.min(splitCap.toLong, 1L + estBatchEvents / g / 32768L).toInt
-    (splits, math.min(parts, math.max(1, 2 * g * splits)))
-  }
 
   /** Assemble the "all chunks ever" meta list for a group from the
     * bounded ledger + the durable payload table's chunk listing.

@@ -15,27 +15,32 @@ import org.apache.spark.sql.functions._
 
 /** The distributed half of the delivery ledger: chunk PAYLOADS
   * (subject, resourceId rows) as a parquet dataset, in one of two
-  * layouts chosen by the write path:
+  * layouts, each with its own writers:
   *
-  *  - **per-group** (`groupId=…/chunkId=…/`): one partition dir per
-  *    chunk. Right when few groups match a batch — consumer pulls read
-  *    exactly their own dirs, drop is an `rm -r`. Wrong at thousands of matching groups: each micro-batch
-  *    pays one file + one commit rename PER GROUP (~3 ms each — the
-  *    round-12 floor: 4.8 s/batch at G=2000 against the 250 ms
-  *    trigger), and on an object store those renames are sequential
-  *    driver RPCs.
-  *  - **bucketed** (`batches/batch=<seq>/bucket=<b>/`): per micro-batch,
-  *    ONE file per bucket, `b = pmod(xxhash64(groupId), B)` with B ≈
-  *    cluster write parallelism — file count and commit renames per
-  *    batch are O(B) regardless of how many groups matched (the
-  *    round-12 verdict task 1 design). groupId/chunkId become sorted
-  *    DATA columns: rows are clustered by group inside each file, so a
-  *    consumer pull reads its group's single bucket file per pending
-  *    batch and parquet row-group stats (min/max on the sorted
-  *    groupId) skip other groups' row groups once files are large
-  *    enough to hold several. Read amplification is bounded by the
-  *    bucket's share of the batch (≈ matched/B groups per file),
-  *    measured by GroupScaleProbe.
+  *  - **bucketed** (`batches/batch=<seq>/bucket=<b>/`), written by
+  *    [[writeBucketed]] for every shared query
+  *    ([[ConsumerHost.deliverSharedBatch]]: [[MultiplexedDelivery]] and
+  *    [[DurableEventLog.startMultiplexed]]): per micro-batch, ONE file
+  *    per bucket, `b = pmod(xxhash64(groupId), B)` with B ≈ cluster
+  *    write parallelism — file count and commit renames per batch are
+  *    O(B) regardless of how many groups matched (one file + commit per
+  *    matching group was 4.8 s/batch at G=2000, BASELINE.md round-12).
+  *    groupId/chunkId become sorted DATA columns: rows are clustered by
+  *    group inside each file, so a consumer pull reads its group's
+  *    single bucket file per pending batch, and the pushed-down
+  *    `groupId` predicate skips other groups' row groups. Files are
+  *    shared across groups: a group delete is metadata, and storage is
+  *    reclaimed by batch retention ([[dropBatchesBefore]]) — the
+  *    reference's one shared stream makes the same trade (natsio.rs:24).
+  *  - **per-group** (`groupId=…/chunkId=…/`), written by
+  *    [[writeCounted]] for the per-group queries ([[EventEngine]],
+  *    [[DurableEventLog.startDelivery]]) and by [[writeMulti]] for the
+  *    archive backfill: one partition dir per chunk, so a pull reads
+  *    exactly its own dirs and a group drop is an `rm -r`.
+  *
+  * [[readChunks]] resolves a chunk in whichever layout holds it, so a
+  * WAL restart over chunks an older shared query wrote per group, or a
+  * durable log serving both kinds of query, hydrates unchanged.
   *
   * The reference keeps every delivered message in an in-server
   * `HashMap<chunk_id, Vec<Message>>` until acked
@@ -124,7 +129,7 @@ final class DeliveryTable(spark: SparkSession, val dir: String) {
         .withColumn("chunkId", lit(chunkId)))
       .select(col("groupId"), col("chunkId"), col("subject"),
         col("resourceId"), col("seq"))
-      // content-hash key (SPARK-23207-safe, like prepare's split bucket);
+      // content-hash key (SPARK-23207-safe: a retried task re-routes rows alike);
       // COLUMN-ONLY repartition on purpose — AQE picks the count by size
       .repartition(pmod(xxhash64(col("subject"), col("resourceId")), lit(parts)))
       .observe(obs, count(lit(1)).as("n"))
@@ -138,62 +143,25 @@ final class DeliveryTable(spark: SparkSession, val dir: String) {
     timed("count") { obs.get("n").asInstanceOf[Long] }
   }
 
-  /** Payload rows spanning many groups in one pass (multiplexed
-    * delivery: one distributed write per micro-batch for ALL groups).
-    * `rows` must carry groupId, chunkId, subject, resourceId.
-    * `splitsPerChunk` — see [[prepare]]. */
-  def writeMulti(rows: DataFrame, splitsPerChunk: Int = 1,
-                 partitions: Int = 0): Unit = timed("write") {
-    prepare(rows, splitsPerChunk, partitions).write
+  /** Per-group-layout payload rows spanning many chunks in one pass
+    * (the archive backfill). `rows` must carry groupId, chunkId,
+    * subject, resourceId. `seq` is assigned BEFORE the repartition so
+    * delivery order inside a chunk survives the shuffle (reads sort on
+    * it). The repartition keys on (groupId, chunkId) with an EXPLICIT
+    * partition count: one write task per chunk, so a million-row
+    * backfill fans across its chunks instead of collapsing onto one task
+    * (round-12 ADVICE), and without it every source task would open a
+    * writer for every chunk it touches. */
+  def writeMulti(rows: DataFrame): Unit = timed("write") {
+    withSeq(rows)
+      .select(col("groupId"), col("chunkId"), col("subject"), col("resourceId"), col("seq"))
+      .repartition(spark.conf.get("spark.sql.shuffle.partitions", "32").toInt,
+        col("groupId"), col("chunkId"))
+      .write
       .mode("overwrite")
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy("groupId", "chunkId")
       .parquet(dir)
-  }
-
-  /** `seq` is assigned BEFORE the repartition so delivery order inside
-    * a chunk survives the shuffle (reads sort on it); the repartition
-    * makes each `(groupId, chunkId)` dir the product of
-    * `splitsPerChunk` tasks → that many parquet files per chunk.
-    * Without the repartition every source task opens a writer for
-    * every group it touches — at G=2000 with 8 source partitions that
-    * is ~16k files PER BATCH (measured as 98% of the many-groups
-    * per-batch floor, BASELINE.md round-12).
-    *
-    * The key carries chunkId alongside groupId so a single-group write
-    * spanning MANY chunks (the archive-backfill path) fans one task
-    * per chunk instead of collapsing onto one task (round-12 ADVICE);
-    * for the per-micro-batch engines chunkId is a function of groupId,
-    * so the distribution is unchanged.
-    *
-    * `splitsPerChunk` reconciles the two per-group-layout regimes:
-    * MANY groups want 1 (file count = groups matched); FEW groups with
-    * big batches want parts/groups (a chunk-only key caps a chunk's
-    * write parallelism at ONE task — measured 2.1× on the 5-group
-    * 10M-event replay). The split bucket hashes ROW CONTENT
-    * (subject, resourceId), never a nondeterministic id: a retried
-    * upstream task re-routes every row to the same split, so a chunk
-    * can never lose or duplicate rows across a speculative re-run
-    * (SPARK-23207 class; round-12 ADVICE). [[readChunks]] merges a chunk's
-    * files by sorting on seq, so the split is invisible to consumers. */
-  private def prepare(rows: DataFrame, splitsPerChunk: Int,
-                      partitions: Int = 0): DataFrame = {
-    // EXPLICIT partition count: a column-only repartition leaves the
-    // count to AQE, which coalesces a small micro-batch to ONE
-    // partition — and one task then writes every group's file
-    // sequentially (measured 5× on the write at G=1000,
-    // BASELINE.md round-12 crossover table). Callers that know their
-    // distinct key count (groups × splits) may pass a smaller
-    // `partitions` so a small micro-batch does not schedule
-    // shuffle-partitions-many near-empty reduce tasks every trigger.
-    val parts =
-      if (partitions > 0) partitions
-      else spark.conf.get("spark.sql.shuffle.partitions", "32").toInt
-    val keyed = withSeq(rows).select(col("groupId"), col("chunkId"), col("subject"),
-      col("resourceId"), col("seq"))
-    if (splitsPerChunk <= 1) keyed.repartition(parts, col("groupId"), col("chunkId"))
-    else keyed.repartition(parts, col("groupId"), col("chunkId"),
-      pmod(xxhash64(col("subject"), col("resourceId")), lit(splitsPerChunk.toLong)))
   }
 
   /** Delivery-order column: callers on the engine paths supply a
@@ -207,35 +175,7 @@ final class DeliveryTable(spark: SparkSession, val dir: String) {
     if (rows.columns.contains("seq")) rows
     else rows.withColumn("seq", monotonically_increasing_id())
 
-  /** Payload write + per-group row counts from ONE JOB over the batch:
-    * the counts ride the write itself via `Dataset.observe` with the
-    * map-typed [[graft.functions.CountByKey]] aggregate — no persist,
-    * no second count job (the round-13 fixed two-job cost, VERDICT
-    * task 1; the observed node sits post-shuffle in the write's result
-    * stage, where accumulator updates are exactly-once — see
-    * CountByKey scaladoc). */
-  def writeMultiWithCounts(rows: DataFrame, splitsPerChunk: Int = 1,
-                           partitions: Int = 0): Map[String, Long] = {
-    val obs = org.apache.spark.sql.Observation()
-    val observed = prepare(rows, splitsPerChunk, partitions)
-      .observe(obs, graft.functions.CountByKey.countByKey(col("groupId")).as("grp"))
-    timed("write") {
-      observed.write
-        .mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("groupId", "chunkId")
-        .parquet(dir)
-    }
-    timed("count") { observedCounts(obs) }
-  }
-
-  /** Per-group counts out of a completed observed write (blocks until
-    * the action's listener fires — the write already returned, so this
-    * is a driver-local handoff, not a job). */
-  private def observedCounts(obs: org.apache.spark.sql.Observation): Map[String, Long] =
-    obs.get("grp").asInstanceOf[scala.collection.Map[String, Long]].toMap
-
-  // ---- bucketed layout (many-groups regime) --------------------------
+  // ---- bucketed layout (every shared query) -------------------------
 
   /** The table's bucket count, fixed at the FIRST bucketed write and
     * persisted as `batches/_buckets`: the read path re-derives a
@@ -337,7 +277,9 @@ final class DeliveryTable(spark: SparkSession, val dir: String) {
         .partitionBy("bucket")
         .parquet(s"$batchesDir/batch=$batchSeq")
     }
-    val counts = timed("count") { observedCounts(obs) }
+    val counts = timed("count") {
+      obs.get("grp").asInstanceOf[scala.collection.Map[String, Long]].toMap
+    }
     // A no-match batch just wrote an empty dir (_SUCCESS only); reap it
     // now — accumulated empties otherwise inflate every listChunks /
     // retention listStatus scan until retention runs (round-13 ADVICE).
@@ -354,9 +296,11 @@ final class DeliveryTable(spark: SparkSession, val dir: String) {
     * chunks written in that layout); the rest resolve to
     * `batches/batch=<seq>/bucket=<bucketOf(groupId)>` — ONE file read
     * per pending batch, filtered to this group's rows. A table can hold
-    * both layouts at once (the engines switch regimes on registered
-    * group count), and this is the seam that makes the switch invisible
-    * to consumers. Driver-only: no Spark job (see [[scanDir]]).
+    * both layouts at once (per-group and shared queries over one
+    * durable log, or per-group chunks an older shared query wrote that
+    * are still pending after an upgrade), and this is the seam that
+    * makes the difference invisible to consumers. Driver-only: no Spark
+    * job (see [[scanDir]]).
     * Returns (chunkId → (subjects, resourceIds)), each in `seq` order;
     * chunks with no readable rows are absent. */
   def readChunks(groupId: String,
@@ -461,9 +405,11 @@ final class DeliveryTable(spark: SparkSession, val dir: String) {
     * chunks ever" is answered by the durable layer that actually
     * retains them. Per-group layout: one directory listing. Bucketed
     * layout: one listing of the batch dirs + a read of this group's
-    * bucket file in each — a monitoring surface whose cost
-    * [[dropBatchesBefore]] retention bounds. */
-  def listChunks(groupId: String): Seq[String] = {
+    * bucket file in each batch above `afterBatch` — a monitoring
+    * surface whose cost [[dropBatchesBefore]] retention bounds. A
+    * re-created group id passes its history floor as `afterBatch`, so
+    * the removed incarnation's rows in shared files stay hidden. */
+  def listChunks(groupId: String, afterBatch: Long = Long.MinValue): Seq[String] = {
     val (filesystem, path) = fs
     val perGroup = listOrEmpty(filesystem, new Path(path, s"groupId=${esc(groupId)}"))
       .filter(_.isDirectory)
@@ -471,7 +417,8 @@ final class DeliveryTable(spark: SparkSession, val dir: String) {
       .filter(_.startsWith("chunkId="))
       .map(n => DeliveryTable.unesc(n.stripPrefix("chunkId=")))
     val bucketed = Seq.newBuilder[String]
-    scanBuckets(filesystem, groupId, batchDirs(filesystem).map(_._1))(r =>
+    scanBuckets(filesystem, groupId,
+        batchDirs(filesystem).map(_._1).filter(_ > afterBatch))(r =>
       bucketed += str(r, "chunkId"))
     perGroup ++ bucketed.result().distinct
   }
@@ -486,14 +433,14 @@ final class DeliveryTable(spark: SparkSession, val dir: String) {
         else None
       }
 
-  /** Drop a group's payload partitions (group delete / retention).
-    * Per-group layout only: bucketed files are SHARED across groups,
-    * so a deleted group's rows there stay physically present but
-    * unreachable (its ledger metas are gone and reads filter by
-    * groupId) until [[dropBatchesBefore]] retention reclaims the whole
-    * batch dir — the same trade a shared-segment log (Kafka/JetStream)
-    * makes: per-consumer deletes are metadata, storage reclaim is
-    * retention. */
+  /** Drop a group's payload partitions (group delete). Per-group
+    * layout only: bucketed files are SHARED across groups, so a deleted
+    * group's rows there stay physically present but unreachable (its
+    * ledger metas are gone, reads filter by groupId, and a same-id
+    * re-create lists history only above its floor) until
+    * [[dropBatchesBefore]] retention reclaims the whole batch dir — the
+    * same trade a shared-segment log (Kafka/JetStream) makes:
+    * per-consumer deletes are metadata, storage reclaim is retention. */
   def drop(groupId: String): Unit = {
     val (filesystem, path) = fs
     val gdir = new Path(path, s"groupId=${esc(groupId)}")

@@ -194,8 +194,7 @@ final class DurableEventLog(session: SparkSession, logDir: String, ckptRoot: Str
 
   /** One delivery query for ALL registered groups, reading the log from
     * a single shared checkpoint ([[ConsumerHost.deliverSharedBatch]],
-    * as in MultiplexedDelivery; a log batch's size is not known before
-    * it is read, so its write is sized for the widest batch).
+    * the bucketed payload write MultiplexedDelivery runs).
     *
     * Semantics difference vs per-group mode, by design:
     *  - per-group [[startDelivery]] owns a fresh checkpoint → a new
@@ -216,8 +215,7 @@ final class DurableEventLog(session: SparkSession, logDir: String, ckptRoot: Str
       .trigger(trigger)
       .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
         // eventIds repeat across incarnations (logSchema scaladoc)
-        deliverSharedBatch(batch, batchId, Long.MaxValue,
-          Seq("resourceId", "eventType", "ts"))
+        deliverSharedBatch(batch, batchId, Seq("resourceId", "eventType", "ts"))
       }
       .start()
     deliveries.put(MuxQuery, q)
@@ -273,7 +271,7 @@ final class DurableEventLog(session: SparkSession, logDir: String, ckptRoot: Str
     // one API that gives contiguous ids; this is a bulk admin path, not
     // a codegen-hot loop), then one partitioned write ships every
     // chunk's payload straight from the executors — one write TASK per
-    // backfill chunk (DeliveryTable.prepare keys the shuffle on
+    // backfill chunk (DeliveryTable.writeMulti keys the shuffle on
     // (groupId, chunkId), so a million-row subtree backfill fans across
     // its chunks instead of collapsing onto one task; round-12 ADVICE).
     val base = archiveScan(archiveDir, filterSubject).select("subject", "resourceId")

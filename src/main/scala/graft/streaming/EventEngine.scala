@@ -69,8 +69,9 @@ final class EventEngine(session: SparkSession,
   def eventLog: DataFrame = FanOut.explodeSubjects(source.toDF())
 
   /** Added or attached: start the group's query unless it runs. */
-  override protected def onGroupActive(g: StreamGroup): Unit =
+  override protected def onGroupActive(g: StreamGroup): Unit = synchronized {
     if (!queries.contains(g.id)) start(g)
+  }
 
   /** Removed or last session closed: stop the group's query. */
   override protected def onGroupIdle(groupId: String): Unit = close(groupId)
@@ -97,8 +98,9 @@ final class EventEngine(session: SparkSession,
   /** R13 close: stop the group's delivery query (the `close` flag /
     * AtomicBool of public_event_server.rs:321-345). State is kept so a
     * later [[ConsumerHost.attach]] resumes delivery. */
-  def close(groupId: String): Unit =
+  def close(groupId: String): Unit = synchronized {
     queries.remove(groupId).foreach(_.stop())
+  }
 
   /** Drain all in-flight data through every running query (test/replay
     * helper; production runs on the 250 ms trigger). */

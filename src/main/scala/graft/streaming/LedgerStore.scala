@@ -26,6 +26,9 @@ import graft.core.ChunkMeta
   * Record format (one JSON object per line):
   *   {"t":"chunk","g":...,"c":...,"b":N,"n":N,"at":N}
   *   {"t":"ack","g":...,"c":...}
+  *   {"t":"wm","g":...,"w":N}
+  *   {"t":"offer","g":...,"c":...,"s":N,"at":N,"d":N}
+  *   {"t":"drop","g":...,"f":N}
   */
 final class LedgerStore(dir: String) {
   private val path: Path = Paths.get(dir, "ledger.jsonl")
@@ -78,6 +81,17 @@ final class LedgerStore(dir: String) {
                   offeredAt: Long, deliveries: Int): Unit =
     append(offerLine(groupId, chunkId, sessionId, offeredAt, deliveries))
 
+  /** Drop record: group `g` was removed. Replay forgets every earlier
+    * line of `g` (chunks, acks, watermark, flights); `f` is its history
+    * floor, the highest batch seq that may hold its payload rows. The
+    * floor also keeps the chunk-sequence epoch: forgetting the group's
+    * lines must not lower the ledger's maxBatchId. */
+  private def dropLine(groupId: String, floor: Long): String =
+    s"""{"t":"drop","g":"${esc(groupId)}","f":$floor}"""
+
+  def appendDrop(groupId: String, floor: Long): Unit =
+    append(dropLine(groupId, floor))
+
   /** Replay the WAL into the in-memory state. An ack flips its chunk;
     * a re-appended chunk (micro-batch retry / foreachBatch replay after
     * restart) is idempotent by (groupId, chunkId) AND ack-preserving:
@@ -90,31 +104,77 @@ final class LedgerStore(dir: String) {
     * writes watermarks first; a post-crash foreachBatch replay can only
     * re-append chunks the mint guard let through). */
   def loadState(): (Map[(String, String), ChunkMeta], Map[String, Long]) = {
-    if (!Files.exists(path)) return (Map.empty, Map.empty)
-    val state = scala.collection.mutable.Map[(String, String), ChunkMeta]()
+    val r = replay()
+    (r.metas, r.wms.toMap)
+  }
+
+  /** Latest journaled flight per (groupId, chunkId):
+    * (sessionId, offeredAt, deliveries). A later ack settles its
+    * flight (drops out); WAL replay feeds these to
+    * [[ChunkDispatcher.restore]]. */
+  def loadFlights(): Map[(String, String), (Long, Long, Int)] = replay().flightsByChunk
+
+  /** History floor per removed group (see [[appendDrop]]). */
+  def loadFloors(): Map[String, Long] = replay().floors.toMap
+
+  /** Replayed WAL state, kept per group so a drop forgets its group in
+    * O(1). */
+  private[streaming] final class Replay {
+    type Per[V] = scala.collection.mutable.Map[String, scala.collection.mutable.Map[String, V]]
+    val chunks: Per[ChunkMeta] = scala.collection.mutable.Map()
+    val flights: Per[(Long, Long, Int)] = scala.collection.mutable.Map()
     val wms = scala.collection.mutable.Map[String, Long]()
-    Files.readAllLines(path, StandardCharsets.UTF_8).asScala.foreach { line =>
+    val floors = scala.collection.mutable.Map[String, Long]()
+    def of[V](m: Per[V], g: String) = m.getOrElseUpdate(g, scala.collection.mutable.Map())
+    def metas: Map[(String, String), ChunkMeta] =
+      chunks.flatMap { case (g, cs) => cs.map { case (c, m) => (g, c) -> m } }.toMap
+    def flightsByChunk: Map[(String, String), (Long, Long, Int)] =
+      flights.flatMap { case (g, fs) => fs.map { case (c, f) => (g, c) -> f } }.toMap
+  }
+
+  /** One pass over the WAL: the state every load above reads. */
+  private[streaming] def replay(): Replay = {
+    val r = new Replay
+    if (Files.exists(path)) Files.readAllLines(path, StandardCharsets.UTF_8).asScala.foreach { line =>
       field(line, "t") match {
+        case Some("chunk") =>
+          for (g <- field(line, "g"); c <- field(line, "c"); b <- field(line, "b")) {
+            val cs = r.of(r.chunks, g)
+            val acked = cs.get(c).exists(_.acked) ||
+              b.toLong <= r.wms.getOrElse(g, Long.MinValue)
+            cs.put(c, ChunkMeta(g, c, b.toLong,
+              field(line, "n").map(_.toLong).getOrElse(0L),
+              new Timestamp(field(line, "at").map(_.toLong).getOrElse(0L)),
+              acked))
+          }
+        case Some("ack") =>
+          for (g <- field(line, "g"); c <- field(line, "c")) {
+            r.chunks.get(g).foreach(cs => cs.get(c).foreach(m => cs.put(c, m.copy(acked = true))))
+            r.flights.get(g).foreach(_.remove(c))
+          }
         case Some("wm") =>
           for (g <- field(line, "g"); w <- field(line, "w"))
-            wms.put(g, math.max(wms.getOrElse(g, Long.MinValue), w.toLong))
-        case _ =>
-          parse(line).foreach {
-            case Left(chunk) =>
-              val k = (chunk.groupId, chunk.chunkId)
-              val acked = state.get(k).exists(_.acked) ||
-                chunk.batchId <= wms.getOrElse(chunk.groupId, Long.MinValue)
-              state.put(k, chunk.copy(acked = acked))
-            case Right((g, c)) =>
-              state.get((g, c)).foreach(ch => state.put((g, c), ch.copy(acked = true)))
+            r.wms.put(g, math.max(r.wms.getOrElse(g, Long.MinValue), w.toLong))
+        case Some("offer") =>
+          for (g <- field(line, "g"); c <- field(line, "c"))
+            r.of(r.flights, g).put(c, (
+              field(line, "s").map(_.toLong).getOrElse(0L),
+              field(line, "at").map(_.toLong).getOrElse(0L),
+              field(line, "d").map(_.toInt).getOrElse(1)))
+        case Some("drop") =>
+          for (g <- field(line, "g"); f <- field(line, "f")) {
+            r.chunks.remove(g); r.flights.remove(g); r.wms.remove(g)
+            r.floors.put(g, math.max(r.floors.getOrElse(g, Long.MinValue), f.toLong))
           }
+        case _ => ()
       }
     }
-    (state.toMap, wms.toMap)
+    r
   }
 
   /** Rewrite the WAL to the minimal lines reproducing current state:
-    * per group, a WATERMARK line covering the acked prefix, then one
+    * per removed group its drop record (history floor and epoch), then
+    * per group a WATERMARK line covering the acked prefix, then one
     * chunk record per surviving (above-watermark) chunk, an ack record
     * for the acked ones among them, and the LATEST offer record for
     * each pending flight (redelivery timer + delivery count).
@@ -128,12 +188,14 @@ final class LedgerStore(dir: String) {
     * foreachBatch replay still cannot resurrect them, while the WAL
     * stops growing with all-time history: post-compaction size is
     * O(pending + groups), matching the in-memory [[ChunkLedger]] bound.
+    * Drop records come first: each forgets nothing but the lines of a
+    * removed incarnation, which compaction already left out.
     * Atomic: write to a temp file, then move over the live WAL. */
   def compact(): Unit = synchronized {
-    val (state, wms0) = loadState()
-    val fl = loadFlights()
-    val wms = scala.collection.mutable.Map[String, Long]() ++ wms0
-    state.values.groupBy(_.groupId).foreach { case (g, cs) =>
+    val r = replay()
+    val state = r.chunks.values.flatMap(_.values)
+    val wms = r.wms
+    state.groupBy(_.groupId).foreach { case (g, cs) =>
       val unacked = cs.filter(!_.acked)
       val w = if (unacked.isEmpty) cs.map(_.batchId).max
               else unacked.map(_.batchId).min - 1
@@ -141,14 +203,15 @@ final class LedgerStore(dir: String) {
     }
     val tmp = path.resolveSibling(path.getFileName.toString + ".compact")
     val sb = new StringBuilder
+    r.floors.toSeq.sortBy(_._1).foreach { case (g, f) => sb.append(dropLine(g, f)).append('\n') }
     wms.toSeq.sortBy(_._1).foreach { case (g, w) =>
       if (w > Long.MinValue) sb.append(wmLine(g, w)).append('\n')
     }
-    state.values.toSeq.sortBy(c => (c.groupId, c.batchId, c.chunkId)).foreach { c =>
+    state.toSeq.sortBy(c => (c.groupId, c.batchId, c.chunkId)).foreach { c =>
       if (c.batchId > wms.getOrElse(c.groupId, Long.MinValue)) {
         sb.append(chunkLine(c)).append('\n')
         if (c.acked) sb.append(ackLine(c.groupId, c.chunkId)).append('\n')
-        else fl.get((c.groupId, c.chunkId)).foreach { case (s, at, d) =>
+        else r.flights.get(c.groupId).flatMap(_.get(c.chunkId)).foreach { case (s, at, d) =>
           sb.append(offerLine(c.groupId, c.chunkId, s, at, d)).append('\n')
         }
       }
@@ -156,29 +219,6 @@ final class LedgerStore(dir: String) {
     Files.writeString(tmp, sb.toString, StandardCharsets.UTF_8)
     Files.move(tmp, path, java.nio.file.StandardCopyOption.REPLACE_EXISTING,
       java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-  }
-
-  /** Latest journaled flight per (groupId, chunkId):
-    * (sessionId, offeredAt, deliveries). A later ack settles its
-    * flight (drops out); WAL replay feeds these to
-    * [[ChunkDispatcher.restore]]. */
-  def loadFlights(): Map[(String, String), (Long, Long, Int)] = {
-    if (!Files.exists(path)) return Map.empty
-    val fl = scala.collection.mutable.Map[(String, String), (Long, Long, Int)]()
-    Files.readAllLines(path, StandardCharsets.UTF_8).asScala.foreach { line =>
-      field(line, "t") match {
-        case Some("offer") =>
-          for (g <- field(line, "g"); c <- field(line, "c"))
-            fl.put((g, c), (
-              field(line, "s").map(_.toLong).getOrElse(0L),
-              field(line, "at").map(_.toLong).getOrElse(0L),
-              field(line, "d").map(_.toInt).getOrElse(1)))
-        case Some("ack") =>
-          for (g <- field(line, "g"); c <- field(line, "c")) fl.remove((g, c))
-        case _ => ()
-      }
-    }
-    fl.toMap
   }
 
   // -- minimal single-purpose JSONL parsing (format is ours; no deps) --
@@ -203,17 +243,4 @@ final class LedgerStore(dir: String) {
       Some(sb.toString)
     } else Some(rest.takeWhile(c => c != ',' && c != '}'))
   }
-
-  private def parse(line: String): Option[Either[ChunkMeta, (String, String)]] =
-    field(line, "t").flatMap {
-      case "chunk" =>
-        for (g <- field(line, "g"); c <- field(line, "c"); b <- field(line, "b"))
-          yield Left(ChunkMeta(g, c, b.toLong,
-            field(line, "n").map(_.toLong).getOrElse(0L),
-            new Timestamp(field(line, "at").map(_.toLong).getOrElse(0L)),
-            acked = false))
-      case "ack" =>
-        for (g <- field(line, "g"); c <- field(line, "c")) yield Right((g, c))
-      case _ => None
-    }
 }

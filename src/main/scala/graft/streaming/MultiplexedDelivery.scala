@@ -1,7 +1,5 @@
 package graft.streaming
 
-import java.util.concurrent.atomic.AtomicLong
-
 import org.apache.spark.sql.{Dataset, Row, SparkSession}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
@@ -19,7 +17,11 @@ import graft.core._
   * subscriptions added/removed between micro-batches take effect on the
   * next batch — dynamic groups without restarting the query. Attach
   * and last-session close start and stop nothing: the shared query
-  * already serves every group.
+  * already serves every group. Every batch writes its payload in the
+  * bucketed layout ([[DeliveryTable.writeBucketed]]) whatever the group
+  * count — one file per bucket, not per matching group — and a group
+  * delete is metadata, with storage reclaimed by the batch body's
+  * retention cadence (`payloadRetentionEvery`).
   */
 final class MultiplexedDelivery(session: SparkSession,
                                 trigger: Trigger = Trigger.ProcessingTime("250 milliseconds"),
@@ -28,20 +30,12 @@ final class MultiplexedDelivery(session: SparkSession,
                                 security: EngineSecurity = EngineSecurity.Permissive,
                                 ackWaitMillis: Long = 30000L,
                                 clock: () => Long = () => System.currentTimeMillis(),
-                                bucketedMinGroups: Int = ConsumerHost.BucketedMinGroups,
                                 payloadRetentionEvery: Int = ConsumerHost.PayloadRetentionEvery)
     extends ConsumerHost(session, security, ackWaitMillis, clock, ledgerDir,
       ledgerDir.map(d => s"$d/deliveries").getOrElse(DeliveryTable.tempDir()),
-      sourcePartitions, bucketedMinGroups, payloadRetentionEvery) {
+      sourcePartitions, payloadRetentionEvery) {
 
   @volatile private var query: Option[StreamingQuery] = None
-
-  /** Emitted-event count at the previous micro-batch body — the delta
-    * is a driver-side estimate of THIS batch's event count, used only
-    * to size the write ([[ConsumerHost.writeWidth]]). Emits racing past
-    * the batch cut inflate the estimate and land in the next batch —
-    * harmless for a file-count hint. */
-  private val lastBatchEventSeq = new AtomicLong(0L)
 
   /** Start the ONE delivery query. */
   def start(): Unit = synchronized {
@@ -52,9 +46,7 @@ final class MultiplexedDelivery(session: SparkSession,
       .outputMode("append")
       .trigger(trigger)
       .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        val seqNow = emittedEvents
-        deliverSharedBatch(batch, chunkSeqBase + batchId,
-          seqNow - lastBatchEventSeq.getAndSet(seqNow))
+        deliverSharedBatch(batch, chunkSeqBase + batchId)
       }
       .start()
     query = Some(q)

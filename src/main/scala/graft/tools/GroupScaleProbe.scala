@@ -42,13 +42,10 @@ object GroupScaleProbe {
   /** One measured pass: `events` through a fresh mux with `g` groups.
     * Returns the metrics row (shared with the `mux_groups` bench row). */
   def run(spark: SparkSession, rows: Array[(Long, Long, String)], g: Int,
-          nBatches: Int = 8, churn: Boolean = true,
-          bucketedMinGroups: Int =
-            graft.streaming.ConsumerHost.BucketedMinGroups): Result = {
+          nBatches: Int = 8, churn: Boolean = true): Result = {
     val mux = new MultiplexedDelivery(spark,
       org.apache.spark.sql.streaming.Trigger.ProcessingTime("250 milliseconds"),
-      sourcePartitions = 8,
-      bucketedMinGroups = bucketedMinGroups)
+      sourcePartitions = 8)
     // 5 hot project-subtree groups (the replay-bench shape) + (g-5)
     // selective collection-subtree groups, most idle by construction.
     (0 until 5).foreach(p => mux.addGroup(s"hot-p$p", ResourceType.Project, s"p$p",
@@ -148,15 +145,7 @@ object GroupScaleProbe {
     println(f"${"G"}%7s ${"batches"}%7s ${"total_s"}%8s ${"batch_med"}%9s " +
       f"${"batch_max"}%9s ${"acked"}%8s ${"pending"}%9s ${"ack_res"}%7s ${"heap_mb"}%7s")
     gs.foreach { g =>
-      // SPARK_GRAFT_MUX_BUCKETED=1 forces the BUCKETED layout at any G;
-      // =0 forces the per-group layout — the two sides of the
-      // BucketedMinGroups layout crossover (round-13 task 1).
-      val bucketed = sys.env.get("SPARK_GRAFT_MUX_BUCKETED")
-      val r = run(spark, rows, g,
-        bucketedMinGroups =
-          if (bucketed.contains("1")) 0
-          else if (bucketed.contains("0")) Int.MaxValue
-          else graft.streaming.ConsumerHost.BucketedMinGroups)
+      val r = run(spark, rows, g)
       println(f"${r.groups}%7d ${r.batches}%7d ${r.totalSec}%8.1f ${r.batchMedianSec}%9.2f " +
         f"${r.batchMaxSec}%9.2f ${r.ackedChunks}%8d ${r.pendingMetas}%9d " +
         f"${r.ackedResident}%7d ${r.usedHeapMb}%7d")

@@ -15,7 +15,7 @@ import graft.streaming.MultiplexedDelivery
   * NOT physically delete from bucketed files, so retention is the only
   * storage-reclaim path — DeliveryTable.drop scaladoc).
   *
-  * Shape: G groups (bucketed regime), 2 competing live pull→ack
+  * Shape: G groups (bucketed layout), 2 competing live pull→ack
   * consumers per hot group draining continuously, 10% group churn every
   * 8 batches, events re-emitted round-robin for `batches` micro-batches
   * (default 480 ≈ a 2-minute 250 ms cadence per sample run; pass more

@@ -130,4 +130,29 @@ class ChunkLedgerSpec extends AnyFunSuite {
     assert(l.ack("g", "g-backfill-0").isDefined)
     assert(l.watermark("g") == -1L)
   }
+
+  test("WAL drop record forgets the group's earlier lines, keeps later ones and its floor through compaction") {
+    val dir = Files.createTempDirectory("graft-ledgerspec-drop").toString
+    val st = new LedgerStore(dir)
+    (0L until 3L).foreach(b => st.appendChunk(meta("g", b)))
+    st.appendAck("g", "g-0")
+    st.appendOffer("g", "g-1", 7L, 100L, 2)
+    st.appendChunk(meta("h", 1L))
+    st.compact() // g's acked prefix becomes a watermark line
+    st.appendDrop("g", 5L)
+    st.appendChunk(meta("g", 6L)) // the re-created incarnation
+    for (_ <- 0 until 2) {
+      val (metas, wms) = st.loadState()
+      assert(metas.keySet == Set(("g", "g-6"), ("h", "h-1")),
+        s"only the post-drop incarnation of g survives: ${metas.keySet}")
+      assert(!metas(("g", "g-6")).acked && wms.get("g").forall(_ < 6L),
+        "the removed incarnation's watermark must not mark the new chunk acked")
+      assert(st.loadFlights().isEmpty, "the removed group's flights are forgotten")
+      assert(st.loadFloors() == Map("g" -> 5L))
+      st.compact()
+    }
+    val l = new ChunkLedger
+    st.loadFloors().values.foreach(l.restoreEpoch)
+    assert(l.maxBatchId == 5L, "the floor keeps the epoch a dropped group minted")
+  }
 }

@@ -103,32 +103,31 @@ class DeliveryTableSpec extends AnyFunSuite with BeforeAndAfterAll {
       "escaped partition dirs must hydrate under the raw ids")
     assert(t.listChunks(g) == Seq(c), "listChunks must UNescape dir names")
     // the multi-group write's observed counts key on the RAW group id
-    assert(t.writeMultiWithCounts(payload(Seq(("s3", "r3")))
-        .withColumn("groupId", lit(g)).withColumn("chunkId", lit(s"$c-1"))) == Map(g -> 1L),
-      "writeMultiWithCounts must count under the raw id")
+    assert(t.writeBucketed(payload(Seq(("s3", "r3")))
+        .withColumn("groupId", lit(g)).withColumn("chunkId", lit(s"$c-1")), 1L, 4) == Map(g -> 1L),
+      "writeBucketed must count under the raw id")
     assert(t.listChunks(g).toSet == Set(c, s"$c-1"))
     t.drop(g)
     assert(t.readChunks(g, perGroup(c)).isEmpty, "drop must resolve the escaped dir")
   }
 
   test("a chunk split across several files reads back in delivery order") {
-    // Few-groups regime: splitsPerChunk > 1 spreads one chunk over
-    // several write tasks (round-12 write-parallelism hint). The split
-    // must be invisible to consumers — read() merges the files by seq.
+    // A big batch spreads one chunk over several files (here a per-file
+    // record cap; on a cluster, several write tasks). The split must be
+    // invisible to consumers — read() merges the files by seq.
     val dir = DeliveryTable.tempDir()
     val t = new DeliveryTable(spark, dir)
     val rows = (0 until 200).map(i => (f"s$i%03d", f"r$i%03d"))
-    val counts = t.writeMultiWithCounts(payload(rows)
-      .withColumn("groupId", lit("g"))
-      .withColumn("chunkId", lit("g-0")),
-      splitsPerChunk = 4)
+    spark.conf.set("spark.sql.files.maxRecordsPerFile", "50")
+    val counts = try t.writeCounted("g", "g-0", payload(rows))
+      finally spark.conf.unset("spark.sql.files.maxRecordsPerFile")
     val files = new java.io.File(s"$dir/groupId=g/chunkId=g-0")
       .listFiles().count(_.getName.endsWith(".parquet"))
     assert(files > 1, s"test wiring: expected a multi-file chunk, got $files")
     assert(t.readChunks("g", perGroup("g-0")) ==
       Map("g-0" -> ((rows.map(_._1), rows.map(_._2)))),
       "delivery order must survive the multi-file split")
-    assert(counts == Map("g" -> 200L),
+    assert(counts == 200L,
       "observed counts must sum across a chunk's files")
   }
 
@@ -231,8 +230,9 @@ class DeliveryTableSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("mixed layouts in one table: readChunks resolves each chunk where it was written") {
-    // The engines switch layouts on registered-group count; a group can
-    // hold chunks in both (e.g. registered before the fleet grew).
+    // Per-group and shared queries write different layouts; a group can
+    // hold chunks in both (e.g. per-group chunks an older shared query
+    // wrote, still pending after an upgrade).
     val t = new DeliveryTable(spark, DeliveryTable.tempDir())
     t.writeCounted("g3", "g3-0", payload(Seq(("sA", "rA"))))            // per-group
     t.writeBucketed(groupBatch(groups = 8, rowsPerGroup = 2, seq = 1), 1L, 4) // bucketed
@@ -254,6 +254,13 @@ class DeliveryTableSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(t.writeBucketed(batch, 0L, 4) == Map(g -> 2L))
     assert(t.readChunks(g, Seq((s"$g-0", 0L))) ==
       Map(s"$g-0" -> ((Seq("s1", "s2"), Seq("r1", "r2")))))
+  }
+
+  test("listChunks above a history floor skips the shared batches at or below it") {
+    val t = new DeliveryTable(spark, DeliveryTable.tempDir())
+    (0L to 2L).foreach(s => t.writeBucketed(groupBatch(4, 1, s), s, 4))
+    assert(t.listChunks("g1").toSet == Set("g1-0", "g1-1", "g1-2"))
+    assert(t.listChunks("g1", afterBatch = 1L) == Seq("g1-2"))
   }
 
   test("dropBatchesBefore reclaims old batch dirs; newer chunks keep hydrating") {

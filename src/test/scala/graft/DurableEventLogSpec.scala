@@ -89,10 +89,10 @@ class DurableEventLogSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("durable mux at many groups runs the bucketed layout: delivery, multi-hierarchy union, retention") {
-    // >= BucketedMinGroups registered groups flips the durable mux to
-    // the bucketed payload layout (the same switch MultiplexedDelivery
-    // makes) — exercised end-to-end here including a multi-hierarchy
-    // group and compactPayloads retention.
+    // The durable mux writes the bucketed payload layout (the same
+    // shared write MultiplexedDelivery runs) — exercised end-to-end here
+    // at 72 groups, including a multi-hierarchy group and
+    // compactPayloads retention.
     val (logDir, ckpt) = (tmp(), tmp())
     val log = new DurableEventLog(spark, logDir, ckpt)
     try {
@@ -141,6 +141,7 @@ class DurableEventLogSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(deliveryActive)
       assert(log.pendingChunks("g").flatMap(_.resourceIds) == Seq("p1"))
 
+      val removedIds = log.deliveredChunks("g").map(_.chunkId)
       log.removeGroup("g")
       log.emit(ResourceType.Collection, EventType.All, "c1", RelationCtx(project = "p1"))
       log.processAllAvailable()
@@ -148,6 +149,18 @@ class DurableEventLogSpec extends AnyFunSuite with BeforeAndAfterAll {
       log.addGroup("g", ResourceType.Project, "p1", Hierarchy(projectId = "p1"), true)
       assert(log.pendingChunks("g").isEmpty && log.deliveredChunks("g").isEmpty,
         "a re-created group must not re-serve the removed group's chunks")
+
+      // the kept `delivery-g` checkpoint: an attach resumes after the
+      // removed group's last batch — only events emitted since arrive,
+      // under chunk ids the removed group never used
+      new graft.streaming.EventSession(log).handle(graft.streaming.EventSession.Init("g"))
+      log.emit(ResourceType.Collection, EventType.All, "c2", RelationCtx(project = "p1"))
+      log.processAllAvailable()
+      val resumed = log.pendingChunks("g")
+      assert(resumed.flatMap(_.resourceIds).sorted == Seq("c1", "c2"),
+        s"the re-created group must receive exactly the post-removal events: $resumed")
+      assert(resumed.map(_.chunkId).intersect(removedIds).isEmpty,
+        s"chunk ids must not collide with the removed group's: ${resumed.map(_.chunkId)} vs $removedIds")
     } finally log.stop()
   }
 

@@ -4,7 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 import org.apache.spark.sql.SparkSession
 import graft.core._
-import graft.streaming.MultiplexedDelivery
+import graft.streaming.{EventEngine, MultiplexedDelivery}
 
 /** The multiplexed (one-query-for-all-groups) delivery path: same
   * semantics as the per-group engine, dynamic group add/remove without
@@ -206,8 +206,8 @@ class MultiplexedDeliverySpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("many-groups churn: create/delete between batches with competing consumers stays correct") {
-    // 71 groups: past the bucketed-layout threshold, so this also
-    // exercises the bucketed write end-to-end, not just its unit test.
+    // 71 groups, most idle: the shared bucketed write end-to-end at a
+    // group count where most subscriptions match nothing.
     val mux = new MultiplexedDelivery(spark)
     try {
       mux.addGroup("hot", ResourceType.Project, "p0", Hierarchy(projectId = "p0"), true)
@@ -258,24 +258,6 @@ class MultiplexedDeliverySpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(ackedResident == 0L,
         "fully-acked groups must leave no acked metas resident (watermark eviction)")
     } finally mux.stop()
-  }
-
-  test("writeWidth: per-group write splits and exchange width track the batch estimate") {
-    import graft.streaming.ConsumerHost.writeWidth
-    // empty or unknown-small estimate: one file per group, never the cap
-    assert(writeWidth(0L, 4, 32) == ((1, 8)))
-    assert(writeWidth(-5L, 4, 32) == ((1, 8)))
-    // small delta: one split; exchange = 2 × groups × splits
-    assert(writeWidth(1000L, 4, 32) == ((1, 8)))
-    // large delta: ~32k rows per file per group, under the cap
-    assert(writeWidth(4L * 3 * 32768L, 4, 32) == ((4, 32)))
-    assert(writeWidth(2L * 32768L, 2, 64) == ((2, 8)))
-    // capped: splits never exceed parts / groups, width never parts
-    assert(writeWidth(Long.MaxValue, 4, 32) == ((8, 32)))
-    assert(writeWidth(Long.MaxValue, 5, 4) == ((1, 4)))
-    // no groups counts as one; more groups than partitions → 1 split
-    assert(writeWidth(Long.MaxValue, 0, 4) == ((4, 4)))
-    assert(writeWidth(10000000L, 100, 8) == ((1, 8)))
   }
 
   test("multi-hierarchy group through the mux join: union of matchers, once-per-message dedup path") {
@@ -342,13 +324,12 @@ class MultiplexedDeliverySpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("bucketed layout end-to-end: delivery, acks, churn, and WAL restart (round-13 task 1)") {
-    // Force the bucketed layout at ANY group count (bucketedMinGroups=1)
-    // and run the full engine surface over it: filtered delivery, pull/
-    // ack, mid-stream churn, and a WAL restart whose restored metas
-    // hydrate from the bucketed batch dirs.
+    // The shared query writes the bucketed layout at any group count —
+    // two groups here. The full engine surface runs over it: filtered
+    // delivery, pull/ack, mid-stream churn, and a WAL restart whose
+    // restored metas hydrate from the bucketed batch dirs.
     val dir = java.nio.file.Files.createTempDirectory("graft-mux-bucketed").toString
-    val mux1 = new MultiplexedDelivery(spark, ledgerDir = Some(dir),
-      bucketedMinGroups = 1)
+    val mux1 = new MultiplexedDelivery(spark, ledgerDir = Some(dir))
     try {
       mux1.addGroup("p1-tree", ResourceType.Project, "p1", Hierarchy(projectId = "p1"), true)
       mux1.addGroup("c1-watch", ResourceType.Collection, "c1",
@@ -365,7 +346,7 @@ class MultiplexedDeliverySpec extends AnyFunSuite with BeforeAndAfterAll {
         "bucketed layout must write under batches/")
       assert(!new java.io.File(s"$dir/deliveries").listFiles()
         .exists(_.getName.startsWith("groupId=")),
-        "no per-group dirs in the bucketed regime")
+        "no per-group dirs from the shared query")
 
       // ack one chunk; churn a group mid-stream
       val first = mux1.pendingChunks("p1-tree").head
@@ -379,8 +360,7 @@ class MultiplexedDeliverySpec extends AnyFunSuite with BeforeAndAfterAll {
     } finally mux1.stop()
 
     // restart: restored WAL metas must hydrate from the bucketed dirs
-    val mux2 = new MultiplexedDelivery(spark, ledgerDir = Some(dir),
-      bucketedMinGroups = 1)
+    val mux2 = new MultiplexedDelivery(spark, ledgerDir = Some(dir))
     val pending = mux2.pendingChunks("p1-tree")
     assert(pending.size == 1 && pending.head.resourceIds == Seq("c1"),
       s"unacked bucketed chunk must survive restart: $pending")
@@ -395,7 +375,7 @@ class MultiplexedDeliverySpec extends AnyFunSuite with BeforeAndAfterAll {
     // their payloads survive every firing.
     val dir = java.nio.file.Files.createTempDirectory("graft-mux-autoret").toString
     val mux = new MultiplexedDelivery(spark, ledgerDir = Some(dir),
-      bucketedMinGroups = 1, payloadRetentionEvery = 2)
+      payloadRetentionEvery = 2)
     try {
       mux.addGroup("acker", ResourceType.Project, "p1", Hierarchy(projectId = "p1"), true)
       mux.addGroup("lagger", ResourceType.Project, "p1", Hierarchy(projectId = "p1"), true)
@@ -433,8 +413,7 @@ class MultiplexedDeliverySpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("compactPayloads reclaims only fully-acked batch dirs; pending chunks survive") {
     val dir = java.nio.file.Files.createTempDirectory("graft-mux-retain").toString
-    val mux = new MultiplexedDelivery(spark, ledgerDir = Some(dir),
-      bucketedMinGroups = 1)
+    val mux = new MultiplexedDelivery(spark, ledgerDir = Some(dir))
     try {
       mux.addGroup("a", ResourceType.Project, "p1", Hierarchy(projectId = "p1"), true)
       mux.addGroup("b", ResourceType.Project, "p2", Hierarchy(projectId = "p2"), true)
@@ -471,47 +450,114 @@ class MultiplexedDeliverySpec extends AnyFunSuite with BeforeAndAfterAll {
     } finally mux.stop()
   }
 
-  test("layout regimes deliver identical chunks, and a regime switch mid-stream stays readable") {
-    def runWith(threshold: Int): Map[String, Seq[(String, Long)]] = {
-      val mux = new MultiplexedDelivery(spark, bucketedMinGroups = threshold)
-      try {
-        mux.addGroup("t1", ResourceType.Project, "p1", Hierarchy(projectId = "p1"), true)
-        mux.addGroup("t2", ResourceType.Collection, "c1",
-          Hierarchy(projectId = "p1", collectionId = "c1"), true)
-        mux.start()
-        mux.emit(ResourceType.Project, EventType.All, "p1", RelationCtx())
-        mux.emit(ResourceType.Collection, EventType.All, "c1", RelationCtx(project = "p1"))
-        mux.processAllAvailable()
-        mux.emit(ResourceType.Object, EventType.All, "o1",
-          RelationCtx(project = "p1", collection = "c1", sharedObject = "s1",
-            objectGroups = Seq("g1")))
-        mux.processAllAvailable()
-        Seq("t1", "t2").map { g =>
-          g -> mux.pendingChunks(g).map(c => (c.resourceIds.sorted.mkString(","),
-            c.resourceIds.size.toLong))
-        }.toMap
-      } finally mux.stop()
-    }
-    assert(runWith(Int.MaxValue) == runWith(1),
-      "per-group and bucketed layouts must deliver identical chunks")
+  test("upgrade: per-group-layout chunks still pending hydrate after a restart onto the bucketed-only mux") {
+    // Before the shared query wrote only the bucketed layout, a few-groups
+    // mux wrote `groupId=…/chunkId=…` dirs. A per-group engine over the
+    // same ledger dir leaves exactly that state behind: journaled metas
+    // whose payloads sit in per-group dirs, one acked and one pending.
+    val dir = java.nio.file.Files.createTempDirectory("graft-mux-upgrade").toString
+    val old = new EventEngine(spark, ledgerDir = Some(dir))
+    val acked = try {
+      old.addGroup("g", ResourceType.Project, "p1", Hierarchy(projectId = "p1"), true)
+      old.emit(ResourceType.Project, EventType.All, "p1", RelationCtx())
+      old.processAllAvailable()
+      old.emit(ResourceType.Collection, EventType.All, "c1", RelationCtx(project = "p1"))
+      old.processAllAvailable()
+      val first = old.pendingChunks("g").head
+      assert(old.ack("g", first.chunkId))
+      first.chunkId
+    } finally old.stop()
+    assert(new java.io.File(s"$dir/deliveries/groupId=g").isDirectory,
+      "test wiring: the pre-upgrade chunks must sit in the per-group layout")
 
-    // regime switch mid-stream: start under the threshold (per-group
-    // layout), register groups past it (bucketed layout) — chunks from
-    // BOTH must keep hydrating for the same group.
-    val mux = new MultiplexedDelivery(spark, bucketedMinGroups = 3)
+    val mux = new MultiplexedDelivery(spark, ledgerDir = Some(dir))
     try {
-      mux.addGroup("g0", ResourceType.Project, "p1", Hierarchy(projectId = "p1"), true)
+      val restored = mux.pendingChunks("g")
+      assert(restored.map(_.resourceIds) == Seq(Seq("c1")),
+        s"the pending per-group chunk must hydrate after the restart: $restored")
+      mux.addGroup("g", ResourceType.Project, "p1", Hierarchy(projectId = "p1"), true)
+      mux.start()
+      mux.emit(ResourceType.Collection, EventType.All, "c2", RelationCtx(project = "p1"))
+      mux.processAllAvailable()
+      assert(new java.io.File(s"$dir/deliveries/batches").isDirectory)
+      val pending = mux.pendingChunks("g")
+      assert(pending.map(_.resourceIds) == Seq(Seq("c1"), Seq("c2")),
+        s"old per-group and new bucketed chunks must both hydrate, in batch order: $pending")
+      assert(!pending.map(_.chunkId).contains(acked), "the acked chunk stays acked")
+      assert(mux.deliveredChunks("g").map(_.chunkId).toSet ==
+        (pending.map(_.chunkId) :+ acked).toSet,
+        "history spans both layouts")
+    } finally mux.stop()
+  }
+
+  test("a removed group's drop is journaled: after a restart its pending chunks are gone, retention reclaims, ids never repeat") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-mux-drop").toString
+    val mux1 = new MultiplexedDelivery(spark, ledgerDir = Some(dir))
+    val oldIds = try {
+      mux1.addGroup("a", ResourceType.Project, "p1", Hierarchy(projectId = "p1"), true)
+      mux1.addGroup("g", ResourceType.Project, "p2", Hierarchy(projectId = "p2"), true)
+      mux1.start()
+      // batch 0 feeds both groups, batch 1 only g: g holds the highest id
+      mux1.emit(ResourceType.Project, EventType.All, "p1", RelationCtx())
+      mux1.emit(ResourceType.Project, EventType.All, "p2", RelationCtx())
+      mux1.processAllAvailable()
+      mux1.emit(ResourceType.Collection, EventType.All, "c2", RelationCtx(project = "p2"))
+      mux1.processAllAvailable()
+      mux1.pendingChunks("a").foreach(c => assert(mux1.ack("a", c.chunkId)))
+      val ids = mux1.pendingChunks("g").map(_.chunkId)
+      assert(ids.size == 2)
+      mux1.removeGroup("g")
+      ids
+    } finally mux1.stop()
+
+    def restartAndCheck(): MultiplexedDelivery = {
+      val mux = new MultiplexedDelivery(spark, ledgerDir = Some(dir))
+      assert(mux.pendingChunks("g").isEmpty,
+        "a removed group's pending chunks must not come back after a restart")
+      assert(mux.ledgerStats._2 == 0L, "nothing may stay pending")
+      mux
+    }
+    val mux2 = restartAndCheck()
+    assert(mux2.compactPayloads() == 2,
+      "with the removed group forgotten, retention reclaims both batch dirs")
+    mux2.compactLedger()
+    val mux3 = restartAndCheck()
+    try {
+      // the floor keeps the epoch: a same-id re-create mints fresh ids
+      mux3.addGroup("g", ResourceType.Project, "p2", Hierarchy(projectId = "p2"), true)
+      mux3.start()
+      mux3.emit(ResourceType.Collection, EventType.All, "c3", RelationCtx(project = "p2"))
+      mux3.processAllAvailable()
+      val fresh = mux3.pendingChunks("g")
+      assert(fresh.map(_.resourceIds) == Seq(Seq("c3")))
+      assert(fresh.map(_.chunkId).intersect(oldIds).isEmpty,
+        s"a re-created group must not re-mint an old chunk id: ${fresh.map(_.chunkId)} vs $oldIds")
+    } finally mux3.stop()
+  }
+
+  test("a same-id re-create does not see the removed group's history in the shared bucket files") {
+    val mux = new MultiplexedDelivery(spark)
+    try {
+      mux.addGroup("g", ResourceType.Project, "p1", Hierarchy(projectId = "p1"), true)
+      (0 until 70).foreach { i =>
+        mux.addGroup(s"idle-$i", ResourceType.Collection, s"cx$i",
+          Hierarchy(projectId = "p9", collectionId = s"cx$i"), true)
+      }
       mux.start()
       mux.emit(ResourceType.Project, EventType.All, "p1", RelationCtx())
-      mux.processAllAvailable() // per-group layout (1 group < 3)
-      mux.addGroup("g1", ResourceType.Project, "p1", Hierarchy(projectId = "p1"), true)
-      mux.addGroup("g2", ResourceType.Project, "p1", Hierarchy(projectId = "p1"), true)
-      mux.emit(ResourceType.Collection, EventType.All, "c7", RelationCtx(project = "p1"))
-      mux.processAllAvailable() // bucketed layout (3 groups >= 3)
-      val got = mux.pendingChunks("g0")
-      assert(got.size == 2 &&
-        got.flatMap(_.resourceIds).toSet == Set("p1", "c7"),
-        s"chunks across the layout switch must all hydrate: $got")
+      mux.processAllAvailable()
+      mux.pendingChunks("g").foreach(c => assert(mux.ack("g", c.chunkId)))
+      assert(mux.deliveredChunks("g").flatMap(_.resourceIds) == Seq("p1"))
+
+      mux.removeGroup("g")
+      mux.addGroup("g", ResourceType.Project, "p1", Hierarchy(projectId = "p1"), true)
+      assert(mux.deliveredChunks("g").isEmpty,
+        "a re-created group must not list the removed group's chunks")
+      mux.emit(ResourceType.Collection, EventType.All, "c1", RelationCtx(project = "p1"))
+      mux.processAllAvailable()
+      mux.pendingChunks("g").foreach(c => assert(mux.ack("g", c.chunkId)))
+      assert(mux.deliveredChunks("g").flatMap(_.resourceIds) == Seq("c1"),
+        "its own acked history still lists")
     } finally mux.stop()
   }
 
@@ -545,27 +591,28 @@ class MultiplexedDeliverySpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("a pull hydrates on the driver: no Spark job, in the per-group and the bucketed layout") {
-    // threshold MaxValue keeps the per-group layout; 2 groups >= 2 puts
-    // every batch in the bucketed layout
-    for ((threshold, bucketed) <- Seq((Int.MaxValue, false), (2, true))) {
+    // a per-group engine writes the per-group layout, the shared query
+    // the bucketed one
+    for (bucketed <- Seq(false, true)) {
       val dir = java.nio.file.Files.createTempDirectory("graft-mux-nojob").toString
-      val mux = new MultiplexedDelivery(spark, ledgerDir = Some(dir),
-        bucketedMinGroups = threshold)
+      val engine =
+        if (bucketed) new MultiplexedDelivery(spark, ledgerDir = Some(dir))
+        else new EventEngine(spark, ledgerDir = Some(dir))
       try {
-        mux.addGroup("a", ResourceType.Project, "p1", Hierarchy(projectId = "p1"), true)
-        mux.addGroup("b", ResourceType.Project, "p1", Hierarchy(projectId = "p1"), true)
-        mux.start()
-        mux.emit(ResourceType.Project, EventType.All, "p1", RelationCtx())
-        mux.emit(ResourceType.Collection, EventType.All, "c1", RelationCtx(project = "p1"))
-        mux.processAllAvailable()
+        engine.addGroup("a", ResourceType.Project, "p1", Hierarchy(projectId = "p1"), true)
+        engine.addGroup("b", ResourceType.Project, "p1", Hierarchy(projectId = "p1"), true)
+        engine match { case mux: MultiplexedDelivery => mux.start(); case _ => }
+        engine.emit(ResourceType.Project, EventType.All, "p1", RelationCtx())
+        engine.emit(ResourceType.Collection, EventType.All, "c1", RelationCtx(project = "p1"))
+        engine.processAllAvailable()
         assert(new java.io.File(s"$dir/deliveries/batches").isDirectory == bucketed,
           s"test wiring: bucketed layout expected = $bucketed")
-        val session = mux.openSession("a")
-        val (pulled, jobs) = jobsStartedBy(mux.pull("a", session))
+        val session = engine.openSession("a")
+        val (pulled, jobs) = jobsStartedBy(engine.pull("a", session))
         assert(pulled.flatMap(_.resourceIds).toSet == Set("p1", "c1"),
           s"the pull must hydrate its payloads: $pulled")
         assert(jobs == 0, s"a pull must not run a Spark job (bucketed = $bucketed), ran $jobs")
-      } finally mux.stop()
+      } finally engine.stop()
     }
   }
 }
