@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.Trigger
 import graft.sources.Tables
 import graft.core.EngineSecurity
-import graft.streaming.{ConsumerHost, DurableEventLog, EventEngine, EventSession, MultiplexedDelivery, WireServer}
+import graft.streaming.{ConsumerHost, DurableEventLog, EventSession, MultiplexedDelivery, WireServer}
 
 /** User-facing entry point — what a user of the reference switches to.
   *
@@ -13,13 +13,13 @@ import graft.streaming.{ConsumerHost, DurableEventLog, EventEngine, EventSession
   * val tables = Graft.analytics(spark, dataDir)  // registered views + DataFrames
   * spark.sql("SELECT graft_dot(a.embedding, b.embedding) ...")
   *
-  * val engine = Graft.eventEngine(spark)         // one query per group
   * val mux    = Graft.multiplexed(spark)         // one query, many groups
+  * mux.start()
   * val log    = Graft.durableLog(spark, dir, ck) // parquet log + checkpoints
   * }}}
   *
-  * All three engines are one [[graft.streaming.ConsumerHost]] delivery
-  * core — the same emit / addGroup / removeGroup / pull / ack surface,
+  * Both engines are one [[graft.streaming.ConsumerHost]] delivery core
+  * — the same emit / addGroup / removeGroup / pull / ack surface,
   * session protocol and wire servers — differing only in their query
   * wiring.
   */
@@ -48,14 +48,6 @@ object Graft {
     Tables.all.map(n => n -> spark.table(n)).toMap
   }
 
-  /** The per-group streaming engine (reference-shaped: one filtered
-    * query per stream group). `security` adds the reference's token /
-    * authz gates; the permissive default matches in-process embedding. */
-  def eventEngine(spark: SparkSession,
-                  trigger: Trigger = Trigger.ProcessingTime("250 milliseconds"),
-                  security: EngineSecurity = EngineSecurity.Permissive): EventEngine =
-    new EventEngine(spark, trigger, security)
-
   /** An R13 bidi session (Init/Ack/Close protocol) over any engine. */
   def session(engine: ConsumerHost): EventSession = new EventSession(engine)
 
@@ -67,7 +59,9 @@ object Graft {
   def wireServer(engine: ConsumerHost, port: Int = 0): WireServer =
     WireServer(engine, port)
 
-  /** The many-groups scale path: one streaming query for all groups.
+  /** The in-memory engine: one streaming query for all groups, run
+    * once `start()` is called. `security` adds the reference's token /
+    * authz gates; the permissive default matches in-process embedding.
     * Pass `ledgerDir` to make pending/acked chunk state survive a
     * process restart (WAL); `sourcePartitions` > 1 parallelizes bulk
     * replay/backfill ingest. */

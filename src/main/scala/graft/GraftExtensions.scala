@@ -33,11 +33,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       new ExpressionInfo(classOf[L2SliceDistanceFF].getName, "graft_l2_slice"),
       GraftExtensions.buildL2))
     e.injectPlannerStrategy(_ => graft.plans.TopKStrategy)
-    // opt-in (spark.graft.topk.autoprune=true): row_number()<=k window
-    // filters get the heap prune planted automatically — off by default
-    // because Spark 4's InsertWindowGroupLimit already covers the idiom
-    // (see TopKAutoPrune scaladoc)
-    e.injectOptimizerRule(_ => graft.plans.TopKAutoPrune)
   }
 }
 

@@ -4,7 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.Trigger
 import graft.core.{AuthzProvider, EngineSecurity}
 import graft.sources.Tables
-import graft.streaming.{ConsumerHost, DurableEventLog, EventEngine, MultiplexedDelivery, WireServer}
+import graft.streaming.{ConsumerHost, DurableEventLog, MultiplexedDelivery, WireServer}
 
 /** ENV-VAR BOOT — the reference's process entry point re-expressed for
   * the Spark engine (`main.rs:33-41` reads the env, `server.rs:25-93`
@@ -21,7 +21,7 @@ import graft.streaming.{ConsumerHost, DurableEventLog, EventEngine, MultiplexedD
   *    [[EngineSecurity.Permissive]].
   *  - `NATS_HOST`/`NATS_PORT` (main.rs:35-36) — the reference's durable
   *    stream backing. Spark-side the backing is storage, not a broker:
-  *    `GRAFT_LEDGER_DIR` (chunk/ack WAL for the in-memory engines) and
+  *    `GRAFT_LEDGER_DIR` (chunk/ack WAL for the in-memory engine) and
   *    `GRAFT_LOG_DIR`/`GRAFT_CHECKPOINT_DIR` (partitioned parquet log +
   *    streaming checkpoints for the durable engine).
   *  - `INTERNAL_EVENT_SERVER_HOST` / `PUBLIC_EVENT_SERVER_HOST`
@@ -40,10 +40,12 @@ import graft.streaming.{ConsumerHost, DurableEventLog, EventEngine, MultiplexedD
   *    hierarchy resolution; in-engine, callers pass the [[graft.core.Hierarchy]]
   *    in CreateGroup frames, so no endpoint exists to configure.
   *
-  * Engine selection is `GRAFT_ENGINE`: `engine` (per-group queries,
-  * the reference-shaped default), `multiplexed` (one query, many
-  * groups — the scale path), `durable` (parquet log + checkpoints;
-  * requires `GRAFT_LOG_DIR` and `GRAFT_CHECKPOINT_DIR`).
+  * Engine selection is `GRAFT_ENGINE`: `multiplexed` (the default: the
+  * in-memory engine, one query serving every group; a group with no
+  * live session keeps receiving chunks, a new group is from-now-on) or
+  * `durable` (parquet log + checkpoints, per-group full-history
+  * backfill; requires `GRAFT_LOG_DIR` and `GRAFT_CHECKPOINT_DIR`). Any
+  * other value fails the boot.
   * `GRAFT_TRIGGER_MILLIS` defaults to 250 — the JetStream pull window
   * the reference hardcodes (natsio.rs:201).
   *
@@ -73,9 +75,7 @@ object ServerMain {
       s"${env.getOrElse("GRAFT_TRIGGER_MILLIS", "250")} milliseconds")
     val port = env.getOrElse("GRAFT_WIRE_PORT", "0").toInt
     val maxBatch = env.get("GRAFT_MAX_BATCH").map(_.toInt).getOrElse(Int.MaxValue)
-    val host: ConsumerHost = env.getOrElse("GRAFT_ENGINE", "engine") match {
-      case "engine" =>
-        new EventEngine(spark, trigger, security, ledgerDir = env.get("GRAFT_LEDGER_DIR"))
+    val host: ConsumerHost = env.getOrElse("GRAFT_ENGINE", "multiplexed") match {
       case "multiplexed" =>
         val m = new MultiplexedDelivery(spark, trigger,
           ledgerDir = env.get("GRAFT_LEDGER_DIR"), sourcePartitions = 1, security)
@@ -89,7 +89,7 @@ object ServerMain {
             sys.error("GRAFT_ENGINE=durable requires GRAFT_CHECKPOINT_DIR")),
           trigger, security)
       case other => sys.error(s"unknown GRAFT_ENGINE '$other' " +
-        "(expected engine | multiplexed | durable)")
+        "(expected multiplexed | durable)")
     }
     (WireServer(host, port, maxBatch), () => host.stop())
   }

@@ -33,11 +33,10 @@ import org.apache.spark.sql.graft.PlanBridge
   * plants an equivalent partial+final `WindowGroupLimit` when the plan
   * literally contains `Filter(rank-fn <= k, Window(...))` — for THAT
   * idiom the built-in already bounds the exchange (and q21 benefits
-  * from it on stock sessions). This node earns its place where no
-  * window filter exists for the built-in rule to match: materializing
-  * the per-key tail ahead of a join or a sink via the explicit
-  * [[TopKPerKey.prune]] API, and as the planning target of the opt-in
-  * [[TopKAutoPrune]] optimizer rule.
+  * from it on stock sessions; PlanSpec pins it). This node earns its
+  * place where no window filter exists for the built-in rule to match:
+  * materializing the per-key tail ahead of a join or a sink via the
+  * explicit [[TopKPerKey.prune]] API.
   *
   * The prune order MUST be total (tie-broken): with ties at the k-th
   * place an arbitrary subset survives the partial pass, and the final

@@ -18,8 +18,8 @@ import scala.jdk.CollectionConverters._
   *    from a dead client fails over to the survivors.
   *
   * Here the unit of delivery is the chunk (micro-batch), and this class
-  * is the single bookkeeping point both engines ([[EventEngine]],
-  * [[MultiplexedDelivery]]) consult at pull time:
+  * is the single bookkeeping point both engines ([[MultiplexedDelivery]],
+  * [[DurableEventLog]]) consult at pull time:
   *
   *  - a chunk is OFFERABLE to session S when it is unacked and
   *    (never offered) ∨ (its flight's owner is no longer live)

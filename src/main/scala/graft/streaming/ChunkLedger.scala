@@ -6,9 +6,8 @@ import scala.jdk.CollectionConverters._
 
 import graft.core.ChunkMeta
 
-/** Bounded driver-side chunk ledger shared by all three delivery
-  * engines ([[EventEngine]], [[MultiplexedDelivery]],
-  * [[DurableEventLog]]).
+/** Bounded driver-side chunk ledger shared by both delivery engines
+  * ([[MultiplexedDelivery]], [[DurableEventLog]]).
   *
   * The previous design kept every `ChunkMeta` ever minted in one flat
   * `(groupId, chunkId) → meta` map: acked history accumulated forever

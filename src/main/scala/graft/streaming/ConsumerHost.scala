@@ -34,12 +34,16 @@ import graft.core._
   *
   * An engine is then only its query wiring — one "micro-batch → chunks"
   * function over this state, as in the Structured Streaming paper's
-  * idempotent-sink-plus-WAL design: [[EventEngine]] runs one filtered
-  * query per group into [[deliverGroupBatch]], [[MultiplexedDelivery]]
-  * one shared query into [[deliverSharedBatch]], and [[DurableEventLog]]
-  * either form over its parquet log. Engine-specific lifecycle goes
-  * through two hooks, [[onGroupActive]] and [[onGroupIdle]]; one
-  * [[EventSession]] protocol and one wire server serve every engine.
+  * idempotent-sink-plus-WAL design, and each `MemoryStream` has exactly
+  * one reader: [[MultiplexedDelivery]] runs one shared query into
+  * [[deliverSharedBatch]]; [[DurableEventLog]] runs its ingest query
+  * over the source and, over its replayable parquet log, either one
+  * shared query or one checkpointed query per group into
+  * [[deliverGroupBatch]] (the full-history backfill). A group with no
+  * live session keeps receiving chunks from a shared query. Engine-
+  * specific lifecycle goes through two hooks, [[onGroupActive]] and
+  * [[onGroupIdle]]; one [[EventSession]] protocol and one wire server
+  * serve every engine.
   */
 abstract class ConsumerHost(val spark: SparkSession,
                             security: EngineSecurity,
@@ -332,11 +336,11 @@ abstract class ConsumerHost(val spark: SparkSession,
     fresh
   }
 
-  /** One group's micro-batch (per-group queries) as chunk
-    * `group-<seq>`. Write-first over ONE pass: writeCounted counts for
-    * the ledger while writing, with the file split sized to the batch;
-    * an empty batch writes nothing and records no meta; no event row
-    * reaches the driver. A replayed batch whose chunk is already known
+  /** One group's micro-batch (the durable log's per-group queries) as
+    * chunk `group-<seq>`. Write-first over ONE pass: writeCounted counts
+    * for the ledger while writing, with the file split sized to the
+    * batch; an empty batch writes nothing and records no meta; no event
+    * row reaches the driver. A replayed batch whose chunk is already known
     * (possibly acked) is skipped before the write. */
   protected def deliverGroupBatch(groupId: String, seq: Long, batch: DataFrame): Unit = {
     val chunkId = s"$groupId-$seq"

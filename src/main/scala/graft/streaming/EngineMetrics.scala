@@ -1,5 +1,6 @@
 package graft.streaming
 
+import java.util.UUID
 import java.util.concurrent.ConcurrentHashMap
 import scala.collection.concurrent
 import scala.jdk.CollectionConverters._
@@ -15,9 +16,9 @@ import org.apache.spark.sql.streaming.StreamingQueryListener
   *  - progress: batches seen, cumulative input rows, latest
   *    rows/second and batch duration per query (the backpressure /
   *    throughput signals an operator watches at scale);
-  *  - terminations: queries that died keep their exception string, so
-  *    a supervisor can re-attach ([[ConsumerHost.attach]] restarts a
-  *    closed group) or alert.
+  *  - terminations: queries that died keep their exception string
+  *    under their name, so a supervisor can restart the engine or
+  *    alert.
   *
   * Listener callbacks arrive on Spark's listener bus (asynchronous);
   * readers see eventually-consistent snapshots.
@@ -34,9 +35,14 @@ final class EngineMetrics extends StreamingQueryListener {
 
   private val stats: concurrent.Map[String, QueryStats] =
     new ConcurrentHashMap[String, QueryStats]().asScala
+  /** Query id → name, from the started event: the terminated event
+    * carries only the id. */
+  private val names: concurrent.Map[UUID, String] =
+    new ConcurrentHashMap[UUID, String]().asScala
 
   override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit = {
     val name = Option(e.name).getOrElse(e.id.toString)
+    names.put(e.id, name)
     stats.put(name, QueryStats(name, 0L, 0L, 0.0, 0L, None))
     ()
   }
@@ -54,11 +60,11 @@ final class EngineMetrics extends StreamingQueryListener {
     ()
   }
 
+  /** A failure is recorded under the query's name, next to its
+    * progress (under the id when the listener missed the start). */
   override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit = {
-    // the terminated event carries no name — record under the query id
-    // (started/progress entries keyed by name stay untouched)
+    val name = names.remove(e.id).getOrElse(e.id.toString)
     e.exception.foreach { err =>
-      val name = e.id.toString
       stats.put(name, stats.getOrElse(name,
         QueryStats(name, 0L, 0L, 0.0, 0L, None)).copy(error = Some(err)))
     }

@@ -5,19 +5,28 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.core._
 
-/** The many-groups scale path (SURVEY.md §7.4 risk 2): ONE streaming
-  * query serves every stream group, instead of one query per group.
+/** The in-memory engine: ONE streaming query over the shared
+  * `MemoryStream` serves every stream group — the reference's one
+  * stream with a durable consumer per group (natsio.rs:24, :150-186).
   *
-  * Per-group queries ([[EventEngine]]) mirror the reference's JetStream
-  * consumer model and are right for O(100) groups; at thousands of
-  * groups they re-scan the stream N times and hold N checkpoints. Here
-  * each micro-batch is joined once against the current subscription
+  * The memory source drops what its reader commits and accepts commits
+  * only in order, so it supports exactly one reader: a second query per
+  * group over it would lose the batches another group's query already
+  * committed, and die on a commit below them. The Structured Streaming
+  * paper's model is the same — one query per replayable offset log. A
+  * per-group full-history backfill reads the durable log instead
+  * ([[DurableEventLog.startDelivery]]).
+  *
+  * Each micro-batch is joined once against the current subscription
   * snapshot ([[ConsumerHost.deliverSharedBatch]]): a hash equi-join on
   * candidate match keys, never an all-pairs nested loop, and
   * subscriptions added/removed between micro-batches take effect on the
-  * next batch — dynamic groups without restarting the query. Attach
-  * and last-session close start and stop nothing: the shared query
-  * already serves every group. Every batch writes its payload in the
+  * next batch — dynamic groups without restarting the query, and a new
+  * group is from-now-on: it gets the batches that run after it
+  * registered, none committed before. Attach
+  * and last-session close start and stop nothing: a group with no live
+  * session keeps receiving chunks, and a re-attached session pulls the
+  * ones emitted while it was away. Every batch writes its payload in the
   * bucketed layout ([[DeliveryTable.writeBucketed]]) whatever the group
   * count — one file per bucket, not per matching group — and a group
   * delete is metadata, with storage reclaimed by the batch body's

@@ -2,7 +2,7 @@ package graft.tools
 
 import org.apache.spark.sql.SparkSession
 import graft.core._
-import graft.streaming.EventEngine
+import graft.streaming.MultiplexedDelivery
 
 /** Sample-usage driver for the streaming engine — the flow a user of the
   * reference would run (emit → subscribe → read → ack), through the
@@ -14,7 +14,8 @@ object StreamDemo {
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.session.timeZone", "UTC").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    val engine = new EventEngine(spark)
+    val engine = new MultiplexedDelivery(spark)
+    engine.start()
     val g = engine.addGroup("demo", ResourceType.Project, "proj-42",
       Hierarchy(projectId = "proj-42"), includeSubresources = true)
     println(s"group ${g.id} filter=${g.filterSubject}")

@@ -7,7 +7,7 @@ import org.scalatest.time.{Millis, Seconds, Span}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.Trigger
 import graft.core._
-import graft.streaming.{EngineMetrics, EventEngine}
+import graft.streaming.{EngineMetrics, MultiplexedDelivery}
 
 /** The listener-bus observability layer: delivery progress shows up per
   * query, and a dying query keeps its exception for supervision. */
@@ -28,7 +28,8 @@ class EngineMetricsSpec extends AnyFunSuite with BeforeAndAfterAll with Eventual
 
   test("delivery progress is observable per query; rows are counted") {
     val metrics = EngineMetrics.attach(spark)
-    val engine = new EventEngine(spark, Trigger.ProcessingTime("250 milliseconds"))
+    val engine = new MultiplexedDelivery(spark, Trigger.ProcessingTime("250 milliseconds"))
+    engine.start()
     try {
       engine.addGroup("mg", ResourceType.Project, "p",
         Hierarchy(projectId = "p"), includeSubresources = true)
@@ -36,9 +37,9 @@ class EngineMetricsSpec extends AnyFunSuite with BeforeAndAfterAll with Eventual
       engine.processAllAvailable()
       // listener events are asynchronous — poll the snapshot
       eventually {
-        val s = metrics.snapshot.get("delivery-mg")
+        val s = metrics.snapshot.get("multiplexed-delivery")
         assert(s.exists(q => q.batches >= 1 && q.inputRows >= 1),
-          s"expected progress for delivery-mg, got ${metrics.snapshot.keySet}")
+          s"expected progress for multiplexed-delivery, got ${metrics.snapshot.keySet}")
       }
       assert(metrics.failures.isEmpty)
     } finally engine.stop()
@@ -60,8 +61,8 @@ class EngineMetricsSpec extends AnyFunSuite with BeforeAndAfterAll with Eventual
     source.addData(1)
     intercept[Exception] { q.processAllAvailable() }
     eventually {
-      assert(metrics.failures.values.exists(_.contains("boom")),
-        s"the doomed query's exception must be retained, got ${metrics.failures}")
+      assert(metrics.failures.get("doomed").exists(_.contains("boom")),
+        s"the doomed query's exception must be retained under its name, got ${metrics.failures}")
     }
   }
 

@@ -5,13 +5,14 @@ import org.scalatest.BeforeAndAfterAll
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.Trigger
 import graft.core._
-import graft.streaming.{ConsumerHost, DurableEventLog, EventEngine, MultiplexedDelivery}
+import graft.streaming.{ConsumerHost, DurableEventLog, EngineMetrics, EventSession, MultiplexedDelivery}
 
 /** End-to-end streaming flow, mirroring the reference's own integration
   * test (`/root/reference/src/e2e/tests.rs:108-277`): emit → subscribe →
   * deliver → ack, plus the arms the reference never tested (object
-  * fan-out to groups, delete, at-least-once redelivery). MemoryStream +
-  * processAllAvailable stand in for the live NATS broker. */
+  * fan-out to groups, delete, at-least-once redelivery), on the
+  * in-memory engine. MemoryStream + processAllAvailable stand in for
+  * the live NATS broker. */
 class EventEngineSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private lazy val spark = SparkSession.builder()
@@ -24,8 +25,12 @@ class EventEngineSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   override def afterAll(): Unit = spark.stop()
 
-  private def newEngine() =
-    new EventEngine(spark, trigger = Trigger.ProcessingTime("250 milliseconds"))
+  private def newEngine(security: EngineSecurity = EngineSecurity.Permissive) = {
+    val engine = new MultiplexedDelivery(spark,
+      trigger = Trigger.ProcessingTime("250 milliseconds"), security = security)
+    engine.start()
+    engine
+  }
 
   test("e2e: project emit -> subtree subscription -> delivery -> ack (tests.rs:108-277)") {
     val engine = newEngine()
@@ -124,9 +129,7 @@ class EventEngineSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("authz: emit is token-gated like internal_event_server.rs:23-45") {
-    val engine = new EventEngine(spark,
-      trigger = Trigger.ProcessingTime("250 milliseconds"),
-      security = EngineSecurity(internalToken = Some("secret")))
+    val engine = newEngine(EngineSecurity(internalToken = Some("secret")))
     try {
       // missing header → unauthenticated (reference returns that status)
       intercept[UnauthenticatedException] {
@@ -150,9 +153,7 @@ class EventEngineSpec extends AnyFunSuite with BeforeAndAfterAll {
       ("alice-token", "PROJECT", "p1", "READ"),
       ("admin-token", "ALL", "*", "READ")))
       .toDF("token", "resource_type", "resource_id", "action")
-    val engine = new EventEngine(spark,
-      trigger = Trigger.ProcessingTime("250 milliseconds"),
-      security = EngineSecurity(authz = Some(AuthzProvider.fromGrants(grants))))
+    val engine = newEngine(EngineSecurity(authz = Some(AuthzProvider.fromGrants(grants))))
     try {
       // no token at all → unauthenticated, before any authz lookup
       intercept[UnauthenticatedException] {
@@ -214,12 +215,76 @@ class EventEngineSpec extends AnyFunSuite with BeforeAndAfterAll {
       engine.processAllAvailable()
       assert(engine.deliveredChunks("g").size == 1)
 
-      engine.close("g") // R13 close flag
-      engine.attach("g") // R9 re-attach restarts the query
+      // R13 close flag: the group's last session leaves
+      val session = new EventSession(engine)
+      session.handle(EventSession.Init("g"))
+      session.handle(EventSession.Close)
+      assert(!session.isOpen)
+      engine.attach("g") // R9 re-attach
       engine.emit(ResourceType.Project, EventType.All, "p", RelationCtx())
       engine.processAllAvailable()
       assert(engine.deliveredChunks("g").flatMap(_.resourceIds).size >= 2,
         "delivery resumes after re-attach")
+    } finally engine.stop()
+  }
+
+  test("a re-attached group gets the events emitted while it had no session; no query dies") {
+    // The reference's consumer keeps its position while no client is
+    // attached (natsio.rs:150-186). A per-group query over the shared
+    // memory source loses this: the other group's commits trim the
+    // source, and the restarted query dies with "Offsets committed out
+    // of order".
+    val metrics = EngineMetrics.attach(spark)
+    val engine = newEngine()
+    try {
+      engine.addGroup("g1", ResourceType.Project, "p1",
+        Hierarchy(projectId = "p1"), includeSubresources = true)
+      engine.addGroup("g2", ResourceType.Project, "p2",
+        Hierarchy(projectId = "p2"), includeSubresources = true)
+      val first = new EventSession(engine)
+      first.handle(EventSession.Init("g2"))
+      first.handle(EventSession.Close) // the last session on g2 leaves
+
+      engine.emit(ResourceType.Collection, EventType.All, "lost1", RelationCtx(project = "p2"))
+      (1 to 3).foreach { i =>
+        engine.emit(ResourceType.Collection, EventType.All, s"h$i", RelationCtx(project = "p1"))
+        engine.processAllAvailable()
+      }
+      val back = new EventSession(engine)
+      val onInit = back.handle(EventSession.Init("g2"))
+      assert(onInit.collect { case n: EventSession.Notification => n }
+        .flatMap(_.chunk.resourceIds) == Seq("lost1"),
+        s"the re-attached session must receive what was emitted while g2 was closed: $onInit")
+      engine.emit(ResourceType.Collection, EventType.All, "after", RelationCtx(project = "p2"))
+      engine.processAllAvailable()
+      assert(engine.deliveredChunks("g2").flatMap(_.resourceIds) == Seq("lost1", "after"))
+      assert(engine.deliveredChunks("g1").flatMap(_.resourceIds) == Seq("h1", "h2", "h3"))
+      assert(spark.streams.active.map(_.name).toSeq == Seq("multiplexed-delivery"),
+        "the one delivery query must still run")
+      assert(spark.streams.active.forall(_.exception.isEmpty))
+      assert(metrics.failures.isEmpty, s"no query may have died: ${metrics.failures}")
+    } finally {
+      engine.stop()
+      spark.streams.removeListener(metrics)
+    }
+  }
+
+  test("a group added after processed batches is from-now-on: exactly the events emitted after it registered") {
+    val engine = newEngine()
+    try {
+      engine.addGroup("g1", ResourceType.Project, "p1",
+        Hierarchy(projectId = "p1"), includeSubresources = true)
+      (1 to 3).foreach { i =>
+        engine.emit(ResourceType.Collection, EventType.All, s"h$i", RelationCtx(project = "p1"))
+        engine.processAllAvailable()
+      }
+      engine.addGroup("late", ResourceType.Project, "p1",
+        Hierarchy(projectId = "p1"), includeSubresources = true)
+      engine.emit(ResourceType.Collection, EventType.All, "n1", RelationCtx(project = "p1"))
+      engine.processAllAvailable()
+      assert(engine.deliveredChunks("late").flatMap(_.resourceIds) == Seq("n1"),
+        "a late group gets neither the history before it nor a trimmed part of it")
+      assert(engine.deliveredChunks("g1").flatMap(_.resourceIds) == Seq("h1", "h2", "h3", "n1"))
     } finally engine.stop()
   }
 
@@ -290,8 +355,7 @@ class EventEngineSpec extends AnyFunSuite with BeforeAndAfterAll {
     // subject metacharacter would mint a subject foreign filters match)
     val tmp = java.nio.file.Files.createTempDirectory("graft-emit-validation")
     val engines: Seq[(String, ConsumerHost)] = Seq(
-      "per-group" -> newEngine(),
-      "multiplexed" -> new MultiplexedDelivery(spark),
+      "multiplexed" -> newEngine(),
       "durable" -> new DurableEventLog(spark, s"$tmp/log", s"$tmp/ckpt"))
     val rejected: Seq[(ResourceType, String, RelationCtx)] = Seq(
       (ResourceType.Project, "", RelationCtx()),

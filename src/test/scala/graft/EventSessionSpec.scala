@@ -5,7 +5,7 @@ import org.scalatest.BeforeAndAfterAll
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.Trigger
 import graft.core._
-import graft.streaming.{EventEngine, EventSession}
+import graft.streaming.{EventSession, MultiplexedDelivery}
 import graft.streaming.EventSession._
 
 /** The R13 bidi protocol (public_event_server.rs:192-446): init-first
@@ -23,8 +23,15 @@ class EventSessionSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   override def afterAll(): Unit = spark.stop()
 
-  private def newEngine(security: EngineSecurity = EngineSecurity.Permissive) =
-    new EventEngine(spark, Trigger.ProcessingTime("250 milliseconds"), security)
+  private def newEngine(security: EngineSecurity = EngineSecurity.Permissive,
+                        ackWaitMillis: Long = 30000L,
+                        clock: () => Long = () => System.currentTimeMillis(),
+                        ledgerDir: Option[String] = None) = {
+    val engine = new MultiplexedDelivery(spark, Trigger.ProcessingTime("250 milliseconds"),
+      ledgerDir = ledgerDir, security = security, ackWaitMillis = ackWaitMillis, clock = clock)
+    engine.start()
+    engine
+  }
 
   test("protocol: ack before init is rejected; init binds; acks settle; close stops") {
     val engine = newEngine()
@@ -65,8 +72,7 @@ class EventSessionSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("ack-wait: in-flight chunk is not re-offered until the deadline, then redelivers with the same chunkId") {
     // manual clock: the spec drives the ack-wait deadline deterministically
     @volatile var now = 0L
-    val engine = new EventEngine(spark, Trigger.ProcessingTime("250 milliseconds"),
-      EngineSecurity.Permissive, ackWaitMillis = 1000L, clock = () => now)
+    val engine = newEngine(ackWaitMillis = 1000L, clock = () => now)
     val session = new EventSession(engine)
     try {
       engine.addGroup("g", ResourceType.Project, "p",
@@ -155,9 +161,7 @@ class EventSessionSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("WAL-backed engine: pending chunks, acks, and flight counts survive a restart") {
     val dir = java.nio.file.Files.createTempDirectory("graft-engine-wal").toString
     @volatile var now = 0L
-    val e1 = new EventEngine(spark, Trigger.ProcessingTime("250 milliseconds"),
-      EngineSecurity.Permissive, ackWaitMillis = 1000L, clock = () => now,
-      ledgerDir = Some(dir))
+    val e1 = newEngine(ackWaitMillis = 1000L, clock = () => now, ledgerDir = Some(dir))
     try {
       e1.addGroup("g", ResourceType.Project, "p",
         Hierarchy(projectId = "p"), includeSubresources = true)
@@ -179,15 +183,15 @@ class EventSessionSpec extends AnyFunSuite with BeforeAndAfterAll {
     // restart over the same WAL: acked stays acked; the offered-but-
     // unacked chunk is immediately offerable (dead owner) and its
     // delivery count continues from the journaled flight.
-    val e2 = new EventEngine(spark, Trigger.ProcessingTime("250 milliseconds"),
-      EngineSecurity.Permissive, ackWaitMillis = 1000L, clock = () => now,
-      ledgerDir = Some(dir))
-    val s2 = e2.dispatcher.newSessionId()
-    e2.dispatcher.openSession("g", s2)
-    val re = e2.pull("g", s2)
-    assert(re.size == 1, s"only the unacked chunk must survive: $re")
-    assert(e2.dispatcher.deliveries("g", re.head.chunkId) == 2,
-      "delivery count must continue across the restart")
+    val e2 = newEngine(ackWaitMillis = 1000L, clock = () => now, ledgerDir = Some(dir))
+    try {
+      val s2 = e2.dispatcher.newSessionId()
+      e2.dispatcher.openSession("g", s2)
+      val re = e2.pull("g", s2)
+      assert(re.size == 1, s"only the unacked chunk must survive: $re")
+      assert(e2.dispatcher.deliveries("g", re.head.chunkId) == 2,
+        "delivery count must continue across the restart")
+    } finally e2.stop()
   }
 
   test("pull batch bound: max chunks per pull, remainder left for competing sessions") {

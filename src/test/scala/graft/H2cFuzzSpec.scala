@@ -7,7 +7,7 @@ import org.apache.spark.sql.streaming.Trigger
 import java.io.{ByteArrayOutputStream, DataInputStream, DataOutputStream}
 import java.util.concurrent.{ConcurrentHashMap, LinkedBlockingQueue, TimeUnit}
 import graft.core._
-import graft.streaming.{EventEngine, GrpcServer, H2c, Hpack}
+import graft.streaming.{GrpcServer, H2c, Hpack, MultiplexedDelivery}
 import graft.streaming.WireProtocol
 import graft.streaming.WireProtocol._
 
@@ -299,9 +299,9 @@ class H2cFuzzSpec extends AnyFunSuite with BeforeAndAfterAll {
     (1 to 25).foreach { seedNo =>
       val rnd = new scala.util.Random(9100L + seedNo)
       @volatile var now = 0L
-      val engine = new EventEngine(spark,
-        Trigger.ProcessingTime("250 milliseconds"), EngineSecurity.Permissive,
+      val engine = new MultiplexedDelivery(spark, Trigger.ProcessingTime("250 milliseconds"),
         ackWaitMillis = ACK_WAIT, clock = () => now)
+      engine.start()
       engine.addGroup("g", ResourceType.Project, "p",
         Hierarchy(projectId = "p"), includeSubresources = true)
       // pump disabled: every push is the inline response to a client
@@ -386,7 +386,6 @@ class H2cFuzzSpec extends AnyFunSuite with BeforeAndAfterAll {
         rnd.nextInt(100) match {
           case o if o < 14 => // emit through the h2c unary surface
             if (emits < 4) {
-              engine.attach("g")
               val rid = s"c$seedNo-$emits"
               assert(admin.unary(GrpcServer.EmitPath, H2c.unwrapArm(encodeRequest(
                 Emit("COLLECTION", "ALL", rid, RelationCtx(project = "p"))))) == 0,

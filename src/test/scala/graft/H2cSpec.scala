@@ -130,9 +130,10 @@ class H2cSpec extends AnyFunSuite with BeforeAndAfterAll {
   // ---- live h2c sockets ---------------------------------------------
 
   private def withServer(security: EngineSecurity = EngineSecurity())(
-      f: (EventEngine, GrpcServer) => Unit): Unit = {
-    val engine = new EventEngine(spark,
+      f: (MultiplexedDelivery, GrpcServer) => Unit): Unit = {
+    val engine = new MultiplexedDelivery(spark,
       trigger = Trigger.ProcessingTime("250 milliseconds"), security = security)
+    engine.start()
     val server = GrpcServer(engine)
     try f(engine, server)
     finally { server.stop(); engine.stop() }

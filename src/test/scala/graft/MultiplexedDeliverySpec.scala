@@ -4,11 +4,10 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 import org.apache.spark.sql.SparkSession
 import graft.core._
-import graft.streaming.{EventEngine, MultiplexedDelivery}
+import graft.streaming.{ConsumerHost, DeliveryTable, DurableEventLog, LedgerStore, MultiplexedDelivery}
 
-/** The multiplexed (one-query-for-all-groups) delivery path: same
-  * semantics as the per-group engine, dynamic group add/remove without
-  * query restarts. */
+/** The multiplexed (one-query-for-all-groups) delivery path: per-group
+  * filtered delivery, dynamic group add/remove without query restarts. */
 class MultiplexedDeliverySpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private lazy val spark = SparkSession.builder()
@@ -452,21 +451,26 @@ class MultiplexedDeliverySpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("upgrade: per-group-layout chunks still pending hydrate after a restart onto the bucketed-only mux") {
     // Before the shared query wrote only the bucketed layout, a few-groups
-    // mux wrote `groupId=…/chunkId=…` dirs. A per-group engine over the
-    // same ledger dir leaves exactly that state behind: journaled metas
-    // whose payloads sit in per-group dirs, one acked and one pending.
+    // mux (and the per-group in-memory engine) wrote `groupId=…/chunkId=…`
+    // dirs. The per-group writer over the same ledger dir leaves exactly
+    // that state behind: journaled metas whose payloads sit in per-group
+    // dirs, one acked and one pending.
     val dir = java.nio.file.Files.createTempDirectory("graft-mux-upgrade").toString
-    val old = new EventEngine(spark, ledgerDir = Some(dir))
-    val acked = try {
-      old.addGroup("g", ResourceType.Project, "p1", Hierarchy(projectId = "p1"), true)
-      old.emit(ResourceType.Project, EventType.All, "p1", RelationCtx())
-      old.processAllAvailable()
-      old.emit(ResourceType.Collection, EventType.All, "c1", RelationCtx(project = "p1"))
-      old.processAllAvailable()
-      val first = old.pendingChunks("g").head
-      assert(old.ack("g", first.chunkId))
-      first.chunkId
-    } finally old.stop()
+    val oldTable = new DeliveryTable(spark, s"$dir/deliveries")
+    val oldWal = new LedgerStore(dir)
+    val s = spark
+    import s.implicits._
+    def oldChunk(seq: Long, subject: String, resourceId: String): String = {
+      val chunkId = s"g-$seq"
+      val n = oldTable.writeCounted("g", chunkId,
+        Seq((subject, resourceId)).toDF("subject", "resourceId"))
+      oldWal.appendChunk(ChunkMeta("g", chunkId, seq, n,
+        new java.sql.Timestamp(System.currentTimeMillis()), acked = false))
+      chunkId
+    }
+    val acked = oldChunk(0L, "UPDATES.STORAGE._.p1._", "p1")
+    oldChunk(1L, "UPDATES.STORAGE._.p1._.c1._", "c1")
+    oldWal.appendAck("g", acked)
     assert(new java.io.File(s"$dir/deliveries/groupId=g").isDirectory,
       "test wiring: the pre-upgrade chunks must sit in the per-group layout")
 
@@ -591,23 +595,26 @@ class MultiplexedDeliverySpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("a pull hydrates on the driver: no Spark job, in the per-group and the bucketed layout") {
-    // a per-group engine writes the per-group layout, the shared query
-    // the bucketed one
+    // the durable log's per-group delivery writes the per-group layout,
+    // the shared query the bucketed one
     for (bucketed <- Seq(false, true)) {
       val dir = java.nio.file.Files.createTempDirectory("graft-mux-nojob").toString
-      val engine =
+      val engine: ConsumerHost =
         if (bucketed) new MultiplexedDelivery(spark, ledgerDir = Some(dir))
-        else new EventEngine(spark, ledgerDir = Some(dir))
+        else new DurableEventLog(spark, s"$dir/log", dir)
       try {
         engine.addGroup("a", ResourceType.Project, "p1", Hierarchy(projectId = "p1"), true)
         engine.addGroup("b", ResourceType.Project, "p1", Hierarchy(projectId = "p1"), true)
-        engine match { case mux: MultiplexedDelivery => mux.start(); case _ => }
+        val session = engine.openSession("a")
+        engine match {
+          case mux: MultiplexedDelivery => mux.start()
+          case log: DurableEventLog => log.startIngest(); log.attach("a")
+        }
         engine.emit(ResourceType.Project, EventType.All, "p1", RelationCtx())
         engine.emit(ResourceType.Collection, EventType.All, "c1", RelationCtx(project = "p1"))
         engine.processAllAvailable()
         assert(new java.io.File(s"$dir/deliveries/batches").isDirectory == bucketed,
           s"test wiring: bucketed layout expected = $bucketed")
-        val session = engine.openSession("a")
         val (pulled, jobs) = jobsStartedBy(engine.pull("a", session))
         assert(pulled.flatMap(_.resourceIds).toSet == Set("p1", "c1"),
           s"the pull must hydrate its payloads: $pulled")

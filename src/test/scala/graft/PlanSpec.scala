@@ -68,6 +68,39 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(exchanges <= 2, s"expected <=2 exchanges, got $exchanges:\n${p.take(1500)}")
   }
 
+  test("every row_number top-k idiom gets Spark's WindowGroupLimit under the window on a stock session") {
+    // The built-in InsertWindowGroupLimit bounds what the window reads
+    // for `rn <= k`, `rn = 1` and `rn < k+1`, so no custom optimizer
+    // rule needs to plant a prune for these idioms.
+    import org.apache.spark.sql.catalyst.plans.logical.{Window => WindowNode, WindowGroupLimit}
+    import org.apache.spark.sql.expressions.Window
+    import org.apache.spark.sql.functions.{col, row_number}
+    val w = Window.partitionBy("o_custkey").orderBy(col("o_totalprice").desc, col("o_orderkey"))
+    def topk(cond: org.apache.spark.sql.Column) =
+      spark.read.parquet(s"$dir/orders.parquet")
+        .withColumn("rn", row_number().over(w))
+        .filter(cond)
+        .select(col("o_custkey"), col("rn"), col("o_orderkey"), col("o_totalprice"))
+        .orderBy("o_custkey", "rn")
+    def limitsUnderWindow(df: org.apache.spark.sql.DataFrame): Seq[Int] =
+      df.queryExecution.optimizedPlan.collect {
+        case WindowNode(_, _, _, l: WindowGroupLimit, _) => l.limit
+      }
+    Seq(("rn <= k", col("rn") <= 3, 3), ("rn = 1", col("rn") === 1, 1),
+        ("rn < k+1", col("rn") < 4, 3)).foreach { case (idiom, cond, k) =>
+      val limited = topk(cond)
+      assert(limitsUnderWindow(limited) == Seq(k),
+        s"$idiom: expected WindowGroupLimit($k) under the window:\n${limited.queryExecution.optimizedPlan}")
+      val rows = limited.collect().toSeq
+      spark.conf.set("spark.sql.optimizer.windowGroupLimitThreshold", "-1")
+      try {
+        val unpruned = topk(cond)
+        assert(limitsUnderWindow(unpruned).isEmpty, s"$idiom: threshold -1 must disable the limit")
+        assert(unpruned.collect().toSeq == rows, s"$idiom: the limit must be result-invariant")
+      } finally spark.conf.unset("spark.sql.optimizer.windowGroupLimitThreshold")
+    }
+  }
+
   test("similarity search scores pairs with the native dot product, not a lambda (q47)") {
     val p = plan(VectorOps.q47_vector_threshold)
     assert(p.toLowerCase.contains("dotproductff"), "native expression must be in the plan")

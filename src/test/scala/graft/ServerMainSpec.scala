@@ -30,8 +30,9 @@ class ServerMainSpec extends AnyFunSuite with BeforeAndAfterAll {
     finally { c.disconnect(); server.stop(); stop() }
   }
 
-  test("default env boots the per-group engine with open ingest") {
+  test("default env boots the multiplexed engine with open ingest") {
     withBoot(Map.empty) { c =>
+      assert(spark.streams.active.map(_.name).toSeq == Seq("multiplexed-delivery"))
       assert(c.call(CreateGroup("bg", "PROJECT", "p",
         Hierarchy(projectId = "p"), includeSub = true, "ALL")).isEmpty)
       assert(c.call(Emit("PROJECT", "ALL", "p", RelationCtx())).isEmpty)
@@ -82,8 +83,13 @@ class ServerMainSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("unknown GRAFT_ENGINE fails loudly") {
-    val err = intercept[RuntimeException](ServerMain.boot(
-      Map("GRAFT_ENGINE" -> "kafka"), spark))
-    assert(err.getMessage.contains("unknown GRAFT_ENGINE"))
+    // `engine` named the deleted per-group in-memory engine
+    Seq("kafka", "engine").foreach { value =>
+      val err = intercept[RuntimeException](ServerMain.boot(
+        Map("GRAFT_ENGINE" -> value), spark))
+      assert(err.getMessage.contains("unknown GRAFT_ENGINE"))
+      assert(err.getMessage.contains("multiplexed | durable"), err.getMessage)
+    }
+    assert(spark.streams.active.isEmpty, "a failed boot starts no query")
   }
 }

@@ -7,11 +7,11 @@ import org.apache.spark.sql.streaming.Trigger
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 import graft.core._
-import graft.streaming.{EventEngine, EventSession}
+import graft.streaming.{EventSession, MultiplexedDelivery}
 import graft.streaming.EventSession._
 
 /** Lifecycle fuzz of the FULL consumer stack — EventSession protocol +
-  * EventEngine + ChunkDispatcher + LedgerStore WAL — extending the
+  * MultiplexedDelivery + ChunkDispatcher + LedgerStore WAL — extending the
   * dispatcher model check to the engine the way the reference's e2e
   * flow exercises its server (e2e/tests.rs:108-277: create group, emit,
   * read, ack, close, re-read). Random interleavings of
@@ -26,8 +26,10 @@ import graft.streaming.EventSession._
   *    chunk is delivered and every chunk acked — across crashes, WAL
   *    replay, competing sessions, and rejected foreign acks.
   *
-  * Emits go through attach-first so each event reaches a chunk before a
-  * potential crash (the memory source stands in for the reference's
+  * Emits go into a group's project whether or not the group has a live
+  * session — a group whose last session closed keeps its position, as
+  * a JetStream consumer does. Each emit is drained into a chunk before
+  * a potential crash (the memory source stands in for the reference's
   * durable NATS stream; durability here begins at the chunk WAL). */
 class SessionFuzzSpec extends AnyFunSuite with BeforeAndAfterAll {
 
@@ -47,9 +49,12 @@ class SessionFuzzSpec extends AnyFunSuite with BeforeAndAfterAll {
     (1 to 50).foreach { seedNo =>
       val dir = java.nio.file.Files.createTempDirectory("graft-fuzz-wal").toString
       @volatile var now = 0L
-      def mkEngine() = new EventEngine(spark,
-        Trigger.ProcessingTime("250 milliseconds"), EngineSecurity.Permissive,
-        ackWaitMillis = ACK_WAIT, clock = () => now, ledgerDir = Some(dir))
+      def mkEngine() = {
+        val e = new MultiplexedDelivery(spark, Trigger.ProcessingTime("250 milliseconds"),
+          ledgerDir = Some(dir), ackWaitMillis = ACK_WAIT, clock = () => now)
+        e.start()
+        e
+      }
 
       var engine = mkEngine()
       engine.addGroup("g", ResourceType.Project, "p",
@@ -99,9 +104,8 @@ class SessionFuzzSpec extends AnyFunSuite with BeforeAndAfterAll {
         val op = opGen.apply(Gen.Parameters.default, seed).getOrElse(0)
         seed = seed.next
         op match {
-          case o if o < 22 => // emit a fresh collection event (query running)
+          case o if o < 22 => // emit a fresh collection event
             if (emits < 4) {
-              engine.attach("g") // ensure the delivery query is up
               val rid = s"c$seedNo-$emits"
               engine.emit(ResourceType.Collection, EventType.All, rid,
                 RelationCtx(project = "p"))
@@ -192,9 +196,9 @@ class SessionFuzzSpec extends AnyFunSuite with BeforeAndAfterAll {
       val dir = java.nio.file.Files.createTempDirectory("graft-fuzz-wal2").toString
       @volatile var now = 0L
       def mkEngine() = {
-        val e = new EventEngine(spark,
-          Trigger.ProcessingTime("250 milliseconds"), EngineSecurity.Permissive,
-          ackWaitMillis = ACK_WAIT, clock = () => now, ledgerDir = Some(dir))
+        val e = new MultiplexedDelivery(spark, Trigger.ProcessingTime("250 milliseconds"),
+          ledgerDir = Some(dir), ackWaitMillis = ACK_WAIT, clock = () => now)
+        e.start()
         GROUPS.foreach { case (g, p) =>
           e.addGroup(g, ResourceType.Project, p,
             Hierarchy(projectId = p), includeSubresources = true)
@@ -251,9 +255,8 @@ class SessionFuzzSpec extends AnyFunSuite with BeforeAndAfterAll {
         seed = seed.next
         val (g, p) = GROUPS(op % 2)
         op match {
-          case o if o < 24 => // emit into one group's project
+          case o if o < 24 => // emit into one group's project, session or not
             if (emits < 6) {
-              engine.attach(g)
               val rid = s"c$seedNo-$emits"
               engine.emit(ResourceType.Collection, EventType.All, rid,
                 RelationCtx(project = p))

@@ -151,7 +151,7 @@ class StreamingWindowsSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("StreamingQueryListener surfaces per-query progress and rows (err-channel analog)") {
-    val listener = graft.streaming.EngineListener.attach(spark)
+    val listener = graft.streaming.EngineMetrics.attach(spark)
     val in = MemoryStream[E](spark, numPartitions = 1)
     val q = in.toDF().writeStream.format("memory").queryName("listener_out")
       .outputMode(OutputMode.Append).start()
@@ -160,12 +160,12 @@ class StreamingWindowsSpec extends AnyFunSuite with BeforeAndAfterAll {
       q.processAllAvailable()
       // progress events are delivered asynchronously
       val deadline = System.currentTimeMillis() + 10000
-      var h = listener.snapshot.find(_.name == "listener_out")
-      while ((h.isEmpty || h.get.rowsIn < 2) && System.currentTimeMillis() < deadline) {
-        Thread.sleep(100); h = listener.snapshot.find(_.name == "listener_out")
+      var h = listener.snapshot.get("listener_out")
+      while ((h.isEmpty || h.get.inputRows < 2) && System.currentTimeMillis() < deadline) {
+        Thread.sleep(100); h = listener.snapshot.get("listener_out")
       }
-      assert(h.exists(_.rowsIn >= 2), s"listener must observe input rows: ${listener.snapshot}")
-      assert(listener.errors.isEmpty)
+      assert(h.exists(_.inputRows >= 2), s"listener must observe input rows: ${listener.snapshot}")
+      assert(listener.failures.isEmpty)
     } finally {
       q.stop()
       spark.streams.removeListener(listener)
@@ -173,7 +173,7 @@ class StreamingWindowsSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("listener captures a failed query's exception (error propagation, not swallowing)") {
-    val listener = graft.streaming.EngineListener.attach(spark)
+    val listener = graft.streaming.EngineMetrics.attach(spark)
     val in = MemoryStream[E](spark, numPartitions = 1)
     val q = in.toDF().writeStream.queryName("failing_out")
       .outputMode(OutputMode.Append)
@@ -186,9 +186,9 @@ class StreamingWindowsSpec extends AnyFunSuite with BeforeAndAfterAll {
       in.addData(E(ts(1), "a", 1.0))
       intercept[Exception](q.processAllAvailable())
       val deadline = System.currentTimeMillis() + 10000
-      while (listener.errors.isEmpty && System.currentTimeMillis() < deadline) Thread.sleep(100)
-      assert(listener.errors.exists(_.lastError.exists(_.contains("boom"))),
-        s"listener must surface the failure: ${listener.errors}")
+      while (listener.failures.isEmpty && System.currentTimeMillis() < deadline) Thread.sleep(100)
+      assert(listener.failures.get("failing_out").exists(_.contains("boom")),
+        s"listener must surface the failure: ${listener.failures}")
     } finally {
       try q.stop() catch { case _: Throwable => () }
       spark.streams.removeListener(listener)

@@ -5,7 +5,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.Trigger
 import graft.core._
-import graft.streaming.{EventEngine, WireClient, WireServer}
+import graft.streaming.{MultiplexedDelivery, WireClient, WireServer}
 import graft.streaming.WireProtocol
 import graft.streaming.WireProtocol._
 
@@ -83,8 +83,15 @@ class WireBoundarySpec extends AnyFunSuite with BeforeAndAfterAll {
 
   // ---- live socket layer --------------------------------------------
 
-  private def withServer(f: (EventEngine, WireServer) => Unit): Unit = {
-    val engine = new EventEngine(spark, trigger = Trigger.ProcessingTime("250 milliseconds"))
+  private def newEngine(security: EngineSecurity = EngineSecurity.Permissive) = {
+    val engine = new MultiplexedDelivery(spark,
+      trigger = Trigger.ProcessingTime("250 milliseconds"), security = security)
+    engine.start()
+    engine
+  }
+
+  private def withServer(f: (MultiplexedDelivery, WireServer) => Unit): Unit = {
+    val engine = newEngine()
     val server = WireServer(engine)
     try f(engine, server)
     finally { server.stop(); engine.stop() }
@@ -92,7 +99,7 @@ class WireBoundarySpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private def connect(server: WireServer) = new WireClient("127.0.0.1", server.boundPort)
 
-  private def pollUntil(c: WireClient, engine: EventEngine,
+  private def pollUntil(c: WireClient, engine: MultiplexedDelivery,
                         atLeast: Int = 1, tries: Int = 40): Seq[Notification] = {
     var got = Seq.empty[Notification]
     var n = 0
@@ -175,10 +182,8 @@ class WireBoundarySpec extends AnyFunSuite with BeforeAndAfterAll {
     // (internal_event_server.rs:23-45; public_event_server.rs:56-100) —
     // same gates, same engine, exercised through socket frames, token
     // in-message (transport divergence documented in WireProtocol)
-    val engine = new EventEngine(spark,
-      trigger = Trigger.ProcessingTime("250 milliseconds"),
-      security = EngineSecurity(internalToken = Some("secret"),
-        authz = Some(AuthzProvider.AllowAll)))
+    val engine = newEngine(EngineSecurity(internalToken = Some("secret"),
+      authz = Some(AuthzProvider.AllowAll)))
     val server = WireServer(engine)
     try {
       val c = connect(server)
@@ -229,7 +234,6 @@ class WireBoundarySpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("the same wire server fronts the multiplexed engine (one query, many groups)") {
-    import graft.streaming.MultiplexedDelivery
     val mux = new MultiplexedDelivery(spark)
     val server = WireServer(mux)
     try {

@@ -7,7 +7,7 @@ import org.apache.spark.sql.streaming.Trigger
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 import graft.core._
-import graft.streaming.{EventEngine, WireServer}
+import graft.streaming.{MultiplexedDelivery, WireServer}
 import graft.streaming.WireProtocol
 import graft.streaming.WireProtocol._
 
@@ -121,9 +121,9 @@ class WireFuzzSpec extends AnyFunSuite with BeforeAndAfterAll {
     (1 to 25).foreach { seedNo =>
       val rnd = new scala.util.Random(7000L + seedNo)
       @volatile var now = 0L
-      val engine = new EventEngine(spark,
-        Trigger.ProcessingTime("250 milliseconds"), EngineSecurity.Permissive,
+      val engine = new MultiplexedDelivery(spark, Trigger.ProcessingTime("250 milliseconds"),
         ackWaitMillis = ACK_WAIT, clock = () => now)
+      engine.start()
       engine.addGroup("g", ResourceType.Project, "p",
         Hierarchy(projectId = "p"), includeSubresources = true)
       val server = WireServer(engine)
@@ -196,7 +196,6 @@ class WireFuzzSpec extends AnyFunSuite with BeforeAndAfterAll {
         op match {
           case o if o < 15 => // emit over the wire
             if (emits < 4) {
-              engine.attach("g")
               val rid = s"c$seedNo-$emits"
               assert(admin.call(Emit("COLLECTION", "ALL", rid,
                 RelationCtx(project = "p"))).isEmpty)
