@@ -133,9 +133,9 @@ final case class DeliveryChunk(
 
 /** Driver-resident chunk METADATA — what the delivery ledger and its
   * WAL actually hold. The payload (subjects/resourceIds) lives in the
-  * partitioned deliveries table, written by executors inside
-  * foreachBatch; keeping only ids+counts on the driver is what removes
-  * the reference's every-event-through-the-driver bottleneck at scale
+  * partitioned deliveries table, written inside foreachBatch; keeping
+  * only ids+counts on the driver is what removes the reference's
+  * unbounded in-server backlog of unacked payloads at scale
   * (the reference holds full `Vec<Message>`s in its in-server map). */
 final case class ChunkMeta(
     groupId: String,

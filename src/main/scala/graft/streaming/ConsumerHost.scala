@@ -370,8 +370,8 @@ abstract class ConsumerHost(val spark: SparkSession,
   private val recordLock = new Object
 
   /** Per-phase cumulative seconds of the shared-query batches so far:
-    * batch total, payload write, count, ledger record, plus pull
-    * hydration ("read"). */
+    * batch total, payload write (the collecting job plus the driver's
+    * file writes), count, ledger record, plus pull hydration ("read"). */
   def phaseProfile: Map[String, Double] =
     table.phaseSeconds ++ Map(
       "batch" -> batchNs.get / 1e9,
@@ -397,17 +397,17 @@ abstract class ConsumerHost(val spark: SparkSession,
     * distinct eventIds and deliver twice. The dedup shuffle is skipped
     * in the common all-single case.
     *
-    * Write-first: ONE distributed pass (join → payload write in the
-    * BUCKETED layout, counts observed on the write) serves every group
-    * — O(shuffle-partitions) files per batch however many groups
-    * matched ([[DeliveryTable.writeBucketed]]; the reference's one
-    * shared stream, natsio.rs:24). A replayed batch rewrites its own
-    * batch dir, and [[recordChunk]] keeps an existing (possibly acked)
-    * meta intact. A group removed or re-created since this batch's
-    * snapshot gets no chunk: its rows were matched for the old
-    * registration. No batch.isEmpty pre-check: it is a full extra pass
-    * on the common path, and the observed counts gate the ledger
-    * anyway. */
+    * Write-first: ONE Spark job (the join, collected) feeds a
+    * driver-side payload write in the BUCKETED layout that counts per
+    * group from the same rows and serves every group — one file per
+    * non-empty bucket however many groups matched
+    * ([[DeliveryTable.writeBucketed]]; the reference's one shared
+    * stream, natsio.rs:24). A replayed batch rewrites its own batch
+    * dir, and [[recordChunk]] keeps an existing (possibly acked) meta
+    * intact. A group removed or re-created since this batch's snapshot
+    * gets no chunk: its rows were matched for the old registration. No
+    * batch.isEmpty pre-check: it is a full extra pass on the common
+    * path, and the write's counts gate the ledger anyway. */
   protected def deliverSharedBatch(batch: DataFrame, seq: Long,
                                    dedupCols: Seq[String] = Nil): Unit = {
     val bodyT0 = System.nanoTime()

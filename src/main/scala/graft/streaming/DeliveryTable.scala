@@ -1,16 +1,21 @@
 package graft.streaming
 
 import java.io.{FileNotFoundException, IOException}
+import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.parquet.example.data.Group
+import org.apache.parquet.example.data.simple.SimpleGroup
 import org.apache.parquet.filter2.compat.FilterCompat
 import org.apache.parquet.filter2.predicate.{FilterApi, FilterPredicate}
-import org.apache.parquet.hadoop.ParquetReader
+import org.apache.parquet.hadoop.{ParquetFileWriter, ParquetOutputFormat, ParquetReader}
 import org.apache.parquet.hadoop.api.ReadSupport
-import org.apache.parquet.hadoop.example.GroupReadSupport
-import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.parquet.hadoop.example.{ExampleParquetWriter, GroupReadSupport}
+import org.apache.parquet.hadoop.metadata.CompressionCodecName
+import org.apache.parquet.hadoop.util.{HadoopInputFile, HadoopOutputFile}
 import org.apache.parquet.io.api.Binary
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.parquet.schema.MessageTypeParser
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetOptions
 import org.apache.spark.sql.functions._
 
 /** The distributed half of the delivery ledger: chunk PAYLOADS
@@ -21,10 +26,11 @@ import org.apache.spark.sql.functions._
   *    [[writeBucketed]] for every shared query
   *    ([[ConsumerHost.deliverSharedBatch]]: [[MultiplexedDelivery]] and
   *    [[DurableEventLog.startMultiplexed]]): per micro-batch, ONE file
-  *    per bucket, `b = pmod(xxhash64(groupId), B)` with B ≈ cluster
-  *    write parallelism — file count and commit renames per batch are
-  *    O(B) regardless of how many groups matched (one file + commit per
-  *    matching group was 4.8 s/batch at G=2000, BASELINE.md round-12).
+  *    per non-empty bucket, `b = pmod(xxhash64(groupId), B)` with B
+  *    pinned at the table's first write — file count and renames per
+  *    batch are O(B) regardless of how many groups matched (one file +
+  *    commit per matching group was 4.8 s/batch at G=2000, BASELINE.md
+  *    round-12).
   *    groupId/chunkId become sorted DATA columns: rows are clustered by
   *    group inside each file, so a consumer pull reads its group's
   *    single bucket file per pending batch, and the pushed-down
@@ -45,15 +51,19 @@ import org.apache.spark.sql.functions._
   *
   * The reference keeps every delivered message in an in-server
   * `HashMap<chunk_id, Vec<Message>>` until acked
-  * (public_event_server.rs:318-319) — at 100 TB that routes the whole
-  * event volume through one process's heap. Here executors write each
-  * micro-batch's payload straight to this table inside foreachBatch;
+  * (public_event_server.rs:318-319) — an unbounded backlog of unacked
+  * payloads in one process's heap. Here each micro-batch's payload goes
+  * to this table inside foreachBatch and leaves the heap once written;
   * the driver ledger keeps only [[graft.core.ChunkMeta]] (ids + row
   * counts), and a consumer pulling its pending chunks reads back
   * proportionally to what THAT consumer has outstanding, not to the
   * log.
   *
-  * Writes are distributed Spark jobs; reads are NOT. A pull's result
+  * The per-group writes ([[writeCounted]], [[writeMulti]]) are
+  * distributed Spark jobs. The shared queries' bucketed write collects
+  * its micro-batch and writes the bucket files from the driver
+  * ([[writeBucketed]]: one job per trigger, no shuffle, no commit
+  * protocol). Reads run no Spark job either. A pull's result
   * is a few dozen rows that land on the driver anyway, and it already
   * knows the exact dirs that hold them (`groupId=…/chunkId=…` or
   * `batches/batch=<seq>/bucket=<b>`), so the driver lists those dirs
@@ -67,11 +77,13 @@ import org.apache.spark.sql.functions._
   * that vanishes under a pull (group drop, batch retention) reads as
   * absent, never as an error.
   *
-  * Writes use dynamic partition overwrite so a foreachBatch replay
-  * (micro-batch retry / restart) rewrites the same partitions with
-  * identical content instead of appending duplicates — the write is
-  * idempotent per (groupId, chunkId) / per (batch, bucket), matching
-  * the WAL's replay rule.
+  * Every write is idempotent, matching the WAL's replay rule: a
+  * foreachBatch replay (micro-batch retry / restart) rewrites what it
+  * wrote with identical content instead of appending duplicates — the
+  * per-group writes by dynamic partition overwrite per (groupId,
+  * chunkId), the bucketed write by replacing its own `batch=<seq>` dir,
+  * whose files it publishes by rename so no reader sees one half
+  * written.
   *
   * `seq` preserves delivery order within a chunk: the engine paths
   * supply it content-derived ([[FanOut.seqCol]] — driver-assigned
@@ -232,63 +244,91 @@ final class DeliveryTable(spark: SparkSession, val dir: String) {
   }
 
   /** Multi-group micro-batch write in the BUCKETED layout + per-group
-    * counts: one file per non-empty bucket per batch — O(B) files and
-    * commit renames no matter how many groups matched (vs one PER
-    * GROUP in the per-group layout: the round-12 many-groups floor).
+    * counts, written FROM THE DRIVER: one `collect()` runs the batch's
+    * whole plan (the subject match stays a broadcast hash equi-join
+    * inside that job), then the driver groups the rows by
+    * [[DeliveryTable.bucketOf]], counts them per group from the same
+    * rows, and writes one parquet file per non-empty bucket with
+    * parquet-hadoop's writer ([[writeBucketFile]]). No shuffle, no sort
+    * stage, no task-side writer and no `_temporary` commit protocol,
+    * which together cost more than the few hundred rows of a trigger
+    * they moved (BASELINE.md, "Driver-side bucket write"). A pulled
+    * row is read back on the driver anyway ([[readChunks]]).
+    *
+    * Cost: the files are encoded on the calling thread after the
+    * collect, while the matched rows sit on the driver heap, so a
+    * batch of about a million matched rows costs more than a
+    * distributed write (BASELINE.md, same entry).
+    *
+    * Bound: the driver holds ONE micro-batch's matched rows while it
+    * writes them: the batch's input rows times the groups each row
+    * matches. The collect also fails past `spark.driver.maxResultSize`
+    * (1 GB by default). The in-memory engine's batch is what was
+    * emitted since the last trigger, rows its `MemoryStream` already
+    * holds on the driver. The durable log's shared query reads at most
+    * [[DurableEventLog.MuxFilesPerTrigger]] log files per batch, so a
+    * backlog after a long stop drains in bounded batches.
+    *
     * `rows` must carry groupId, chunkId, subject, resourceId; every
-    * row's chunkId must belong to micro-batch `batchSeq` (the partition
-    * key consumers re-derive from ChunkMeta.batchId).
+    * row's chunkId must belong to micro-batch `batchSeq` (the dir
+    * consumers re-derive from ChunkMeta.batchId). Each file holds its
+    * rows in (groupId, seq) order, so a pull's pushed-down `groupId`
+    * predicate skips other groups' row groups, and delivery order is
+    * `seq` exactly as in the per-group layout.
     *
-    * The write targets the batch's OWN dir (`batches/batch=<seq>`)
-    * with a plain overwrite instead of dynamic partition overwrite at
-    * the table root: same idempotency (a foreachBatch replay rewrites
-    * exactly its own dir; siblings are separate dirs) at 1.7× the
-    * speed — the dynamic path stages under the table root and
-    * per-partition renames across it, measured 0.97 vs 0.57 s on the
-    * G=2000 batch shape (tools.BucketWriteProbe; BASELINE.md
-    * round-13).
-    *
-    * Rows are clustered (sorted) by groupId inside each bucket file —
-    * the sort leads with the partition column so the writer reuses it
-    * instead of re-sorting (the sort itself measured ~0.03 s; kept for
-    * the row-group pruning it buys consumer pulls) — and delivery
-    * order is preserved by `seq` exactly as in the per-group layout.
-    * `buckets` only matters on the table's first bucketed write; after
-    * that the persisted marker wins (see [[tableBuckets]]). */
+    * Idempotent per batch: the write first deletes the batch's OWN dir
+    * (`batches/batch=<seq>`), so a foreachBatch replay rewrites exactly
+    * it and never touches a sibling batch; an empty batch leaves no
+    * dir. `buckets` only matters on the table's first bucketed write;
+    * after that the persisted marker wins (see [[tableBuckets]]). */
   def writeBucketed(rows: DataFrame, batchSeq: Long, buckets: Int): Map[String, Long] = {
     val (filesystem, _) = fs
     val b = tableBuckets(filesystem, math.max(1, buckets))
-    // ONE JOB: the per-group counts ride the write via observe +
-    // CountByKey (round-13's persist + second count job was a fixed
-    // ~1.0–1.2 s per 250 ms trigger — VERDICT task 1). The observed
-    // node is placed BETWEEN the repartition and the final sort: it
-    // lives in the write's result stage (exactly-once accumulator
-    // semantics) and the Sort stays the plan's top node, so the file
-    // writer recognizes the ordering it needs instead of re-sorting.
-    val obs = org.apache.spark.sql.Observation()
-    val prepared = withSeq(rows).select(col("groupId"), col("chunkId"), col("subject"),
-        col("resourceId"), col("seq"),
-        pmod(xxhash64(col("groupId")), lit(b.toLong)).as("bucket"))
-      .repartition(b, col("bucket"))
-      .observe(obs, graft.functions.CountByKey.countByKey(col("groupId")).as("grp"))
-      .sortWithinPartitions("bucket", "groupId", "seq")
+    val collected = timed("write") {
+      withSeq(rows).select(col("groupId"), col("chunkId"), col("subject"),
+        col("resourceId"), col("seq")).collect()
+    }
+    val byGroup = timed("count") { collected.groupBy(_.getString(0)) }
     timed("write") {
-      prepared.write
-        .mode("overwrite")
-        .partitionBy("bucket")
-        .parquet(s"$batchesDir/batch=$batchSeq")
+      val conf = spark.sessionState.newHadoopConf()
+      val batchDir = new Path(batchesDir, s"batch=$batchSeq")
+      filesystem.delete(batchDir, true)
+      byGroup.toSeq.sortBy(_._1).groupBy { case (g, _) => bucketOf(g, b) }.foreach {
+        case (bucket, groups) =>
+          writeBucketFile(filesystem, new Path(batchDir, s"bucket=$bucket"),
+            conf, groups.iterator.flatMap { case (_, rs) => rs.sortBy(_.getLong(4)) })
+      }
     }
-    val counts = timed("count") {
-      obs.get("grp").asInstanceOf[scala.collection.Map[String, Long]].toMap
-    }
-    // A no-match batch just wrote an empty dir (_SUCCESS only); reap it
-    // now — accumulated empties otherwise inflate every listChunks /
-    // retention listStatus scan until retention runs (round-13 ADVICE).
-    if (counts.isEmpty) {
-      filesystem.delete(new Path(batchesDir, s"batch=$batchSeq"), true)
-      ()
-    }
-    counts
+    byGroup.map { case (g, rs) => g -> rs.length.toLong }
+  }
+
+  /** One bucket file, published atomically: written under a hidden
+    * `.`-prefixed name that every reader skips ([[committed]]), then
+    * renamed into place — a pull never sees a half-written file, and a
+    * crash leaves only a hidden leftover that the batch's replay deletes
+    * with its dir. The writer takes the session's Hadoop conf (its
+    * `parquet.block.size` sizes the row groups) and Spark's parquet
+    * codec, as Spark's own writer would. */
+  private def writeBucketFile(filesystem: FileSystem, bucketDir: Path,
+                              conf: Configuration, rows: Iterator[Row]): Unit = {
+    val staging = new Path(bucketDir, ".part-00000.parquet.inprogress")
+    val writer = ExampleParquetWriter.builder(HadoopOutputFile.fromPath(staging, conf))
+      .withConf(conf)
+      .withType(DeliveryTable.BucketSchema)
+      .withRowGroupSize(ParquetOutputFormat.getLongBlockSize(conf))
+      .withCompressionCodec(CompressionCodecName.valueOf(
+        new ParquetOptions(Map.empty[String, String], spark.sessionState.conf).compressionCodecClassName))
+      .withWriteMode(ParquetFileWriter.Mode.OVERWRITE)
+      .build()
+    try rows.foreach { r =>
+      val g = new SimpleGroup(DeliveryTable.BucketSchema)
+      for (i <- 0 until 4 if !r.isNullAt(i)) g.add(i, r.getString(i))
+      g.add(4, r.getLong(4))
+      writer.write(g)
+    } finally writer.close()
+    val published = new Path(bucketDir, "part-00000.parquet")
+    if (!filesystem.rename(staging, published))
+      throw new IOException(s"could not publish $published")
   }
 
   /** Consumer-pull hydration across BOTH layouts: each chunk arrives as
@@ -462,15 +502,28 @@ final class DeliveryTable(spark: SparkSession, val dir: String) {
 }
 
 object DeliveryTable {
+  /** The bucketed layout's file schema, in the column order
+    * [[writeBucketed]] collects: strings nullable as Spark writes them,
+    * `seq` required (content-derived, never null). */
+  private val BucketSchema = MessageTypeParser.parseMessageType(
+    """message bucket {
+      |  optional binary groupId (STRING);
+      |  optional binary chunkId (STRING);
+      |  optional binary subject (STRING);
+      |  optional binary resourceId (STRING);
+      |  required int64 seq;
+      |}""".stripMargin)
+
   /** Engine-owned scratch location for in-process/test wiring;
     * production passes a durable shared path instead. */
   def tempDir(): String =
     java.nio.file.Files.createTempDirectory("graft-deliveries-").toString
 
-  /** The bucket of `groupId` under `buckets` — the DRIVER-side twin of
-    * the plan-side `pmod(xxhash64(groupId), buckets)` the bucketed
-    * writer partitions by. Must agree bit-for-bit or consumer pulls
-    * resolve to the wrong dir (pinned by DeliveryTableSpec). */
+  /** The bucket of `groupId` under `buckets`: Spark's
+    * `pmod(xxhash64(groupId), buckets)`, evaluated on the driver. The
+    * bucketed writer and every pull resolve dirs through it, and it must
+    * agree bit-for-bit with the plan-side expression that wrote the
+    * bucket dirs of older tables (pinned by DeliveryTableSpec). */
   def bucketOf(groupId: String, buckets: Int): Int = {
     import org.apache.spark.sql.catalyst.expressions.{Literal, XxHash64}
     val h = new XxHash64(Seq(Literal(

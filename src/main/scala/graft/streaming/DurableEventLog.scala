@@ -202,11 +202,19 @@ final class DurableEventLog(session: SparkSession, logDir: String, ckptRoot: Str
     *  - multiplexed groups share the mux checkpoint → a group added
     *    later sees only batches committed AFTER it registered
     *    (from-now-on semantics). Pick per need; both are exposed.
+    *
+    * Each batch reads at most [[DurableEventLog.MuxFilesPerTrigger]] log
+    * files: the shared write collects a batch's matched rows on the
+    * driver ([[DeliveryTable.writeBucketed]]), so a restart after a
+    * long stop drains its backlog in bounded batches instead of one
+    * batch sized by the backlog — a batch too large for the driver
+    * would fail again on every replay of the same offsets.
     */
   def startMultiplexed(): Unit = synchronized {
     require(!deliveries.contains(MuxQuery), "multiplexed delivery already running")
     val q = spark.readStream
       .schema(logSchema)
+      .option("maxFilesPerTrigger", DurableEventLog.MuxFilesPerTrigger)
       .parquet(logDir)
       .writeStream
       .queryName("durable-mux-delivery")
@@ -308,4 +316,13 @@ final class DurableEventLog(session: SparkSession, logDir: String, ckptRoot: Str
     deliveries.values.foreach(_.stop()); deliveries.clear()
     ingestQuery.foreach(_.stop()); ingestQuery = None
   }
+}
+
+object DurableEventLog {
+  /** Log files per batch of the shared query. The ingest query writes
+    * one file per project it touched per ingest trigger (one source
+    * partition), so one shared batch holds at most this many ingest
+    * micro-batches' rows of one project each, and the shared query
+    * keeps up while fewer projects than this are touched per trigger. */
+  val MuxFilesPerTrigger = 128
 }

@@ -28,7 +28,8 @@ import graft.core._
   * session keeps receiving chunks, and a re-attached session pulls the
   * ones emitted while it was away. Every batch writes its payload in the
   * bucketed layout ([[DeliveryTable.writeBucketed]]) whatever the group
-  * count — one file per bucket, not per matching group — and a group
+  * count — one Spark job collects the matched rows and the driver writes
+  * one file per non-empty bucket, not per matching group — and a group
   * delete is metadata, with storage reclaimed by the batch body's
   * retention cadence (`payloadRetentionEvery`).
   */

@@ -124,14 +124,14 @@ Candidates were every top-k-shaped query without the custom prune:
     spark.stop()
   }
 
-  /** The multiplexed delivery micro-batch plan (round-14 shape) — not a
-    * `queries()` entry, so dumped here from a representative in-memory
-    * batch: (1) the equi-join match (event subjects explode into
-    * candidate keys via Subjects.matchKeysCol; broadcast hash join on
-    * key equality, zero residual matching), and (2) the bucketed write
-    * input (repartition by bucket → CollectMetrics carrying the
-    * CountByKey per-group counts → sort leading with the partition
-    * column, so the file writer reuses it). */
+  /** The multiplexed delivery micro-batch plan — not a `queries()`
+    * entry, so dumped here from a representative in-memory batch:
+    * (1) the equi-join match (event subjects explode into candidate keys
+    * via Subjects.matchKeysCol; broadcast hash join on key equality,
+    * zero residual matching) with a multi-hierarchy group registered,
+    * so the dedup arm shows; (2) the bucketed write's input in the
+    * common all-single-matcher case — the plan of the ONE job whose
+    * `collect()` feeds the driver-side bucket write. */
   private def deliveryAppendix(spark: SparkSession): String = {
     import org.apache.spark.sql.functions._
     import graft.core._
@@ -142,62 +142,62 @@ Candidates were every top-k-shaped query without the custom prune:
       Event("OBJECT", "ALL", "o1", "p1", "c1", "so1", Seq("g1"), new java.sql.Timestamp(0L), 1L),
       Event("COLLECTION", "ALL", "c1", "p1", "", "", Seq.empty, new java.sql.Timestamp(0L), 2L)))
     val batch = FanOut.explodeSubjects(events.toDF())
-    val groups = Seq(
-      StreamGroup("g-proj", "PROJECT", "p1", "ALL", true, "UPDATES.STORAGE._.p1.>"),
-      StreamGroup("g-col", "COLLECTION", "c1", "ALL", true,
-        "UPDATES.STORAGE._.p1._.c1.>", Seq("UPDATES.STORAGE._.p2._.c1.>")))
-    val subs = spark.createDataFrame(
-      groups.flatMap(g => g.filterSubjects.map(fs => (g.id, fs, g.eventType))))
-      .toDF("id", "joinKey", "subEventType")
-    val depths = groups.flatMap(_.filterSubjects)
-      .flatMap(Subjects.subtreeDepth).distinct.sorted
-    val joined = batch
-      .select(col("subject"), col("resourceId"), col("eventType"),
-        col("eventId"), col("spos"))
-      .withColumn("joinKey", explode(Subjects.matchKeysCol(col("subject"), depths)))
-      .join(broadcast(subs), "joinKey")
-      .filter(Subjects.eventTypeMatches(col("eventType"), col("subEventType")))
-      .dropDuplicates("id", "eventId", "spos")
-      .select(col("id").as("groupId"), col("subject"), col("resourceId"),
-        FanOut.seqCol.as("seq"))
-    val writeInput = joined
+    val proj = StreamGroup("g-proj", "PROJECT", "p1", "ALL", true, "UPDATES.STORAGE._.p1.>")
+    val multi = StreamGroup("g-col", "COLLECTION", "c1", "ALL", true,
+      "UPDATES.STORAGE._.p1._.c1.>", Seq("UPDATES.STORAGE._.p2._.c1.>"))
+    def matched(groups: Seq[StreamGroup]) = {
+      val subs = spark.createDataFrame(
+        groups.flatMap(g => g.filterSubjects.map(fs => (g.id, fs, g.eventType))))
+        .toDF("id", "joinKey", "subEventType")
+      val depths = groups.flatMap(_.filterSubjects)
+        .flatMap(Subjects.subtreeDepth).distinct.sorted
+      val joined = batch
+        .select(col("subject"), col("resourceId"), col("eventType"),
+          col("eventId"), col("spos"))
+        .withColumn("joinKey", explode(Subjects.matchKeysCol(col("subject"), depths)))
+        .join(broadcast(subs), "joinKey")
+        .filter(Subjects.eventTypeMatches(col("eventType"), col("subEventType")))
+      val deduped =
+        if (groups.exists(_.filterSubjects.size > 1)) joined.dropDuplicates("id", "eventId", "spos")
+        else joined
+      (deduped.select(col("id").as("groupId"), col("subject"), col("resourceId"),
+        FanOut.seqCol.as("seq")), depths)
+    }
+    def plan(df: org.apache.spark.sql.DataFrame) =
+      df.queryExecution.explainString(ExplainMode.fromString("formatted"))
+    val (joined, depths) = matched(Seq(proj, multi))
+    val writeInput = matched(Seq(proj))._1
       .withColumn("chunkId", concat(col("groupId"), lit("-0")))
-      .select(col("groupId"), col("chunkId"), col("subject"), col("resourceId"),
-        col("seq"), pmod(xxhash64(col("groupId")), lit(4L)).as("bucket"))
-      .repartition(4, col("bucket"))
-      .observe("grp_counts", graft.functions.CountByKey.countByKey(col("groupId")).as("grp"))
-      .sortWithinPartitions("bucket", "groupId", "seq")
-    val joinPlan = joined.queryExecution
-      .explainString(ExplainMode.fromString("formatted"))
-    val writePlan = writeInput.queryExecution
-      .explainString(ExplainMode.fromString("formatted"))
+      .select(col("groupId"), col("chunkId"), col("subject"), col("resourceId"), col("seq"))
     s"""
-## APPENDIX — multiplexed delivery micro-batch plan (round-14)
+## APPENDIX — multiplexed delivery micro-batch plan
 
 The delivery body is not a `queries()` entry; these plans are built
-from a representative in-memory batch with one multi-hierarchy group
-registered (the dedup arm active).
+from a representative in-memory batch.
 
 ### Subject match: candidate-key explode → broadcast hash EQUI-join
 
+One multi-hierarchy group is registered, so the dedup arm is active.
 Each event subject yields |distinct subtree depths|+1 candidate keys
 (here depths=${depths.mkString("[", ",", "]")}); the join is pure key
 equality — no matchesCol residual, so per-row cost is independent of
 the number of registered groups (BASELINE.md round-14).
 
 ```
-$joinPlan```
+${plan(joined)}```
 
-### Bucketed write input: repartition → CollectMetrics → sort
+### Bucketed write input: scan → explode → broadcast join, one collect
 
-Per-group counts ride the write job via `observe` + CountByKey; the
-CollectMetrics node sits POST-shuffle (exactly-once accumulator
-semantics in the result stage) and BELOW the sort, which stays the top
-node so the parquet writer reuses the (bucket-led) ordering instead of
-re-sorting.
+With single-matcher groups only (the common case) there is no dedup
+and no shuffle exchange: this plan is the ONE job of the trigger (plus
+the broadcast of the subscription frame). Its `collect()` hands the
+matched rows to the driver, which groups and counts them per group and
+writes one parquet file per non-empty bucket
+(`DeliveryTable.writeBucketed`) — no repartition, sort, task-side writer
+or commit protocol.
 
 ```
-$writePlan```
+${plan(writeInput)}```
 """
   }
 }

@@ -150,7 +150,8 @@ object GroupScaleProbe {
         f"${r.batchMaxSec}%9.2f ${r.ackedChunks}%8d ${r.pendingMetas}%9d " +
         f"${r.ackedResident}%7d ${r.usedHeapMb}%7d")
       // Floor decomposition (verdict task 8): where foreachBatch wall
-      // goes — payload write vs count job vs ledger vs plan residue —
+      // goes — payload write (the collect job plus the driver's file
+      // writes) vs per-group count vs ledger vs plan residue —
       // plus the consumer-side pull hydration ("read", off the batch
       // path). "other" is trigger/source overhead outside the body.
       val p = r.phases

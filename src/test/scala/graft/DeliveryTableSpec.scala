@@ -6,10 +6,10 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.streaming.DeliveryTable
 
-/** Contracts of the distributed chunk-payload store that the delivery
-  * ledger's scale story rests on: dir-scoped driver-side hydration that
-  * tolerates files vanishing under it, replay idempotence via dynamic
-  * partition overwrite, and group-scoped drop. */
+/** Contracts of the chunk-payload store that the delivery ledger's
+  * scale story rests on: dir-scoped driver-side hydration that tolerates
+  * files vanishing under it and never sees an unpublished file, replay
+  * idempotence, and group-scoped drop. */
 class DeliveryTableSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private lazy val spark = SparkSession.builder()
@@ -365,6 +365,47 @@ class DeliveryTableSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(got == Map("g1-1" -> ((Seq("s1-000", "s1-001"), Seq("r1-000", "r1-001")))))
   }
 
+  test("a bucket file still being written, or left by a crash, is invisible to pulls; the batch's replay removes it") {
+    val dir = DeliveryTable.tempDir()
+    val t = racy(dir)
+    t.writeBucketed(groupBatch(groups = 4, rowsPerGroup = 2, seq = 0), 0L, 4)
+    val bucketG1 = s"bucket=${DeliveryTable.bucketOf("g1", 4)}"
+    // mid-write: g1's file of batch 1 is complete on disk under its
+    // staging name, and about to be renamed into place
+    var staged = 0
+    RacyLocalFs.beforeRename = { (src, _) =>
+      if (src.getParent.getName == bucketG1 && src.getParent.getParent.getName == "batch=1") {
+        staged += 1
+        assert(src.getName.startsWith(".") && new java.io.File(src.toUri.getPath).length > 0)
+        assert(t.readChunks("g1", Seq(("g1-1", 1L))).isEmpty, "an unpublished file must not hydrate")
+        assert(t.listChunks("g1").toSet == Set("g1-0"), "an unpublished file must not list")
+      }
+    }
+    try t.writeBucketed(groupBatch(groups = 4, rowsPerGroup = 2, seq = 1), 1L, 4)
+    finally RacyLocalFs.beforeRename = (_, _) => ()
+    assert(staged == 1, "test wiring: g1's bucket file must be staged once")
+    assert(t.readChunks("g1", Seq(("g1-1", 1L))).keySet == Set("g1-1"), "published once renamed")
+
+    // crash leftover: batch 2's write died after writing g1's file and
+    // before publishing it
+    val leftover = new java.io.File(s"$dir/batches/batch=2/$bucketG1/.part-00000.parquet.inprogress")
+    leftover.getParentFile.mkdirs()
+    java.nio.file.Files.copy(new java.io.File(s"$dir/batches/batch=1/$bucketG1/part-00000.parquet").toPath,
+      leftover.toPath)
+    assert(t.readChunks("g1", Seq(("g1-1", 2L))).isEmpty, "a crash leftover must not hydrate")
+    assert(t.listChunks("g1").toSet == Set("g1-0", "g1-1"), "a crash leftover must not list")
+    // the replay finds nothing to deliver: it removes the dir, leftover included
+    assert(t.writeBucketed(groupBatch(groups = 0, rowsPerGroup = 0, seq = 2), 2L, 4).isEmpty)
+    assert(!new java.io.File(s"$dir/batches/batch=2").exists, "the replay must remove the leftover")
+    // ...and a replay with rows publishes its own files, no leftover kept
+    leftover.getParentFile.mkdirs()
+    java.nio.file.Files.write(leftover.toPath, "torn".getBytes("UTF-8"))
+    t.writeBucketed(groupBatch(groups = 4, rowsPerGroup = 2, seq = 2), 2L, 4)
+    assert(!leftover.exists, "the replay must remove the leftover")
+    assert(t.readChunks("g1", Seq(("g1-2", 2L))) ==
+      Map("g1-2" -> ((Seq("s1-000", "s1-001"), Seq("r1-000", "r1-001")))))
+  }
+
   test("bucketed read pushes the group filter into a multi-row-group file and returns exactly that group") {
     // One bucket (B=1) holding six neighbouring groups, written with a
     // tiny row-group size so the file spans several row groups and
@@ -395,7 +436,8 @@ class DeliveryTableSpec extends AnyFunSuite with BeforeAndAfterAll {
 
 /** The raw local filesystem under the `racy:` scheme, with a hook run
   * after every `listStatus` — lets a spec remove files between a
-  * reader's listing and its open. */
+  * reader's listing and its open — and one run before every `rename`,
+  * while a written file is not yet published. */
 class RacyLocalFs extends org.apache.hadoop.fs.RawLocalFileSystem {
   override def getUri: java.net.URI = java.net.URI.create("racy:///")
   override def listStatus(f: org.apache.hadoop.fs.Path): Array[org.apache.hadoop.fs.FileStatus] = {
@@ -403,9 +445,15 @@ class RacyLocalFs extends org.apache.hadoop.fs.RawLocalFileSystem {
     RacyLocalFs.afterList(f, listed)
     listed
   }
+  override def rename(src: org.apache.hadoop.fs.Path, dst: org.apache.hadoop.fs.Path): Boolean = {
+    RacyLocalFs.beforeRename(src, dst)
+    super.rename(src, dst)
+  }
 }
 
 object RacyLocalFs {
   @volatile var afterList: (org.apache.hadoop.fs.Path,
     Array[org.apache.hadoop.fs.FileStatus]) => Unit = (_, _) => ()
+  @volatile var beforeRename: (org.apache.hadoop.fs.Path,
+    org.apache.hadoop.fs.Path) => Unit = (_, _) => ()
 }

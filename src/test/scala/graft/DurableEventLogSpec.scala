@@ -1,6 +1,7 @@
 package graft
 
 import java.nio.file.Files
+import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 import org.apache.spark.sql.SparkSession
@@ -85,6 +86,37 @@ class DurableEventLogSpec extends AnyFunSuite with BeforeAndAfterAll {
       log.processAllAvailable()
       val g1 = log.pendingChunks("g1").flatMap(_.resourceIds)
       assert(g1.sorted == Seq("p1", "p1"), s"one original + one post-restart, no dups: $g1")
+    } finally log.stop()
+  }
+
+  test("durable mux drains a backlog of more log files than one batch reads, in bounded batches") {
+    // The shared write collects each batch's matched rows on the driver,
+    // so the shared query reads at most MuxFilesPerTrigger log files per
+    // batch: a backlog of one file per project, for more projects than
+    // that, must drain in several batches, every row exactly once.
+    val (logDir, ckpt) = (tmp(), tmp())
+    val log = new DurableEventLog(spark, logDir, ckpt)
+    val n = 2 * DurableEventLog.MuxFilesPerTrigger + 20
+    try {
+      log.startIngest()
+      (0 until n).foreach { i =>
+        log.addGroup(s"g$i", ResourceType.Project, s"p$i", Hierarchy(projectId = s"p$i"), true)
+      }
+      log.emitAll((0 until n).map(i =>
+        Event(ResourceType.Project, EventType.All, s"p$i", RelationCtx(), new java.sql.Timestamp(0L))))
+      log.processAllAvailable()
+      val logFiles = java.nio.file.Files.walk(java.nio.file.Paths.get(logDir)).iterator().asScala
+        .count(p => p.toString.endsWith(".parquet"))
+      assert(logFiles >= n, s"one log file per project expected, got $logFiles")
+
+      log.startMultiplexed()
+      log.processAllAvailable()
+      val chunks = (0 until n).map(i => log.pendingChunks(s"g$i"))
+      (0 until n).foreach { i =>
+        assert(chunks(i).flatMap(_.resourceIds) == Seq(s"p$i"), s"group g$i")
+      }
+      val batches = chunks.flatten.map(_.batchId).distinct.size
+      assert(batches >= 3, s"$n files must take at least 3 bounded batches, took $batches")
     } finally log.stop()
   }
 

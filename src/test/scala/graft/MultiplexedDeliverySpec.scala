@@ -594,6 +594,68 @@ class MultiplexedDeliverySpec extends AnyFunSuite with BeforeAndAfterAll {
     } finally sc.removeSparkListener(listener)
   }
 
+  test("a steady-state shared micro-batch runs no shuffle, the broadcast plus one job, and one file per bucket") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
+    val dir = java.nio.file.Files.createTempDirectory("graft-mux-jobs").toString
+    val mux = new MultiplexedDelivery(spark, ledgerDir = Some(dir))
+    val sc = spark.sparkContext
+    val fence = s"mux-fence-${System.nanoTime()}"
+    val fenced = new java.util.concurrent.CountDownLatch(1)
+    val jobsByBatch = new java.util.concurrent.ConcurrentHashMap[String, Integer]()
+    val batchStages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val shuffleWrites = new java.util.concurrent.atomic.AtomicLong
+    // micro-batch jobs carry their batch id as a local property; the
+    // fence job, submitted after the batches, flushes the listener bus
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        val props = Option(e.properties)
+        if (props.exists(_.getProperty("spark.jobGroup.id") == fence)) fenced.countDown()
+        else props.flatMap(p => Option(p.getProperty("streaming.sql.batchId"))).foreach { b =>
+          jobsByBatch.merge(b, 1, (x, y) => x + y)
+          e.stageIds.foreach(batchStages.add)
+        }
+      }
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+        if (batchStages.contains(e.stageInfo.stageId))
+          shuffleWrites.addAndGet(e.stageInfo.taskMetrics.shuffleWriteMetrics.recordsWritten)
+    }
+    try {
+      (0 until 8).foreach(i =>
+        mux.addGroup(s"p$i", ResourceType.Project, s"p$i", Hierarchy(projectId = s"p$i"), true))
+      mux.start()
+      // the first trigger's one-off setup is not the steady state
+      mux.emit(ResourceType.Project, EventType.All, "p0", RelationCtx())
+      mux.processAllAvailable()
+      sc.addSparkListener(listener)
+      for (i <- 0 until 8; c <- 0 until 5)
+        mux.emit(ResourceType.Collection, EventType.All, s"c$i-$c", RelationCtx(project = s"p$i"))
+      mux.processAllAvailable()
+      sc.setJobGroup(fence, "fence")
+      try spark.range(1).count() finally sc.clearJobGroup()
+      assert(fenced.await(60, java.util.concurrent.TimeUnit.SECONDS), "fence job never reported")
+      (0 until 8).foreach(i => assert(mux.pendingChunks(s"p$i").flatMap(_.resourceIds).size ==
+        (if (i == 0) 6 else 5), s"group p$i must receive its events"))
+
+      import scala.jdk.CollectionConverters._
+      val perBatch = jobsByBatch.asScala.toMap
+      assert(perBatch.nonEmpty, "test wiring: no micro-batch job observed")
+      assert(perBatch.values.forall(_ <= 2),
+        s"a micro-batch may run the broadcast job plus one job, ran $perBatch")
+      assert(shuffleWrites.get == 0, s"a micro-batch must not shuffle: ${shuffleWrites.get} records written")
+      val bucketDirs = new java.io.File(s"$dir/deliveries/batches").listFiles()
+        .filter(_.getName.startsWith("batch=")).flatMap(_.listFiles())
+      assert(bucketDirs.nonEmpty && bucketDirs.forall(_.getName.startsWith("bucket=")))
+      bucketDirs.foreach { b =>
+        val files = b.listFiles().map(_.getName).filterNot(_.startsWith("."))
+        assert(files.toSeq == Seq("part-00000.parquet"),
+          s"${b.getName} must hold exactly one published parquet file: ${files.toSeq}")
+      }
+    } finally {
+      sc.removeSparkListener(listener)
+      mux.stop()
+    }
+  }
+
   test("a pull hydrates on the driver: no Spark job, in the per-group and the bucketed layout") {
     // the durable log's per-group delivery writes the per-group layout,
     // the shared query the bucketed one
