@@ -31,7 +31,7 @@ object CurationOps extends QueryModule {
     "q70_decontaminate",
     (s, dir) => {
       // index-explode + scalar hash, not a transform(...) lambda — the
-      // SketchOps.shingleStreamOf codegen device (tools.MgProbe)
+      // SketchOps.shingleStreamOf codegen device (BASELINE.md q201 study)
       val grams = t(s, dir, "documents")
         .withColumn("words", split(col("text"), " "))
         .filter(size(col("words")) >= 5)
@@ -113,7 +113,7 @@ object CurationOps extends QueryModule {
     "q72_quality_repetition",
     (s, dir) => {
       // index-explode + scalar concat_ws (the shingleStreamOf codegen
-      // device, tools.MgProbe)
+      // device, BASELINE.md q201 study)
       val grams = t(s, dir, "documents")
         .withColumn("words", split(col("text"), " "))
         .filter(size(col("words")) >= 2)
@@ -301,7 +301,7 @@ object CurationOps extends QueryModule {
     "q178_span_boilerplate",
     (s, dir) => {
       // index-explode + scalar concat_ws (the shingleStreamOf codegen
-      // device, tools.MgProbe); the exploded index IS posexplode's pos
+      // device, BASELINE.md q201 study); the exploded index IS posexplode's pos
       val segs = t(s, dir, "documents")
         .withColumn("words", split(col("text"), " "))
         .filter(size(col("words")) >= 3)

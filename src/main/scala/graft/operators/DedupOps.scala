@@ -397,9 +397,9 @@ object DedupOps extends QueryModule {
     * takes over — O(log² n) rounds regardless of component DIAMETER,
     * where the min-label Pregel loop it replaced paid O(diameter)
     * rounds. The default threshold is MEASURED, not estimated
-    * ([[graft.tools.CcHeapProbe]], chains-of-5 at exactly the 5M
-    * symmetrized-edge gate): the primitive union-find
-    * ([[DriverCc.label]]) peaks at +1.08 GB driver heap (158 MB
+    * (BASELINE.md, "q68 driver union-find: measured, then rebuilt":
+    * chains-of-5 at exactly the 5M symmetrized-edge gate): the
+    * primitive union-find ([[DriverCc.label]]) peaks at +1.08 GB driver heap (158 MB
     * retained) and labels in 10.4 s where star contraction on the same
     * graph takes 24.9 s — the boxed Row/Map version it replaced peaked
     * at +3.66 GB and 49.2 s, i.e. was BEYOND its crossover. A 100 TB
@@ -421,7 +421,7 @@ object DedupOps extends QueryModule {
     * footprint at the q68 threshold (2.5M pairs, every edge two fresh
     * nodes = 5M nodes): edges 40 MB + table 96+32 MB + ids/minId
     * 80 MB + parents 20 MB ≈ 270 MB — measured end-to-end in
-    * [[graft.tools.CcHeapProbe]]. */
+    * BASELINE.md, "q68 driver union-find: measured, then rebuilt". */
   private[graft] object DriverCc {
     def label(ea: Array[Long], eb: Array[Long]): (Array[Long], Array[Long]) = {
       val m = ea.length
@@ -489,7 +489,7 @@ object DedupOps extends QueryModule {
       if (2L * cnt <= smallGraphEdges) {
         // Primitive-array union-find (round-10 verdict task 7): the
         // boxed Row/Map version peaked far above its 80 MB raw-bytes
-        // estimate (measured in tools.CcHeapProbe); this one holds the
+        // estimate (BASELINE.md, q68 driver union-find); this one holds the
         // edge list in two long arrays (filled from toLocalIterator —
         // one partition of Rows resident at a time, not all 2.5M), an
         // open-addressing long→dense-index table, and int parent

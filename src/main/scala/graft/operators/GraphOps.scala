@@ -243,7 +243,7 @@ object GraphOps extends QueryModule {
     // index-explode + scalar concat, not a transform(...) lambda — the
     // SketchOps.shingleStreamOf codegen device (HOFs evaluate on the
     // interpreted Expression path and decay 2.4× under megamorphic-JIT
-    // pollution, tools.MgProbe); content-identical shingle stream.
+    // pollution, BASELINE.md q201 study); content-identical shingle stream.
     val sh = docs
       .select(col("doc_id"), split(col("text"), " ").as("ws"))
       .filter(size(col("ws")) >= 3)

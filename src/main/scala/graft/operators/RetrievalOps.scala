@@ -110,7 +110,7 @@ object RetrievalOps extends QueryModule {
         .select(col("doc_id"), split(col("text"), " ").as("ws"))
         .filter(size(col("ws")) >= 2)
       // index-explode + scalar concat, not a transform(...) lambda —
-      // the SketchOps.shingleStreamOf codegen device (tools.MgProbe:
+      // the SketchOps.shingleStreamOf codegen device (BASELINE.md q201 study:
       // HOFs evaluate interpreted, 2.4× decay under megamorphic JIT)
       val big = ws.select(col("doc_id"), col("ws"),
           explode(sequence(lit(0), size(col("ws")) - 2)).as("i"))

@@ -281,7 +281,7 @@ object SelectionOps extends QueryModule {
     * (`reverse(array_sort)[0]` ≡ `array_max`; element 1 ≡ the
     * runner-up-by-exclusion), which MultiProbeCurveSpec pins.
     *
-    * MEASURED CURVE (tools.MultiProbeCurve, BASELINE.md round-10) —
+    * MEASURED CURVE (BASELINE.md round-10, "Multi-probe curve") —
     * pair recall vs the exact cos ≥ 0.45 truth, candidate rows:
     * sf0.1 (N=2k, k=8): p=1 .35/253k, p=2 .76/1.0M, p=4 .99/4.0M,
     * p=8 1.0/16M; 10× (N=20k, k=32): p=1 .16/6.5M, p=2 .43/25M,
@@ -638,7 +638,7 @@ object SelectionOps extends QueryModule {
       // index-explode + scalar concat, not a transform(...) lambda —
       // the SketchOps.shingleStreamOf codegen device (HOFs evaluate on
       // the interpreted path, 2.4× decay under megamorphic-JIT
-      // pollution, tools.MgProbe); content-identical bigram stream.
+      // pollution, BASELINE.md q201 study); content-identical bigram stream.
       val big = docs.select(col("doc_id"), col("lang"), split(col("text"), " ").as("ws"))
         .filter(size(col("ws")) >= 2)
         .select(col("doc_id"), col("lang"), col("ws"),

@@ -44,7 +44,7 @@ object SketchOps extends QueryModule {
       // index-explode + scalar concat instead of a transform(...) lambda:
       // content-identical, but fully whole-stage-codegen'd where the HOF
       // evaluates interpreted and decays 2.4× under the megamorphic-JIT
-      // pollution any long bench session accumulates (tools.MgProbe).
+      // pollution any long bench session accumulates (BASELINE.md q201 study).
       .select(col("source"), col("ws"),
         explode(sequence(lit(0), size(col("ws")) - 3)).as("i"))
       .select(col("source"), concat(
@@ -632,7 +632,7 @@ object SketchOps extends QueryModule {
       // index-explode + scalar concat, not a transform(...) lambda —
       // the [[shingleStreamOf]] codegen device (HOFs evaluate on the
       // interpreted Expression path and decay 2.4× under the
-      // megamorphic-JIT pollution of a long bench session, tools.MgProbe)
+      // megamorphic-JIT pollution of a long bench session, BASELINE.md q201 study)
       val sh = t(s, dir, "documents")
         .select(expr("substring(md5(CAST(doc_id AS STRING)), 1, 1) < '8'").as("bs"),
           split(col("text"), " ").as("ws"))
@@ -773,7 +773,7 @@ object SketchOps extends QueryModule {
     // `transform(sequence, i -> …)` lambda, but every expression here
     // whole-stage-codegens, where a higher-order function evaluates on
     // the interpreted path and pays the megamorphic-JIT tax measured in
-    // tools.MgProbe (2.4× once any other generated plan has run).
+    // BASELINE.md's q201 study (2.4× once any other generated plan has run).
     val sh = ws.filter(size(col("ws")) >= 3)
       .select(col("doc_id"), col("ws"),
         explode(sequence(lit(0), size(col("ws")) - 3)).as("i"))
@@ -875,7 +875,7 @@ object SketchOps extends QueryModule {
       // Level 0 via the CODEGEN'D histogram reduction, not the map-only
       // array-expression form ([[mgLevel0Of]], bit-identical — SketchSpec
       // pins the equality). The HOF form evaluates on the interpreted
-      // Expression path, and tools.MgProbe measured that path 2.4×
+      // Expression path, and BASELINE.md's q201 study measured that path 2.4×
       // slower (8.5 → 20 s at 100×) once ANY other generated plan has
       // run in the JVM — megamorphic call-site pollution, the actual
       // mechanism behind round-10's "in-suite 34.5 s vs isolated

@@ -152,10 +152,6 @@ object VectorOps extends QueryModule {
     * (bucket content is a pure function of the fixture). Whichever
     * family query runs first pays the one-time build — same
     * bench-comparability note as SharedShingles (BASELINE.md). */
-  /** Diagnostics-only view of [[sharedBuckets]] (tools.BucketProbe). */
-  private[graft] def bucketsFor(s: SparkSession, dir: String): DataFrame =
-    sharedBuckets(s, dir)
-
   private def sharedBuckets(s: SparkSession, dir: String): DataFrame =
     ScratchMemo("buckets", s, dir) {
       val (bits, nt) = lshShape(corpusN(s, dir), 12)

@@ -21,9 +21,9 @@ object Tables {
 
   /** Inferred-schema memo, keyed by table path. Schema inference on a
     * bare parquet path costs ~60–85 ms per `spark.read.parquet` call
-    * (driver footer read + conversion, measured by
-    * [[graft.tools.LoadCostProbe]]: median 60–85 ms inferred vs 5–7 ms
-    * with an explicit schema), and the bench/verify harnesses call
+    * (driver footer read + conversion, measured over repeated loads:
+    * median 60–85 ms inferred vs 5–7 ms with an explicit schema), and
+    * the bench/verify harnesses call
     * load() hundreds of times per pass — this was the single largest
     * slice of the suite's per-entry fixed cost. The memo holds TABLE
     * METADATA only (a StructType — what a catalog would hold), never

@@ -233,16 +233,16 @@ final class ChunkLedger {
     groups.asScala.map { case (k, st) => k -> st.synchronized(st.wm) }
       .filter(_._2 > Long.MinValue).toMap
 
-  /** Stuck-watermark observability (round-11 verdict task 6,
-    * LedgerProbe's documented worst case made operational): per group
+  /** Stuck-watermark observability (round-11 verdict task 6, the
+    * ledger-footprint worst case BASELINE.md records, made operational): per group
     * with unacked chunks, `(ackedResident, blockerAgeMillis)` — the
     * out-of-order acked window held resident behind the lowest unacked
     * chunk, and that blocker's age. A consumer that stops acking ONE
     * chunk while later acks keep arriving makes ackedResident grow
     * without bound (+2.5 GB at 10k acked behind × 1k groups, measured
-    * in tools.LedgerProbe) — this gauge is the alert signal. Healthy
-    * groups (acks keeping up: empty pending, or in-order acks leaving
-    * no resident window) report (0, age-of-backlog-head). */
+    * in BASELINE.md's ledger-footprint section) — this gauge is the
+    * alert signal. Healthy groups (acks keeping up: empty pending, or
+    * in-order acks leaving no resident window) report (0, age-of-backlog-head). */
   def stuckGauges(nowMillis: Long): Map[String, (Long, Long)] =
     groups.asScala.flatMap { case (k, st) =>
       st.synchronized {

@@ -99,8 +99,8 @@ final class DurableEventLog(session: SparkSession, logDir: String, ckptRoot: Str
     * token (#3) is a LITERAL: a general NATS filter may carry `*` there
     * (Subjects.matchesLit handles it via rlike), in which case we fall
     * back to the full-log scan with the subject predicate alone —
-    * correct, just unpruned. */
-  /** `maxFilesPerTrigger` bounds how much of a backlog one micro-batch
+    * correct, just unpruned. `maxFilesPerTrigger` bounds how much of a
+    * backlog one micro-batch
     * ingests — THE knob that keeps a new group's full-history backfill
     * from materializing the whole log in a single batch. Unset, a
     * restart after long downtime (or a fresh per-group checkpoint over

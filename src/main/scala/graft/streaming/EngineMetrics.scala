@@ -87,9 +87,9 @@ final class EngineMetrics extends StreamingQueryListener {
     new ConcurrentHashMap[String, ChunkLedger]().asScala
 
   /** Register a delivery engine's chunk ledger for stuck-watermark
-    * monitoring (round-11 verdict task 6 — LedgerProbe measured the
-    * stuck case at +2.5 GB and called it "the operational alert
-    * signal"; this makes it one). */
+    * monitoring (round-11 verdict task 6 — BASELINE.md's "Driver
+    * chunk-ledger footprint at 10⁷ chunks" measured the stuck case at
+    * +2.5 GB, "the operational alert signal"; this makes it one). */
   def watchLedger(name: String, ledger: ChunkLedger): Unit = {
     ledgers.put(name, ledger); ()
   }

@@ -31,7 +31,7 @@ import graft.operators.SelectionOps
   * retry's overwrite converges.
   *
   * Scale: each append costs one [[SelectionOps.saMerge]] — shuffle ∝
-  * batch + touched buckets (SaAppendProbe's measured curve), plus the
+  * batch + touched buckets (BASELINE.md round 9's measured curve), plus the
   * corpus-linear untouched projection this local parquet layout pays
   * to rewrite one file set; the bucket-partitioned layout the saMerge
   * scaladoc describes drops that term on a cluster by rewriting only

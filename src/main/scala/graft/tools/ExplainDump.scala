@@ -12,11 +12,7 @@ object ExplainDump {
   def main(args: Array[String]): Unit = {
     val dir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.001"
     val out = if (args.length > 1) args(1) else "/root/repo/EXPLAINS.md"
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = ToolConf.session("4")
     val picks = Seq(
       ("q02_filter_pred — predicate pushdown into the parquet scan", Relational.q02_filter_pred),
       ("q03_join_star — broadcast dimensions, shuffle facts", Relational.q03_join_star),

@@ -131,14 +131,7 @@ object GroupScaleProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val gs = args.lift(1).getOrElse("1000,3000,10000").split(',').map(_.trim.toInt)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = ToolConf.session()
     val rows = graft.sources.Tables.load(spark, sfDir, "events")
       .select("event_id", "user_id", "event_type").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getString(2)))

@@ -1,7 +1,6 @@
 package graft.tools
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 
 /** Per-query formatted-plan snapshots for the optimization-round
@@ -20,11 +19,7 @@ object PlanDump {
     val names = args.drop(2).toSeq
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
     Files.createDirectories(outDir)
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = ToolConf.session("4")
     names.foreach { name =>
       val fn = graft.SparkEntry.queries(name)
       val plan = fn(spark, dir).queryExecution

@@ -7,27 +7,24 @@ import org.apache.spark.sql.SparkSession
   * round-11 verdict tasks 3 and 5 ask for, without paying a full
   * bench suite at that scale. Each row is the SAME code path as the
   * `graft.Bench` row of that name; this just parameterizes the dir.
+  * `wire` and `h2c` replay the stream over framed TCP and the HTTP/2
+  * transport (`SPARK_GRAFT_WIRE_PRODUCERS` / `SPARK_GRAFT_REPLAY_*`
+  * apply as in the bench). A row listed twice runs twice.
   *
   * Usage: sbt "runMain graft.tools.ScaleRowsProbe <sfDir> <row1,row2,...>"
-  *   rows: stream | redelivery | sketch | ann | cc | stuck
+  *   rows: stream | wire | h2c | redelivery | sketch | ann | cc | stuck
   */
 object ScaleRowsProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/tmp/graft-sf10b")
     val rows = args.lift(1).getOrElse("redelivery").split(',').map(_.trim).toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = ToolConf.session()
     rows.foreach { row =>
       System.gc()
       val sec = row match {
         case "stream" => graft.Bench.streamReplaySeconds(spark, sfDir)
+        case "wire" => graft.Bench.wireReplaySeconds(spark, sfDir)
+        case "h2c" => graft.Bench.h2cReplaySeconds(spark, sfDir)
         case "redelivery" => graft.Bench.redeliveryReplaySeconds(spark, sfDir)
         case "sketch" => graft.Bench.sketchFoldSeconds(spark, sfDir)
         case "ann" => graft.Bench.annFoldSeconds(spark, sfDir)
@@ -45,8 +42,9 @@ object ScaleRowsProbe {
     * deliberately stuck consumer — group p4's session acks every chunk
     * EXCEPT its first claim (the blocker), while p0–p3 drain normally.
     * Ingest uses small micro-batches so hundreds of acked chunks pile
-    * up RESIDENT behind p4's blocker (the exact shape
-    * tools.LedgerProbe priced at +2.5 GB for 10k-behind × 1k groups).
+    * up RESIDENT behind p4's blocker (the exact shape BASELINE.md's
+    * "Driver chunk-ledger footprint at 10⁷ chunks" priced at +2.5 GB for
+    * 10k-behind × 1k groups).
     * Verified live, not post-hoc: mid-soak the EngineMetrics alert
     * names exactly p4; the healthy draining groups stay silent at any
     * backlog depth; acking the blocker clears the alert and evicts the
@@ -115,13 +113,14 @@ object ScaleRowsProbe {
     val (grps, pend, ackRes) = mux.ledgerStats
     System.gc()
     val heapMb = (Runtime.getRuntime.totalMemory - Runtime.getRuntime.freeMemory) / (1 << 20)
-    // per-meta arithmetic vs the LedgerProbe prediction: resident metas
-    // × ~250 B/meta extrapolates to its 10k-behind × 1k-groups = +2.5 GB
+    // per-meta arithmetic vs the measured ledger footprint (BASELINE.md,
+    // "Driver chunk-ledger footprint at 10⁷ chunks"): resident metas
+    // × ~250 B/meta extrapolates to 10k-behind × 1k groups = +2.5 GB
     System.err.println(f"[stuck-soak] alert: group=${stuck.group} " +
       f"ackedResident=${stuck.ackedResident} blockerAgeMs=${stuck.blockerAgeMillis} " +
       f"ledger(groups=$grps pending=$pend ackedResident=$ackRes) heapMb=$heapMb " +
       f"residentBytes~=${stuck.ackedResident * 250L} " +
-      f"(at LedgerProbe's 10k-behind x 1k groups: ${250L * 10000 * 1000 / (1 << 20)} MB)")
+      f"(at 10k-behind x 1k groups: ${250L * 10000 * 1000 / (1 << 20)} MB)")
     // release the blocker: alert clears, the resident window evicts
     require(blocker != null && mux.ack("sk-p4", blocker), "blocker must ack")
     val after = metrics.stuckGroups(minResident = 10, minAgeMillis = 0)

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import graft.core._
 import graft.streaming.MultiplexedDelivery
 
@@ -9,11 +8,7 @@ import graft.streaming.MultiplexedDelivery
   * public API. Run: sbt "runMain graft.tools.StreamDemo" */
 object StreamDemo {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = ToolConf.session("4")
     val engine = new MultiplexedDelivery(spark)
     engine.start()
     val g = engine.addGroup("demo", ResourceType.Project, "proj-42",

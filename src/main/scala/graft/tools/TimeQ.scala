@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Ad-hoc per-query timer for scale rehearsals: runs the named
   * SparkEntry queries against a fixture dir and prints warm timings.
   * Unlike graft.Bench this takes a query subset and arbitrary session
@@ -16,14 +14,7 @@ object TimeQ {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val names = args.drop(1).toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val b = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    val spark = ToolConf.withEnvConf(b).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = ToolConf.session()
     names.foreach { name =>
       val fn = graft.SparkEntry.queries(name)
       // run 1 = cold (codegen + shuffle files), run 2 = warm — report both.

@@ -2,9 +2,9 @@ package graft.tools
 
 import org.apache.spark.sql.SparkSession
 
-/** Experiment session confs for the probe mains: `SPARK_GRAFT_CONF`
-  * holds comma-separated `key=value` pairs (bench and probe runs only,
-  * never under Verify). */
+/** The tool mains' session, and the experiment session confs they take:
+  * `SPARK_GRAFT_CONF` holds comma-separated `key=value` pairs (bench and
+  * tool runs only, never under Verify). */
 object ToolConf {
   /** Parses `k1=v1,k2=v2` (blank entries skipped). A malformed entry —
     * no `=`, or an empty key — fails naming that entry. */
@@ -17,9 +17,21 @@ object ToolConf {
       }
     }
 
-  /** Applies `SPARK_GRAFT_CONF`, when set, to a session builder. */
-  def withEnvConf(b: SparkSession.Builder): SparkSession.Builder = {
+  /** `graft.Bench`'s session confs on `local[cores]` (shuffle partitions
+    * = cores, AQE, UTC, no UI) plus `SPARK_GRAFT_CONF`, when set. The
+    * timing tools take `$SPARK_GRAFT_CPUS` cores like the bench; the plan
+    * dumps and the demo pass 4, the core count `PlanSpec` and the
+    * committed plan files use. */
+  def session(cores: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")): SparkSession = {
+    val b = SparkSession.builder()
+      .master(s"local[$cores]")
+      .config("spark.sql.shuffle.partitions", cores)
+      .config("spark.sql.adaptive.enabled", "true")
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
     sys.env.get("SPARK_GRAFT_CONF").foreach(parseConf(_).foreach { case (k, v) => b.config(k, v) })
-    b
+    val spark = b.getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
   }
 }

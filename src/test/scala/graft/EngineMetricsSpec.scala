@@ -68,7 +68,7 @@ class EngineMetricsSpec extends AnyFunSuite with BeforeAndAfterAll with Eventual
 
   test("a stuck watermark trips the ledger gauge; healthy groups stay silent") {
     // Pure-ledger wiring (no Spark needed): the gauge is the
-    // operational alert for LedgerProbe's measured worst case — one
+    // operational alert for the ledger worst case BASELINE.md measured — one
     // never-acked chunk holding an unbounded acked window resident.
     import graft.core.ChunkMeta
     import graft.streaming.ChunkLedger

@@ -611,4 +611,32 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
       "the cumulative-bytes window must partition by date (≤64 files per " +
         "partition by construction) — a global window would serialize the plan")
   }
+
+  test("subject union: match keys come from substring_index, and a round-robin exchange " +
+    "widens the 1-split events scan below the fan-out (q204)") {
+    import org.apache.spark.sql.catalyst.plans.physical.RoundRobinPartitioning
+    import org.apache.spark.sql.execution.{FileSourceScanExec, GenerateExec}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    val root = StreamingBatch.q204_subject_union.run(spark, dir).queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.inputPlan
+      case other => other
+    }
+    val keyGen = root.collect {
+      case g: GenerateExec if g.generator.toString.contains("substring_index") => g
+    }
+    assert(keyGen.size == 1, s"one Generate must build the candidate match keys:\n$root")
+    val keys = keyGen.head.generator.toString.toLowerCase
+    assert(!keys.contains("split(") && !keys.contains("rlike"),
+      s"match keys are prefix cuts of the subject, never a regex split: $keys")
+    assert(!root.toString.toLowerCase.contains("rlike"),
+      "the subscription match is a pure key equi-join, no regex residual")
+    // Tables.widen: at local[4] the sf0.001 events file is one split, so
+    // the scan is repartitioned round-robin before the explode
+    val widened = keyGen.head.child.collect {
+      case e: ShuffleExchangeExec if e.outputPartitioning.isInstanceOf[RoundRobinPartitioning] => e
+    }
+    assert(widened.size == 1 && widened.head.exists(_.isInstanceOf[FileSourceScanExec]),
+      s"a round-robin exchange must sit between the events scan and the fan-out:\n$root")
+  }
 }
