@@ -82,12 +82,16 @@ object ServerMain {
         m.start()
         m
       case "durable" =>
-        new DurableEventLog(spark,
+        val d = new DurableEventLog(spark,
           env.getOrElse("GRAFT_LOG_DIR",
             sys.error("GRAFT_ENGINE=durable requires GRAFT_LOG_DIR")),
           env.getOrElse("GRAFT_CHECKPOINT_DIR",
             sys.error("GRAFT_ENGINE=durable requires GRAFT_CHECKPOINT_DIR")),
           trigger, security)
+        // emits reach the log only through the ingest query; a session's
+        // attach starts its group's delivery over that log
+        d.startIngest()
+        d
       case other => sys.error(s"unknown GRAFT_ENGINE '$other' " +
         "(expected multiplexed | durable)")
     }

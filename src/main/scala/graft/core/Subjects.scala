@@ -153,7 +153,6 @@ object Subjects {
   }
 
   def exactCol(base: Column): Column = concat(base, lit("._"))
-  def subtreeCol(base: Column): Column = concat(base, lit(".>"))
 
   def projectSubjectCol(projectId: Column): Column =
     exactCol(baseSubjectCol(Seq(projectId), isObjectGroup = false))

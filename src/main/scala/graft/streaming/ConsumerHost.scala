@@ -115,6 +115,8 @@ abstract class ConsumerHost(val spark: SparkSession,
   }
 
   protected val table = new DeliveryTable(spark, deliveriesDir)
+  /** Where chunk payloads are written ([[DeliveryTable]]'s dir). */
+  def payloadDir: String = table.dir
 
   // ---- ingest ---------------------------------------------------------
 
@@ -317,22 +319,65 @@ abstract class ConsumerHost(val spark: SparkSession,
   }
 
   /** Session death/disconnect: its unacked flights become immediately
-    * offerable to surviving sessions (failover). */
-  def closeSession(groupId: String, sessionId: Long): Unit = {
-    dispatcher.closeSession(groupId, sessionId); ()
+    * offerable to surviving sessions (failover), so the arrival signal
+    * wakes their pumps. Returns the group's remaining live-session
+    * count (see [[ChunkDispatcher.closeSession]]). */
+  def closeSession(groupId: String, sessionId: Long): Int = {
+    val left = dispatcher.closeSession(groupId, sessionId)
+    signalArrival()
+    left
+  }
+
+  // ---- arrival signal -------------------------------------------------
+
+  /** Engine-wide arrival version, bumped under [[arrivals]] whenever
+    * something may have become offerable: a chunk recorded (after its
+    * WAL append) or a session closed (its flights fail over). */
+  private val arrivals = new Object
+  @volatile private var arrivalVersion = 0L
+
+  /** The current arrival version: read it BEFORE a pull and pass it to
+    * [[awaitArrival]] after, and no arrival in between is missed. */
+  def arrivalSeen: Long = arrivalVersion
+
+  private def signalArrival(): Unit = arrivals.synchronized {
+    arrivalVersion += 1L
+    arrivals.notifyAll()
+  }
+
+  /** The bounded wait of the reference's pull (natsio.rs:198-207, at
+    * most `expires` = 250 ms, returning as soon as messages arrive):
+    * blocks until the arrival version moves past `seen`, `maxMillis`
+    * passes, or the thread is interrupted (the interrupt flag is kept),
+    * then returns the current version. */
+  def awaitArrival(seen: Long, maxMillis: Long): Long = arrivals.synchronized {
+    val deadline = System.nanoTime() + maxMillis * 1000000L
+    try {
+      var left = deadline - System.nanoTime()
+      while (arrivalVersion == seen && left > 0L) {
+        arrivals.wait(left / 1000000L, (left % 1000000L).toInt)
+        left = deadline - System.nanoTime()
+      }
+    } catch { case _: InterruptedException => Thread.currentThread().interrupt() }
+    arrivalVersion
   }
 
   // ---- write side: micro-batch → chunks -------------------------------
 
-  /** Ledger record + WAL append of one written chunk. `record` is the
-    * replay guard: false when the chunk is already pending or acked
-    * (possibly only as a compacted watermark) — never resurrect it, and
-    * journal only what was inserted (WAL after payload). */
+  /** Ledger record + WAL append of one written chunk, then the arrival
+    * signal (after the append, so the pull it wakes finds the chunk
+    * journaled). `record` is the replay guard: false when the chunk is
+    * already pending or acked (possibly only as a compacted watermark)
+    * — never resurrect it, and journal only what was inserted (WAL
+    * after payload). */
   protected def recordChunk(groupId: String, chunkId: String, seq: Long, rows: Long): Boolean = {
     val meta = ChunkMeta(groupId, chunkId, seq, rows,
       new Timestamp(System.currentTimeMillis()), acked = false)
     val fresh = ledger.record(meta)
-    if (fresh) store.foreach(_.appendChunk(meta))
+    if (fresh) {
+      store.foreach(_.appendChunk(meta))
+      signalArrival()
+    }
     fresh
   }
 

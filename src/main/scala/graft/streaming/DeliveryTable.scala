@@ -488,6 +488,12 @@ final class DeliveryTable(spark: SparkSession, val dir: String) {
     if (filesystem.exists(gdir)) { filesystem.delete(gdir, true); () }
   }
 
+  /** Delete the whole table dir (an engine-owned temp dir at stop). */
+  def deleteAll(): Unit = {
+    val (filesystem, path) = fs
+    filesystem.delete(path, true); ()
+  }
+
   /** Bucketed-layout retention: delete whole `batch=<seq>` dirs with
     * seq < `minSeq` — the storage-reclaim half of the bucketed trade
     * (see [[drop]]). Safe bound for callers: the minimum over live

@@ -176,8 +176,12 @@ final class DurableEventLog(session: SparkSession, logDir: String, ckptRoot: Str
     deliveries.put(groupId, q)
   }
 
-  def stopDelivery(groupId: String): Unit =
+  /** Synchronized with [[stop]]: a last-session close racing the
+    * engine's stop has taken the query out of `deliveries` before
+    * `stop` looks, so `stop` must wait for that query's stop. */
+  def stopDelivery(groupId: String): Unit = synchronized {
     deliveries.remove(groupId).foreach(_.stop())
+  }
 
   /** A per-group durable delivery runs while the group has a live
     * consumer: a session's attach starts it (a group added ahead of any

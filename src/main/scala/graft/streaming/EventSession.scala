@@ -59,7 +59,7 @@ final class EventSession(engine: ConsumerHost,
           engine.attach(id, token)
         } catch {
           case e: Throwable =>
-            if (engine.dispatcher.closeSession(id, sessionId) == 0)
+            if (engine.closeSession(id, sessionId) == 0)
               engine.onLastSessionClosed(id)
             throw e
         }
@@ -95,7 +95,7 @@ final class EventSession(engine: ConsumerHost,
         // made inside the dispatcher's lock so concurrent closes elect
         // exactly one releaser; what "release" means is the engine's call
         // (per-group deliveries stop, the shared query keeps running)
-        if (engine.dispatcher.closeSession(id, sessionId) == 0)
+        if (engine.closeSession(id, sessionId) == 0)
           engine.onLastSessionClosed(id)
         groupId = None
         Seq.empty

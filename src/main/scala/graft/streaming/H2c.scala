@@ -150,8 +150,9 @@ object H2c {
   *    unary (public_event_server.rs:52,177);
   *  - `/aruna.api.notification.services.v1.UpdateNotificationService/
   *    ReadStreamGroupMessages` — bidi streaming (:192), one
-  *    [[EventSession]] per stream, notifications PUSHED on a 250 ms
-  *    pump (the reference's natsio.rs:198-204 push loop) as well as
+  *    [[EventSession]] per stream, notifications PUSHED by a pump that
+  *    waits at most `pumpMillis` for a chunk to arrive (the reference's
+  *    natsio.rs:198-207 pull with a 250 ms `expires`) as well as
   *    returned on each client message;
   *  - `/aruna.api.internal.v1.InternalEventEmitterService/EmitEvent` —
   *    unary ingest (internal_event_server.rs:18).
@@ -170,7 +171,13 @@ object H2c {
   * (incl. Huffman-coded paths — stock clients compress them) are all
   * handled, so the framing a tonic client emits for these four methods
   * round-trips. gRPC failures map to `grpc-status` trailers (0 OK,
-  * 2 UNKNOWN), the reference's status channel. */
+  * 2 UNKNOWN), the reference's status channel.
+  *
+  * `pumpMillis` bounds each bidi stream's wait between pulls: a pump
+  * pushes as soon as [[ConsumerHost.awaitArrival]] reports a recorded
+  * chunk or a closed session, and pulls anyway when the wait expires, so
+  * an ack-wait redelivery is found within one wait. `0` starts no pump:
+  * every push is then the reply to a client message. */
 final class GrpcServer(host: ConsumerHost, port: Int = 0,
                        maxBatch: Int = Int.MaxValue,
                        pumpMillis: Long = 250L) {
@@ -204,7 +211,6 @@ final class GrpcServer(host: ConsumerHost, port: Int = 0,
     var headersDone = false
     val grpcBuf = new ByteArrayOutputStream()
     var session: Option[EventSession] = None
-    @volatile var ready = false // set once Init has been handled
     var responded = false
     @volatile var closed = false
     @volatile var failed = false // writer gave up (window starved) → RST sent
@@ -352,24 +358,27 @@ final class GrpcServer(host: ConsumerHost, port: Int = 0,
       sendHeaders(st, Seq((":status", "200"), ("content-type", "application/grpc")),
         endStream = false)
       st.responded = true
-      // the reference's push loop: poll the session on a fixed cadence
-      // and push pending notifications as stream messages
-      val pump = new Thread(() => {
-        try {
-          while (!st.closed) {
-            Thread.sleep(pumpMillis)
-            // poll only once Init has been processed (st.ready) — an
-            // Ack on an uninitialized session would push a spurious
-            // error at the client between HEADERS and its Init message
-            if (!st.closed && st.ready && session.isOpen) {
-              val pending = session.handle(EventSession.Ack(Seq.empty))
-              emitOutbound(st, pending)
+      // the reference's push loop: pull, push what is pending as stream
+      // messages, then wait at most pumpMillis for the next arrival (a
+      // recorded chunk or a closed session). The version is read before
+      // the pull, so an arrival during the pull ends the wait at once.
+      if (pumpMillis > 0L) {
+        val pump = new Thread(() => {
+          try {
+            var seen = host.arrivalSeen
+            while (!st.closed && !Thread.currentThread().isInterrupted) {
+              // pull only once Init has attached the session: an Ack
+              // before it would throw, and Init's own reply pulls after
+              // the attach, so an arrival seen here before it is not lost
+              if (session.isOpen)
+                emitOutbound(st, session.handle(EventSession.Ack(Seq.empty)))
+              seen = host.awaitArrival(seen, pumpMillis)
             }
-          }
-        } catch { case _: InterruptedException => (); case NonFatal(_) => () }
-      }, s"graft-h2c-pump-${st.id}")
-      pump.setDaemon(true); pump.start()
-      st.pump = Some(pump)
+          } catch { case _: InterruptedException => (); case NonFatal(_) => () }
+        }, s"graft-h2c-pump-${st.id}")
+        pump.setDaemon(true); pump.start()
+        st.pump = Some(pump)
+      }
     }
 
     def emitOutbound(st: StreamState, os: Seq[EventSession.Outbound]): Unit =
@@ -399,7 +408,6 @@ final class GrpcServer(host: ConsumerHost, port: Int = 0,
           case Init(id, tk) =>
             emitOutbound(st, st.session.get.handle(
               EventSession.Init(id, token(st).orElse(tk))))
-            st.ready = true
           case Ack(ids) =>
             emitOutbound(st, st.session.get.handle(EventSession.Ack(ids)))
           case Close => finishBidi(st, 0, None)
@@ -760,7 +768,6 @@ final class GrpcClient(host: String, port: Int, huffman: Boolean = false,
   /** An open bidi stream: send messages, receive events. */
   final class Bidi private[GrpcClient] (val sid: Int) {
     def sendMessage(m: Array[Byte]): Unit = send(Frame(DATA, 0, sid, grpcFrame(m)))
-    def closeSend(): Unit = send(Frame(DATA, END_STREAM, sid, Array.emptyByteArray))
     def next(timeoutMillis: Long = 30000): Event = await(sid, timeoutMillis)
     /** Collects messages until `n` arrive or the deadline passes. */
     def messages(n: Int, timeoutMillis: Long = 30000): Seq[Array[Byte]] = {

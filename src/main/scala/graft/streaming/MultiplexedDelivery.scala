@@ -64,8 +64,12 @@ final class MultiplexedDelivery(session: SparkSession,
 
   def processAllAvailable(): Unit = query.foreach(_.processAllAvailable())
 
+  /** Stop the query. Without a `ledgerDir` the payload dir is the
+    * engine's own temp dir and nothing can serve it again, so it is
+    * deleted too; a `ledgerDir` engine keeps its dirs for a restart. */
   def stop(): Unit = synchronized {
     query.foreach(_.stop())
     query = None
+    if (ledgerDir.isEmpty) table.deleteAll()
   }
 }

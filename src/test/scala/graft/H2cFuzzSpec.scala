@@ -40,11 +40,11 @@ import graft.streaming.WireProtocol._
   * nothing pending; and the server survives every seed (a final fresh
   * connection completes a full unary + bidi cycle).
   *
-  * The server pump is disabled (pumpMillis = 1h) so every push is the
+  * The server pump is disabled (pumpMillis = 0) so every push is the
   * inline response to a client message — the same request-driven
   * determinism WireFuzzSpec gets from its Ok terminator, which is what
   * makes the serve-time offerability assertion sound. H2cSpec covers
-  * the timed pump path. */
+  * the pump: its arrival, failover and wait-expiry wakes. */
 class H2cFuzzSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private lazy val spark = SparkSession.builder()
@@ -306,8 +306,7 @@ class H2cFuzzSpec extends AnyFunSuite with BeforeAndAfterAll {
         Hierarchy(projectId = "p"), includeSubresources = true)
       // pump disabled: every push is the inline response to a client
       // message, so serve-time == drain-time for the model (see scaladoc)
-      val server = new GrpcServer(engine,
-        pumpMillis = 3600000L)
+      val server = new GrpcServer(engine, pumpMillis = 0L)
 
       var uidNext = 0
       var open = Map.empty[Int, (FuzzConn, Int)] // uid -> (conn, bidi sid)

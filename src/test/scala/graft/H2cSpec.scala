@@ -129,12 +129,14 @@ class H2cSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   // ---- live h2c sockets ---------------------------------------------
 
-  private def withServer(security: EngineSecurity = EngineSecurity())(
+  private def withServer(security: EngineSecurity = EngineSecurity(),
+                         pumpMillis: Long = 250L, ackWaitMillis: Long = 30000L)(
       f: (MultiplexedDelivery, GrpcServer) => Unit): Unit = {
     val engine = new MultiplexedDelivery(spark,
-      trigger = Trigger.ProcessingTime("250 milliseconds"), security = security)
+      trigger = Trigger.ProcessingTime("250 milliseconds"), security = security,
+      ackWaitMillis = ackWaitMillis)
     engine.start()
-    val server = GrpcServer(engine)
+    val server = new GrpcServer(engine, pumpMillis = pumpMillis)
     try f(engine, server)
     finally { server.stop(); engine.stop() }
   }
@@ -158,7 +160,7 @@ class H2cSpec extends AnyFunSuite with BeforeAndAfterAll {
 
         val stream = c.bidi(GrpcServer.ReadMessagesPath)
         stream.sendMessage(encodeRequest(Init("g1")))
-        // the server PUSHES pending chunks on its 250 ms pump — drive
+        // the server PUSHES pending chunks from its pump — drive
         // the engine and wait without sending another client message
         var got = Seq.empty[Array[Byte]]
         val deadline = System.nanoTime() + 30L * 1000000000L
@@ -286,6 +288,80 @@ class H2cSpec extends AnyFunSuite with BeforeAndAfterAll {
           "/aruna.api.notification.services.v1.UpdateNotificationService/Nope",
           Array.emptyByteArray)
         assert(st2 == 12, "unknown methods must answer UNIMPLEMENTED")
+      } finally c.disconnect()
+    }
+  }
+
+  // ---- the pump's wait: woken by arrivals, bounded by pumpMillis -----
+
+  private def emitBody(resourceId: String, project: String): Array[Byte] =
+    H2c.unwrapArm(encodeRequest(Emit("OBJECT", "ALL", resourceId,
+      RelationCtx(project = project, collection = "c1", sharedObject = resourceId))))
+
+  /** The first notification a stream receives within `millis`. */
+  private def firstPush(stream: GrpcClient#Bidi, millis: Long): Option[WireNotification] =
+    stream.messages(1, timeoutMillis = millis).headOption.map(decodeResponse(_)).collect {
+      case n: WireNotification => n
+    }
+
+  test("a push leaves when its chunk is recorded, not when the pump's wait expires") {
+    // a 10 s wait: only the arrival signal can push within 1 s
+    withServer(pumpMillis = 10000L) { (engine, server) =>
+      val c = new GrpcClient("127.0.0.1", server.boundPort)
+      try {
+        assert(c.unary(GrpcServer.CreatePath, createBody("gw", "p1"))._1 == 0)
+        val stream = c.bidi(GrpcServer.ReadMessagesPath)
+        stream.sendMessage(encodeRequest(Init("gw")))
+        assert(c.unary(GrpcServer.EmitPath, emitBody("o1", "p1"))._1 == 0)
+        engine.processAllAvailable()
+        val n = firstPush(stream, 1000L)
+        assert(n.exists(_.resourceIds == Seq("o1")),
+          s"the push must arrive within 1 s of its chunk's record: $n")
+      } finally c.disconnect()
+    }
+  }
+
+  test("closing the session that holds a chunk wakes the survivor's pump: same chunk within 1 s") {
+    withServer(pumpMillis = 10000L) { (engine, server) =>
+      val c = new GrpcClient("127.0.0.1", server.boundPort)
+      try {
+        assert(c.unary(GrpcServer.CreatePath, createBody("gf", "p1"))._1 == 0)
+        val streams = Seq.fill(2)(c.bidi(GrpcServer.ReadMessagesPath))
+        streams.foreach(_.sendMessage(encodeRequest(Init("gf"))))
+        assert(c.unary(GrpcServer.EmitPath, emitBody("o1", "p1"))._1 == 0)
+        engine.processAllAvailable()
+        // competing sessions get disjoint chunks: exactly one holds it
+        val held = streams.map(s => s -> firstPush(s, 1000L))
+          .collectFirst { case (s, Some(n)) => (s, n) }
+        assert(held.isDefined, "one of the two sessions must receive the chunk")
+        val (holder, n) = held.get
+        val survivor = streams.filterNot(_ eq holder).head
+        holder.sendMessage(encodeRequest(Close)) // unacked: its flight fails over
+        val again = firstPush(survivor, 1000L)
+        assert(again.map(_.chunkId).contains(n.chunkId),
+          s"the survivor must receive ${n.chunkId} within 1 s of the close: $again")
+      } finally c.disconnect()
+    }
+  }
+
+  test("an unacked chunk is pushed again, same id, after its ack wait with no new emit") {
+    withServer(ackWaitMillis = 1000L) { (engine, server) =>
+      val c = new GrpcClient("127.0.0.1", server.boundPort)
+      try {
+        assert(c.unary(GrpcServer.CreatePath, createBody("gr", "p1"))._1 == 0)
+        val stream = c.bidi(GrpcServer.ReadMessagesPath)
+        stream.sendMessage(encodeRequest(Init("gr")))
+        assert(c.unary(GrpcServer.EmitPath, emitBody("o1", "p1"))._1 == 0)
+        engine.processAllAvailable()
+        val first = firstPush(stream, 5000L)
+        assert(first.isDefined, "the chunk must be pushed")
+        // ack wait (1 s) plus at most one pump wait (250 ms), plus slack
+        val t0 = System.nanoTime()
+        val again = firstPush(stream, 2000L)
+        val ms = (System.nanoTime() - t0) / 1000000L
+        assert(again.map(_.chunkId) == first.map(_.chunkId),
+          s"the unacked chunk must be redelivered with its id: $first then $again")
+        assert(ms <= 1600L, s"redelivery took $ms ms after the first push")
       } finally c.disconnect()
     }
   }

@@ -204,6 +204,29 @@ class MultiplexedDeliverySpec extends AnyFunSuite with BeforeAndAfterAll {
       s"only the unacked chunk is pending after restart: $pending")
   }
 
+  test("stop deletes the payload dir the engine created; an engine given a ledgerDir keeps it") {
+    def run(mux: MultiplexedDelivery): String = {
+      try {
+        mux.addGroup("g", ResourceType.Project, "p", Hierarchy(projectId = "p"), true)
+        mux.start()
+        mux.emit(ResourceType.Project, EventType.All, "p", RelationCtx())
+        mux.processAllAvailable()
+        assert(mux.pendingChunks("g").flatMap(_.resourceIds) == Seq("p"))
+        assert(new java.io.File(mux.payloadDir).list().nonEmpty, "test wiring: no payload written")
+      } finally mux.stop()
+      mux.payloadDir
+    }
+    val own = run(new MultiplexedDelivery(spark))
+    assert(!new java.io.File(own).exists, s"the engine's own temp dir must be gone after stop: $own")
+
+    val dir = java.nio.file.Files.createTempDirectory("graft-mux-keep").toString
+    val kept = run(new MultiplexedDelivery(spark, ledgerDir = Some(dir)))
+    assert(kept.startsWith(dir) && new java.io.File(kept).exists, s"a ledgerDir engine keeps $kept")
+    val again = new MultiplexedDelivery(spark, ledgerDir = Some(dir))
+    assert(again.pendingChunks("g").flatMap(_.resourceIds) == Seq("p"),
+      "a restart over the kept dirs still hydrates the pending chunk")
+  }
+
   test("many-groups churn: create/delete between batches with competing consumers stays correct") {
     // 71 groups, most idle: the shared bucketed write end-to-end at a
     // group count where most subscriptions match nothing.

@@ -79,6 +79,18 @@ class ServerMainSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(c.call(CreateGroup("dg", "PROJECT", "p",
         Hierarchy(projectId = "p"), includeSub = true, "ALL")).isEmpty)
       assert(c.call(Emit("PROJECT", "ALL", "p", RelationCtx())).isEmpty)
+      // and delivers: the emit reaches the log through the ingest query,
+      // and the attach's delivery reads it back to the session
+      val init = c.call(Init("dg"))
+      assert(c.errors(init).isEmpty, s"init must attach: $init")
+      var got = c.notifications(init)
+      val deadline = System.nanoTime() + 60L * 1000000000L
+      while (got.isEmpty && System.nanoTime() < deadline) {
+        got = c.notifications(c.call(Poll))
+        if (got.isEmpty) Thread.sleep(100)
+      }
+      assert(got.flatMap(_.resourceIds) == Seq("p"),
+        s"the durable boot must deliver the emitted event within 60 s: $got")
     }
   }
 
