@@ -370,7 +370,8 @@ object Bench {
     val t0 = System.nanoTime()
     // Ingest batch sizing: each micro-batch pays a fixed fan-out +
     // subscription-join + partitioned-payload-write round, so fewer,
-    // larger batches raise throughput (ReplayProbe at sf0.1:
+    // larger batches raise throughput (BASELINE.md "Round-5 snapshot"
+    // ingest-batch sweep, at sf0.1:
     // 12.5k → 6.2 s, 25k → 3.2 s, 50k → 2.3 s, 100k → 1.5 s; at the
     // sf1 rehearsal: 50k → 16.5 s, 100k → ~14 s, 125k → ~11.6 s,
     // 200k → ~9 s). Default is SCALE-AWARE — max(50k, rows/8) — so the
@@ -573,7 +574,8 @@ object Bench {
     // but the producer doesn't wait a full RTT per event — the round-9
     // profile showed the synchronous producer pinned at ~1/RTT per
     // connection (~100k ev/s at 8 conns, scale-invariant) while the
-    // engine's ingest lock sustains 346k ev/s (IngestProbe).
+    // engine's ingest lock sustains 346k ev/s (BASELINE.md "Wire-replay
+    // scale gap — profiled, fixed, inverted").
     val nProd = sys.env.getOrElse("SPARK_GRAFT_WIRE_PRODUCERS", "8").toInt
     val window = sys.env.getOrElse("SPARK_GRAFT_WIRE_PIPELINE", "64").toInt
     val producers = (0 until nProd).map { i =>
@@ -657,7 +659,8 @@ object Bench {
     val failure = new java.util.concurrent.atomic.AtomicReference[Throwable]()
     val t0 = System.nanoTime()
     // 5 consumers, one bidi stream per group: Init, then collect the
-    // server's 250 ms-pump pushes and ack each batch.
+    // server's pushes (sent when a chunk is recorded, at most 250 ms
+    // apart) and ack each batch.
     val consumers = (0 until 5).map { p =>
       val t = new Thread(() => {
         val c = new GrpcClient("127.0.0.1", server.boundPort,

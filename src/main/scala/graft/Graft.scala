@@ -16,6 +16,7 @@ import graft.streaming.{ConsumerHost, DurableEventLog, EventSession, Multiplexed
   * val mux    = Graft.multiplexed(spark)         // one query, many groups
   * mux.start()
   * val log    = Graft.durableLog(spark, dir, ck) // parquet log + checkpoints
+  * log.startIngest(); log.startMultiplexed()
   * }}}
   *
   * Both engines are one [[graft.streaming.ConsumerHost]] delivery core
@@ -72,8 +73,10 @@ object Graft {
                   security: EngineSecurity = EngineSecurity.Permissive): MultiplexedDelivery =
     new MultiplexedDelivery(spark, trigger, ledgerDir, sourcePartitions, security)
 
-  /** The durable path: partitioned parquet event log + checkpointed
-    * per-group delivery. */
+  /** The durable path: partitioned parquet event log read by one
+    * checkpointed shared query for every group, a new group getting its
+    * full history first. Starts no query: call `startIngest()` and
+    * `startMultiplexed()`. */
   def durableLog(spark: SparkSession, logDir: String, checkpointRoot: String,
                  trigger: Trigger = Trigger.ProcessingTime("250 milliseconds"),
                  security: EngineSecurity = EngineSecurity.Permissive): DurableEventLog =

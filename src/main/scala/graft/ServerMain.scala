@@ -43,9 +43,10 @@ import graft.streaming.{ConsumerHost, DurableEventLog, MultiplexedDelivery, Wire
   * Engine selection is `GRAFT_ENGINE`: `multiplexed` (the default: the
   * in-memory engine, one query serving every group; a group with no
   * live session keeps receiving chunks, a new group is from-now-on) or
-  * `durable` (parquet log + checkpoints, per-group full-history
-  * backfill; requires `GRAFT_LOG_DIR` and `GRAFT_CHECKPOINT_DIR`). Any
-  * other value fails the boot.
+  * `durable` (parquet log + checkpoints: an ingest query and one
+  * shared query for every group; a new group gets its full history,
+  * then live delivery; requires `GRAFT_LOG_DIR` and
+  * `GRAFT_CHECKPOINT_DIR`). Any other value fails the boot.
   * `GRAFT_TRIGGER_MILLIS` defaults to 250 — the JetStream pull window
   * the reference hardcodes (natsio.rs:201).
   *
@@ -88,9 +89,10 @@ object ServerMain {
           env.getOrElse("GRAFT_CHECKPOINT_DIR",
             sys.error("GRAFT_ENGINE=durable requires GRAFT_CHECKPOINT_DIR")),
           trigger, security)
-        // emits reach the log only through the ingest query; a session's
-        // attach starts its group's delivery over that log
+        // emits reach the log only through the ingest query; the shared
+        // query delivers the log to every group
         d.startIngest()
+        d.startMultiplexed()
         d
       case other => sys.error(s"unknown GRAFT_ENGINE '$other' " +
         "(expected multiplexed | durable)")

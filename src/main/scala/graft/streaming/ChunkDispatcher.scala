@@ -63,15 +63,9 @@ final class ChunkDispatcher(ackWaitMillis: Long,
   }
 
   /** Session death/close: its flights stay recorded (delivery counts
-    * survive) but become immediately offerable to any live session.
-    * Returns the group's REMAINING live-session count, decided under
-    * the same lock as open/close — so when two sessions close
-    * concurrently exactly ONE caller observes 0 and can release the
-    * group's resources (the last-session-close race the protocol layer
-    * must not lose). */
-  def closeSession(groupId: String, sessionId: Long): Int = synchronized {
-    live.remove((groupId, sessionId))
-    liveSessionCount(groupId)
+    * survive) but become immediately offerable to any live session. */
+  def closeSession(groupId: String, sessionId: Long): Unit = synchronized {
+    live.remove((groupId, sessionId)); ()
   }
 
   def isLive(groupId: String, sessionId: Long): Boolean =

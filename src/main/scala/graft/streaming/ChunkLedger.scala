@@ -50,8 +50,8 @@ final class ChunkLedger {
 
   private final class G {
     /** Unacked chunks, batchId-ordered. (group, batchId) is unique by
-      * construction in every engine: live ids are `group-(epoch+batch)`,
-      * backfill ids reserve negative batchIds. */
+      * construction in every engine: in-memory ids are
+      * `group-(epoch+batch)`, durable ids are log positions. */
     val pending = new java.util.TreeMap[Long, ChunkMeta]()
     val pendingByChunk = new java.util.HashMap[String, Long]()
     /** Every existing chunk with batchId ≤ wm is acked. */
@@ -115,14 +115,13 @@ final class ChunkLedger {
     }
   }
 
-  /** True when a chunk with this batchId is already pending or acked
-    * (incl. acked history compacted into the watermark) — the cheap
-    * pre-write replay guard for per-group foreachBatch sinks. */
-  def isKnown(groupId: String, chunkId: String, batchId: Long): Boolean = {
+  /** The group's highest known batchId: pending, resident acked, or
+    * its watermark. Long.MinValue when the group holds nothing. */
+  def highestSeq(groupId: String): Long = {
     val st = groups.get(groupId)
-    st != null && st.synchronized {
-      batchId <= st.wm || st.ackedAbove.containsKey(batchId) ||
-        st.pending.containsKey(batchId)
+    if (st == null) Long.MinValue
+    else st.synchronized {
+      Seq(st.pending, st.ackedAbove).filterNot(_.isEmpty).map(_.lastKey).foldLeft(st.wm)(math.max)
     }
   }
 

@@ -37,13 +37,11 @@ import graft.core._
   * idempotent-sink-plus-WAL design, and each `MemoryStream` has exactly
   * one reader: [[MultiplexedDelivery]] runs one shared query into
   * [[deliverSharedBatch]]; [[DurableEventLog]] runs its ingest query
-  * over the source and, over its replayable parquet log, either one
-  * shared query or one checkpointed query per group into
-  * [[deliverGroupBatch]] (the full-history backfill). A group with no
-  * live session keeps receiving chunks from a shared query. Engine-
-  * specific lifecycle goes through two hooks, [[onGroupActive]] and
-  * [[onGroupIdle]]; one [[EventSession]] protocol and one wire server
-  * serve every engine.
+  * over the source and one shared query over its replayable parquet
+  * log, which also serves a joining group's history. Attach and session
+  * close start and stop nothing: a group with no live session keeps
+  * receiving chunks from the shared query. One [[EventSession]] protocol
+  * and one wire server serve every engine.
   */
 abstract class ConsumerHost(val spark: SparkSession,
                             security: EngineSecurity,
@@ -238,15 +236,14 @@ abstract class ConsumerHost(val spark: SparkSession,
     require(groups.putIfAbsent(groupId, g).isEmpty,
       s"stream group $groupId already exists")
     groupsVersion.incrementAndGet()
-    onGroupActive(g)
     g
   }
 
-  /** R14 delete (a `todo!()` in the reference): unregister, stop the
-    * group's own delivery, and drop its ledger, flights and payloads —
-    * a same-id re-create starts empty. The drop is journaled (a WAL
-    * `drop` record), so a restart neither re-serves the removed group's
-    * pending chunks nor lets them pin payload retention.
+  /** R14 delete (a `todo!()` in the reference): unregister and drop the
+    * group's ledger, flights and payloads — a same-id re-create starts
+    * empty. The drop is journaled (a WAL `drop` record), so a restart
+    * neither re-serves the removed group's pending chunks nor lets them
+    * pin payload retention.
     *
     * Payloads: a per-group-layout dir is deleted here; shared-query
     * payloads sit in bucket files shared with other groups, so their
@@ -254,19 +251,16 @@ abstract class ConsumerHost(val spark: SparkSession,
     * that may hold its rows, journaled with the drop) hides them from a
     * same-id re-create, and [[compactPayloads]] retention reclaims the
     * storage. A shared batch in flight at delete time records no chunk
-    * for the removed group (see [[deliverSharedBatch]]).
-    *
-    * A [[DurableEventLog]] per-group delivery keeps its
-    * `delivery-<id>` checkpoint: a same-id re-create resumes after the
-    * removed group's last batch, so it receives the events emitted
-    * since, and its chunk ids continue past the removed group's — an id
-    * a client already acked is never minted again. Registration never
-    * touches the payload table (a crash-restart re-registers groups
-    * over their durable dirs and WAL). */
+    * for the removed group (see [[deliverSharedBatch]]). On a
+    * [[DurableEventLog]] the floor is also the re-created group's
+    * coverage point: its history starts after it, so it receives the
+    * events logged since the removal under chunk ids the removed group
+    * never used. Registration never touches the payload table (a
+    * crash-restart re-registers groups over their durable dirs and
+    * WAL). */
   def removeGroup(groupId: String): Unit = {
     groups.remove(groupId)
     groupsVersion.incrementAndGet()
-    onGroupIdle(groupId)
     recordLock.synchronized {
       val floor = math.max(ledger.maxBatchId, sharedBatchSeq)
       ledger.dropGroup(groupId)
@@ -287,22 +281,8 @@ abstract class ConsumerHost(val spark: SparkSession,
     val g = groups.getOrElse(groupId,
       throw new NoSuchElementException(s"unknown stream group $groupId"))
     security.requireRead(token, ResourceType.fromName(g.resourceType), g.resourceId)
-    onGroupActive(g)
     g
   }
-
-  /** The LAST live session on a group has closed (decided inside the
-    * dispatcher's lock, so exactly one closer gets here). */
-  def onLastSessionClosed(groupId: String): Unit = onGroupIdle(groupId)
-
-  /** Engine hook: `g` was added or a consumer attached to it — an
-    * engine with per-group delivery makes sure it runs. */
-  protected def onGroupActive(g: StreamGroup): Unit = ()
-
-  /** Engine hook: the group was removed or its last consumer left — an
-    * engine with per-group delivery stops it (a removed group's state
-    * is dropped by the core afterwards). */
-  protected def onGroupIdle(groupId: String): Unit = ()
 
   /** Drain all in-flight data through the engine's running queries
     * (test/replay helper; production runs on the trigger). */
@@ -320,12 +300,10 @@ abstract class ConsumerHost(val spark: SparkSession,
 
   /** Session death/disconnect: its unacked flights become immediately
     * offerable to surviving sessions (failover), so the arrival signal
-    * wakes their pumps. Returns the group's remaining live-session
-    * count (see [[ChunkDispatcher.closeSession]]). */
-  def closeSession(groupId: String, sessionId: Long): Int = {
-    val left = dispatcher.closeSession(groupId, sessionId)
+    * wakes their pumps. */
+  def closeSession(groupId: String, sessionId: Long): Unit = {
+    dispatcher.closeSession(groupId, sessionId)
     signalArrival()
-    left
   }
 
   // ---- arrival signal -------------------------------------------------
@@ -370,7 +348,7 @@ abstract class ConsumerHost(val spark: SparkSession,
     * already pending or acked (possibly only as a compacted watermark)
     * — never resurrect it, and journal only what was inserted (WAL
     * after payload). */
-  protected def recordChunk(groupId: String, chunkId: String, seq: Long, rows: Long): Boolean = {
+  private def recordChunk(groupId: String, chunkId: String, seq: Long, rows: Long): Boolean = {
     val meta = ChunkMeta(groupId, chunkId, seq, rows,
       new Timestamp(System.currentTimeMillis()), acked = false)
     val fresh = ledger.record(meta)
@@ -381,20 +359,18 @@ abstract class ConsumerHost(val spark: SparkSession,
     fresh
   }
 
-  /** One group's micro-batch (the durable log's per-group queries) as
-    * chunk `group-<seq>`. Write-first over ONE pass: writeCounted counts
-    * for the ledger while writing, with the file split sized to the
-    * batch; an empty batch writes nothing and records no meta; no event
-    * row reaches the driver. A replayed batch whose chunk is already known
-    * (possibly acked) is skipped before the write. */
-  protected def deliverGroupBatch(groupId: String, seq: Long, batch: DataFrame): Unit = {
-    val chunkId = s"$groupId-$seq"
-    if (!ledger.isKnown(groupId, chunkId, seq)) {
-      val n = table.writeCounted(groupId, chunkId,
-        batch.select(col("subject"), col("resourceId"), FanOut.seqCol.as("seq")))
-      if (n > 0L) { recordChunk(groupId, chunkId, seq, n); () }
+  /** Records chunk `group-<seq>` while `g` is still the registration a
+    * shared batch's snapshot held (see [[deliverSharedBatch]]). */
+  protected def recordMember(g: StreamGroup, seq: Long, rows: Long): Unit =
+    recordLock.synchronized {
+      if (groups.get(g.id).exists(_ eq g)) { recordChunk(g.id, s"${g.id}-$seq", seq, rows); () }
     }
-  }
+
+  /** The highest seq a group's state covers: its highest pending, acked
+    * or watermarked chunk, or its drop floor; Long.MinValue for a group
+    * this ledger never held. */
+  protected def coverage(groupId: String): Long =
+    math.max(ledger.highestSeq(groupId), historyFloors.getOrElse(groupId, Long.MinValue))
 
   /** foreachBatch wall split (ns) of [[deliverSharedBatch]]: "batch" =
     * whole body; minus the table's write/count phases and "ledger"
@@ -408,8 +384,10 @@ abstract class ConsumerHost(val spark: SparkSession,
   /** Seq of the last shared batch that took a registration snapshot —
     * a group removed after that snapshot may have rows in that batch,
     * so its history floor covers it (volatile: written before the
-    * snapshot is read, read after the group left the map). */
-  @volatile private var sharedBatchSeq: Long = Long.MinValue
+    * snapshot is read, read after the group left the map). An engine
+    * whose seqs continue a checkpoint sets it to the seq that checkpoint
+    * has read through. */
+  @volatile protected var sharedBatchSeq: Long = Long.MinValue
   /** Serializes a shared batch's ledger records against
     * [[removeGroup]]'s drop. */
   private val recordLock = new Object
@@ -452,13 +430,19 @@ abstract class ConsumerHost(val spark: SparkSession,
     * intact. A group removed or re-created since this batch's snapshot
     * gets no chunk: its rows were matched for the old registration. No
     * batch.isEmpty pre-check: it is a full extra pass on the common
-    * path, and the write's counts gate the ledger anyway. */
+    * path, and the write's counts gate the ledger anyway.
+    *
+    * `history` runs first with the snapshot's members, so an engine
+    * can record a joining group's older chunks ([[recordMember]])
+    * before this batch records its live one. */
   protected def deliverSharedBatch(batch: DataFrame, seq: Long,
-                                   dedupCols: Seq[String] = Nil): Unit = {
+                                   dedupCols: Seq[String] = Nil,
+                                   history: Map[String, StreamGroup] => Unit = _ => ()): Unit = {
     val bodyT0 = System.nanoTime()
     sharedBatchSeq = seq
     val subs = currentSubs()
     if (subs.members.nonEmpty) {
+      history(subs.members)
       val identity = ("eventId" +: "spos" +: dedupCols).distinct
       val joined = batch
         .select(("subject" +: "resourceId" +: "eventType" +: identity).distinct.map(col): _*)
@@ -608,8 +592,7 @@ object ConsumerHost {
     * bounded ledger + the durable payload table's chunk listing.
     * Resident metas win; chunk ids only present on disk (acked history
     * evicted behind the watermark) are synthesized with batchId parsed
-    * from the trailing `-<seq>` (backfill ids surface their positive
-    * slice index). */
+    * from the trailing `-<seq>`. */
   private[streaming] def historyMetas(groupId: String,
       pending: Seq[ChunkMeta], ackedResident: Seq[ChunkMeta],
       diskChunkIds: Seq[String]): Seq[ChunkMeta] = {

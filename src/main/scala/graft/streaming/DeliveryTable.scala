@@ -39,15 +39,14 @@ import org.apache.spark.sql.functions._
   *    reclaimed by batch retention ([[dropBatchesBefore]]) — the
   *    reference's one shared stream makes the same trade (natsio.rs:24).
   *  - **per-group** (`groupId=…/chunkId=…/`), written by
-  *    [[writeCounted]] for the durable log's per-group queries
-  *    ([[DurableEventLog.startDelivery]]) and by [[writeMulti]] for the
-  *    archive backfill: one partition dir per chunk, so a pull reads
-  *    exactly its own dirs and a group drop is an `rm -r`.
+  *    [[writeMulti]] for a durable group's history (the chunks
+  *    [[DurableEventLog]] serves a joining group from its log): one
+  *    partition dir per chunk, so a pull reads exactly its own dirs and
+  *    a group drop is an `rm -r`.
   *
   * [[readChunks]] resolves a chunk in whichever layout holds it, so a
-  * WAL dir whose chunks older in-memory engine versions wrote per
-  * group, or a durable log serving both kinds of query, hydrates
-  * unchanged.
+  * durable group's history and live chunks, or a WAL dir whose chunks
+  * older engine versions wrote per group, hydrate unchanged.
   *
   * The reference keeps every delivered message in an in-server
   * `HashMap<chunk_id, Vec<Message>>` until acked
@@ -59,8 +58,8 @@ import org.apache.spark.sql.functions._
   * proportionally to what THAT consumer has outstanding, not to the
   * log.
   *
-  * The per-group writes ([[writeCounted]], [[writeMulti]]) are
-  * distributed Spark jobs. The shared queries' bucketed write collects
+  * The per-group write ([[writeMulti]]) is a distributed Spark job.
+  * The shared queries' bucketed write collects
   * its micro-batch and writes the bucket files from the driver
   * ([[writeBucketed]]: one job per trigger, no shuffle, no commit
   * protocol). Reads run no Spark job either. A pull's result
@@ -80,7 +79,7 @@ import org.apache.spark.sql.functions._
   * Every write is idempotent, matching the WAL's replay rule: a
   * foreachBatch replay (micro-batch retry / restart) rewrites what it
   * wrote with identical content instead of appending duplicates — the
-  * per-group writes by dynamic partition overwrite per (groupId,
+  * per-group write by dynamic partition overwrite per (groupId,
   * chunkId), the bucketed write by replacing its own `batch=<seq>` dir,
   * whose files it publishes by rename so no reader sees one half
   * written.
@@ -121,48 +120,13 @@ final class DeliveryTable(spark: SparkSession, val dir: String) {
     b.result()
   }
 
-  /** One chunk's payload write that RETURNS its row count — ONE JOB
-    * (round-14, completing the round-13 verdict-task-1 treatment for
-    * the per-group queries): the count rides the write via `observe`
-    * (no persist, no separate count job — the round-12 form ran both
-    * every trigger), and file-split sizing is delegated to AQE, which
-    * coalesces the content-hash shuffle by SIZE — a steady-state small
-    * micro-batch lands in one partition → ONE file (the round-12
-    * ADVICE contract, spec-pinned), while a 10M-row replay burst fans
-    * across partitions ∝ its bytes. AQE is on by default since Spark
-    * 3.2; a session that disables it falls back to shuffle-partitions
-    * many small files — correctness unaffected (reads merge on seq).
-    * Returns 0 for an empty batch (dynamic overwrite materializes no
-    * partition dir). */
-  def writeCounted(groupId: String, chunkId: String, rows: DataFrame): Long = {
-    val parts = spark.conf.get("spark.sql.shuffle.partitions", "32").toLong
-    val obs = org.apache.spark.sql.Observation()
-    val prepared = withSeq(rows
-        .withColumn("groupId", lit(groupId))
-        .withColumn("chunkId", lit(chunkId)))
-      .select(col("groupId"), col("chunkId"), col("subject"),
-        col("resourceId"), col("seq"))
-      // content-hash key (SPARK-23207-safe: a retried task re-routes rows alike);
-      // COLUMN-ONLY repartition on purpose — AQE picks the count by size
-      .repartition(pmod(xxhash64(col("subject"), col("resourceId")), lit(parts)))
-      .observe(obs, count(lit(1)).as("n"))
-    timed("write") {
-      prepared.write
-        .mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("groupId", "chunkId")
-        .parquet(dir)
-    }
-    timed("count") { obs.get("n").asInstanceOf[Long] }
-  }
-
   /** Per-group-layout payload rows spanning many chunks in one pass
-    * (the archive backfill). `rows` must carry groupId, chunkId,
+    * (a durable group's history). `rows` must carry groupId, chunkId,
     * subject, resourceId. `seq` is assigned BEFORE the repartition so
     * delivery order inside a chunk survives the shuffle (reads sort on
     * it). The repartition keys on (groupId, chunkId) with an EXPLICIT
     * partition count: one write task per chunk, so a million-row
-    * backfill fans across its chunks instead of collapsing onto one task
+    * history fans across its chunks instead of collapsing onto one task
     * (round-12 ADVICE), and without it every source task would open a
     * writer for every chunk it touches. */
   def writeMulti(rows: DataFrame): Unit = timed("write") {
@@ -337,9 +301,9 @@ final class DeliveryTable(spark: SparkSession, val dir: String) {
     * chunks written in that layout); the rest resolve to
     * `batches/batch=<seq>/bucket=<bucketOf(groupId)>` — ONE file read
     * per pending batch, filtered to this group's rows. A table can hold
-    * both layouts at once (per-group and shared queries over one
-    * durable log, or per-group chunks an older shared query wrote that
-    * are still pending after an upgrade), and this is the seam that
+    * both layouts at once (a durable group's history and live chunks,
+    * or per-group chunks an older shared query wrote that are still
+    * pending after an upgrade), and this is the seam that
     * makes the difference invisible to consumers. Driver-only: no Spark
     * job (see [[scanDir]]).
     * Returns (chunkId → (subjects, resourceIds)), each in `seq` order;

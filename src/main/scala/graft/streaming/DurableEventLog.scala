@@ -1,10 +1,10 @@
 package graft.streaming
 
-import java.util.concurrent.ConcurrentHashMap
-import scala.collection.concurrent
-import scala.jdk.CollectionConverters._
-
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.execution.streaming.checkpointing.OffsetSeqLog
+import org.apache.spark.sql.execution.streaming.runtime.{FileStreamSourceLog, FileStreamSourceOffset, SerializedOffset}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
@@ -14,35 +14,62 @@ import graft.core._
 /** The durable form of the event stream — what the reference's single
   * JetStream stream (`STORAGE_UPDATES`, natsio.rs:24) becomes at 100 TB:
   * a parquet event log PARTITIONED BY PROJECT, written by one ingest
-  * query and read by per-group delivery queries that each own a
-  * checkpoint (≙ a JetStream consumer's position), or by one shared
-  * query for all groups ([[startMultiplexed]]). Ingest, registry,
-  * ledger/WAL, dispatch, pull and ack are the shared [[ConsumerHost]]
-  * core; this class is the log, its delivery queries and compaction.
+  * query and read by one shared query for every group
+  * ([[startMultiplexed]]), whose checkpoint is the position all durable
+  * consumers share. Two streaming queries, whatever the group count.
+  * Ingest, registry, ledger/WAL, dispatch, pull and ack are the shared
+  * [[ConsumerHost]] core; this class is the log, its two queries, a
+  * joining group's history and compaction.
+  *
+  * One replayable log read by both a streaming and a batch query (the
+  * Structured Streaming paper's model): a group gets full history, then
+  * live delivery, like a JetStream consumer created over an existing
+  * stream. The shared query's file source records every log file it
+  * read with its log position (`<ckpt>/mux/sources/0`, a
+  * `FileStreamSourceLog`, which keeps every file; the offset log keeps
+  * only the last batches). Chunk seqs are built from that position:
+  * the live chunk of a batch that read positions (s, e] has seq
+  * `e * SeqStride`, so a group's coverage point is just the highest
+  * seq its WAL state holds, or its drop floor. The first shared batch
+  * whose registration snapshot holds a group serves that group's
+  * history before recording its live chunk: one batch read of the log
+  * files of positions after the coverage point up to s, pruned per
+  * group ([[prunedSubjectScan]]), sliced into chunks of at most
+  * [[DurableEventLog.HistoryChunkRows]] rows whose seqs rise and stay
+  * below e * SeqStride, and written per group
+  * ([[DeliveryTable.writeMulti]]). History after a restart, a late
+  * registration or a same-id re-create is therefore exact: each event
+  * once, nothing acked served again, no chunk id minted twice. The
+  * history arrives with the next shared batch, i.e. once anything new
+  * is logged after the registration.
   *
   * Why partition by project: the subject grammar scopes every query to
   * one project subtree (SURVEY.md §4 "hierarchical key space =
-  * partition pruning"), so a delivery query's scan prunes to exactly
-  * one partition directory — subtree subscriptions never touch other
+  * partition pruning"), so a history read prunes to exactly one
+  * partition directory — subtree subscriptions never touch other
   * projects' data, no matter how large the log grows.
   *
   * Restart semantics (SURVEY.md §7.4 risk 1): the file source +
-  * checkpoint give exactly-once BATCH REPROCESSING (a restarted
-  * delivery query resumes after the last committed batch, never
-  * re-reading delivered files), while the ack ledger layered on top
-  * gives at-least-once DELIVERY (unacked chunks stay pending across
-  * restarts and are re-served to reconnecting clients).
+  * checkpoint give exactly-once BATCH REPROCESSING (a restarted shared
+  * query resumes after the last committed batch, never re-reading
+  * delivered files), while the ack ledger layered on top gives
+  * at-least-once DELIVERY (unacked chunks stay pending across restarts
+  * and are re-served to reconnecting clients).
+  *
+  * Migration: a ckptRoot written before the shared query served history
+  * keeps orphaned `delivery-<id>` checkpoints and chunk seqs that are
+  * query batch ids, not log positions; start a fresh ckptRoot over the
+  * same log dir (every group then gets its full history once).
   *
   * Small-files note for long-running deployments: a 250 ms trigger
   * appends one file per batch per touched partition. The production
   * remedies compose with this design without code changes here —
-  * (a) lengthen the ingest trigger (delivery latency is governed by the
-  * DELIVERY trigger, not ingest), (b) roll the log by time (new logDir
-  * per day; readers union static compacted history with the live dir),
-  * (c) compact closed partitions into an archive dir served to
-  * backfilling (per-group) readers only — live mux readers never
-  * re-read old batches, so compaction does not disturb them.
-  * Strategy (c) is implemented: [[compactTo]] + [[archiveScan]].
+  * (a) lengthen the trigger, (b) roll the log by time (new logDir per
+  * day; readers union static compacted history with the live dir),
+  * (c) compact closed partitions into an archive dir for batch readers
+  * ([[compactTo]] + [[archiveScan]]): the shared query keeps reading
+  * the log from its checkpoint and a joining group's history from the
+  * files its source log lists, so compaction disturbs neither.
   */
 final class DurableEventLog(session: SparkSession, logDir: String, ckptRoot: String,
                             trigger: Trigger = Trigger.ProcessingTime("250 milliseconds"),
@@ -51,19 +78,17 @@ final class DurableEventLog(session: SparkSession, logDir: String, ckptRoot: Str
                             clock: () => Long = () => System.currentTimeMillis())
     extends ConsumerHost(session, security, ackWaitMillis, clock,
       Some(s"$ckptRoot/ledger"), s"$ckptRoot/deliveries") {
+  import DurableEventLog._
+  import spark.implicits._
 
   @volatile private var ingestQuery: Option[StreamingQuery] = None
-  /** Running delivery queries: per-group ones by group id, the shared
-    * one under [[MuxQuery]]. */
-  private val deliveries: concurrent.Map[String, StreamingQuery] =
-    new ConcurrentHashMap[String, StreamingQuery]().asScala
-  private val MuxQuery = "__mux__"
+  @volatile private var sharedQuery: Option[StreamingQuery] = None
 
   /** Log row schema; `project` is the physical partition column.
     * `eventId`/`spos` are the content-derived message identity
     * ([[FanOut.explodeSubjects]]) — eventId restarts with each engine
-    * incarnation (like `ts`), so cross-incarnation rows in ONE backfill
-    * micro-batch can reuse ids; the mux dedup therefore also keys on
+    * incarnation (like `ts`), so cross-incarnation rows in ONE shared
+    * micro-batch can reuse ids; the shared dedup therefore also keys on
     * resourceId/eventType/ts, and within-chunk ORDER across
     * incarnations is per-incarnation emission order. */
   val logSchema: StructType = StructType(Seq(
@@ -73,11 +98,38 @@ final class DurableEventLog(session: SparkSession, logDir: String, ckptRoot: Str
     StructField("eventId", LongType), StructField("spos", IntegerType),
     StructField("project", StringType)))
 
+  private val sourceLogDir = s"$ckptRoot/mux/sources/0"
+  /** The shared source's file log (file → position), opened once the
+    * shared query has created it. */
+  private lazy val sourceLog =
+    new FileStreamSourceLog(FileStreamSourceLog.VERSION, spark, sourceLogDir)
+  private lazy val offsetLog = new OffsetSeqLog(spark, s"$ckptRoot/mux/offsets")
+
+  // A removal before this incarnation's first shared batch floors at
+  // what the checkpoint has read, not at the highest chunk seq.
+  if (exists(sourceLogDir))
+    sourceLog.getLatestBatchId().foreach(p => sharedBatchSeq = p * SeqStride)
+
+  private def exists(dir: String): Boolean = {
+    val p = new Path(dir)
+    p.getFileSystem(spark.sessionState.newHadoopConf()).exists(p)
+  }
+
   /** Ingest: fan out and append to the partitioned log. The project
     * token (#3) exists in every publish subject, so it is derivable in
     * the plan — no extra state. */
   def startIngest(): Unit = synchronized {
     require(ingestQuery.isEmpty, "ingest already running")
+    // The ingest checkpoint outlives the engine (the log's file sink
+    // skips batch ids it has committed), but each engine's memory source
+    // starts empty: advance it with empty batches to the last offset the
+    // checkpoint planned, so the restarted query reads the next emit as
+    // new data instead of comparing it with the old engine's offsets.
+    val offsets = s"$ckptRoot/ingest/offsets"
+    if (exists(offsets))
+      new OffsetSeqLog(spark, offsets).getLatest().flatMap(_._2.offsets.head).foreach { o =>
+        source.synchronized((0L to o.json.toLong).foreach(_ => source.addData(Nil)))
+      }
     val q = FanOut.explodeSubjects(source.toDF())
       .withColumn("project", split(col("subject"), "\\.").getItem(3))
       .writeStream
@@ -91,46 +143,11 @@ final class DurableEventLog(session: SparkSession, logDir: String, ckptRoot: Str
     ingestQuery = Some(q)
   }
 
-  /** The delivery scan for one group: reads the log from the group's
-    * own checkpointed position, pruned to the group's project partition
-    * (PartitionFilters in the plan) plus the exact subject predicate.
-    *
-    * The partition-prune key is only applied when the filter's project
-    * token (#3) is a LITERAL: a general NATS filter may carry `*` there
-    * (Subjects.matchesLit handles it via rlike), in which case we fall
-    * back to the full-log scan with the subject predicate alone —
-    * correct, just unpruned. `maxFilesPerTrigger` bounds how much of a
-    * backlog one micro-batch
-    * ingests — THE knob that keeps a new group's full-history backfill
-    * from materializing the whole log in a single batch. Unset, a
-    * restart after long downtime (or a fresh per-group checkpoint over
-    * a year of log) becomes one giant batch sized by the backlog, not
-    * by memory. */
-  def deliveryStream(filterSubject: String,
-                     maxFilesPerTrigger: Option[Int] = None,
-                     eventType: String = EventType.All): DataFrame =
-    deliveryStreamMulti(Seq(filterSubject), maxFilesPerTrigger, eventType)
-
-  /** Union form for multi-hierarchy groups: "matches ANY filter
-    * subject" as an OR of per-subject predicates — a filter, so a
-    * message matching several subjects still flows once. The partition
-    * prune generalizes to `project IN (…)` when every filter's project
-    * token is a literal. */
-  def deliveryStreamMulti(filterSubjects: Seq[String],
-                          maxFilesPerTrigger: Option[Int] = None,
-                          eventType: String = EventType.All): DataFrame = {
-    val reader = spark.readStream.schema(logSchema)
-    maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n))
-    prunedSubjectScan(reader.parquet(logDir), filterSubjects)
-      .filter(Subjects.eventTypeMatches(col("eventType"), lit(eventType)))
-  }
-
   /** Shared prune: subject predicate (ANY of `filterSubjects`) + the
     * partition filter `project IN (…)` when every filter's project
     * token is a literal (a `*`/`>` token anywhere falls back to the
     * full-log scan with the subject predicate alone — correct, just
-    * unpruned). Works for both the streaming log scan and batch
-    * archive scans. */
+    * unpruned). Serves the history read and archive scans. */
   private def prunedSubjectScan(df: DataFrame, filterSubjects: Seq[String]): DataFrame = {
     require(filterSubjects.nonEmpty, "at least one filter subject required")
     val projects = filterSubjects.map { fs =>
@@ -145,67 +162,10 @@ final class DurableEventLog(session: SparkSession, logDir: String, ckptRoot: Str
     else base.filter(col("project").isin(projects.distinct: _*))
   }
 
-  /** Start (or restart — same checkpoint) a group's delivery query.
-    * `deliveryTrigger` defaults to the log's cadence; pass
-    * `Trigger.AvailableNow()` for a drain-and-stop backfill run. */
-  def startDelivery(groupId: String, filterSubject: String,
-                    maxFilesPerTrigger: Option[Int] = None,
-                    deliveryTrigger: Trigger = trigger,
-                    eventType: String = EventType.All): Unit =
-    startDeliveryMulti(groupId, Seq(filterSubject), maxFilesPerTrigger,
-      deliveryTrigger, eventType)
-
-  /** Union form for multi-hierarchy groups — see [[deliveryStreamMulti]]. */
-  def startDeliveryMulti(groupId: String, filterSubjects: Seq[String],
-                         maxFilesPerTrigger: Option[Int] = None,
-                         deliveryTrigger: Trigger = trigger,
-                         eventType: String = EventType.All): Unit = {
-    require(!deliveries.contains(groupId), s"delivery for $groupId already running")
-    val q = deliveryStreamMulti(filterSubjects, maxFilesPerTrigger, eventType).writeStream
-      .queryName(s"durable-delivery-$groupId")
-      .outputMode("append")
-      .option("checkpointLocation", s"$ckptRoot/delivery-$groupId")
-      .trigger(deliveryTrigger)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        // Checkpointed batch ids are stable across restarts, so the
-        // chunk seq IS the batch id; a replayed batch whose chunk is
-        // already known (possibly acked) is skipped before the write.
-        deliverGroupBatch(groupId, batchId, batch)
-      }
-      .start()
-    deliveries.put(groupId, q)
-  }
-
-  /** Synchronized with [[stop]]: a last-session close racing the
-    * engine's stop has taken the query out of `deliveries` before
-    * `stop` looks, so `stop` must wait for that query's stop. */
-  def stopDelivery(groupId: String): Unit = synchronized {
-    deliveries.remove(groupId).foreach(_.stop())
-  }
-
-  /** A per-group durable delivery runs while the group has a live
-    * consumer: a session's attach starts it (a group added ahead of any
-    * session, e.g. for [[startMultiplexed]], waits), and its per-group
-    * checkpoint makes every stop/start resume exactly. Groups served by
-    * the multiplexed query need no query of their own. */
-  override protected def onGroupActive(g: StreamGroup): Unit =
-    if (dispatcher.liveSessionCount(g.id) > 0 && !deliveries.contains(g.id)
-        && !deliveries.contains(MuxQuery))
-      startDeliveryMulti(g.id, g.filterSubjects, eventType = g.eventType)
-
-  /** Removed or last session closed: stop the group's own delivery. */
-  override protected def onGroupIdle(groupId: String): Unit = stopDelivery(groupId)
-
-  /** One delivery query for ALL registered groups, reading the log from
-    * a single shared checkpoint ([[ConsumerHost.deliverSharedBatch]],
-    * the bucketed payload write MultiplexedDelivery runs).
-    *
-    * Semantics difference vs per-group mode, by design:
-    *  - per-group [[startDelivery]] owns a fresh checkpoint → a new
-    *    group BACKFILLS the whole log from the beginning;
-    *  - multiplexed groups share the mux checkpoint → a group added
-    *    later sees only batches committed AFTER it registered
-    *    (from-now-on semantics). Pick per need; both are exposed.
+  /** The ONE delivery query for all registered groups, reading the log
+    * from a single shared checkpoint ([[ConsumerHost.deliverSharedBatch]],
+    * the bucketed payload write MultiplexedDelivery runs), with a
+    * joining group's history served first ([[serveHistory]]).
     *
     * Each batch reads at most [[DurableEventLog.MuxFilesPerTrigger]] log
     * files: the shared write collects a batch's matched rows on the
@@ -215,10 +175,11 @@ final class DurableEventLog(session: SparkSession, logDir: String, ckptRoot: Str
     * would fail again on every replay of the same offsets.
     */
   def startMultiplexed(): Unit = synchronized {
-    require(!deliveries.contains(MuxQuery), "multiplexed delivery already running")
+    require(sharedQuery.isEmpty, "multiplexed delivery already running")
+    var served = Map.empty[String, StreamGroup]
     val q = spark.readStream
       .schema(logSchema)
-      .option("maxFilesPerTrigger", DurableEventLog.MuxFilesPerTrigger)
+      .option("maxFilesPerTrigger", MuxFilesPerTrigger)
       .parquet(logDir)
       .writeStream
       .queryName("durable-mux-delivery")
@@ -226,11 +187,89 @@ final class DurableEventLog(session: SparkSession, logDir: String, ckptRoot: Str
       .option("checkpointLocation", s"$ckptRoot/mux")
       .trigger(trigger)
       .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
+        val start = logOffset(batchId - 1)
         // eventIds repeat across incarnations (logSchema scaladoc)
-        deliverSharedBatch(batch, batchId, Seq("resourceId", "eventType", "ts"))
+        deliverSharedBatch(batch, logOffset(batchId) * SeqStride,
+          Seq("resourceId", "eventType", "ts"), { members =>
+            serveHistory(start, members.values.filterNot(g => served.get(g.id).exists(_ eq g)).toSeq)
+            served = members
+          })
       }
       .start()
-    deliveries.put(MuxQuery, q)
+    sharedQuery = Some(q)
+  }
+
+  /** The shared source's log position a query batch read through
+    * (-1 before the first batch). */
+  private def logOffset(batchId: Long): Long =
+    if (batchId < 0) -1L
+    else offsetLog.get(batchId).flatMap(_.offsets.head)
+      .map(o => FileStreamSourceOffset(SerializedOffset(o.json)).logOffset)
+      .getOrElse(sys.error(s"no offsets for shared batch $batchId"))
+
+  /** History for the groups that join with a shared batch whose start
+    * position is `start`: per group, every matching row of the log files
+    * at positions after its coverage point and up to `start`.
+    *
+    * A position's rows for a group, in (eventId, spos, file) order, are
+    * cut into slices of [[HistoryChunkRows]]; slice k of position q owns
+    * seq `q * SeqStride + 1 + k`. Slices at or below the group's coverage
+    * point were served before (a replay, or a restart mid-history) and
+    * are dropped; consecutive one-slice positions then merge into one
+    * chunk while it stays within [[HistoryChunkRows]], and a chunk's seq
+    * is the highest seq it owns. Chunks are recorded in seq order, so
+    * the coverage point always ends on a served slice. */
+  private def serveHistory(start: Long, joining: Seq[StreamGroup]): Unit = {
+    val from = joining.map(g => (g, coverage(g.id))).filter { case (_, c) => firstPosition(c) <= start }
+    if (from.isEmpty) return
+    val entries = sourceLog.get(Some(from.map(p => firstPosition(p._2)).min), Some(start)).toSeq
+      .flatMap { case (pos, es) => es.map(e => (e, pos)) }
+    if (entries.isEmpty) return
+    // a file is keyed by its partition dir + name, both url-encoded as
+    // the source log and `_metadata.file_path` spell them
+    val log = spark.read.schema(logSchema).option("basePath", logDir)
+      .parquet(entries.map(_._1.sparkPath.toPath.toString): _*)
+      .withColumn("file", regexp_extract(col("_metadata.file_path"), FileKey, 0))
+      .join(broadcast(entries.map { case (e, pos) => (FileKey.r.findFirstIn(e.path).get, pos) }
+        .toDF("file", "pos")), "file")
+    val rows = from.map { case (g, c) =>
+      prunedSubjectScan(log, g.filterSubjects)
+        .filter(Subjects.eventTypeMatches(col("eventType"), lit(g.eventType))
+          && col("pos") >= firstPosition(c))
+        .select(lit(g.id).as("groupId"), col("pos"), col("subject"), col("resourceId"),
+          FanOut.seqCol.as("eseq"), col("file"))
+    }.reduce(_ unionByName _)
+      .withColumn("idx", row_number().over(
+        Window.partitionBy("groupId", "pos").orderBy("eseq", "file")) - 1)
+      .withColumn("slice", least(floor(col("idx") / HistoryChunkRows), lit(SeqStride - 2)))
+      .persist()
+    try {
+      val counts = rows.groupBy("groupId", "pos").count().as[(String, Long, Long)].collect()
+        .groupBy(_._1)
+      val chunks = from.flatMap { case (g, c) =>
+        historyChunks(counts.getOrElse(g.id, Array.empty).map(r => (r._2, r._3)).sorted.toSeq, c)
+          .map(ch => (g, ch))
+      }
+      if (chunks.nonEmpty) {
+        val plan = chunks.flatMap { case (g, (seq, _, slices)) =>
+          slices.map { case (pos, slice) => (g.id, pos, slice, seq) }
+        }.toDF("groupId", "pos", "slice", "chunkSeq")
+        table.writeMulti(rows.join(broadcast(plan), Seq("groupId", "pos", "slice"))
+          .select(col("groupId"), concat(col("groupId"), lit("-"), col("chunkSeq")).as("chunkId"),
+            col("subject"), col("resourceId"), (shiftleft(col("pos"), 32) + col("idx")).as("seq")))
+        chunks.foreach { case (g, (seq, n, _)) => recordMember(g, seq, n) }
+      }
+    } finally rows.unpersist()
+  }
+
+  def processAllAvailable(): Unit = {
+    ingestQuery.foreach(_.processAllAvailable())
+    sharedQuery.foreach(_.processAllAvailable())
+  }
+
+  def stop(): Unit = synchronized {
+    sharedQuery.foreach(_.stop()); sharedQuery = None
+    ingestQuery.foreach(_.stop()); ingestQuery = None
   }
 
   // ---- compaction (strategy (c) of the class doc) -------------------
@@ -243,10 +282,10 @@ final class DurableEventLog(session: SparkSession, logDir: String, ckptRoot: Str
     * `_spark_metadata` file-sink log that both batch and streaming
     * readers of `logDir` trust as the authoritative file listing —
     * rewriting data files in place would desynchronize it (compacted
-    * files invisible, removed files still listed). The archive is a
-    * plain partitioned parquet dataset read by BACKFILLING consumers
-    * ([[archiveScan]]); live delivery queries keep reading the log from
-    * their checkpoints and are never disturbed.
+    * files invisible, removed files still listed), and the shared
+    * query's source log names the files a joining group's history
+    * reads. The archive is a plain partitioned parquet dataset for
+    * batch readers ([[archiveScan]]).
     *
     * `filesPerPartition` sizes the rewrite: 1 is right up to a few GB
     * per project; raise it so individual files stay near the HDFS/S3
@@ -259,67 +298,11 @@ final class DurableEventLog(session: SparkSession, logDir: String, ckptRoot: Str
     n
   }
 
-  /** Pruned batch scan of a compacted archive — what a backfilling
-    * consumer reads BEFORE switching to the live log (from-now-on via
-    * the multiplexed query). Same partition-prune + subject predicate
-    * as [[deliveryStream]], so a subtree backfill touches exactly one
-    * partition directory of the archive. */
+  /** Pruned batch scan of a compacted archive: the same partition prune
+    * + subject predicate as a group's history read, so a subtree scan
+    * touches exactly one partition directory of the archive. */
   def archiveScan(archiveDir: String, filterSubject: String): DataFrame =
     prunedSubjectScan(spark.read.schema(logSchema).parquet(archiveDir), Seq(filterSubject))
-
-  /** Serve a group's HISTORY from a compacted archive as ack-able
-    * delivery chunks (the backfill half of the compaction story; the
-    * live half is the from-now-on multiplexed query). Chunks are sliced
-    * `chunkRows` at a time — the batch analog of the 250 ms micro-batch
-    * window — under reserved negative batch ids so they sort before,
-    * and never collide with, live chunks. Idempotent per (groupId,
-    * chunkId): re-running a backfill re-serves nothing already in the
-    * ledger (WAL rules apply — acked stays acked). Returns the number
-    * of chunks created. */
-  def backfillFromArchive(groupId: String, archiveDir: String, filterSubject: String,
-                          chunkRows: Int = 10000): Int = {
-    // Distributed slicing: zipWithIndex assigns contiguous scan-order
-    // indices without a driver materialization (the RDD detour is the
-    // one API that gives contiguous ids; this is a bulk admin path, not
-    // a codegen-hot loop), then one partitioned write ships every
-    // chunk's payload straight from the executors — one write TASK per
-    // backfill chunk (DeliveryTable.writeMulti keys the shuffle on
-    // (groupId, chunkId), so a million-row subtree backfill fans across
-    // its chunks instead of collapsing onto one task; round-12 ADVICE).
-    val base = archiveScan(archiveDir, filterSubject).select("subject", "resourceId")
-    val n = base.count()
-    if (n == 0) return 0
-    val sliced = base.rdd.zipWithIndex.map { case (r, i) =>
-      (s"$groupId-backfill-${i / chunkRows}", r.getString(0), r.getString(1), i)
-    }
-    // the zipWithIndex scan index doubles as the within-chunk delivery
-    // order (`seq`) — content-derived, no monotonically_increasing_id
-    table.writeMulti(spark.createDataFrame(sliced)
-      .toDF("chunkId", "subject", "resourceId", "seq")
-      .withColumn("groupId", lit(groupId)))
-    val nChunks = ((n + chunkRows - 1) / chunkRows).toInt
-    var created = 0
-    (0 until nChunks).foreach { k =>
-      val chunkId = s"$groupId-backfill-$k"
-      // Idempotent per (groupId, chunkId): a re-run backfill re-serves
-      // nothing already in the ledger (WAL rules — acked stays acked,
-      // including acked history compacted into the watermark).
-      if (recordChunk(groupId, chunkId, -(k + 1L),
-          math.min(chunkRows.toLong, n - k.toLong * chunkRows)))
-        created += 1
-    }
-    created
-  }
-
-  def processAllAvailable(): Unit = {
-    ingestQuery.foreach(_.processAllAvailable())
-    deliveries.values.foreach(_.processAllAvailable())
-  }
-
-  def stop(): Unit = synchronized {
-    deliveries.values.foreach(_.stop()); deliveries.clear()
-    ingestQuery.foreach(_.stop()); ingestQuery = None
-  }
 }
 
 object DurableEventLog {
@@ -329,4 +312,43 @@ object DurableEventLog {
     * micro-batches' rows of one project each, and the shared query
     * keeps up while fewer projects than this are touched per trigger. */
   val MuxFilesPerTrigger = 128
+
+  /** Chunk seqs per log position: the live chunk of a batch ending at
+    * position e is `e * SeqStride`; history slices of position q take
+    * `q * SeqStride + 1 …`, below the next position's live seq. */
+  val SeqStride: Long = 1000000L
+
+  /** Most rows in one history chunk. */
+  val HistoryChunkRows = 10000
+
+  /** The last two segments of a log file's path. */
+  private val FileKey = "[^/]+/[^/]+$"
+
+  /** First log position a group with coverage point `c` has not been
+    * served in full: a live seq covers its position, a history slice
+    * may leave the rest of its position to serve. */
+  private def firstPosition(c: Long): Long =
+    if (c == Long.MinValue) 0L
+    else if (Math.floorMod(c, SeqStride) == 0L) Math.floorDiv(c, SeqStride) + 1
+    else Math.floorDiv(c, SeqStride)
+
+  /** One group's history chunks from its per-position row counts
+    * `(pos, rows)` (ascending) and coverage point `c`: each
+    * `(seq, rows, (pos, slice) members)`, in seq order (see
+    * [[DurableEventLog.serveHistory]]). */
+  private[streaming] def historyChunks(counts: Seq[(Long, Long)],
+                                       c: Long): Seq[(Long, Long, Seq[(Long, Long)])] = {
+    // (pos, slice, rows, whole position) of every slice not yet served
+    val slices = counts.flatMap { case (pos, n) =>
+      val k = math.min((n + HistoryChunkRows - 1) / HistoryChunkRows, SeqStride - 1)
+      (0L until k).map(i => (pos, i, if (i < k - 1) HistoryChunkRows.toLong else n - i * HistoryChunkRows, k == 1))
+    }.filter { case (pos, i, _, _) => pos * SeqStride + 1 + i > c }
+    slices.foldLeft(Vector.empty[Vector[(Long, Long, Long, Boolean)]]) { (chunks, s) =>
+      chunks.lastOption match {
+        case Some(open) if s._4 && open.forall(_._4) && open.map(_._3).sum + s._3 <= HistoryChunkRows =>
+          chunks.init :+ (open :+ s)
+        case _ => chunks :+ Vector(s)
+      }
+    }.map(ch => (ch.last._1 * SeqStride + 1 + ch.last._2, ch.map(_._3).sum, ch.map(s => (s._1, s._2))))
+  }
 }

@@ -16,9 +16,9 @@ import graft.core._
   *    the session answers with whatever is pending (the pull analog of
   *    the reference's push loop — micro-batch delivery fills the
   *    ledger, the session drains it);
-  *  - `close` releases the session; when it was the group's last one
-  *    the engine may stop that group's own delivery, keeping its state
-  *    so a new session can re-attach and resume (:321-345);
+  *  - `close` releases the session; the group keeps its position and
+  *    keeps receiving chunks, so a new session can re-attach and resume
+  *    (:321-345);
   *  - failures inside an established session surface as
   *    [[EventSession.SessionError]] values on the outbound stream — the
   *    reference's error CHANNEL feeding the output loop (:325,395-401)
@@ -46,23 +46,10 @@ final class EventSession(engine: ConsumerHost,
       if (groupId.isDefined)
         Seq(SessionError("session already initialized"))
       else {
-        // register liveness BEFORE the attach so a concurrent last-
-        // session Close on this group observes a nonzero count and
-        // does not stop the delivery this init is about to rely on;
-        // if the attach then fails (unknown group / denied caller) the
-        // registration rolls back, releasing the group if we were the
-        // only registrant (close/onLastSessionClosed are idempotent).
+        // pre-session failures throw — the reference returns a status
+        // before any output stream exists (:249-270, :273-301)
+        engine.attach(id, token)
         engine.dispatcher.openSession(id, sessionId)
-        try {
-          // pre-session failures throw — the reference returns a status
-          // before any output stream exists (:249-270, :273-301)
-          engine.attach(id, token)
-        } catch {
-          case e: Throwable =>
-            if (engine.closeSession(id, sessionId) == 0)
-              engine.onLastSessionClosed(id)
-            throw e
-        }
         groupId = Some(id)
         pendingNotifications(id)
       }
@@ -88,15 +75,10 @@ final class EventSession(engine: ConsumerHost,
         throw new IllegalStateException(
           "an init message needs to be send before close")
       case Some(id) =>
-        // release per-group resources only when this was the LAST live
-        // session — with competing consumers the delivery keeps serving
-        // the survivors (each reference bidi stream is one client of a
-        // shared JetStream consumer); the remaining-count decision is
-        // made inside the dispatcher's lock so concurrent closes elect
-        // exactly one releaser; what "release" means is the engine's call
-        // (per-group deliveries stop, the shared query keeps running)
-        if (engine.closeSession(id, sessionId) == 0)
-          engine.onLastSessionClosed(id)
+        // the session's flights fail over to the survivors; the group
+        // keeps receiving chunks (each reference bidi stream is one
+        // client of a shared JetStream consumer, :321-345)
+        engine.closeSession(id, sessionId)
         groupId = None
         Seq.empty
     }

@@ -14,8 +14,9 @@ import graft.core._
   * group over it would lose the batches another group's query already
   * committed, and die on a commit below them. The Structured Streaming
   * paper's model is the same — one query per replayable offset log. A
-  * per-group full-history backfill reads the durable log instead
-  * ([[DurableEventLog.startDelivery]]).
+  * group that needs its full history uses the durable log instead,
+  * whose shared query serves a joining group's history from the log
+  * ([[DurableEventLog]]).
   *
   * Each micro-batch is joined once against the current subscription
   * snapshot ([[ConsumerHost.deliverSharedBatch]]): a hash equi-join on

@@ -33,11 +33,16 @@ class DeliveryTableSpec extends AnyFunSuite with BeforeAndAfterAll {
     rows.toDF("subject", "resourceId")
   }
 
+  /** One chunk in the per-group layout, through the history writer. */
+  private def writeChunk(t: DeliveryTable, groupId: String, chunkId: String,
+                         rows: Seq[(String, String)]): Unit =
+    t.writeMulti(payload(rows).withColumn("groupId", lit(groupId)).withColumn("chunkId", lit(chunkId)))
+
   test("write/read round-trips payloads per chunk, in delivery order") {
     val t = new DeliveryTable(spark, DeliveryTable.tempDir())
-    t.writeCounted("g1", "g1-0", payload(Seq(("s1", "r1"), ("s2", "r2"))))
-    t.writeCounted("g1", "g1-1", payload(Seq(("s3", "r3"))))
-    t.writeCounted("g2", "g2-0", payload(Seq(("sX", "rX"))))
+    writeChunk(t, "g1", "g1-0", Seq(("s1", "r1"), ("s2", "r2")))
+    writeChunk(t, "g1", "g1-1", Seq(("s3", "r3")))
+    writeChunk(t, "g2", "g2-0", Seq(("sX", "rX")))
     val got = t.readChunks("g1", perGroup("g1-0", "g1-1"))
     assert(got.keySet == Set("g1-0", "g1-1"))
     assert(got("g1-0") == (Seq("s1", "s2"), Seq("r1", "r2")))
@@ -48,10 +53,10 @@ class DeliveryTableSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("replayed write overwrites its own partitions — no duplication, others untouched") {
     val t = new DeliveryTable(spark, DeliveryTable.tempDir())
-    t.writeCounted("g", "g-0", payload(Seq(("s1", "r1"), ("s2", "r2"))))
-    t.writeCounted("g", "g-1", payload(Seq(("s3", "r3"))))
+    writeChunk(t, "g", "g-0", Seq(("s1", "r1"), ("s2", "r2")))
+    writeChunk(t, "g", "g-1", Seq(("s3", "r3")))
     // foreachBatch replay after a crash re-runs batch 0 with identical rows
-    t.writeCounted("g", "g-0", payload(Seq(("s1", "r1"), ("s2", "r2"))))
+    writeChunk(t, "g", "g-0", Seq(("s1", "r1"), ("s2", "r2")))
     val got = t.readChunks("g", perGroup("g-0", "g-1"))
     assert(got("g-0") == (Seq("s1", "s2"), Seq("r1", "r2")),
       "replay must rewrite, not append duplicates")
@@ -61,8 +66,8 @@ class DeliveryTableSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("read touches only the requested group's chunk dirs: a concurrently-dropped sibling group never fails a pull") {
     val t = new DeliveryTable(spark, DeliveryTable.tempDir())
-    t.writeCounted("keep", "keep-0", payload(Seq(("s1", "r1"))))
-    t.writeCounted("gone", "gone-0", payload(Seq(("s2", "r2"))))
+    writeChunk(t, "keep", "keep-0", Seq(("s1", "r1")))
+    writeChunk(t, "gone", "gone-0", Seq(("s2", "r2")))
     // churn: the sibling group is removed between this consumer's pull
     // planning and execution — its dir vanishing must be invisible here
     t.drop("gone")
@@ -72,7 +77,7 @@ class DeliveryTableSpec extends AnyFunSuite with BeforeAndAfterAll {
     // a failed job (the churn-tolerance contract of the direct-path read)
     assert(t.readChunks("gone", perGroup("gone-0")).isEmpty)
     // mixed list: present chunk hydrates, dropped chunk is skipped
-    t.writeCounted("keep", "keep-1", payload(Seq(("s3", "r3"))))
+    writeChunk(t, "keep", "keep-1", Seq(("s3", "r3")))
     t.drop("gone")
     assert(t.readChunks("keep", perGroup("keep-0", "gone-0", "keep-1")).keySet ==
       Set("keep-0", "keep-1"))
@@ -81,8 +86,8 @@ class DeliveryTableSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("read of an empty table / unknown chunks is empty; drop removes a group only") {
     val t = new DeliveryTable(spark, DeliveryTable.tempDir())
     assert(t.readChunks("g", perGroup("g-0")).isEmpty, "missing dir reads empty")
-    t.writeCounted("g", "g-0", payload(Seq(("s1", "r1"))))
-    t.writeCounted("h", "h-0", payload(Seq(("s2", "r2"))))
+    writeChunk(t, "g", "g-0", Seq(("s1", "r1")))
+    writeChunk(t, "h", "h-0", Seq(("s2", "r2")))
     assert(t.readChunks("g", perGroup("nope")).isEmpty)
     t.drop("g")
     assert(t.readChunks("g", perGroup("g-0")).isEmpty, "dropped group reads empty")
@@ -98,7 +103,7 @@ class DeliveryTableSpec extends AnyFunSuite with BeforeAndAfterAll {
     val t = new DeliveryTable(spark, DeliveryTable.tempDir())
     val g = "team a:b%c=d#e"
     val c = "chunk 0:1%2=3"
-    assert(t.writeCounted(g, c, payload(Seq(("s1", "r1"), ("s2", "r2")))) == 2L)
+    writeChunk(t, g, c, Seq(("s1", "r1"), ("s2", "r2")))
     assert(t.readChunks(g, perGroup(c)) == Map(c -> ((Seq("s1", "s2"), Seq("r1", "r2")))),
       "escaped partition dirs must hydrate under the raw ids")
     assert(t.listChunks(g) == Seq(c), "listChunks must UNescape dir names")
@@ -119,16 +124,14 @@ class DeliveryTableSpec extends AnyFunSuite with BeforeAndAfterAll {
     val t = new DeliveryTable(spark, dir)
     val rows = (0 until 200).map(i => (f"s$i%03d", f"r$i%03d"))
     spark.conf.set("spark.sql.files.maxRecordsPerFile", "50")
-    val counts = try t.writeCounted("g", "g-0", payload(rows))
-      finally spark.conf.unset("spark.sql.files.maxRecordsPerFile")
+    try writeChunk(t, "g", "g-0", rows)
+    finally spark.conf.unset("spark.sql.files.maxRecordsPerFile")
     val files = new java.io.File(s"$dir/groupId=g/chunkId=g-0")
       .listFiles().count(_.getName.endsWith(".parquet"))
     assert(files > 1, s"test wiring: expected a multi-file chunk, got $files")
     assert(t.readChunks("g", perGroup("g-0")) ==
       Map("g-0" -> ((rows.map(_._1), rows.map(_._2)))),
       "delivery order must survive the multi-file split")
-    assert(counts == 200L,
-      "observed counts must sum across a chunk's files")
   }
 
   test("multi-group batch write serves every group in one pass") {
@@ -234,7 +237,7 @@ class DeliveryTableSpec extends AnyFunSuite with BeforeAndAfterAll {
     // hold chunks in both (e.g. per-group chunks an older shared query
     // wrote, still pending after an upgrade).
     val t = new DeliveryTable(spark, DeliveryTable.tempDir())
-    t.writeCounted("g3", "g3-0", payload(Seq(("sA", "rA"))))            // per-group
+    writeChunk(t, "g3", "g3-0", Seq(("sA", "rA")))            // per-group
     t.writeBucketed(groupBatch(groups = 8, rowsPerGroup = 2, seq = 1), 1L, 4) // bucketed
     val got = t.readChunks("g3", Seq(("g3-0", 0L), ("g3-1", 1L)))
     assert(got.keySet == Set("g3-0", "g3-1"))
@@ -276,17 +279,17 @@ class DeliveryTableSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(new java.io.File(s"$dir/batches/batch=2").exists)
   }
 
-  test("writeCounted sizes the file split to the batch and returns the ledger count") {
+  test("writeMulti writes a small chunk as one file and an empty write as no dir") {
     val dir = DeliveryTable.tempDir()
     val t = new DeliveryTable(spark, dir)
-    // steady-state small batch: ONE file, not shuffle-partitions many
-    assert(t.writeCounted("g", "g-0", payload(Seq(("s1", "r1"), ("s2", "r2")))) == 2L)
+    // a small chunk: ONE file, not shuffle-partitions many
+    writeChunk(t, "g", "g-0", Seq(("s1", "r1"), ("s2", "r2")))
     val files = new java.io.File(s"$dir/groupId=g/chunkId=g-0")
       .listFiles().count(_.getName.endsWith(".parquet"))
-    assert(files == 1, s"a 2-row micro-batch must write one file, got $files")
+    assert(files == 1, s"a 2-row chunk must write one file, got $files")
     assert(t.readChunks("g", perGroup("g-0")) == Map("g-0" -> ((Seq("s1", "s2"), Seq("r1", "r2")))))
-    // empty batch: no write, no partition dir, count 0
-    assert(t.writeCounted("g", "g-1", payload(Seq.empty)) == 0L)
+    // empty write: no partition dir
+    writeChunk(t, "g", "g-1", Seq.empty)
     assert(!new java.io.File(s"$dir/groupId=g/chunkId=g-1").exists)
   }
 
@@ -335,8 +338,8 @@ class DeliveryTableSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("a data file deleted between listing and open reads as absent, not as an error") {
     val dir = DeliveryTable.tempDir()
     val t = new DeliveryTable(spark, dir)
-    t.writeCounted("g", "g-0", payload(Seq(("s1", "r1"))))
-    t.writeCounted("g", "g-1", payload(Seq(("s2", "r2"))))
+    writeChunk(t, "g", "g-0", Seq(("s1", "r1")))
+    writeChunk(t, "g", "g-1", Seq(("s2", "r2")))
     val got = withAfterList { (listed, entries) =>
       if (listed.getName == "chunkId=g-0")
         entries.filter(_.getPath.getName.endsWith(".parquet"))

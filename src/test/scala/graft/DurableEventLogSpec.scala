@@ -7,11 +7,13 @@ import org.scalatest.BeforeAndAfterAll
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
 import graft.core._
-import graft.streaming.DurableEventLog
+import graft.streaming.{DurableEventLog, EventSession}
 
-/** Durable log semantics: partition pruning for subtree subscriptions,
-  * checkpointed restart without batch reprocessing, and at-least-once
-  * ack state across the restart. */
+/** Durable log semantics: two streaming queries whatever the group
+  * count, a joining group's full history then live delivery (exact
+  * across the join seam, restarts and re-creates), partition pruning
+  * for subtree scans, checkpointed restart without batch reprocessing,
+  * and at-least-once ack state across the restart. */
 class DurableEventLogSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private lazy val spark = SparkSession.builder()
@@ -26,27 +28,35 @@ class DurableEventLogSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private def tmp(): String = Files.createTempDirectory("graft-log").toString
 
+  private def addP1(log: DurableEventLog, g: String): Unit = {
+    log.addGroup(g, ResourceType.Project, "p1", Hierarchy(projectId = "p1"), true); ()
+  }
+
+  private def emitC(log: DurableEventLog, id: String, project: String = "p1"): Unit =
+    log.emit(ResourceType.Collection, EventType.All, id, RelationCtx(project = project))
+
   test("delivery restart resumes after the committed batch; unacked chunks survive") {
     val (logDir, ckpt) = (tmp(), tmp())
+    val log1 = new DurableEventLog(spark, logDir, ckpt)
+    val first = try {
+      log1.startIngest()
+      log1.startMultiplexed()
+      addP1(log1, "g")
+      log1.emit(ResourceType.Project, EventType.All, "p1", RelationCtx())
+      log1.processAllAvailable()
+      val first = log1.pendingChunks("g")
+      assert(first.map(_.resourceIds).flatten == Seq("p1"))
+      first
+    } finally log1.stop()
+
+    // restart from the same dirs; the group re-registers and only the
+    // NEW event is processed
     val log = new DurableEventLog(spark, logDir, ckpt)
     try {
       log.startIngest()
-      log.emit(ResourceType.Project, EventType.All, "p1", RelationCtx())
-      log.processAllAvailable()
-
-      val filter = graft.core.Subjects.projectQuery("p1", includeSub = true)
-      log.startDelivery("g", filter)
-      log.processAllAvailable()
-      val first = log.pendingChunks("g")
-      assert(first.map(_.resourceIds).flatten == Seq("p1"))
-
-      // stop the consumer; more events land in the log meanwhile
-      log.stopDelivery("g")
-      log.emit(ResourceType.Collection, EventType.All, "c1", RelationCtx(project = "p1"))
-      log.processAllAvailable()
-
-      // restart from the same checkpoint: only the NEW event is processed
-      log.startDelivery("g", filter)
+      addP1(log, "g")
+      log.startMultiplexed()
+      emitC(log, "c1")
       log.processAllAvailable()
       val after = log.pendingChunks("g")
       val deliveredIds = after.flatMap(_.resourceIds)
@@ -58,12 +68,12 @@ class DurableEventLogSpec extends AnyFunSuite with BeforeAndAfterAll {
     } finally log.stop()
   }
 
-  test("multiplexed durable delivery: one checkpointed query, restart resumes, from-now-on groups") {
+  test("shared durable query: restart resumes; a late group gets its history") {
     val (logDir, ckpt) = (tmp(), tmp())
     val log = new DurableEventLog(spark, logDir, ckpt)
     try {
       log.startIngest()
-      log.addGroup("g1", ResourceType.Project, "p1", Hierarchy(projectId = "p1"), true)
+      addP1(log, "g1")
       log.startMultiplexed()
       log.emit(ResourceType.Project, EventType.All, "p1", RelationCtx())
       log.emit(ResourceType.Project, EventType.All, "p2", RelationCtx())
@@ -71,22 +81,154 @@ class DurableEventLogSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(log.pendingChunks("g1").flatMap(_.resourceIds) == Seq("p1"))
       assert(log.pendingChunks("g2").isEmpty)
 
-      // group added later shares the mux checkpoint: from-now-on semantics
+      // a group added later gets its full history first, then live
       log.addGroup("g2", ResourceType.Project, "p2", Hierarchy(projectId = "p2"), true)
-      log.emit(ResourceType.Collection, EventType.All, "c2", RelationCtx(project = "p2"))
+      emitC(log, "c2", "p2")
       log.processAllAvailable()
-      assert(log.pendingChunks("g2").flatMap(_.resourceIds) == Seq("c2"),
-        "late mux group must not see pre-registration batches")
-
-      // restart the mux query from its checkpoint: nothing re-delivered
-      log.stopDelivery("__mux__")
-      log.emit(ResourceType.Project, EventType.All, "p1", RelationCtx())
-      log.processAllAvailable()
-      log.startMultiplexed()
-      log.processAllAvailable()
-      val g1 = log.pendingChunks("g1").flatMap(_.resourceIds)
-      assert(g1.sorted == Seq("p1", "p1"), s"one original + one post-restart, no dups: $g1")
+      val g2 = log.pendingChunks("g2")
+      assert(g2.flatMap(_.resourceIds) == Seq("p2", "c2"),
+        s"a late durable group gets its history, then live: $g2")
+      assert(g2.map(_.batchId) == g2.map(_.batchId).sorted.distinct)
     } finally log.stop()
+
+    // restart over the same dirs: nothing re-delivered
+    val log2 = new DurableEventLog(spark, logDir, ckpt)
+    try {
+      log2.startIngest()
+      addP1(log2, "g1")
+      log2.emit(ResourceType.Project, EventType.All, "p1", RelationCtx())
+      log2.processAllAvailable()
+      log2.startMultiplexed()
+      log2.processAllAvailable()
+      val g1 = log2.pendingChunks("g1").flatMap(_.resourceIds)
+      assert(g1.sorted == Seq("p1", "p1"), s"one original + one post-restart, no dups: $g1")
+    } finally log2.stop()
+  }
+
+  test("a durable log with three groups and live sessions runs two streaming queries") {
+    val (logDir, ckpt) = (tmp(), tmp())
+    val log = new DurableEventLog(spark, logDir, ckpt)
+    try {
+      log.startIngest()
+      log.startMultiplexed()
+      val groups = Seq("q1" -> "p1", "q2" -> "p2", "q3" -> "p3")
+      groups.foreach { case (g, p) =>
+        log.addGroup(g, ResourceType.Project, p, Hierarchy(projectId = p), true)
+        new EventSession(log).handle(EventSession.Init(g))
+      }
+      groups.foreach { case (_, p) => emitC(log, s"c-$p", p) }
+      log.processAllAvailable()
+      groups.foreach { case (g, p) =>
+        assert(log.pendingChunks(g).flatMap(_.resourceIds) == Seq(s"c-$p"), g)
+      }
+      assert(spark.streams.active.map(_.name).toSet == Set("event-log-ingest", "durable-mux-delivery"),
+        s"queries: ${spark.streams.active.map(_.name).toSeq}")
+    } finally log.stop()
+  }
+
+  test("join seam: history read before registration, then the unread batch, each event once") {
+    // batch A is read by the shared query before the group registers;
+    // batch B is committed to the log but not yet read at registration
+    val (logDir, ckpt) = (tmp(), tmp())
+    val log1 = new DurableEventLog(spark, logDir, ckpt)
+    try {
+      log1.startIngest()
+      log1.startMultiplexed()
+      emitC(log1, "a1"); emitC(log1, "a2")
+      log1.processAllAvailable()
+    } finally log1.stop()
+    val log2 = new DurableEventLog(spark, logDir, ckpt)
+    try {
+      log2.startIngest()
+      emitC(log2, "b1")
+      log2.processAllAvailable() // ingest only: B is in the log, unread
+      addP1(log2, "g")
+      log2.startMultiplexed()
+      log2.processAllAvailable()
+      emitC(log2, "c1")
+      log2.processAllAvailable()
+      val chunks = log2.pendingChunks("g")
+      assert(chunks.flatMap(_.resourceIds) == Seq("a1", "a2", "b1", "c1"),
+        s"every matching event exactly once, history first: ${chunks.map(c => c.chunkId -> c.resourceIds)}")
+      assert(chunks.head.resourceIds == Seq("a1", "a2"), "A arrives as one history chunk")
+      assert(chunks.map(_.batchId) == chunks.map(_.batchId).sorted.distinct, "chunk seqs ascend")
+    } finally log2.stop()
+  }
+
+  test("a long history arrives in bounded chunks, oldest first") {
+    val (logDir, ckpt) = (tmp(), tmp())
+    val log = new DurableEventLog(spark, logDir, ckpt)
+    val n = DurableEventLog.HistoryChunkRows + 5
+    try {
+      log.startIngest()
+      log.startMultiplexed()
+      // one ingest batch larger than a chunk, then two one-event batches
+      log.emitAll((0 until n).map(i => Event(ResourceType.Collection, EventType.All, f"b$i%05d",
+        RelationCtx(project = "p1"), new java.sql.Timestamp(0L))))
+      log.processAllAvailable()
+      Seq("s1", "s2").foreach { id => emitC(log, id); log.processAllAvailable() }
+      addP1(log, "g")
+      emitC(log, "flush", "p9") // the next shared batch serves the history
+      log.processAllAvailable()
+      val session = log.openSession("g")
+      val pulled = log.pull("g", session)
+      assert(pulled.map(_.resourceIds.size) == Seq(DurableEventLog.HistoryChunkRows, 5, 2),
+        s"bounded slices of the big batch, then the small batches merged: ${pulled.map(_.resourceIds.size)}")
+      assert(pulled.flatMap(_.resourceIds) == (0 until n).map(i => f"b$i%05d") ++ Seq("s1", "s2"),
+        "history pulls oldest first, each event once")
+      pulled.foreach(c => assert(log.ack("g", c.chunkId)))
+    } finally log.stop()
+
+    // the group's coverage point is now a history slice (s1 + s2's
+    // chunk); after a restart it re-registers once s3 was read without
+    // it, and gets s3 alone: the served part of that position is dropped
+    // before the rest merges into a chunk
+    val log2 = new DurableEventLog(spark, logDir, ckpt)
+    try {
+      log2.startIngest()
+      log2.startMultiplexed()
+      emitC(log2, "s3")
+      log2.processAllAvailable()
+      addP1(log2, "g")
+      emitC(log2, "flush2", "p9")
+      log2.processAllAvailable()
+      assert(log2.pendingChunks("g").flatMap(_.resourceIds) == Seq("s3"))
+    } finally log2.stop()
+  }
+
+  test("a group re-registered after a restart gets every event it missed") {
+    // g acks its live chunk, h leaves it pending; both are re-registered
+    // after the restarted engine's shared query has read two batches
+    // without them
+    val (logDir, ckpt) = (tmp(), tmp())
+    val log1 = new DurableEventLog(spark, logDir, ckpt)
+    val (acked, kept) = try {
+      log1.startIngest()
+      log1.startMultiplexed()
+      addP1(log1, "g"); addP1(log1, "h")
+      emitC(log1, "x1")
+      log1.processAllAvailable()
+      val acked = log1.pendingChunks("g").map(_.chunkId)
+      assert(acked.size == 1 && log1.ack("g", acked.head))
+      (acked.head, log1.pendingChunks("h").map(_.chunkId))
+    } finally log1.stop()
+    val log2 = new DurableEventLog(spark, logDir, ckpt)
+    try {
+      log2.startIngest()
+      log2.startMultiplexed()
+      Seq("m1", "m2").foreach { id => emitC(log2, id); log2.processAllAvailable() }
+      addP1(log2, "g"); addP1(log2, "h")
+      emitC(log2, "m3")
+      log2.processAllAvailable()
+      val g = log2.pendingChunks("g")
+      assert(g.flatMap(_.resourceIds) == Seq("m1", "m2", "m3"),
+        s"g gets what it missed and nothing it acked: ${g.map(c => c.chunkId -> c.resourceIds)}")
+      assert(!g.map(_.chunkId).contains(acked), "an acked chunk id is never minted again")
+      val h = log2.pendingChunks("h")
+      assert(h.flatMap(_.resourceIds) == Seq("x1", "m1", "m2", "m3"),
+        s"h keeps its pending chunk and gets what it missed: ${h.map(c => c.chunkId -> c.resourceIds)}")
+      assert(h.map(_.chunkId).take(1) == kept && h.map(_.chunkId).distinct.size == h.size)
+    } finally log2.stop()
   }
 
   test("durable mux drains a backlog of more log files than one batch reads, in bounded batches") {
@@ -161,32 +303,30 @@ class DurableEventLogSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("removeGroup stops the group's delivery and drops its state; a same-id re-create starts empty") {
     val (logDir, ckpt) = (tmp(), tmp())
     val log = new DurableEventLog(spark, logDir, ckpt)
-    def deliveryActive = spark.streams.active.exists(_.name == "durable-delivery-g")
     try {
       log.startIngest()
-      log.addGroup("g", ResourceType.Project, "p1", Hierarchy(projectId = "p1"), true)
-      // a session's attach starts the group's checkpointed delivery
-      val session = new graft.streaming.EventSession(log)
-      session.handle(graft.streaming.EventSession.Init("g"))
+      log.startMultiplexed()
+      addP1(log, "g")
+      new EventSession(log).handle(EventSession.Init("g"))
       log.emit(ResourceType.Project, EventType.All, "p1", RelationCtx())
       log.processAllAvailable()
-      assert(deliveryActive)
       assert(log.pendingChunks("g").flatMap(_.resourceIds) == Seq("p1"))
 
       val removedIds = log.deliveredChunks("g").map(_.chunkId)
       log.removeGroup("g")
-      log.emit(ResourceType.Collection, EventType.All, "c1", RelationCtx(project = "p1"))
+      emitC(log, "c1")
       log.processAllAvailable()
-      assert(!deliveryActive, "a removed group's delivery query must stop")
-      log.addGroup("g", ResourceType.Project, "p1", Hierarchy(projectId = "p1"), true)
+      assert(log.pendingChunks("g").isEmpty && log.deliveredChunks("g").isEmpty,
+        "after removeGroup, emits produce no chunk")
+      addP1(log, "g")
       assert(log.pendingChunks("g").isEmpty && log.deliveredChunks("g").isEmpty,
         "a re-created group must not re-serve the removed group's chunks")
 
-      // the kept `delivery-g` checkpoint: an attach resumes after the
-      // removed group's last batch — only events emitted since arrive,
-      // under chunk ids the removed group never used
-      new graft.streaming.EventSession(log).handle(graft.streaming.EventSession.Init("g"))
-      log.emit(ResourceType.Collection, EventType.All, "c2", RelationCtx(project = "p1"))
+      // the drop floor is the re-created group's coverage point: only
+      // events logged since the removal arrive, under chunk ids the
+      // removed group never used
+      new EventSession(log).handle(EventSession.Init("g"))
+      emitC(log, "c2")
       log.processAllAvailable()
       val resumed = log.pendingChunks("g")
       assert(resumed.flatMap(_.resourceIds).sorted == Seq("c1", "c2"),
@@ -196,23 +336,49 @@ class DurableEventLogSpec extends AnyFunSuite with BeforeAndAfterAll {
     } finally log.stop()
   }
 
+  test("a removal before a restarted engine's first shared batch floors at what the log was read to") {
+    // the last read batch matched no group, so the highest chunk seq is
+    // below the read position; a same-id re-create on another project
+    // must still not get the pre-removal event as history
+    val (logDir, ckpt) = (tmp(), tmp())
+    val log1 = new DurableEventLog(spark, logDir, ckpt)
+    try {
+      log1.startIngest()
+      log1.startMultiplexed()
+      addP1(log1, "g")
+      emitC(log1, "c1")
+      log1.processAllAvailable()
+      emitC(log1, "old9", "p9")
+      log1.processAllAvailable()
+    } finally log1.stop()
+    val log2 = new DurableEventLog(spark, logDir, ckpt)
+    try {
+      log2.removeGroup("g")
+      log2.addGroup("g", ResourceType.Project, "p9", Hierarchy(projectId = "p9"), true)
+      log2.startIngest()
+      log2.startMultiplexed()
+      emitC(log2, "new9", "p9")
+      log2.processAllAvailable()
+      assert(log2.pendingChunks("g").flatMap(_.resourceIds) == Seq("new9"))
+    } finally log2.stop()
+  }
+
   test("WAL ledger: pending chunks and acks survive an engine restart") {
     val (logDir, ckpt) = (tmp(), tmp())
     val log1 = new DurableEventLog(spark, logDir, ckpt)
     try {
       log1.startIngest()
       log1.emit(ResourceType.Project, EventType.All, "p1", RelationCtx())
-      log1.emit(ResourceType.Collection, EventType.All, "c1", RelationCtx(project = "p1"))
+      emitC(log1, "c1")
       log1.processAllAvailable()
-      val filter = graft.core.Subjects.projectQuery("p1", includeSub = true)
-      log1.startDelivery("g", filter)
+      addP1(log1, "g")
+      log1.startMultiplexed()
       log1.processAllAvailable()
       val chunks = log1.pendingChunks("g")
       assert(chunks.size == 1 && chunks.head.resourceIds.toSet == Set("p1", "c1"))
-      assert(log1.ack("g", chunks.head.chunkId) || true) // ack nothing yet — keep pending
     } finally log1.stop()
 
-    // "restart": a brand-new engine over the same dirs. The delivery
+    // "restart": a brand-new engine over the same dirs. The shared
     // checkpoint has committed the batch, so WITHOUT the WAL the chunk
     // would be unrecoverable; the ledger replay must restore it.
     val log2 = new DurableEventLog(spark, logDir, ckpt)
@@ -230,9 +396,9 @@ class DurableEventLogSpec extends AnyFunSuite with BeforeAndAfterAll {
       ackWaitMillis = 1000L, clock = () => now)
     val chunkId = try {
       log1.startIngest()
+      log1.startMultiplexed()
+      addP1(log1, "g")
       log1.emit(ResourceType.Project, EventType.All, "p1", RelationCtx())
-      log1.processAllAvailable()
-      log1.startDelivery("g", graft.core.Subjects.projectQuery("p1", includeSub = true))
       log1.processAllAvailable()
       val s1 = log1.dispatcher.newSessionId()
       val s2 = log1.dispatcher.newSessionId()
@@ -304,21 +470,23 @@ class DurableEventLogSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("delivery filter validation: wildcard project skips pruning; short filters rejected") {
-    val (logDir, ckpt) = (tmp(), tmp())
+    val (logDir, ckpt, archive) = (tmp(), tmp(), tmp() + "/archive")
     val log = new DurableEventLog(spark, logDir, ckpt)
     try {
       log.startIngest()
       log.emit(ResourceType.Project, EventType.All, "p1", RelationCtx())
       log.emit(ResourceType.Project, EventType.All, "p2", RelationCtx())
       log.processAllAvailable()
+      log.compactTo(archive)
+      intercept[IllegalArgumentException] { log.archiveScan(archive, "UPDATES.STORAGE._") }
       // a general NATS filter with '*' in the project position must fall
-      // back to the full-log scan (round 1 delivered NOTHING: the plan
+      // back to the full scan (round 1 delivered NOTHING: the plan
       // filtered project === "*").
-      intercept[IllegalArgumentException] { log.deliveryStream("UPDATES.STORAGE._") }
-      log.startDelivery("gstar", "UPDATES.STORAGE._.*.>")
-      log.processAllAvailable()
-      val got = log.pendingChunks("gstar").flatMap(_.resourceIds).sorted
+      val star = log.archiveScan(archive, "UPDATES.STORAGE._.*.>")
+      val got = star.select("resourceId").collect().map(_.getString(0)).sorted.toSeq
       assert(got == Seq("p1", "p2"), s"wildcard-project filter must match all projects: $got")
+      assert(star.queryExecution.executedPlan.toString.contains("PartitionFilters: []"),
+        "a wildcard project must not prune partitions")
     } finally log.stop()
   }
 
@@ -329,8 +497,8 @@ class DurableEventLogSpec extends AnyFunSuite with BeforeAndAfterAll {
       log.startIngest()
       // several micro-batches → several small files per partition
       (1 to 4).foreach { i =>
-        log.emit(ResourceType.Collection, EventType.All, s"c$i", RelationCtx(project = "p1"))
-        log.emit(ResourceType.Collection, EventType.All, s"d$i", RelationCtx(project = "p2"))
+        emitC(log, s"c$i")
+        emitC(log, s"d$i", "p2")
         log.processAllAvailable()
       }
       def parquets(dir: String): Int = {
@@ -344,54 +512,15 @@ class DurableEventLogSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(parquets(s"$archive/project=p1") == 1 && parquets(s"$archive/project=p2") == 1,
         "compaction must leave one file per project partition")
 
-      // backfill: the pruned archive scan sees exactly the subtree's rows,
-      // and the plan prunes to the one partition directory
+      // the pruned archive scan sees exactly the subtree's rows, and the
+      // plan prunes to the one partition directory
       val filter = graft.core.Subjects.projectQuery("p1", includeSub = true)
       val scan = log.archiveScan(archive, filter)
       assert(scan.select("resourceId").collect().map(_.getString(0)).sorted.toSeq
         == Seq("c1", "c2", "c3", "c4"))
       val plan = scan.queryExecution.executedPlan.toString
       assert(plan.contains("PartitionFilters") && plan.contains("p1"),
-        s"archive backfill must prune to the project partition:\n${plan.take(1200)}")
-
-      // backfill delivery: history arrives as ack-able chunks (sliced),
-      // idempotent on re-run, and live chunk ids are never touched
-      val n = log.backfillFromArchive("bf", archive, filter, chunkRows = 3)
-      assert(n == 2, s"4 rows at 3/chunk = 2 chunks, got $n")
-      val pend = log.pendingChunks("bf")
-      assert(pend.flatMap(_.resourceIds).sorted == Seq("c1", "c2", "c3", "c4"))
-      assert(pend.forall(_.batchId < 0), "backfill chunks use reserved negative batch ids")
-      assert(log.ack("bf", pend.head.chunkId))
-      assert(log.backfillFromArchive("bf", archive, filter, chunkRows = 3) == 0,
-        "re-running a backfill must not recreate or resurrect chunks")
-      assert(log.pendingChunks("bf").size == 1, "acked backfill chunk stays acked")
-    } finally log.stop()
-  }
-
-  test("bounded backfill: maxFilesPerTrigger splits a backlog into multiple chunks; AvailableNow drains and stops") {
-    val (logDir, ckpt) = (tmp(), tmp())
-    val log = new DurableEventLog(spark, logDir, ckpt)
-    try {
-      log.startIngest()
-      (1 to 3).foreach { i =>
-        log.emit(ResourceType.Collection, EventType.All, s"c$i", RelationCtx(project = "p1"))
-        log.processAllAvailable()
-      }
-      // 3 committed micro-batches → >= 3 log files; a 1-file trigger cap
-      // must split the backfill into multiple delivery batches, and
-      // AvailableNow drains the backlog then stops on its own (the
-      // batch-backfill trigger, vs ProcessingTime's run-forever cadence)
-      log.startDelivery("g", graft.core.Subjects.projectQuery("p1", includeSub = true),
-        maxFilesPerTrigger = Some(1),
-        deliveryTrigger = org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      val deadline = System.currentTimeMillis() + 20000
-      while (log.pendingChunks("g").flatMap(_.resourceIds).size < 3
-        && System.currentTimeMillis() < deadline) Thread.sleep(100)
-      val chunks = log.pendingChunks("g")
-      assert(chunks.flatMap(_.resourceIds).sorted == Seq("c1", "c2", "c3"),
-        s"backfill must deliver everything: $chunks")
-      assert(chunks.size >= 3,
-        s"1-file batches must split the backlog into multiple chunks, got ${chunks.size}")
+        s"archive scan must prune to the project partition:\n${plan.take(1200)}")
     } finally log.stop()
   }
 

@@ -485,9 +485,9 @@ class MultiplexedDeliverySpec extends AnyFunSuite with BeforeAndAfterAll {
     import s.implicits._
     def oldChunk(seq: Long, subject: String, resourceId: String): String = {
       val chunkId = s"g-$seq"
-      val n = oldTable.writeCounted("g", chunkId,
-        Seq((subject, resourceId)).toDF("subject", "resourceId"))
-      oldWal.appendChunk(ChunkMeta("g", chunkId, seq, n,
+      oldTable.writeMulti(Seq(("g", chunkId, subject, resourceId))
+        .toDF("groupId", "chunkId", "subject", "resourceId"))
+      oldWal.appendChunk(ChunkMeta("g", chunkId, seq, 1L,
         new java.sql.Timestamp(System.currentTimeMillis()), acked = false))
       chunkId
     }
@@ -680,25 +680,33 @@ class MultiplexedDeliverySpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("a pull hydrates on the driver: no Spark job, in the per-group and the bucketed layout") {
-    // the durable log's per-group delivery writes the per-group layout,
-    // the shared query the bucketed one
+    // the durable log writes a joining group's history in the per-group
+    // layout, every shared batch the bucketed one
     for (bucketed <- Seq(false, true)) {
       val dir = java.nio.file.Files.createTempDirectory("graft-mux-nojob").toString
       val engine: ConsumerHost =
         if (bucketed) new MultiplexedDelivery(spark, ledgerDir = Some(dir))
         else new DurableEventLog(spark, s"$dir/log", dir)
+      def register(): Unit = Seq("a", "b").foreach { g =>
+        engine.addGroup(g, ResourceType.Project, "p1", Hierarchy(projectId = "p1"), true); ()
+      }
       try {
-        engine.addGroup("a", ResourceType.Project, "p1", Hierarchy(projectId = "p1"), true)
-        engine.addGroup("b", ResourceType.Project, "p1", Hierarchy(projectId = "p1"), true)
-        val session = engine.openSession("a")
         engine match {
-          case mux: MultiplexedDelivery => mux.start()
-          case log: DurableEventLog => log.startIngest(); log.attach("a")
+          case mux: MultiplexedDelivery => register(); mux.start()
+          case log: DurableEventLog => log.startIngest(); log.startMultiplexed()
         }
         engine.emit(ResourceType.Project, EventType.All, "p1", RelationCtx())
         engine.emit(ResourceType.Collection, EventType.All, "c1", RelationCtx(project = "p1"))
         engine.processAllAvailable()
-        assert(new java.io.File(s"$dir/deliveries/batches").isDirectory == bucketed,
+        if (!bucketed) {
+          // groups joining after the events get them as history with the
+          // next shared batch
+          register()
+          engine.emit(ResourceType.Project, EventType.All, "p9", RelationCtx())
+          engine.processAllAvailable()
+        }
+        val session = engine.openSession("a")
+        assert(new java.io.File(s"$dir/deliveries/groupId=a").isDirectory != bucketed,
           s"test wiring: bucketed layout expected = $bucketed")
         val (pulled, jobs) = jobsStartedBy(engine.pull("a", session))
         assert(pulled.flatMap(_.resourceIds).toSet == Set("p1", "c1"),

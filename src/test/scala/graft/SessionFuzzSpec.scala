@@ -7,7 +7,7 @@ import org.apache.spark.sql.streaming.Trigger
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 import graft.core._
-import graft.streaming.{EventSession, MultiplexedDelivery}
+import graft.streaming.{DurableEventLog, EventSession, MultiplexedDelivery}
 import graft.streaming.EventSession._
 
 /** Lifecycle fuzz of the FULL consumer stack — EventSession protocol +
@@ -30,7 +30,13 @@ import graft.streaming.EventSession._
   * session — a group whose last session closed keeps its position, as
   * a JetStream consumer does. Each emit is drained into a chunk before
   * a potential crash (the memory source stands in for the reference's
-  * durable NATS stream; durability here begins at the chunk WAL). */
+  * durable NATS stream; durability here begins at the chunk WAL).
+  *
+  * The same invariants run on a [[DurableEventLog]], with two more ops:
+  * remove + re-create of the group, and a restart that re-registers the
+  * group after the new engine's queries have started — both served by
+  * the shared query's history read, which must also keep every event
+  * in exactly one chunk id with stable content. */
 class SessionFuzzSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private lazy val spark = SparkSession.builder()
@@ -338,5 +344,148 @@ class SessionFuzzSpec extends AnyFunSuite with BeforeAndAfterAll {
       }
       engine.stop()
     }
+  }
+
+  test("durable log lifecycles: remove/re-create and restart re-registration keep the invariants (4 seeds)") {
+    var (restarts, recreates) = (0, 0)
+    (1 to 4).foreach { seedNo =>
+      val dir = java.nio.file.Files.createTempDirectory("graft-fuzz-durable").toString
+      @volatile var now = 0L
+      def mkEngine() = {
+        val e = new DurableEventLog(spark, s"$dir/log", s"$dir/ckpt",
+          Trigger.ProcessingTime("250 milliseconds"), ackWaitMillis = ACK_WAIT, clock = () => now)
+        e.startIngest()
+        e.startMultiplexed()
+        e
+      }
+      def register(e: DurableEventLog): Unit = {
+        e.addGroup("g", ResourceType.Project, "p", Hierarchy(projectId = "p"), includeSubresources = true); ()
+      }
+      def emit(e: DurableEventLog, rid: String, project: String): Unit = {
+        e.emit(ResourceType.Collection, EventType.All, rid, RelationCtx(project = project))
+        e.processAllAvailable()
+      }
+
+      var engine = mkEngine()
+      register(engine)
+      var uidNext = 0
+      var open = Map.empty[Int, EventSession]
+      var acked = Set.empty[String]
+      var flights = Map.empty[String, (Int, Long)]
+      var expected = Set.empty[String] // emitted since the group's latest creation
+      var servedIds = Set.empty[String]
+      var content = Map.empty[String, Seq[String]] // chunk id -> resource ids, whole seed
+      var chunkOf = Map.empty[String, String]      // resource id -> chunk id, whole seed
+      var emits = 0
+      var restarted = false
+      var recreated = false
+
+      def offerableTo(uid: Int, c: String): Boolean =
+        !acked.contains(c) && (flights.get(c) match {
+          case None => true
+          case Some((owner, at)) =>
+            owner == uid || !open.contains(owner) || now >= at + ACK_WAIT
+        })
+
+      def recordServed(uid: Int, outs: Seq[Outbound], ctx: String): Seq[String] = {
+        val notes = outs.collect { case n: Notification => n }
+        notes.foreach { n =>
+          val c = n.chunk.chunkId
+          assert(offerableTo(uid, c), s"seed $seedNo [$ctx]: chunk $c served to $uid while not offerable")
+          assert(content.getOrElse(c, n.chunk.resourceIds) == n.chunk.resourceIds,
+            s"seed $seedNo [$ctx]: chunk id $c served with new content ${n.chunk.resourceIds}, was ${content.get(c)}")
+          content += c -> n.chunk.resourceIds
+          n.chunk.resourceIds.foreach { r =>
+            assert(chunkOf.getOrElse(r, c) == c,
+              s"seed $seedNo [$ctx]: event $r served in ${chunkOf.get(r)} and again in $c")
+            chunkOf += r -> c
+          }
+          flights += c -> (uid, now)
+          servedIds ++= n.chunk.resourceIds
+        }
+        notes.map(_.chunk.chunkId)
+      }
+
+      def initSession(ctx: String): Int = {
+        val s = new EventSession(engine)
+        val uid = { uidNext += 1; uidNext }
+        open += uid -> s
+        recordServed(uid, s.handle(Init("g")), ctx)
+        uid
+      }
+
+      def nextEmit(): String = { val rid = s"d$seedNo-$emits"; emits += 1; rid }
+
+      val opGen: Gen[Int] = Gen.chooseNum(0, 99)
+      var seed = Seed(2000L + seedNo.toLong)
+      (1 to 14).foreach { step =>
+        val op = opGen.apply(Gen.Parameters.default, seed).getOrElse(0)
+        seed = seed.next
+        op match {
+          case o if o < 24 => // emit into the group's project
+            if (emits < 5) { val rid = nextEmit(); emit(engine, rid, "p"); expected += rid }
+          case o if o < 38 =>
+            if (open.size < 2) { initSession(s"init@$step"); () }
+          case o if o < 54 =>
+            open.toSeq.sortBy(_._1).lift(o % 2).foreach { case (uid, s) =>
+              recordServed(uid, s.handle(Ack(Seq.empty)), s"pull@$step"); ()
+            }
+          case o if o < 66 => // holder acks one of its valid flights
+            flights.toSeq.sortBy(_._1).collectFirst {
+              case (c, (owner, at)) if open.contains(owner) &&
+                now < at + ACK_WAIT && !acked.contains(c) => (c, owner)
+            }.foreach { case (c, owner) =>
+              val outs = open(owner).handle(Ack(Seq(c)))
+              assert(!outs.exists(_.isInstanceOf[SessionError]), s"seed $seedNo: own ack of $c errored: $outs")
+              acked += c; flights -= c
+              recordServed(owner, outs, s"ack@$step"); ()
+            }
+          case o if o < 72 => // close a session
+            open.toSeq.sortBy(_._1).lift(o % 2).foreach { case (uid, s) => s.handle(Close); open -= uid }
+          case o if o < 80 =>
+            now += (if (o % 2 == 0) ACK_WAIT + 500 else ACK_WAIT / 3)
+          case o if o < 90 => // remove + re-create, with an emit in between (once per seed)
+            if (!recreated && step > 3) {
+              recreated = true; recreates += 1
+              open.values.foreach(_.handle(Close)); open = Map.empty
+              engine.removeGroup("g")
+              expected = Set.empty; flights = Map.empty
+              val rid = nextEmit(); emit(engine, rid, "p"); expected += rid
+              register(engine)
+            }
+          case _ => // crash + restart; the group re-registers after a batch without it
+            if (!restarted && step > 3) {
+              restarted = true; restarts += 1
+              engine.stop()
+              open = Map.empty
+              engine = mkEngine()
+              val rid = nextEmit(); emit(engine, rid, "p"); expected += rid
+              register(engine)
+            }
+        }
+      }
+
+      // a history is served by the next shared batch: log one event
+      // outside the group's project, then drain with one session
+      emit(engine, s"flush$seedNo", "q")
+      open.toSeq.sortBy(_._1).drop(1).foreach { case (uid, s) => s.handle(Close); open -= uid }
+      val drainUid = open.keys.headOption.getOrElse(initSession("drain-init"))
+      val drain = open(drainUid)
+      var toAck = Seq.empty[String]
+      var rounds = 0
+      while ((engine.pendingChunks("g").nonEmpty || toAck.nonEmpty) && rounds < 40) {
+        val outs = drain.handle(Ack(toAck))
+        toAck.foreach { c => acked += c; flights -= c }
+        toAck = recordServed(drainUid, outs, s"drain$rounds")
+        if (toAck.isEmpty && engine.pendingChunks("g").nonEmpty) now += ACK_WAIT + 500
+        rounds += 1
+      }
+      assert(engine.pendingChunks("g").isEmpty,
+        s"seed $seedNo: drain left pending chunks ${engine.pendingChunks("g").map(_.chunkId)}")
+      assert(expected.subsetOf(servedIds),
+        s"seed $seedNo: events lost (at-least-once violated): ${expected -- servedIds}")
+      engine.stop()
+    }
+    assert(restarts > 0 && recreates > 0, s"the seeds must run both ops: $restarts restarts, $recreates re-creates")
   }
 }

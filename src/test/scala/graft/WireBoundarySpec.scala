@@ -278,13 +278,14 @@ class WireBoundarySpec extends AnyFunSuite with BeforeAndAfterAll {
     val server = WireServer(log)
     try {
       log.startIngest()
+      log.startMultiplexed()
       val c = connect(server)
       try {
         c.call(CreateGroup("dg", "PROJECT", "p1",
           Hierarchy(projectId = "p1"), includeSub = true, "ALL"))
         assert(c.call(Emit("PROJECT", "ALL", "p1", RelationCtx())).isEmpty)
         log.processAllAvailable()
-        // init starts the checkpointed delivery (attach)
+        // the shared query delivers the logged event to the group
         val onInit = c.notifications(c.call(Init("dg")))
         var got = onInit; var n = 0
         while (got.isEmpty && n < 40) {
